@@ -63,21 +63,9 @@ object Bench {
     // provides for deployments is still exercised (AnnIndexStoreSpec);
     // within THIS process the untimed prebuild below plays that role and
     // its cost is reported separately as "ann_build".
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE re-size CACHED plan output (off by default): the door
-      // probes and other persisted intermediates otherwise pin their
-      // pre-cache partition count, so every downstream job over them
-      // schedules 32-64 near-empty tasks at toy SFs — and at 100 TB the
-      // same flag sizes cached partitions to the advisory bytes instead
-      // of whatever the parent plan had (guide §2.2). Overridable for
-      // A/B via SPARK_GRAFT_CACHE_AQE; measured −16..−33% on the door
-      // family (OPTIMIZATION_r18.md).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // FATAL, not WARN: when the driver's timeout kills us mid-query, Spark

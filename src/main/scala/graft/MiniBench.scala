@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc subset benchmark: times the named queries (args) best-of-N at
   * SPARK_GRAFT_SF_DIR — the local iteration loop behind Bench. Set
   * SPARK_GRAFT_MB_RUNS (default 2) for re-pinning sessions: 5 runs with
@@ -13,13 +11,9 @@ object MiniBench {
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_MB_RUNS", "2").toInt
     // like Bench, the cross-JVM index store stays OFF unless
     // SPARK_GRAFT_ANN_DIR opts in — pins must compute from parquet
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: writes `.explain("formatted")` for the named queries
   * to `plans/<tag>/<query>_<suffix>.txt` — the plan-evidence artifacts the
   * optimization rounds commit (before/after shape diffs: Exchange count,
@@ -23,13 +21,9 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r18")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -72,8 +72,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plan rewrite: naive interval joins → bucketed equi-joins (active
     // only when spark.graft.rangeJoin.bucketWidth is set)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite())
-    // physical planning for the TopKPerKey logical operator (the
-    // Dataset-API helper also installs it per-session on first use)
+    // physical planning for the TopKPerKey logical operator
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     // SQL time travel over TableStore snapshots: `t VERSION AS OF n`
     // (active only when spark.graft.store.root is set)

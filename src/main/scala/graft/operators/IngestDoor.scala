@@ -141,11 +141,11 @@ trait IngestDoor {
       // (hash on idCol, no explicit width) sits BETWEEN the probe's
       // compute (which spreads itself at engine parallelism — a pinned
       // width AQE can't collapse) and the cache: because its width is
-      // not user-specified, the cached-plan AQE flag may re-size it, so
-      // the CACHED partition count tracks the probe's bytes — the dozen
-      // downstream jobs over the cache stop scheduling full-width
-      // near-empty tasks at small batches while big batches keep
-      // advisory-sized partitions.
+      // not user-specified, a session that lets AQE re-size cached plan
+      // output (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning,
+      // which GraftSession leaves off) sizes the CACHED partitions by the
+      // probe's bytes, so the dozen downstream jobs over the cache stop
+      // scheduling full-width near-empty tasks at small batches.
       val probe = probeFrame(spark, batch)
         .repartition(org.apache.spark.sql.functions.col(idCol))
         .persist(StorageLevel.MEMORY_AND_DISK)

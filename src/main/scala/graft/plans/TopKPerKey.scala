@@ -42,9 +42,9 @@ final case class TopKPerKey(
     copy(child = newChild)
 }
 
-/** Plans [[TopKPerKey]] to [[TopKPerKeyExec]]; registered per-query via
-  * `spark.experimental.extraStrategies` (or session-wide through
-  * [[graft.functions.GraftExtensions]]). */
+/** Plans [[TopKPerKey]] to [[TopKPerKeyExec]]; installed once per session
+  * by [[graft.functions.GraftExtensions]] (what `graft.GraftSession.builder()`
+  * builds with). */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child) =>
@@ -124,14 +124,15 @@ final case class TopKPerKeyExec(
 
 object TopKPerKey {
   /** Dataset-API entry: top `k` rows of `df` per `keyCols` group, ranked
-    * by `orderCols` (give a unique tiebreaker for determinism). Installs
-    * [[TopKStrategy]] on the session idempotently. */
+    * by `orderCols` (give a unique tiebreaker for determinism). The
+    * session must carry [[TopKStrategy]]; without it the node could not
+    * be planned, so this fails fast instead. */
   def topK(spark: SparkSession, df: DataFrame, keyCols: Seq[Column],
       orderCols: Seq[Column], k: Int): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    if (!spark.sessionState.planner.strategies.contains(TopKStrategy))
+      throw new IllegalStateException("TopKStrategy is not installed on this " +
+        "session: build it with graft.GraftSession.builder() (or set " +
+        "spark.sql.extensions=graft.functions.GraftExtensions)")
     val analyzed = df.queryExecution.analyzed
     val keys = keyCols.map(PlanBridge.expression(spark, _))
     val order = orderCols.map { c =>

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftSession
 import graft.operators.TextOps
 import graft.sync.TableStore
 import graft.tables.Tables
@@ -439,12 +440,10 @@ object InsightQueries {
   // ---------------------------------------------------------------------
   // q149 — SQL time travel: two snapshot versions of a customer projection
   // go through [[TableStore]] (v0 pristine, v1 with doubled balances =
-  // live), then `SELECT … FROM customer_tt VERSION AS OF 0` is parsed by
-  // [[graft.plans.TimeTravelParser]] and must return exactly the pristine
-  // data — so the oracle is simply the customer table. The
-  // extensions-installed path (spark.sql through an injectParser session)
-  // is covered by TimeTravelSpec; here the parser is driven directly so
-  // the check runs in the driver's plain session.
+  // live), then `SELECT … FROM customer_tt VERSION AS OF 0` goes through
+  // spark.sql, where the session's [[graft.plans.TimeTravelParser]]
+  // (installed by GraftSession) rewrites it, and must return exactly the
+  // pristine data — so the oracle is simply the customer table.
   def q149TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_tt").toString
@@ -454,29 +453,19 @@ object InsightQueries {
     store.write("customer_tt", cust) // v0
     store.write("customer_tt",
       cust.withColumn("c_acctbal", $"c_acctbal" * 2.0d)) // v1 = live
-    // Arm the textual VERSION AS OF rewrite only for this parse: the conf
-    // is restored in the finally so later SQL on a shared session never
-    // sees a stale store root.
-    val confKey = "spark.graft.store.root"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, root)
-    val plan =
-      try {
-        val parser = new graft.plans.TimeTravelParser(spark,
-          spark.sessionState.sqlParser)
-        parser.parsePlan(
-          "SELECT c_custkey, c_name, c_acctbal FROM customer_tt VERSION AS OF 0 " +
-            "ORDER BY c_custkey ASC")
-      } finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
+    // Arm the textual VERSION AS OF rewrite only for this parse: the
+    // caller's store root comes back afterwards, so later SQL on a shared
+    // session never sees this temporary one.
+    val df = GraftSession.withConf(spark, "spark.graft.store.root" -> root) {
+      spark.sql(
+        "SELECT c_custkey, c_name, c_acctbal FROM customer_tt VERSION AS OF 0 " +
+          "ORDER BY c_custkey ASC")
+    }
     // Materialize eagerly so the temp store can be deleted before return
     // (each invocation used to leak a two-version parquet store to /tmp).
     // BOUNDED collect: ≤ the sf-dir's customer rows (1.5k at sf0.1) —
     // the freeze-via-driver idiom is safe only because the result is
     // small; do NOT copy it onto an unbounded frame.
-    val df = org.apache.spark.sql.graftshim.PlanBridge.ofRows(spark, plan)
     val rows = df.collect()
     TableStore.deleteRecursively(java.nio.file.Paths.get(root))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.tables.Tables
 
 /** Structured-Streaming breadth beyond the CDC pipeline and the windowed
@@ -35,11 +36,8 @@ object StreamingQueries {
     * counts. Scope the streaming query to fewer, fatter state partitions
     * and restore the batch setting after the drain. */
   private[queries] def drain(spark: SparkSession, stream: DataFrame,
-      outputMode: String = "append"): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    val result = try {
-      spark.conf.set(key, "8")
+      outputMode: String = "append"): DataFrame =
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
       val name = s"stream_q_${System.nanoTime()}"
       val q = stream.writeStream.outputMode(outputMode)
         .format("memory").queryName(name)
@@ -51,9 +49,7 @@ object StreamingQueries {
       val schema = sink.schema
       spark.catalog.dropTempView(name)
       spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-    } finally spark.conf.set(key, saved)
-    result
-  }
+    }
 
   // q69 — stream-stream interval join: each purchase pairs with the same
   // user's clicks in the preceding hour. Watermarks on both sides bound
@@ -192,11 +188,8 @@ object StreamingQueries {
   // batch, hash-checked.
   def q144StreamScd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val changes = eventsStream(spark, dir)
         .filter(col("user_id") < 30)
         .select(col("user_id"), col("event_id"),
@@ -206,7 +199,7 @@ object StreamingQueries {
       drain(spark, closed)
         .orderBy(col("user_id").asc, col("valid_from_ms").asc,
           col("event_type").asc)
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
   val q144Oracle: String = """
     WITH ordered AS (

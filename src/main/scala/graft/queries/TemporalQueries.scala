@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftSession
 import graft.operators.JoinOps
 import graft.tables.Tables
 
@@ -100,14 +101,13 @@ object TemporalQueries {
   // with a naive inequality join and rewritten by the RangeJoinRewrite
   // optimizer rule (graft.plans) into the bucketed equi-join — the
   // SparkSessionExtensions deployment path where users only touch SQL.
-  // The rule and its conf are scoped to this evaluation (the result is
-  // materialized before they're removed), so no other query's plan is
-  // affected.
-  def q78RangeJoinRule(spark: SparkSession, dir: String): DataFrame = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.RangeJoinRewrite()
-    spark.conf.set("spark.graft.rangeJoin.bucketWidth", (30 * dayMs).toString)
-    try {
+  // The session carries the rule (GraftSession); it fires only while the
+  // bucket width is set, and the width is scoped to this evaluation (the
+  // result is materialized before the caller's setting comes back), so no
+  // other query's plan is affected.
+  def q78RangeJoinRule(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark,
+        "spark.graft.rangeJoin.bucketWidth" -> (30 * dayMs).toString) {
       val orders = Tables.orders(spark, dir)
       orders
         .select(unix_millis(date_trunc("month", col("o_orderdate").cast("timestamp")))
@@ -131,11 +131,7 @@ object TemporalQueries {
       val schema = result.schema
       spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
         .orderBy(col("window_start_ms").asc)
-    } finally {
-      spark.experimental.extraOptimizations = saved
-      spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
     }
-  }
 
   // q141 — point-in-time (feature-store) join: q63's backward as-of with
   // a 2-hour max-staleness bound. A feature older than the bound must NOT

@@ -1188,9 +1188,10 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       // frame keeps its partitioning — one shared exchange instead of a
       // shuffle per consumer (guide §2.4 "two operations keyed the same
       // way share one exchange"; every door's delta commit pays this per
-      // batch). Unpinned width: the cached-plan AQE flag may size it to
-      // the batch's bytes, and the dynamic-partition write still emits
-      // one file per bucket dir regardless of task count.
+      // batch). Unpinned width: a session that lets AQE re-size cached
+      // plan output may size it to the batch's bytes, and the dynamic-
+      // partition write still emits one file per bucket dir regardless of
+      // task count.
       .repartition(col("_bucket"))
     // persisted only when two actions will consume it (summary + write)
     val staged = if (needSummary)

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.RangeJoinRewrite
-
 /** The optimizer rule turns plain-SQL interval joins into bucketed
   * equi-joins: same rows, no nested-loop physical join.
   */
@@ -12,15 +10,10 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   private val widthKey = "spark.graft.rangeJoin.bucketWidth"
 
-  private def withRule[A](f: => A): A = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ RangeJoinRewrite()
-    spark.conf.set(widthKey, "64")
-    try f finally {
-      spark.experimental.extraOptimizations = saved
-      spark.conf.unset(widthKey)
-    }
-  }
+  /** The session carries the rule (GraftSession); setting the bucket
+    * width is what arms it. */
+  private def withRule[A](width: Long = 64L)(f: => A): A =
+    GraftSession.withConf(spark, widthKey -> width.toString)(f)
 
   private def fixtures(): Unit = {
     Seq((0L, "a"), (95L, "b"), (100L, "c"), (150L, "d"), (250L, "e"))
@@ -47,7 +40,7 @@ class RangeJoinRuleSpec extends SparkSpec {
       "fixture join should be a nested loop without the rule")
     val expected = naive.as[(String, String)].collect().toSet
 
-    withRule {
+    withRule() {
       val rewritten = spark.sql(sql)
       val plan = finalPlan(rewritten)
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"rule did not fire:\n$plan")
@@ -57,7 +50,7 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rule leaves equi-joins and non-range conditions alone") {
     fixtures()
-    withRule {
+    withRule() {
       // equi conjunct present -> untouched (still no BNLJ, but via hash join)
       val equi = spark.sql(
         "SELECT pname, rname FROM pts JOIN rngs ON p = s AND p < e")
@@ -85,12 +78,20 @@ class RangeJoinRuleSpec extends SparkSpec {
 
     windows.createOrReplaceTempView("w_rule")
     points.createOrReplaceTempView("p_rule")
-    withRule {
-      spark.conf.set(widthKey, "2592000000")
+    withRule(width = 2592000000L) {
       val viaRule = spark.sql(
         "SELECT o_orderkey, s FROM p_rule JOIN w_rule ON s <= p AND p < e")
       assert(!finalPlan(viaRule).contains("BroadcastNestedLoopJoin"))
       assert(viaRule.as[(Long, Long)].collect().toSet == composed)
+    }
+  }
+
+  test("q78 keeps the caller's bucket width") {
+    withRule() {
+      graft.queries.TemporalQueries.q78RangeJoinRule(spark, "/root/testdata/sf0.001")
+        .collect()
+      assert(spark.conf.getOption(widthKey).contains("64"),
+        s"q78 lost the caller's width: ${spark.conf.getOption(widthKey)}")
     }
   }
 }

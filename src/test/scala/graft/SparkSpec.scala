@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites run
-  * sequentially under sbt's forked test JVM). */
+  * sequentially under sbt's forked test JVM), built like every main's:
+  * through [[GraftSession.builder]], so the suites test the configuration
+  * and extensions users get. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder()
     .master("local[4]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

@@ -1,8 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.functions._
 
-import graft.plans.TimeTravelParser
 import graft.sync.TableStore
 
 /** The textual VERSION-AS-OF rewrite: store tables rewrite to versioned
@@ -10,16 +10,11 @@ import graft.sync.TableStore
   * the delegate grammar untouched. */
 class TimeTravelParserSpec extends SparkSpec {
 
-  private def withStoreRoot[A](root: String)(body: TimeTravelParser => A): A = {
-    val key = "spark.graft.store.root"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, root)
-    try body(new TimeTravelParser(spark, spark.sessionState.sqlParser))
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  /** The session's own parser (GraftSession installs it), armed with `root`. */
+  private def withStoreRoot[A](root: String)(body: ParserInterface => A): A =
+    GraftSession.withConf(spark, "spark.graft.store.root" -> root) {
+      body(spark.sessionState.sqlParser)
     }
-  }
 
   test("store table rewrites to the versioned snapshot path") {
     val s = spark
@@ -63,10 +58,8 @@ class TimeTravelParserSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     store.write("t", Seq((1L, "a")).toDF("id", "v"))   // exists on disk
-    val key = "spark.graft.store.tables"
     withStoreRoot(root) { p =>
-      spark.conf.set(key, "other")
-      try {
+      GraftSession.withConf(spark, "spark.graft.store.tables" -> "other") {
         // `t` exists under the root but is NOT registered → the conf
         // shields it (the DSv2 name-collision escape hatch)
         val shielded = p.parsePlan("SELECT * FROM t VERSION AS OF 0")
@@ -76,7 +69,7 @@ class TimeTravelParserSpec extends SparkSpec {
         val registered = p.parsePlan("SELECT * FROM other VERSION AS OF 2")
         assert(registered.toString.contains(s"$root/other/v2"),
           s"registered name was not rewritten: $registered")
-      } finally spark.conf.unset(key)
+      }
     }
     TableStore.deleteRecursively(java.nio.file.Paths.get(root))
   }
