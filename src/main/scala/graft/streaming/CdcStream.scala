@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.storage.StorageLevel
 
@@ -25,14 +28,18 @@ import graft.sync.{Merge, SyncStore}
   * dedup window, the anti-join delete, and the insert, and a streaming
   * source batch cannot be recomputed arbitrarily (SURVEY.md §4, mandatory).
   *
-  * Watermark semantics: the merge re-reads `MAX(approximateUpdateTimestamp)`
-  * from the *target* per batch, exactly like the reference — so replayed
-  * or late change records older than the target watermark are silently
-  * dropped (§2.8c), which makes reprocessing a batch idempotent even
-  * though file-stream offsets already prevent re-reads in normal runs.
+  * Watermark semantics: each batch merges against the target's
+  * `MAX(approximateUpdateTimestamp)`, exactly like the reference — so
+  * replayed or late change records older than the target watermark are
+  * silently dropped (§2.8c), which makes reprocessing a batch idempotent
+  * even though file-stream offsets already prevent re-reads in normal
+  * runs. A store that commits that value with each version
+  * ([[SyncStore.recordedWatermark]]) hands it over without a Spark job;
+  * targets without a record are scanned, as the reference does per CALL.
   */
 final class CdcStream(spark: SparkSession, store: SyncStore,
-    now: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
+    now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()))
+    extends Logging {
 
   /** Run all entity merges against one extracted (batch) DataFrame.
     *
@@ -49,32 +56,12 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
     val cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val syncTime = now()
-      // ONE job reads every entity's watermark — a tagged union of the
-      // targets, projection-pruned to the timestamp column, aggregated
-      // per entity — where the former shape paid one driver-sequenced
-      // max() action PER entity per micro-batch (guide §1.2: remove
-      // passes; at 100 TB these are three sequential store-snapshot
-      // scans collapsed into one shared pass, the q235 trick). The
-      // VALUE is unchanged: max(approximateUpdateTimestamp) per target,
-      // null (empty target, no initial load) still aborts that entity's
-      // merge (ref :13-16).
-      val targets = Merge.entities.flatMap(c => store.read(c.name).map(c -> _))
-      val wms: Map[String, Timestamp] =
-        if (targets.isEmpty) Map.empty
-        else targets.map { case (c, df) =>
-            df.select(lit(c.name).as("_entity"),
-              col("approximateUpdateTimestamp").as("_ts"))
-          }.reduce(_ unionByName _)
-          .groupBy(col("_entity"))
-          .agg(org.apache.spark.sql.functions.max(col("_ts")).as("_wm"))
-          .collect()
-          .flatMap(r => Option(r.getTimestamp(1)).map(r.getString(0) -> _))
-          .toMap
+      val wms = watermarks()
       import scala.collection.parallel.CollectionConverters._
       // Disjoint targets → the three merges still run from parallel
       // threads (scheduler interleaves the independent job DAGs).
-      val merged = targets.filter(t => wms.contains(t._1.name))
-      merged.par.foreach { case (conf, _) =>
+      val merged = Merge.entities.filter(c => wms.contains(c.name))
+      merged.par.foreach { conf =>
         val stage = Merge.stageChanges(cached, conf, wms(conf.name))
         // SORTKEY mapping: snapshots are written time-sorted within
         // files so lag/time-range queries prune parquet row groups
@@ -83,6 +70,42 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
       }
       merged.size
     } finally cached.unpersist()
+  }
+
+  /** Each entity's target watermark; an entity missing here does not
+    * merge. A recorded value costs no job. The others share ONE scan job:
+    * a tagged union of their targets, projection-pruned to the timestamp
+    * column and aggregated per entity (one pass, not one sequential
+    * max() action per entity). A null max (empty target, no
+    * initial load) aborts that entity's merge (ref :13-16). Each entity
+    * enters the union alone: a snapshot lacking the column, or holding a
+    * type that does not cast to timestamp, is logged and skipped, and the
+    * other entities still merge — like the reference's three independent
+    * CALLs. */
+  private def watermarks(): Map[String, Timestamp] = {
+    val recorded = Merge.entities
+      .flatMap(c => store.recordedWatermark(c.name).map(c.name -> _)).toMap
+    val scans = Merge.entities.filterNot(c => recorded.contains(c.name))
+      .flatMap(c => store.read(c.name).map(c.name -> _))
+      .flatMap { case (name, df) =>
+        Try(df.select(lit(name).as("_entity"),
+            col("approximateUpdateTimestamp").try_cast("timestamp").as("_ts"))) match {
+          case Success(p) => Some(p)
+          case Failure(e) =>
+            logWarning(s"target $name has no usable approximateUpdateTimestamp " +
+              s"column, skipping its merge: ${e.getMessage.linesIterator.next()}")
+            None
+        }
+      }
+    if (scans.isEmpty) recorded
+    else {
+      logInfo(s"scanning ${scans.size} target(s) for the watermark")
+      recorded ++ scans.reduce(_ unionByName _)
+        .groupBy(col("_entity"))
+        .agg(max(col("_ts")).as("_wm"))
+        .collect()
+        .flatMap(r => Option(r.getTimestamp(1)).map(r.getString(0) -> _))
+    }
   }
 
   /** Start the stream over a directory of envelope JSON files.

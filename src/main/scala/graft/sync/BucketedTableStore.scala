@@ -121,10 +121,22 @@ private[sync] object StatKind {
   *
   *   root/<table>/b<bucket>/v<N>/   — per-bucket parquet BASE snapshots
   *   root/<table>/b<bucket>/d<N>/   — per-bucket DELTA commits (see below)
-  *   root/<table>/_MANIFEST.<N>     — "bucket base[+delta...]" lines
+  *   root/<table>/_MANIFEST.<N>     — "bucket base[+delta...]" lines, plus
+  *                                    an optional "wm <epoch micros>" line
   *   root/<table>/_CURRENT          — live manifest number (atomic move)
   *   root/<table>/_KEY              — the entity key column (read-side
   *                                    delta resolution needs it)
+  *
+  * The `wm` line is the CDC target watermark, MAX(approximateUpdateTimestamp)
+  * over the live rows of the version that manifest publishes, committed
+  * with that version so [[recordedWatermark]] answers without a scan. Only
+  * the [[SyncStore]] verbs write it: [[init]] records the max over the
+  * loaded rows, [[applyMerge]]'s delta commit records the max of its
+  * upserts when that provably stays the table max (the rule is
+  * at `mergeDeltaImpl`), and [[compact]] carries its base's line
+  * unchanged (same live rows). Every other commit — copy-on-write
+  * [[merge]], direct [[writeAll]]/[[mergeDelta]] calls, [[rebucket]] —
+  * drops it, so the next sync scans. Bucket-state readers skip the line.
   *
   * Two merge disciplines, selectable per store:
   *
@@ -162,7 +174,8 @@ private[sync] object StatKind {
   */
 final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     deltaMerges: Boolean = false, autoCompactAfter: Int = 8)
-    extends SyncStore {
+    extends SyncStore with org.apache.spark.internal.Logging {
+  import BucketedTableStore.{WmCol, WmPrefix, WmWait}
 
   require(nBuckets > 0)
   require(autoCompactAfter >= 1)
@@ -729,11 +742,24 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     if (Files.exists(f)) Some(new String(Files.readAllBytes(f)).trim.toInt) else None
   }
 
+  private def manifestLines(name: String, v: Int): Seq[String] =
+    Files.readAllLines(manifestFile(name, v)).asScala.map(_.trim).filter(_.nonEmpty).toSeq
+
   private def parseStates(name: String, v: Int): Map[Int, BucketState] =
-    Files.readAllLines(manifestFile(name, v)).asScala.filter(_.nonEmpty).map { line =>
-      val Array(b, st) = line.trim.split(' ')
+    manifestLines(name, v).filterNot(_.startsWith(WmPrefix)).map { line =>
+      val Array(b, st) = line.split(' ')
       b.toInt -> BucketState.parse(st)
     }.toMap
+
+  /** Manifest `v`'s `wm` line in epoch micros (see the layout doc). */
+  private def manifestWatermark(name: String, v: Int): Option[Long] =
+    manifestLines(name, v).collectFirst {
+      case l if l.startsWith(WmPrefix) => l.stripPrefix(WmPrefix).toLong
+    }
+
+  override def recordedWatermark(name: String): Option[java.sql.Timestamp] =
+    currentManifestVersion(name).flatMap(manifestWatermark(name, _))
+      .map(org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp)
 
   /** bucket → live state (base version + delta chain). */
   def bucketStates(name: String): Option[Map[Int, BucketState]] =
@@ -849,9 +875,6 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     }
   }
 
-  private def writeManifest(name: String, m: Map[Int, BucketState]): Unit =
-    commitManifest(name, m, currentManifestVersion(name))
-
   /** Crash-debris sweep, run at the start of every write path: delete
     * per-bucket v/d-dirs versioned ABOVE the live manifest. No manifest
     * references them (manifests only cite versions ≤ their own number),
@@ -891,17 +914,18 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * The stale commit throws instead; the caller re-reads and re-merges.
     * The check-then-move window is epsilon vs the merge runtime — the
     * same compare-and-swap discipline transactional table formats use,
-    * minus a distributed lock this environment doesn't need. */
+    * minus a distributed lock this environment doesn't need. `wm` is the
+    * watermark line the published version carries, if any. */
   private[graft] def commitManifest(name: String, m: Map[Int, BucketState],
-      expectedBase: Option[Int]): Unit = {
+      expectedBase: Option[Int], wm: Option[Long] = None): Unit = {
     val live = currentManifestVersion(name)
     if (live != expectedBase)
       throw new java.util.ConcurrentModificationException(
         s"$name: manifest moved $expectedBase -> $live since this writer " +
           "read its base; re-read and re-merge (lost-update protection)")
     val next = live.getOrElse(-1) + 1
-    val body = m.toSeq.sortBy(_._1)
-      .map { case (b, st) => s"$b ${st.render}" }.mkString("\n")
+    val body = (m.toSeq.sortBy(_._1).map { case (b, st) => s"$b ${st.render}" } ++
+      wm.map(w => s"$WmPrefix$w")).mkString("\n")
     Files.createDirectories(tableDir(name))
     Files.write(manifestFile(name, next), body.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
@@ -926,7 +950,19 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   def writeAll(name: String, df: DataFrame, key: String,
       sortBy: Option[String] = None, statsCols: Seq[String] = Nil,
       rangeBucket: Boolean = false, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 17, bloomHashes: Int = 7): Unit = {
+      bloomBits: Int = 1 << 17, bloomHashes: Int = 7): Unit =
+    // bloom geometry is fixed at table creation like the bucket count:
+    // size m for the expected distinct values per bucket per column
+    // (~m/10 at 1% false-positive with k=7; the 128 Ki-bit default covers
+    // ~13k distinct values per bucket)
+    writeAllImpl(name, df, key, sortBy, statsCols, rangeBucket,
+      bloomCols.map(c => (c, bloomBits, bloomHashes)), recordWm = false)
+
+  /** [[writeAll]]; `recordWm` (the [[init]] path) commits the max
+    * `approximateUpdateTimestamp` of the loaded rows as the `wm` line. */
+  private def writeAllImpl(name: String, df: DataFrame, key: String,
+      sortBy: Option[String], statsCols: Seq[String], rangeBucket: Boolean,
+      bSpecs: Seq[(String, Int, Int)], recordWm: Boolean): Unit = {
     sweepOrphans(name)
     val base = currentManifestVersion(name)
     val next = base.getOrElse(-1) + 1
@@ -966,7 +1002,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     val sorted = sortBy.fold(withBucket)(c =>
         withBucket.sortWithinPartitions(col("_bucket"), col(c)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sorted.withColumn("_bp", col("_bucket"))
+    val (written, wm) = observeWatermark(sorted, recordWm, tombstones = false)
+    written.withColumn("_bp", col("_bucket"))
       .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
     // An EMPTY frame stages no _bp dirs at all (dynamic-partition writes
     // emit nothing for zero rows), which would commit a table with no
@@ -981,11 +1018,6 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         .write.mode("overwrite").parquet(staging.resolve("_bp=0").toString)
     Files.createDirectories(tableDir(name))
     val specs = statsCols.map(c => (c, StatKind.of(df.schema(c).dataType)))
-    // bloom geometry is fixed at table creation like the bucket count:
-    // size m for the expected distinct values per bucket per column
-    // (~m/10 at 1% false-positive with k=7; the 128 Ki-bit default covers
-    // ~13k distinct values per bucket)
-    val bSpecs = bloomCols.map(c => (c, bloomBits, bloomHashes))
     val (newStats, newBloom) =
       try sidecarsFromStaging(staging, specs, bSpecs, excludeDel = false,
         preStaged = Some(sorted))
@@ -1033,7 +1065,37 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // new schema (the silent-null bug this versioning exists to close).
     writeVersionStamp(schemaVersionFile(name), base.getOrElse(-1) + 1)
     writeSchemaFile(schemaFile(name), sorted.schema)
-    commitManifest(name, entries.toMap, base)
+    commitManifest(name, entries.toMap, base, wm())
+  }
+
+  /** `df` with the max `approximateUpdateTimestamp` (epoch micros) of its
+    * rows — live rows only when `tombstones` — observed on the job that
+    * writes it, plus the read of that value. No extra action: the value
+    * rides the write. The observe node sits ABOVE the persisted frame it
+    * wraps: beneath a cached child it never fires. The read waits at most
+    * [[BucketedTableStore.WmWait]] for the listener that delivers it;
+    * without `record`, without the column, or on a timeout it is None —
+    * no `wm` line, so the next sync scans. */
+  private def observeWatermark(df: DataFrame, record: Boolean,
+      tombstones: Boolean): (DataFrame, () => Option[Long]) = {
+    val hasCol = df.schema.exists(f =>
+      f.name == WmCol && f.dataType == org.apache.spark.sql.types.TimestampType)
+    if (!record || !hasCol) (df, () => None)
+    else {
+      val obs = org.apache.spark.sql.Observation()
+      val ts = unix_micros(col(WmCol))
+      val observed = df.observe(obs,
+        max(if (tombstones) when(!col("_del"), ts) else ts).as("wm"))
+      (observed, () =>
+        scala.util.Try(scala.concurrent.Await.result(obs.future, WmWait)) match {
+          case scala.util.Success(r) =>
+            if (r.isNullAt(0)) None else Some(r.getLong(0))
+          case scala.util.Failure(e) =>
+            logWarning(s"watermark observation unavailable ($e); " +
+              "committing without a wm line, the next sync scans")
+            None
+        })
+    }
   }
 
   /** Partition-level merge: delete-then-insert upsert against ONLY the
@@ -1156,7 +1218,20 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * buckets — [[compact]] (or `deltaMerges = true` auto-compaction)
     * bounds the chain length. */
   def mergeDelta(name: String, stage: DataFrame, key: String,
-      syncTime: java.sql.Timestamp, sortBy: Option[String] = None): Unit = {
+      syncTime: java.sql.Timestamp, sortBy: Option[String] = None): Unit =
+    mergeDeltaImpl(name, stage, key, syncTime, sortBy, recordWm = false)
+
+  /** [[mergeDelta]]; `recordWm` (the [[applyMerge]] path) commits a `wm`
+    * line when the new table max is known without a scan. Let `u` be the
+    * max `approximateUpdateTimestamp` of the staged upserts (tombstones
+    * excluded) and `p` the base manifest's line. Every surviving base row
+    * is ≤ p and every upsert is live after the commit, so u ≥ p makes u
+    * the exact new max. Otherwise no line: with no upserts, or u < p, a
+    * REMOVE may have deleted the row holding p and the max may have
+    * fallen, which only a scan can tell. */
+  private def mergeDeltaImpl(name: String, stage: DataFrame, key: String,
+      syncTime: java.sql.Timestamp, sortBy: Option[String],
+      recordWm: Boolean): Unit = {
     sweepOrphans(name)
     val base = currentManifestVersion(name)
     val m = base.map(parseStates(name, _)).getOrElse(
@@ -1177,21 +1252,23 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     val prevBloom =
       if (bSpecs.isEmpty) None else carriedBloom(name, base.get)
     val needSummary = prevStats.isDefined || prevBloom.isDefined
+    val prevWm = if (recordWm) manifestWatermark(name, base.get) else None
     val staged0 = stage
       .withColumn("_bucket", routingCol(name, key, stage))
       .withColumn("_del", col("eventName") === "REMOVE")
       .drop("eventName")
       .withColumn("syncTimestamp", lit(syncTime))
       .withColumn("_seq", lit(next.toLong))
-      // routed BEFORE the persist (r19): the summary's groupBy(_bucket)
-      // and the staged write both need _bucket clustering, and a cached
-      // frame keeps its partitioning — one shared exchange instead of a
-      // shuffle per consumer (guide §2.4 "two operations keyed the same
-      // way share one exchange"; every door's delta commit pays this per
-      // batch). Unpinned width: a session that lets AQE re-size cached
-      // plan output may size it to the batch's bytes, and the dynamic-
-      // partition write still emits one file per bucket dir regardless of
-      // task count.
+      // routed BEFORE the persist. On the persisted branch below (a
+      // table with sidecars) the summary's groupBy(_bucket) and the
+      // staged write both need _bucket clustering, and a cached frame
+      // keeps its partitioning — one shared exchange instead of a shuffle
+      // per consumer (every door's delta commit pays this per batch). On
+      // the unpersisted branch the write is the only consumer, and this
+      // is its one exchange. Unpinned width: a session that lets AQE
+      // re-size cached plan output may size it to the batch's bytes, and
+      // the dynamic-partition write still emits one file per bucket dir
+      // regardless of task count.
       .repartition(col("_bucket"))
     // persisted only when two actions will consume it (summary + write)
     val staged = if (needSummary)
@@ -1216,9 +1293,10 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         val staging = tableDir(name).resolve(s"_dstaging$next")
         // staged is already routed by _bucket (shared with the summary's
         // grouping — see the repartition at staging time above)
-        sortBy.fold(staged)(c =>
-            staged.sortWithinPartitions(col("_bucket"), col(c)))
-          .withColumn("_bp", col("_bucket"))
+        val (written, upsertMax) = observeWatermark(
+          sortBy.fold(staged)(c => staged.sortWithinPartitions(col("_bucket"), col(c))),
+          record = prevWm.isDefined, tombstones = true)
+        written.withColumn("_bp", col("_bucket"))
           .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
         // no-summary path: the write above just materialized the routing,
         // so the staged directories ARE the touched set
@@ -1266,7 +1344,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         cleanupDir(staging)
         newStats.foreach(writeStats(name, next, _))
         newBloom.foreach(writeBloom(name, next, _))
-        commitManifest(name, m ++ updated, base)
+        val wm = for (p <- prevWm; u <- upsertMax() if u >= p) yield u
+        commitManifest(name, m ++ updated, base, wm)
       }
     } finally staged.unpersist()
   }
@@ -1353,7 +1432,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       cleanupDir(staging)
       newStats.foreach(writeStats(name, next, _))
       newBloom.foreach(writeBloom(name, next, _))
-      commitManifest(name, m ++ updated, base)
+      // same live rows, so the base's watermark line still holds
+      commitManifest(name, m ++ updated, base, manifestWatermark(name, base.get))
       updated.size
     }
   }
@@ -1457,12 +1537,14 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * auto-[[compact]] when `deltaMerges` is on) under the shared names, so
     * [[graft.pipeline.Pipeline]] swaps this store in via config. */
   def init(name: String, df: DataFrame, key: String,
-      sortBy: Option[String] = None): Unit = writeAll(name, df, key, sortBy)
+      sortBy: Option[String] = None): Unit =
+    writeAllImpl(name, df, key, sortBy, Nil, rangeBucket = false, Nil,
+      recordWm = true)
 
   def applyMerge(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, sortBy: Option[String] = None): Unit =
     if (deltaMerges) {
-      mergeDelta(name, stage, key, syncTime, sortBy)
+      mergeDeltaImpl(name, stage, key, syncTime, sortBy, recordWm = true)
       compact(name, minDeltas = autoCompactAfter, sortBy = sortBy)
     } else merge(name, stage, key, syncTime, sortBy)
 
@@ -1473,4 +1555,12 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     if (Files.exists(dir))
       scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq)
         .reverse.foreach(Files.deleteIfExists(_))
+}
+
+object BucketedTableStore {
+  private val WmPrefix = "wm "
+  private val WmCol = "approximateUpdateTimestamp"
+  /** Bound on the wait for an observed watermark: the write has finished
+    * by then, only the listener delivering its metric can lag. */
+  private val WmWait = scala.concurrent.duration.Duration(10, "seconds")
 }

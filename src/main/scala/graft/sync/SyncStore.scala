@@ -15,8 +15,15 @@ import org.apache.spark.sql.DataFrame
   *                             O(touched buckets) per batch; the 100 TB form
   *                             (BENCHMARKS.md measures the crossover).
   *
-  * Both expose the same three verbs so [[graft.pipeline.Pipeline]] and
+  * Both expose the same verbs so [[graft.pipeline.Pipeline]] and
   * [[graft.streaming.CdcStream]] are storage-agnostic.
+  *
+  * Watermark: the sync needs MAX(approximateUpdateTimestamp) of each
+  * target before every batch (ref incremental_sync_members.sql:11-12). A
+  * store that commits that value with each version answers
+  * [[recordedWatermark]] and the sync skips its scan; every other store
+  * (and any version without a record) keeps the default None, and the
+  * sync scans [[read]] exactly as the reference does.
   */
 trait SyncStore {
 
@@ -24,6 +31,11 @@ trait SyncStore {
     * store-internal columns (e.g. `_bucket`); callers that surface tables
     * to users drop them. */
   def read(name: String): Option[DataFrame]
+
+  /** MAX(approximateUpdateTimestamp) over the live version of `name`, when
+    * the store recorded it with that version's commit; None means "not
+    * recorded" (scan [[read]]), never "empty table". */
+  def recordedWatermark(name: String): Option[Timestamp] = None
 
   /** Initial full materialization. `key` is the entity key the store may
     * bucket by; `sortBy` orders rows within files for zone-map pruning. */
