@@ -50,6 +50,32 @@ object Bench {
       .split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
+  private def fmt(v: Double): String = if (v < 0) "-1"
+    else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** Per-query timings in tail-survivable form (r18 verdict ask #2: the
+    * compact line outgrew the driver's ~2000-char tail window at 238
+    * queries and arrived decapitated — PERF_r18 had no per-query data).
+    * The same dict is re-emitted as ≤~850-char JSON lines, sorted
+    * CHEAPEST-FIRST so the LAST chunk (the one a tail capture keeps, just
+    * above the short line) holds the most expensive queries. Each line is
+    * self-describing and parses alone; a 2000-char tail always yields the
+    * short line plus ≥ the top-~60 queries' timings. No entries, no lines:
+    * a chunk is opened only for an entry it will hold. */
+  def chunkLines(timings: Seq[(String, Double)], phase: String): Seq[String] = {
+    val entries = timings.sortBy(_._2)
+      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
+    val chunks = entries.foldLeft(Vector.empty[Vector[String]]) { (acc, e) =>
+      acc.lastOption match {
+        case Some(c) if c.map(_.length + 1).sum + e.length <= 820 => acc.init :+ (c :+ e)
+        case _ => acc :+ Vector(e)
+      }
+    }
+    chunks.zipWithIndex.map { case (c, i) =>
+      s"""{"metric":"bench_chunk","part":${i + 1},"of":${chunks.size},"protocol":"$phase","queries":${c.mkString("{", ",", "}")}}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val loadAtStart = loadAvg
@@ -82,8 +108,6 @@ object Bench {
     // keep temporal separation between a query's two attempts
     val measuredAt = collection.concurrent.TrieMap.empty[String, Double]
 
-    def fmt(v: Double): String = if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     // The driver keeps only the tail of this process's output, so the one
     // JSON line must stay short even with 100+ queries: keys are the qNN
     // prefix (unique across the inventory) and values are centisecond
@@ -131,34 +155,8 @@ object Bench {
       val total = results.map(_._2).filter(_ >= 0).sum
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","with_build":${fmt(withBuild(total))},"queries":$qs,"ann_build":$builds,"sf":"$sfDir","protocol":"$phase","load":[${fmt(loadAtStart)},${fmt(loadAvg)}]}"""
     }
-    // Per-query timings in tail-survivable form (r18 verdict ask #2: the
-    // compact line outgrew the driver's ~2000-char tail window at 238
-    // queries and arrived decapitated — PERF_r18 had no per-query data).
-    // The same dict is re-emitted as ≤~850-char JSON lines, sorted
-    // CHEAPEST-FIRST so the LAST chunk (the one a tail capture keeps,
-    // just above the short line) holds the most expensive queries. Each
-    // line is self-describing and parses alone; a 2000-char tail always
-    // yields the short line plus ≥ the top-~60 queries' timings.
-    def chunkLines(phase: String): Seq[String] = {
-      val entries = named.map { case (n, _) => n -> timings.getOrElse(n, -1.0) }
-        .sortBy(_._2)
-        .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-      val chunks = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer.empty[String])
-      var len = 0
-      entries.foreach { e =>
-        if (len + e.length > 820) {
-          chunks += scala.collection.mutable.ArrayBuffer.empty[String]
-          len = 0
-        }
-        chunks.last += e
-        len += e.length + 1
-      }
-      val n = chunks.size
-      chunks.zipWithIndex.map { case (c, i) =>
-        s"""{"metric":"bench_chunk","part":${i + 1},"of":$n,"protocol":"$phase","queries":${c.mkString("{", ",", "}")}}"""
-      }.toSeq
-    }
+    def chunkEntries: Seq[(String, Double)] =
+      named.map { case (n, _) => n -> timings.getOrElse(n, -1.0) }
     // The compact line outgrew the driver's ~2000-char tail window at 176
     // queries (2,176 chars in round 9 → arrived decapitated, parsed:null).
     // This ≤200-char line is printed AFTER the compact line in every emit
@@ -201,7 +199,7 @@ object Bench {
       }
     def emit(phase: String): Unit = if (!shuttingDown) {
       println(compactLine(phase))
-      chunkLines(phase).foreach(println)
+      chunkLines(chunkEntries, phase).foreach(println)
       println(shortLine(phase))
       System.out.flush()
       writeFull(phase)
@@ -217,7 +215,7 @@ object Bench {
         shuttingDown = true
         try Thread.sleep(300) catch { case _: InterruptedException => () }
         println(compactLine("killed"))
-        chunkLines("killed").foreach(println)
+        chunkLines(chunkEntries, "killed").foreach(println)
         println(shortLine("killed"))
         System.out.flush()
         try writeFull("killed") catch { case _: Throwable => () }
@@ -410,11 +408,11 @@ object Bench {
     // captured tail), then the stdout JSON line as the very last output.
     if (!shuttingDown) {
       System.err.println(compactLine("final"))
-      chunkLines("final").foreach(System.err.println)
+      chunkLines(chunkEntries, "final").foreach(System.err.println)
       System.err.println(shortLine("final"))
       System.err.flush()
       println(compactLine("final"))
-      chunkLines("final").foreach(println)
+      chunkLines(chunkEntries, "final").foreach(println)
       println(shortLine("final"))
       System.out.flush()
     }

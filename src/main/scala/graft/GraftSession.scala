@@ -25,12 +25,25 @@ import org.apache.spark.sql.SparkSession
   * the CDC trickle's per-sync latency spread several times wider from run
   * to run. Shuffle partitioning is deliberately NOT pinned here — size it
   * to the deployment (cores locally, data volume on a cluster).
+  *
+  * Artifact isolation is off (`spark.sql.artifact.isolation.enabled`).
+  * Spark runs each StreamingQuery in a clone of the session, and every
+  * `Pipeline.syncAvailable` starts a new query. With isolation on, each
+  * clone gets its own executor classloader, and the codegen cache is keyed
+  * by (classloader, code), so every sync missed the cache and recompiled
+  * its whole plan set: 48-55 compiles per steady merge-on-read trickle
+  * sync (perfbench `cdc_trickle`). With one shared loader the same sync
+  * compiles 10 classes, the ones whose code inlines a changing literal.
+  * No graft code adds session-scoped jars, files or classes
+  * (`SessionFactorySpec` guards it), so no session can see another's.
+  * The setting is read only when a session is created; clones copy it.
   */
 object GraftSession {
   def builder(): SparkSession.Builder = SparkSession.builder()
     .withExtensions(new graft.functions.GraftExtensions)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Runs `body` with one session conf key set, then puts back what the
     * caller had: its earlier explicit value, or no setting at all. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.load.InitialLoad
 import graft.streaming.CdcStream
-import graft.sync.{BucketedTableStore, Merge, SyncStore, TableStore}
+import graft.sync.{BucketedTableStore, Concurrently, Merge, SyncStore, TableStore}
 
 /** End-to-end orchestration — the Spark equivalent of the reference's
   * script sequence setup → export → initial load → incremental sync → query
@@ -69,11 +69,11 @@ final class Pipeline(spark: SparkSession, storeRoot: String,
     * whose guard aborts on an empty target). */
   def initialLoad(exportPath: String): Unit = {
     val loadTime = now()
-    import scala.collection.parallel.CollectionConverters._
     // Disjoint targets → write the three entity loads from parallel
     // threads (same rationale as CdcStream.syncAll).
-    InitialLoad.loadAll(spark, exportPath, loadTime).par
-      .foreach { case (name, df) => store.init(name, df, entityKeys(name)) }
+    Concurrently.foreach(InitialLoad.loadAll(spark, exportPath, loadTime)) {
+      case (name, df) => store.init(name, df, entityKeys(name))
+    }
   }
 
   /** Stage 2 — drain all pending CDC files and apply the merges, then

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.Extraction
-import graft.sync.{Merge, SyncStore}
+import graft.sync.{Concurrently, Merge, SyncStore}
 
 /** Structured-Streaming wrapper around the incremental merge — the
   * continuous form of the reference's REFRESH-then-CALL loop
@@ -41,27 +41,24 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
     now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()))
     extends Logging {
 
-  /** Run all entity merges against one extracted (batch) DataFrame.
+  /** Runs every entity merge against one extracted (batch) DataFrame and
+    * returns how many ran (0 = no initialized non-empty target yet, and
+    * nothing ran an action over `extracted`).
     *
-    * The three entity merges touch disjoint targets, so they are submitted
-    * from parallel threads — Spark's scheduler interleaves the independent
-    * job DAGs, overlapping each merge's scan/shuffle/write. On a cluster
-    * this keeps executors busy while one merge waits on IO; in the
-    * reference the three CALLs are sequential (test_sync_time.sh:97-106),
-    * an ordering nothing depends on (disjoint tables).
+    * The merges touch disjoint targets, so [[Concurrently]] submits them
+    * from one new thread each and Spark's scheduler interleaves their job
+    * DAGs; in the reference the three CALLs are sequential
+    * (test_sync_time.sh:97-106), an ordering nothing depends on. Threads
+    * made per call inherit the caller's job group, tags and pool, so a
+    * stream's merges carry the stream's job group.
     */
-  /** Returns the number of entity merges applied (0 = no initialized
-    * non-empty target yet, nothing ran an action over `extracted`). */
   def syncAll(extracted: DataFrame): Int = {
     val cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val syncTime = now()
       val wms = watermarks()
-      import scala.collection.parallel.CollectionConverters._
-      // Disjoint targets → the three merges still run from parallel
-      // threads (scheduler interleaves the independent job DAGs).
       val merged = Merge.entities.filter(c => wms.contains(c.name))
-      merged.par.foreach { conf =>
+      Concurrently.foreach(merged) { conf =>
         val stage = Merge.stageChanges(cached, conf, wms(conf.name))
         // SORTKEY mapping: snapshots are written time-sorted within
         // files so lag/time-range queries prune parquet row groups

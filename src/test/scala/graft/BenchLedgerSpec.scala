@@ -32,4 +32,15 @@ class BenchLedgerSpec extends AnyFunSuite {
       s"ledger pins with no matching query (rename drift): $orphans")
     assert(pinned.nonEmpty)
   }
+
+  test("bench chunk lines: no entries, no lines; every line carries queries") {
+    assert(Bench.chunkLines(Seq.empty, "killed").isEmpty)
+    val timings = (1 to 238).map(i => f"q$i%03d_query_$i" -> (if (i % 50 == 0) -1.0 else i / 7.0))
+    val lines = Bench.chunkLines(timings, "final")
+    val entry = """"q[0-9]+":""".r
+    assert(lines.size > 1)
+    assert(lines.forall(l => l.length < 900 && entry.findFirstIn(l).nonEmpty), lines)
+    assert(lines.map(entry.findAllIn(_).size).sum == timings.size)
+    assert(lines.last.contains("\"q238\":34.00"), "the last chunk holds the most expensive query")
+  }
 }

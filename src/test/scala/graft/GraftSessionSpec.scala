@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.streaming.Trigger
+
 /** The deployment wiring itself: the shared test session is built
   * through [[GraftSession.builder]] (≈ `spark.sql.extensions=GraftExtensions`
   * on a cluster), like every main's, so it must expose the native
@@ -46,5 +52,31 @@ class GraftSessionSpec extends SparkSpec {
       "TopKStrategy must be injected")
     assert(s.sessionState.sqlParser.isInstanceOf[graft.plans.TimeTravelParser],
       "TimeTravelParser must be injected")
+  }
+
+  test("GraftSession: sessions and stream clones share one executor classloader") {
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    assert(spark.conf.get(isolation) == "false")
+    val input = tmpDir("loader-in")
+    Files.write(Paths.get(input, "a.txt"), "x\n".getBytes)
+    val loader = udf(() =>
+      System.identityHashCode(Thread.currentThread.getContextClassLoader))
+      .asNondeterministic()
+    // two sequential queries, each run by Spark in its own session clone
+    val seen = (1 to 2).map { _ =>
+      val got = new java.util.concurrent.atomic.AtomicReference[(String, Int)]
+      spark.readStream.text(input).writeStream
+        .option("checkpointLocation", tmpDir("loader-ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          got.set(batch.sparkSession.conf.get(isolation) ->
+            batch.select(loader()).head().getInt(0))
+        }
+        .start().awaitTermination()
+      Option(got.get).getOrElse(fail("the query ran no batch"))
+    }
+    assert(seen.map(_._1) == Seq("false", "false"), "a stream clone turned isolation on")
+    assert(seen(0)._2 == seen(1)._2,
+      "each query's tasks ran under its own classloader, so neither reuses the other's generated code")
   }
 }

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 /** One session factory, and query builders that leave the session alone:
   * every session is configured by [[GraftSession.builder]], which installs
   * the planner pieces once, so no query adds rules or strategies at call
-  * time, and its scoped conf writes put back what the caller had. */
+  * time, and its scoped conf writes put back what the caller had. No
+  * session adds jars, files or classes: every session shares one executor
+  * classloader. */
 class SessionFactorySpec extends SparkSpec {
 
   test("query builders leave the shared session's conf and planner as they found it") {
@@ -41,5 +43,14 @@ class SessionFactorySpec extends SparkSpec {
     val experimental = hits(".experimental.", _ => false)
     assert(experimental.isEmpty,
       s"install planner pieces in GraftExtensions:\n${experimental.mkString("\n")}")
+    // Artifact isolation is off (GraftSession), so an artifact added to one
+    // session would be visible to every session in the JVM.
+    val artifacts = Seq("addArtifact", "addJar", "addFile", "addArchive")
+      .flatMap(verb => hits(verb + "(", _ => false))
+    assert(artifacts.isEmpty,
+      s"session artifacts are shared by every session:\n${artifacts.mkString("\n")}")
+    val isolation = hits("artifact.isolation", _.getFileName.toString == "GraftSession.scala")
+    assert(isolation.isEmpty,
+      s"artifact isolation is set in GraftSession.builder() only:\n${isolation.mkString("\n")}")
   }
 }
