@@ -76,6 +76,25 @@ object Bench {
     }
   }
 
+  /** ANN index-build seconds for the dataset `dir` (memo misses),
+    * reported apart from the per-query probe timings: a deployment trains
+    * an index once and amortizes it, so build must not ride the pins. The
+    * dataset is matched exactly (sf0.1 never claims an sf0.1x dir's
+    * builds). A family with one build for the dataset reports under its
+    * name; a family with several keeps its params in caller order
+    * (`family:params`), so the compact JSON object never carries
+    * duplicate keys. */
+  def annBuild(builds: Seq[graft.operators.IndexMemo.Build], dir: String)
+      : Seq[(String, Double)] = {
+    val mine = builds.filter(_.key.dir == dir)
+    val perFamily = mine.groupBy(_.key.family).view.mapValues(_.size).toMap
+    mine.map { b =>
+      val k = b.key
+      (if (perFamily(k.family) > 1 && k.params.nonEmpty)
+        (k.family +: k.params).mkString(":") else k.family) -> b.seconds
+    }.sortBy(_._1)
+  }
+
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val loadAtStart = loadAvg
@@ -112,34 +131,8 @@ object Bench {
     // JSON line must stay short even with 100+ queries: keys are the qNN
     // prefix (unique across the inventory) and values are centisecond
     // precision. Full names + nanosecond precision go to bench_full.json.
-    // ANN index-build seconds for THIS dataset (AnnIndexCache memo misses),
-    // reported apart from the per-query probe timings: a deployment trains
-    // an index once and amortizes it, so build must not ride the pins.
-    // Keys are `type:dataset[:v=..]:param=..`: the dataset is matched as an
-    // exact ':'-segment (a substring match would let sf0.1 claim an
-    // sf0.1x dir's builds), and when one dataset has several builds of the
-    // same index type the emitted key keeps the distinguishing params so
-    // the compact JSON object never carries duplicate keys.
-    def annBuild: Seq[(String, Double)] = {
-      val mine = graft.operators.AnnIndexCache.buildSeconds.toSeq.flatMap {
-        case (k, v) =>
-          val segs = k.split(':').toSeq
-          if (segs.drop(1).headOption.contains(sfDir)) {
-            // v= (dataset version) and s=/sess= (session markers — both
-            // spellings exist among callers) are run-local identity, not
-            // index parameters — keep them out of the key
-            val params = segs.drop(2)
-              .filterNot(s => s.startsWith("v=") || s.startsWith("s=") ||
-                s.startsWith("sess="))
-              .mkString(":")
-            Some((segs.head, params, v))
-          } else None
-      }
-      val perType = mine.groupBy(_._1).view.mapValues(_.size).toMap
-      mine.map { case (tpe, params, v) =>
-        (if (perType(tpe) > 1 && params.nonEmpty) s"$tpe:$params" else tpe) -> v
-      }.sortBy(_._1)
-    }
+    def annBuild: Seq[(String, Double)] =
+      Bench.annBuild(graft.operators.IndexMemo.builds, sfDir)
     // timed total + the untimed prebuild's ann_build seconds — the
     // headline COMPARISON metric since round 19 (BENCHMARKS.md "The
     // headline metric"): the memoized-index convention moves build work
@@ -177,8 +170,8 @@ object Bench {
         .mkString("{", ",", "}")
       val total = results.map(_._2).filter(_ >= 0).sum
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-      val builds = graft.operators.AnnIndexCache.buildSeconds.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val builds = graft.operators.IndexMemo.builds.sortBy(_.ledgerKey)
+        .map(b => "\"" + b.ledgerKey + "\":" + b.seconds).mkString("{", ",", "}")
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"attempts":$att,"ann_build":$builds,"sf":"$sfDir","protocol":"$phase","elapsed_sec":${fmt(elapsedSec)},"load":[${fmt(loadAtStart)},${fmt(loadAvg)}]}""")
       catch { case e: Throwable =>
@@ -245,7 +238,7 @@ object Bench {
     }
     spark.sharedState.cacheManager.clearCache()
     // ANN index prebuild at the TARGET sf: run the index-backed queries
-    // once untimed so AnnIndexCache is warm before pass 1 — every timed
+    // once untimed so IndexMemo is warm before pass 1 — every timed
     // attempt then measures probe-only, which is the 100 TB-relevant
     // number (an index is trained once and amortized). Build wall-time is
     // not lost: the memo records it and it's reported as "ann_build".

@@ -99,17 +99,15 @@ object AnnIndex {
     else if (n <= IvfFlatMax) "ivf"
     else "ivfpq"
 
-  /** Full-corpus IVF quantizers persisted for (dataset dir, current
-    * version) in the configured [[AnnIndexStore]] — the nlists whose
-    * standing index a selector can route to without any build. Empty
-    * when the store is off. */
-  def registeredIvfNlists(dir: String, ver: String): Seq[Int] =
-    AnnIndexStore.listKeys().flatMap { k =>
-      val pfx = s"ivf:$dir:full:nlist="
-      if (k.startsWith(pfx) && k.contains(s":v=$ver:"))
-        k.stripPrefix(pfx).takeWhile(_ != ':').toIntOption
-      else None
-    }.distinct.sorted
+  /** Full-corpus IVF quantizers persisted for the dataset dir at its
+    * current version in the configured [[AnnIndexStore]] — the nlists
+    * whose standing index a selector can route to without any build.
+    * Empty when the store is off. */
+  def registeredIvfNlists(dir: String): Seq[Int] =
+    AnnIndexStore.registered("ivf", dir).flatMap(_.params match {
+      case Seq("full", s"nlist=$n", _*) => n.toIntOption
+      case _ => None
+    }).distinct.sorted
 
   /** Stats-and-registry-driven selection for a dataset directory's
     * embedding corpus (loaded internally — taking the dir alone is what
@@ -144,15 +142,13 @@ object AnnIndex {
     * protocols (q242/q245) and are not routed here. */
   def select(spark: SparkSession, dir: String,
       registryAware: Boolean = true): AnnIndex = {
-    val ver = AnnIndexCache.datasetVersion(dir)
     val corpus = graft.tables.Tables.embeddings(spark, dir)
-    AnnIndexCache.evictStaleVersions(s"annstats:$dir:", ver)
-    val n = AnnIndexCache.memoKeyed(s"annstats:$dir:", s"v=$ver")(
-      AnnIndexStore.orBuildLong(s"annstats:$dir:v=$ver")(corpus.count()))
+    val stats = IndexMemo.Key("annstats", dir, Nil, session = false)
+    val n = IndexMemo(stats)(AnnIndexStore.orBuildLong(stats)(corpus.count()))
     val key = Some(dir)
     val statsNlist = VectorOps.sizedNlist(n)
     val registered =
-      if (registryAware) registeredIvfNlists(dir, ver) else Seq.empty
+      if (registryAware) registeredIvfNlists(dir) else Seq.empty
     // closest registered nlist to the policy size; ties → the smaller
     val regNlist = registered
       .minByOption(r => (math.abs(r.toLong - statsNlist), r))

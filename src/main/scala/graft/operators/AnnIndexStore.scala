@@ -7,23 +7,25 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.SparkSession
 
-/** Optional DISK tier under [[AnnIndexCache]]'s in-JVM memo — the "train
+/** Optional DISK tier under [[IndexMemo]]'s in-JVM memo — the "train
   * once, ship the index" half of the amortization story: the memo
   * amortizes within one session, this store amortizes across JVMs (a
   * nightly index-build job trains, every downstream query session
   * loads). Off by default; enabled by `SPARK_GRAFT_ANN_DIR` (or
   * [[rootOverride]] in tests).
   *
-  * Layout: `<root>/<md5(key)>/` holding a `KEY` marker (the full memo
-  * key, compared verbatim on load — an md5 path collision degrades to a
-  * rebuild, never a wrong index) plus `kmeans/` (Spark ML's own writer)
-  * or `codebooks.bin` (Java serialization of the `(dim, books)` pair —
-  * bit-exact double round-trip by construction). Because the memo key
-  * already embeds the dataset VERSION marker and every index parameter,
-  * staleness is structural: a rewritten corpus or changed config is a
-  * different key, hence a different directory — no invalidation
-  * protocol, stale entries are simply never addressed again (prune the
-  * directory by age externally, like any cache dir).
+  * Every leg takes the entry's [[IndexMemo.Key]]; the memo derives its
+  * session-free disk key, which embeds the dataset VERSION marker and
+  * every index parameter. Layout: `<root>/<md5(disk key)>/` holding a
+  * `KEY` marker (the disk key, compared verbatim on load — an md5 path
+  * collision degrades to a rebuild, never a wrong index) plus `kmeans/`
+  * (Spark ML's own writer), `codebooks.bin` (Java serialization of the
+  * `(dim, books)` pair — bit-exact double round-trip by construction),
+  * `data.parquet`, `value.txt` or `tree/`. Staleness is structural: a
+  * rewritten corpus or changed config is a different disk key, hence a
+  * different directory — no invalidation protocol, stale entries are
+  * simply never addressed again (prune the directory by age externally,
+  * like any cache dir).
   *
   * Failure posture: loads and saves are best-effort — a torn write, a
   * version-incompatible model dir, or a full disk degrade to an in-JVM
@@ -67,10 +69,11 @@ object AnnIndexStore {
   /** KMeans leg: load the persisted model for `key`, else build and
     * best-effort persist. The KEY marker is written LAST — a crash
     * mid-save leaves an unmarked dir that never loads. */
-  def orBuildKMeans(spark: SparkSession, key: String)(
+  def orBuildKMeans(spark: SparkSession, k: IndexMemo.Key)(
       build: => KMeansModel): KMeansModel = root match {
     case None => build
     case Some(r) =>
+      val key = IndexMemo.diskKey(k)
       val dir = entry(r, key)
       val modelDir = new File(dir, "kmeans")
       if (keyed(dir, key) && modelDir.isDirectory)
@@ -85,19 +88,20 @@ object AnnIndexStore {
   }
 
   /** DataFrame leg (IVF postings, graph cells/edges, BM25 posting
-    * stats): persisted as parquet under the entry dir. The disk key must
-    * be SESSION-FREE (callers strip the `sess=` segment their in-JVM
-    * memo key carries for localCheckpoint lifetime) — a parquet-backed
-    * frame is context-free by nature, which is the whole point of the
+    * stats): persisted as parquet under the entry dir. The disk key is
+    * session-free even when the in-JVM entry is bound to its session
+    * (a localCheckpoint) — a parquet-backed frame is context-free by
+    * nature, which is the whole point of the
     * cross-JVM tier. On a hit the returned frame is a lazy scan of the
     * store's parquet — small index state, re-read per use, no pinned
     * blocks; on a miss the caller's (typically localCheckpointed) build
     * result is written out and returned as-is. */
-  def orBuildParquet(spark: SparkSession, key: String)(
+  def orBuildParquet(spark: SparkSession, k: IndexMemo.Key)(
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     root match {
       case None => build
       case Some(r) =>
+        val key = IndexMemo.diskKey(k)
         val dir = entry(r, key)
         val data = new File(dir, "data.parquet")
         if (keyed(dir, key) && data.exists)
@@ -117,9 +121,10 @@ object AnnIndexStore {
   /** Scalar leg (corpus row counts and other O(1) index stats — at
     * 100 TB the count behind a selector decision is a full scan worth
     * amortizing across JVMs like any other index artifact). */
-  def orBuildLong(key: String)(build: => Long): Long = root match {
+  def orBuildLong(k: IndexMemo.Key)(build: => Long): Long = root match {
     case None => build
     case Some(r) =>
+      val key = IndexMemo.diskKey(k)
       val dir = entry(r, key)
       val f = new File(dir, "value.txt")
       if (keyed(dir, key) && f.isFile)
@@ -147,16 +152,17 @@ object AnnIndexStore {
     * the caller falls back to its private temp-dir build. The KEY marker
     * is written LAST, so a crash mid-build leaves an unmarked tree that
     * the next JVM clears and rebuilds rather than serves torn. */
-  def orBuildTree(key: String)(build: String => Unit): Option[String] =
+  def orBuildTree(k: IndexMemo.Key)(build: String => Unit): Option[String] =
     root match {
       case None => None
       case Some(r) =>
+        val key = IndexMemo.diskKey(k)
         val dir = entry(r, key)
         val tree = new File(dir, "tree")
         if (keyed(dir, key) && tree.isDirectory) { loads += 1; Some(tree.getPath) }
         else
           try {
-            if (tree.exists()) deleteRecursively(tree)
+            graft.sync.TableStore.deleteRecursively(tree.toPath)
             dir.mkdirs()
             build(tree.getPath)
             writeKey(dir, key)
@@ -164,27 +170,16 @@ object AnnIndexStore {
           } catch { case _: Throwable => None }
     }
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+  /** Persisted entries of `family` over `dir` at the dataset's current
+    * version — the registry view the index-aware selector scans
+    * ([[graft.operators.AnnIndex.select]]). Empty when the store is off.
+    * Cost is one directory listing plus one tiny file read per entry — a
+    * store holds index ARTIFACTS (one per dataset × index family), never
+    * per-row state, so the scan stays O(indexes) at any corpus size. */
+  def registered(family: String, dir: String): Seq[IndexMemo.Key] =
+    IndexMemo.current(family, dir, listKeys())
 
-  /** True iff a persisted entry exists for `key` (verbatim KEY match)
-    * holding at least one artifact — the registry probe the index-aware
-    * selector uses to route to standing indexes without rebuilding. */
-  def has(key: String): Boolean = root.exists { r =>
-    val dir = entry(r, key)
-    keyed(dir, key) && Option(dir.listFiles()).exists(_.exists(f =>
-      f.getName != "KEY"))
-  }
-
-  /** Every persisted entry's verbatim KEY — the registry view the
-    * index-aware selector scans ([[graft.operators.AnnIndex.select]]).
-    * Empty when the store is off. Cost is one directory listing plus one
-    * tiny file read per entry — a store holds index ARTIFACTS (one per
-    * dataset × index family), never per-row state, so the scan stays
-    * O(indexes) at any corpus size. */
-  def listKeys(): Seq[String] = root match {
+  private def listKeys(): Seq[String] = root match {
     case None => Seq.empty
     case Some(r) =>
       Option(new File(r).listFiles()).getOrElse(Array.empty).toSeq
@@ -199,11 +194,12 @@ object AnnIndexStore {
 
   /** Codebook leg (PQ / IVF-PQ residual books): Java serialization of
     * the (dim, books) pair — doubles round-trip bit-exactly. */
-  def orBuildCodebooks(key: String)(
+  def orBuildCodebooks(k: IndexMemo.Key)(
       build: => (Int, Array[Array[Array[Double]]]))
       : (Int, Array[Array[Array[Double]]]) = root match {
     case None => build
     case Some(r) =>
+      val key = IndexMemo.diskKey(k)
       val dir = entry(r, key)
       val bin = new File(dir, "codebooks.bin")
       if (keyed(dir, key) && bin.isFile)

@@ -2,8 +2,6 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -167,9 +165,10 @@ trait IngestDoor {
     * the same convention every other index build here follows: a
     * deployment builds its standing dedup index from the corpus ONCE and
     * amortizes it over every screening run, so re-seeding per run prices
-    * the door as perpetual cold start). The seeded MASTER store is built
-    * once per (door table, dataset version) — into the [[AnnIndexStore]]
-    * disk tier when configured (cross-JVM), else a session temp dir —
+    * the door as perpetual cold start). The seeded MASTER store is an
+    * [[IndexMemo.tree]] built once per (door table, dataset version) —
+    * into the [[AnnIndexStore]] disk tier when configured (cross-JVM),
+    * else a temp dir the memo deletes once a dataset rewrite evicts it —
     * and NEVER mutated; each call gets a fresh driver-side FILE COPY, so
     * runs stay bit-identical to a cold [[ingestAll]] (the protocol spec
     * pins that) and mutations (admissions, retirement) stay private to
@@ -182,37 +181,16 @@ trait IngestDoor {
   final def seededWorkingCopy(spark: SparkSession, dirKey: String,
       corpus: DataFrame, nBuckets: Int, t0: Long = 1660000000000L,
       seedTag: String = ""): String = {
-    import java.nio.file.{Files, Path, Paths}
-    val ver = AnnIndexCache.datasetVersion(dirKey)
-    val pfx = s"doorseed-$indexTable:$dirKey:"
-    val rest = s"v=$ver:n=$nBuckets" + (if (seedTag.isEmpty) "" else s":tag=$seedTag")
-    AnnIndexCache.evictStaleVersions(pfx, ver)
-    def seedInto(path: String): Unit =
-      seedIndex(spark, new BucketedTableStore(spark, path, nBuckets,
+    import java.nio.file.{Files, Paths}
+    val params = s"n=$nBuckets" +: (if (seedTag.isEmpty) Nil else Seq(s"tag=$seedTag"))
+    val master = IndexMemo.tree(
+        IndexMemo.Key(s"doorseed-$indexTable", dirKey, params, session = false)) {
+      path => seedIndex(spark, new BucketedTableStore(spark, path, nBuckets,
         deltaMerges = true, autoCompactAfter = 4), corpus, new Timestamp(t0))
-    val master = AnnIndexCache.memoKeyed(pfx, rest) {
-      AnnIndexStore.orBuildTree(pfx + rest) { path => seedInto(path) }
-        .getOrElse {
-          val path = Files.createTempDirectory("graft-doorseed").toString
-          // same session-exit cleanup as the q244 master: a memoized
-          // master dir evicted (dataset turnover) or left at exit must
-          // not orphan its bytes on a long-lived host (r18 advice)
-          graft.sync.TableStore.deleteOnExit(path)
-          seedInto(path)
-          path
-        }
     }
-    val work = Files.createTempDirectory("graft-door").toString
-    def copy(src: Path, dst: Path): Unit = {
-      if (Files.isDirectory(src)) {
-        Files.createDirectories(dst)
-        scala.util.Using.resource(Files.list(src))(s =>
-          s.iterator().asScala.foreach(p => copy(p, dst.resolve(p.getFileName))))
-      } else Files.copy(src, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    copy(Paths.get(master), Paths.get(work))
-    work
+    val work = Files.createTempDirectory("graft-door")
+    graft.sync.TableStore.copyRecursively(Paths.get(master), work)
+    work.toString
   }
 
   /** [[ingestAll]] with the seed leg amortized through

@@ -45,12 +45,7 @@ object JoinOps {
       val warehouse = java.net.URI.create(
         spark.conf.get("spark.sql.warehouse.dir")).getPath
       val loc = java.nio.file.Paths.get(warehouse, name)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        scala.util.Using.resource(java.nio.file.Files.walk(loc))(
-          _.iterator().asScala.toSeq).reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      graft.sync.TableStore.deleteRecursively(loc)
       df.write.mode("overwrite")
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet")

@@ -135,11 +135,8 @@ object TextOps {
     * a deterministic per-doc projection. */
   def lshBandIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       n: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val pfx = s"lshbands:$dir:n=$n:h=$numHashes:rpb=$rowsPerBand:"
-    val ver = AnnIndexCache.datasetVersion(dir)
-    AnnIndexCache.evictStaleVersions(s"lshbands:$dir:", ver)
-    AnnIndexCache.memoKeyed(pfx,
-      s"v=$ver:sess=${AnnIndexCache.sessionMarker(spark)}") {
+    IndexMemo(IndexMemo.Key("lshbands", dir,
+        Seq(s"n=$n", s"h=$numHashes", s"rpb=$rowsPerBand"), session = true)) {
       lshBands(
         minhashSignatures(graft.tables.Tables.documents(spark, dir)
           .repartition(spark.sparkContext.defaultParallelism,

@@ -156,7 +156,7 @@ object VectorOps {
     *
     * `corpusVec` must carry a `features` (ml Vector) column. */
   private def coarseQuantizer(corpusVec: DataFrame, nlist: Int, seed: Long,
-      indexKey: Option[String], keyTag: String = "")
+      indexKey: Option[String], keyTag: String = "full")
       : org.apache.spark.ml.clustering.KMeansModel = {
     import org.apache.spark.ml.clustering.KMeans
     def train(): org.apache.spark.ml.clustering.KMeansModel = {
@@ -192,37 +192,12 @@ object VectorOps {
     }
     indexKey match {
       case Some(key) =>
-        // v= is the dataset's mtime/size marker: an in-place rewrite of
-        // the corpus dir retrains instead of serving the stale quantizer,
-        // and memoKeyed evicts the superseded model rather than leak it.
-        // AnnIndexStore adds the cross-JVM disk tier when configured.
-        // keyTag lives in the PREFIX, not the rest: memoKeyed evicts
-        // other entries under one prefix, so a tag in the rest would put
-        // the full-corpus model (q44/q170) and the base-trained append
-        // model (q237) in ONE eviction family — alternating queries then
-        // retrain on every call, which is exactly the r14 bench drift
-        // (q237 2.57 s vs its 1.20 s memo-hit pin). Distinct prefixes
-        // let both models coexist; dataset-rewrite eviction still works
-        // within each family via the v= marker in the rest.
-        // "full" names the untagged family explicitly — a bare "ivf:key:"
-        // prefix would still be a string-prefix of the tagged one and
-        // evict across families. nlist ALSO lives in the prefix (r17):
-        // the fixed-nlist gate queries (q44: 16) and the sized-nlist
-        // paths (AnnIndex.select, ScaleProbe's √n cells) are BOTH
-        // standing indexes on the same dataset — with nlist only in the
-        // rest they'd evict each other on every alternation once a
-        // corpus clears the brute bound, retraining inside timed runs.
-        val tagSeg = if (keyTag.isEmpty) "full" else keyTag.stripPrefix(":")
-        val prefix = s"ivf:$key:$tagSeg:nlist=$nlist:"
-        val ver = AnnIndexCache.datasetVersion(key)
-        val rest = s"v=$ver:seed=$seed"
-        // dataset-wide sweep BEFORE memoizing: a rewrite that changes
-        // sizedNlist(n) would otherwise strand the old-nlist family —
-        // its prefix differs, so memoKeyed's own eviction never sees it
-        AnnIndexCache.evictStaleVersions(s"ivf:$key:", ver)
-        AnnIndexCache.memoKeyed(prefix, rest)(
-          AnnIndexStore.orBuildKMeans(corpusVec.sparkSession, prefix + rest)(
-            train()))
+        // one standing quantizer per (dataset, tag, nlist, seed): the
+        // full-corpus and base-trained models and every nlist coexist
+        val ik = IndexMemo.Key("ivf", key,
+          Seq(keyTag, s"nlist=$nlist", s"seed=$seed"), session = false)
+        IndexMemo(ik)(AnnIndexStore.orBuildKMeans(corpusVec.sparkSession, ik)(
+          train()))
       case None => train()
     }
   }
@@ -302,18 +277,12 @@ object VectorOps {
     // mis-prices the probe). Session-scoped; build cost → ann_build.
     val assigned = indexKey match {
       case Some(key) =>
-        val sess = AnnIndexCache.sessionMarker(spark)
-        val ver = AnnIndexCache.datasetVersion(key)
-        // nlist in the PREFIX for the same two-standing-indexes reason
-        // as the quantizer memo above. The disk key drops the sess=
-        // segment: the in-JVM memo holds a context-bound checkpoint, but
-        // the persisted parquet is context-free and serves every JVM.
-        val prefix = s"ivfpost:$key:full:nlist=$nlist:"
-        val diskKey = prefix + s"v=$ver:seed=$seed"
-        AnnIndexCache.evictStaleVersions(s"ivfpost:$key:", ver)
-        AnnIndexCache.memoKeyed(prefix,
-          s"v=$ver:seed=$seed:sess=$sess")(
-          AnnIndexStore.orBuildParquet(spark, diskKey)(
+        // session-bound in JVM (a localCheckpoint); the persisted parquet
+        // is context-free and serves every JVM
+        val ik = IndexMemo.Key("ivfpost", key,
+          Seq("full", s"nlist=$nlist", s"seed=$seed"), session = true)
+        IndexMemo(ik)(
+          AnnIndexStore.orBuildParquet(spark, ik)(
             assignCells(model, corpusVec).localCheckpoint(true)))
       case None =>
         assignCells(model, corpusVec)
@@ -338,7 +307,7 @@ object VectorOps {
       indexKey: Option[String] = None, spillAppend: Int = 1): DataFrame = {
     val baseVec = toCorpusVec(base)
     val model = coarseQuantizer(baseVec, nlist, seed, indexKey,
-      keyTag = ":train=base")
+      keyTag = "train=base")
     // Drift-bounded re-assignment (spillAppend > 1): each APPENDED
     // vector is posted under its `spillAppend` nearest cells instead of
     // one — FAISS's guidance is retrain-nightly/append-intraday, and
@@ -363,17 +332,12 @@ object VectorOps {
         // model memo alone re-pays two corpus assignment passes per
         // query). localCheckpoint, not persist: blocks survive callers'
         // clearCache sweeps, carry no lineage, and are freed by the
-        // context cleaner on eviction. Session-scoped key: a checkpoint
-        // RDD must not leak across SparkSessions; memoKeyed eviction
-        // retires the previous session's entry.
-        val sess = AnnIndexCache.sessionMarker(spark)
-        val ver = AnnIndexCache.datasetVersion(key)
-        val prefix = s"ivfpost:$key:train=base:nlist=$nlist:"
-        val diskKey = prefix + s"v=$ver:seed=$seed:spill=$spillAppend"
-        AnnIndexCache.evictStaleVersions(s"ivfpost:$key:", ver)
-        AnnIndexCache.memoKeyed(prefix,
-          s"v=$ver:seed=$seed:spill=$spillAppend:sess=$sess")(
-          AnnIndexStore.orBuildParquet(spark, diskKey)(
+        // context cleaner on eviction. Session-bound: a checkpoint RDD
+        // must not leak across SparkContexts.
+        val ik = IndexMemo.Key("ivfpost", key, Seq("train=base",
+          s"nlist=$nlist", s"seed=$seed", s"spill=$spillAppend"), session = true)
+        IndexMemo(ik)(
+          AnnIndexStore.orBuildParquet(spark, ik)(
             buildPostings().localCheckpoint(true)))
       case None =>
         buildPostings()
@@ -602,12 +566,9 @@ object VectorOps {
     val (dim, codebooks) = indexKey match {
       case Some(key) =>
         // same staleness guard + eviction as ivfTopK; disk tier optional
-        val prefix = s"pq:$key:"
-        val ver = AnnIndexCache.datasetVersion(key)
-        val rest = s"v=$ver:m=$m:kCodes=$kCodes:seed=$seed"
-        AnnIndexCache.evictStaleVersions(prefix, ver)
-        AnnIndexCache.memoKeyed(prefix, rest)(
-          AnnIndexStore.orBuildCodebooks(prefix + rest)(train()))
+        val ik = IndexMemo.Key("pq", key,
+          Seq(s"m=$m", s"kCodes=$kCodes", s"seed=$seed"), session = false)
+        IndexMemo(ik)(AnnIndexStore.orBuildCodebooks(ik)(train()))
       case None => train()
     }
     val sub = dim / m
@@ -674,7 +635,7 @@ object VectorOps {
     * centered, so the same kCodes buys finer resolution than global PQ),
     * the ADC scan touches only the nprobe probed cells' codes, and the
     * survivors re-rank exactly. The coarse quantizer is the SAME memoized
-    * artifact ivfTopK trains (shared AnnIndexCache key) — one coarse
+    * artifact ivfTopK trains (shared IndexMemo key) — one coarse
     * index serves both operators; only the residual codebooks are this
     * operator's own build. Scale shape: cells are hash-partitioned and
     * the per-query work is nprobe cells × (m·kCodes LUT + |cell| ADC
@@ -715,12 +676,9 @@ object VectorOps {
     }
     val (dim, codebooks) = indexKey match {
       case Some(key) =>
-        val prefix = s"ivfpq:$key:"
-        val ver = AnnIndexCache.datasetVersion(key)
-        val rest = s"v=$ver:nlist=$nlist:m=$m:kCodes=$kCodes:seed=$seed"
-        AnnIndexCache.evictStaleVersions(prefix, ver)
-        AnnIndexCache.memoKeyed(prefix, rest)(
-          AnnIndexStore.orBuildCodebooks(prefix + rest)(train()))
+        val ik = IndexMemo.Key("ivfpq", key, Seq(s"nlist=$nlist", s"m=$m",
+          s"kCodes=$kCodes", s"seed=$seed"), session = false)
+        IndexMemo(ik)(AnnIndexStore.orBuildCodebooks(ik)(train()))
       case None => train()
     }
     val sub = dim / m

@@ -606,10 +606,9 @@ object CurationQueries {
     import graft.streaming.QualityGateStream
     val docs = Tables.documents(spark, dir)
     // frozen-gate artifact memoized per dataset version (train-once /
-    // gate-forever — see q224's note; distinct prefix per corpus variant)
-    val g = graft.operators.AnnIndexCache.memoKeyed(
-      s"qualgate:$dir:corpus=mod4le1:cut=1:",
-      s"v=${graft.operators.AnnIndexCache.datasetVersion(dir)}") {
+    // gate-forever — see q224's note)
+    val g = graft.operators.IndexMemo(graft.operators.IndexMemo.Key(
+        "qualgate", dir, Seq("corpus=mod4le1", "cut=1"), session = false)) {
       QualityGateStream.freeze(spark,
         docs.filter(pmod(col("doc_id"), lit(4)) <= 1))
     }

@@ -434,21 +434,15 @@ object ExtendedQueries {
     // The bucketed layout is the operator's whole premise — "pay the
     // partitioning once at write time, join shuffle-free forever" — so
     // the write leg is amortized as standing LAYOUT state exactly like
-    // the ANN quantizers and door seeds (AnnIndexCache convention): built
+    // the ANN quantizers and door seeds (IndexMemo convention): built
     // once per (dataset version, session) from the parquet inputs, wall
     // time reported under ann_build, every run's timed work is the
-    // co-located join itself. The session marker is in the key because
-    // the memoized frames are catalog/session-bound.
-    val bucketed = {
-      import graft.operators.AnnIndexCache
-      val ver = AnnIndexCache.datasetVersion(dir)
-      val pfx = s"bucketize:$dir:"
-      AnnIndexCache.evictStaleVersions(pfx, ver)
-      AnnIndexCache.memoKeyed(pfx,
-        s"v=$ver:s=${AnnIndexCache.sessionMarker(spark)}:buckets=8:key=orderkey") {
-        graft.operators.JoinOps.bucketize(
-          spark, Map(liName -> li, ordName -> ord), "orderkey", buckets = 8)
-      }
+    // co-located join itself. The entry is session-bound because the
+    // memoized frames are catalog/session-bound.
+    val bucketed = graft.operators.IndexMemo(graft.operators.IndexMemo.Key(
+        "bucketize", dir, Seq("buckets=8", "key=orderkey"), session = true)) {
+      graft.operators.JoinOps.bucketize(
+        spark, Map(liName -> li, ordName -> ord), "orderkey", buckets = 8)
     }
     // MERGE hint: this operator models fact⋈fact where broadcast is
     // impossible at the target scale — without it the sf0.001 test data

@@ -173,13 +173,9 @@ object SourceQueries {
     Option(tmpRoot.listFiles()).getOrElse(Array.empty).foreach { f =>
       val n = f.getName
       if (n.startsWith("graft-q95part") && n.endsWith(s"-$dirHash") &&
-          f.getPath != out && f.isDirectory) {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-          x.delete(): Unit
-        }
-        rm(f)
-      }
+          f.getPath != out && f.isDirectory)
+        try graft.sync.TableStore.deleteRecursively(f.toPath)
+        catch { case scala.util.control.NonFatal(_) => () }
     }
     val marker = Paths.get(out, "_SUCCESS")
     if (!java.nio.file.Files.exists(marker)) {

@@ -1026,11 +1026,9 @@ object StatsQueries {
     // contract): memoized per dataset version like the ANN quantizers —
     // build cost lands in ann_build, the timed run prices scoring and
     // calibration. FrozenGate is plain bounded driver data, so the memo
-    // is session-independent. Variant (corpus slice, cutoffs) lives in
-    // the PREFIX so q177's gate and this one never evict each other.
-    val g = graft.operators.AnnIndexCache.memoKeyed(
-      s"qualgate:$dir:corpus=full:cut=0:",
-      s"v=${graft.operators.AnnIndexCache.datasetVersion(dir)}") {
+    // is session-independent; q177's gate differs in params and coexists.
+    val g = graft.operators.IndexMemo(graft.operators.IndexMemo.Key(
+        "qualgate", dir, Seq("corpus=full", "cut=0"), session = false)) {
       graft.streaming.QualityGateStream.freeze(spark, docs,
         withCutoffs = false)
     }

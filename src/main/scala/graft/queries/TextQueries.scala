@@ -860,23 +860,15 @@ object TextQueries {
       DedupIngest.fingerprints(d, shingleN = 3, numHashes = 8,
         rowsPerBand = 2)
     // The seeded generation-0 store is standing index state (the same
-    // amortization as IngestDoor.seededWorkingCopy): built once per
-    // (dataset version, session) from parquet, file-copied per run so
-    // the appends/retirement below stay private — decisions identical
+    // amortization as IngestDoor.seededWorkingCopy): a memoized tree
+    // built once per dataset version from parquet, file-copied per run
+    // so the appends/retirement below stay private — decisions identical
     // to seeding in place (the copy is bit-identical).
-    val master = graft.operators.AnnIndexCache.memoKeyed(
-      s"genseed:$dir:w=60000:", s"v=${
-        graft.operators.AnnIndexCache.datasetVersion(dir)}:sess=${
-        graft.operators.AnnIndexCache.sessionMarker(spark)}") {
-      val m = Files.createTempDirectory("graft-genret-master").toString
-      // session-exit cleanup: the master outlives this call (it is the
-      // memoized standing seed) but must not outlive the JVM (r18 advice
-      // — eviction/exit orphaned the directory on a long-lived host)
-      graft.sync.TableStore.deleteOnExit(m)
+    val master = graft.operators.IndexMemo.tree(graft.operators.IndexMemo.Key(
+        "genseed", dir, Seq("w=60000"), session = false)) { m =>
       new graft.sync.GenerationalStore(spark, m, windowMs = 60000L)
         .append("fp", fps(corpus).select(col("fp")).distinct(), "fp",
           new Timestamp(t0))
-      m
     }
     val root = Files.createTempDirectory("graft-genret").toString
     graft.sync.TableStore.copyRecursively(Paths.get(master), Paths.get(root))
@@ -1452,18 +1444,13 @@ object TextQueries {
     * re-deriving them per call both mis-prices the operator and made
     * q168's 0.52 s pin flip the outlier gate on host-load noise alone.
     * Keyed by dataset version + session (localCheckpoint RDDs are
-    * context-bound); build cost lands in ann_build via the memo. */
+    * context-bound); build cost lands in ann_build via the memo, and
+    * the posting stats persist through the cross-JVM parquet tier like
+    * any index artifact. */
   private def bm25Scores(spark: SparkSession, dir: String): DataFrame = {
-    val ver = graft.operators.AnnIndexCache.datasetVersion(dir)
-    val sess = graft.operators.AnnIndexCache.sessionMarker(spark)
-    // stale sweep + cross-JVM parquet tier (r17 verdict ask #3): the
-    // posting stats persist like any index artifact; the disk key drops
-    // the context-bound sess= segment.
-    graft.operators.AnnIndexCache.evictStaleVersions(s"bm25:$dir:", ver)
-    graft.operators.AnnIndexCache.memoKeyed(s"bm25:$dir:",
-      s"v=$ver:sess=$sess")(
-      graft.operators.AnnIndexStore.orBuildParquet(spark,
-        s"bm25:$dir:v=$ver")(
+    val key = graft.operators.IndexMemo.Key("bm25", dir, Nil, session = true)
+    graft.operators.IndexMemo(key)(
+      graft.operators.AnnIndexStore.orBuildParquet(spark, key)(
         bm25ScoresBuild(spark, dir).localCheckpoint(true)))
   }
   private[graft] def bm25ScoresBuild(spark: SparkSession, dir: String): DataFrame = {

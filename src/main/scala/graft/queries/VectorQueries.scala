@@ -106,17 +106,16 @@ object VectorQueries {
   //   columns differ. A version-mismatched registry entry would fall
   //   back to the stats policy (AnnIndexSpec pins that case).
   def q247AnnRegistry(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{AnnIndex, AnnIndexCache, AnnIndexStore}
+    import graft.operators.{AnnIndex, AnnIndexStore, IndexMemo}
     val emb = Tables.embeddings(spark, dir)
     val qs = emb.filter(col("vec_id") < 3)
     val prevRoot = AnnIndexStore.rootOverride
-    val tmp = java.nio.file.Files.createTempDirectory("graft-annreg").toFile
-    def dropNlist8(): Unit = {
-      AnnIndexCache.invalidate(s"ivf:$dir:full:nlist=8:")
-      AnnIndexCache.invalidate(s"ivfpost:$dir:full:nlist=8:")
-    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-annreg")
+    def dropNlist8(): Unit = IndexMemo.invalidate(k =>
+      k.dir == dir && Set("ivf", "ivfpost")(k.family) &&
+        k.params.take(2) == Seq("full", "nlist=8"))
     try {
-      AnnIndexStore.rootOverride = Some(tmp.getPath)
+      AnnIndexStore.rootOverride = Some(tmp.toString)
       val missIdx = AnnIndex.select(spark, dir)
       val miss = missIdx.topK(qs, k = 5)
         .withColumn("phase", lit("miss"))
@@ -141,11 +140,8 @@ object VectorQueries {
     } finally {
       AnnIndexStore.rootOverride = prevRoot
       dropNlist8()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(tmp)
+      try graft.sync.TableStore.deleteRecursively(tmp)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
   }
   val q247Oracle: String = s"""
@@ -802,12 +798,8 @@ object VectorQueries {
     * the graph is integer-deterministic by construction. */
   private def knnGraphIndexed(spark: SparkSession, dir: String, k: Int,
       bands: Int, dimsPerBand: Int): DataFrame = {
-    import graft.operators.AnnIndexCache
-    val pfx = s"knng:$dir:k=$k:b=$bands:d=$dimsPerBand:"
-    val ver = AnnIndexCache.datasetVersion(dir)
-    AnnIndexCache.evictStaleVersions(s"knng:$dir:", ver)
-    AnnIndexCache.memoKeyed(pfx,
-      s"v=$ver:sess=${AnnIndexCache.sessionMarker(spark)}") {
+    graft.operators.IndexMemo(graft.operators.IndexMemo.Key("knng", dir,
+        Seq(s"k=$k", s"b=$bands", s"d=$dimsPerBand"), session = true)) {
       VectorOps.knnGraph(Tables.embeddings(spark, dir), k, bands,
         dimsPerBand).localCheckpoint(true)
     }
@@ -1573,18 +1565,14 @@ object VectorQueries {
       // postings-memo argument; a deployment persists both). Memoized
       // localCheckpoints keyed by dataset version + session: repeat
       // calls pay the walk and the eval leg, never the index build;
-      // build cost lands in ann_build via AnnIndexCache.buildSeconds.
-      val annSess = graft.operators.AnnIndexCache.sessionMarker(spark)
-      val annVer = graft.operators.AnnIndexCache.datasetVersion(dir)
-      // stale-version sweep + cross-JVM parquet tier (r17 verdict ask
-      // #3): the cells/edges are the persisted half of a graph index —
-      // a fresh JVM with the store configured loads them instead of
-      // re-banding and re-scoring the corpus. Disk keys drop sess=.
-      graft.operators.AnnIndexCache.evictStaleVersions(s"gann:$dir:", annVer)
-      val corpusBands = graft.operators.AnnIndexCache.memoKeyed(
-        s"gann:$dir:cells:", s"v=$annVer:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"gann:$dir:cells:v=$annVer")(
+      // build cost lands in ann_build via IndexMemo.builds.
+      // Cross-JVM parquet tier: the cells/edges are the persisted half of
+      // a graph index — a fresh JVM with the store configured loads them
+      // instead of re-banding and re-scoring the corpus.
+      val cellsKey = graft.operators.IndexMemo.Key("gann", dir, Seq("cells"),
+        session = true)
+      val corpusBands = graft.operators.IndexMemo(cellsKey)(
+        graft.operators.AnnIndexStore.orBuildParquet(spark, cellsKey)(
           bandsOf(e, "vec_id")
             .withColumn("rn", row_number().over(
               Window.partitionBy(col("band"), col("bucket"))
@@ -1646,10 +1634,10 @@ object VectorQueries {
       // bounded by its nominations, never quadratic). Memoized like the
       // cells above: the uncapped probe side (rawBands) exists only
       // inside the build, so memo hits never re-band the corpus.
-      val edges = graft.operators.AnnIndexCache.memoKeyed(
-        s"gann:$dir:edges:", s"v=$annVer:deg=$Degree:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"gann:$dir:edges:v=$annVer:deg=$Degree") {
+      val edgesKey = graft.operators.IndexMemo.Key("gann", dir,
+        Seq("edges", s"deg=$Degree"), session = true)
+      val edges = graft.operators.IndexMemo(edgesKey)(
+        graft.operators.AnnIndexStore.orBuildParquet(spark, edgesKey) {
         val rawBands = bandsOf(e, "vec_id")
         val candPairs = rawBands.as("a")
           .join(corpusBands.as("b"),
@@ -1799,49 +1787,38 @@ object VectorQueries {
           .distinct()
       }
       val isApp = pmod(col("vec_id"), lit(4)) === 3
-      val annSess = graft.operators.AnnIndexCache.sessionMarker(spark)
-      val annVer = graft.operators.AnnIndexCache.datasetVersion(dir)
-      // stale sweep + cross-JVM parquet tier, as in q242 (disk keys
-      // drop the sess= segment)
-      graft.operators.AnnIndexCache.evictStaleVersions(s"gannb:$dir:", annVer)
-      graft.operators.AnnIndexCache.evictStaleVersions(s"ganna:$dir:", annVer)
+      // memoized with the cross-JVM parquet tier, as in q242
+      def memo(family: String, params: String*)(build: => DataFrame) = {
+        val key = graft.operators.IndexMemo.Key(family, dir, params,
+          session = true)
+        graft.operators.IndexMemo(key)(
+          graft.operators.AnnIndexStore.orBuildParquet(spark, key)(build))
+      }
       // generation 0: the frozen base graph (cells + edges)
-      val baseCells = graft.operators.AnnIndexCache.memoKeyed(
-        s"gannb:$dir:cells:", s"v=$annVer:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"gannb:$dir:cells:v=$annVer")(
-          capCells(bandsOf(e.filter(!isApp))).localCheckpoint(true)))
-      val baseEdges = graft.operators.AnnIndexCache.memoKeyed(
-        s"gannb:$dir:edges:", s"v=$annVer:deg=$Degree:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"gannb:$dir:edges:v=$annVer:deg=$Degree")(
-          topEdges(bandsOf(e.filter(!isApp)).as("a")
-            .join(baseCells.as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("query_id"),
-              col("b.vec_id").as("neighbor_id"))
-            .distinct()).localCheckpoint(true)))
+      val baseCells = memo("gannb", "cells")(
+        capCells(bandsOf(e.filter(!isApp))).localCheckpoint(true))
+      val baseEdges = memo("gannb", "edges", s"deg=$Degree")(
+        topEdges(bandsOf(e.filter(!isApp)).as("a")
+          .join(baseCells.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.vec_id") =!= col("b.vec_id"))
+          .select(col("a.vec_id").as("query_id"),
+            col("b.vec_id").as("neighbor_id"))
+          .distinct()).localCheckpoint(true))
       // generation 1: the append batch's cells + edge delta — built
       // against the FROZEN generation 0, never mutating it
-      val appCells = graft.operators.AnnIndexCache.memoKeyed(
-        s"ganna:$dir:cells:", s"v=$annVer:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"ganna:$dir:cells:v=$annVer")(
-          capCells(bandsOf(e.filter(isApp))).localCheckpoint(true)))
-      val appEdges = graft.operators.AnnIndexCache.memoKeyed(
-        s"ganna:$dir:edges:", s"v=$annVer:deg=$Degree:sess=$annSess")(
-        graft.operators.AnnIndexStore.orBuildParquet(spark,
-          s"ganna:$dir:edges:v=$annVer:deg=$Degree")(
-          topEdges(bandsOf(e.filter(isApp)).as("a")
-            .join(baseCells.unionByName(appCells).as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("query_id"),
-              col("b.vec_id").as("neighbor_id"))
-            .distinct()).localCheckpoint(true)))
+      val appCells = memo("ganna", "cells")(
+        capCells(bandsOf(e.filter(isApp))).localCheckpoint(true))
+      val appEdges = memo("ganna", "edges", s"deg=$Degree")(
+        topEdges(bandsOf(e.filter(isApp)).as("a")
+          .join(baseCells.unionByName(appCells).as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.vec_id") =!= col("b.vec_id"))
+          .select(col("a.vec_id").as("query_id"),
+            col("b.vec_id").as("neighbor_id"))
+          .distinct()).localCheckpoint(true))
       val edges = baseEdges.unionByName(appEdges).distinct()
       val cellsAll = baseCells.unionByName(appCells)
       // ---- the q242 walk, verbatim, over the union graph ----

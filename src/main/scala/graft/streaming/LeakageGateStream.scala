@@ -130,47 +130,25 @@ object LeakageGateStream {
     }
   }
 
-  /** Memoized frozen index for a DATASET directory: freeze once per
-    * (dataset version, session) into a version-derived scratch root and
-    * reuse the store across calls — the deployment shape (the holdout
-    * is frozen by design; rebuilding it per query call mispriced q225
-    * as freeze+gate when a live pipeline pays gate only). Build
+  /** Memoized frozen index for a DATASET directory: frozen once per
+    * dataset version and reused across calls — the deployment shape (the
+    * holdout is frozen by design; rebuilding it per query call mispriced
+    * q225 as freeze+gate when a live pipeline pays gate only). Build
     * wall-time is recorded by the memo and surfaces in the bench's
     * ann_build section, the same amortized-index accounting as the ANN
-    * tiers. Each build freezes into a FRESH private temp directory
-    * (createTempDirectory — never a shared or predictable path: a
-    * hash-derived shared parent would let one session's rebuild sweep
-    * files another live session is still scanning, and hash collisions
-    * across dataset dirs could cross-wipe stores). A dataset rewrite
-    * changes the version marker → new memo key → new private root; a
-    * superseded root is /tmp debris (one per dataset-version per
-    * session), never a torn live store. */
+    * tiers. The store is an [[graft.operators.IndexMemo.tree]]: it lives
+    * under its versioned [[graft.operators.AnnIndexStore]] entry when the
+    * disk tier is configured (a fresh JVM reuses it instead of
+    * re-freezing), else in a fresh private temp directory that the memo
+    * deletes once a dataset rewrite evicts it. */
   def frozenStore(spark: SparkSession, dir: String, corpus: DataFrame)
       : BucketedTableStore = {
-    val ver = graft.operators.AnnIndexCache.datasetVersion(dir)
-    val sess = graft.operators.AnnIndexCache.sessionMarker(spark)
-    graft.operators.AnnIndexCache.evictStaleVersions(s"leakfreeze:$dir:", ver)
-    graft.operators.AnnIndexCache.memoKeyed(s"leakfreeze:$dir:",
-      s"v=$ver:sess=$sess") {
-      // cross-JVM tree tier (r17 verdict ask #3): when AnnIndexStore is
-      // configured, the frozen store lives under its versioned entry —
-      // a fresh JVM reuses it instead of re-freezing; the KEY-written-
-      // last protocol keeps torn builds from ever loading. Store off (or
-      // build failure) falls back to the r17 private-temp-dir shape.
-      graft.operators.AnnIndexStore.orBuildTree(s"leakfreeze:$dir:v=$ver") {
-        path =>
-          freeze(spark, corpus, new BucketedTableStore(spark, path, 16),
-            new Timestamp(1660000000000L))
-          ()
-      } match {
-        case Some(path) => new BucketedTableStore(spark, path, 16)
-        case None =>
-          val root = java.nio.file.Files.createTempDirectory("graft-leakgate")
-          val store = new BucketedTableStore(spark, root.toString, 16)
-          freeze(spark, corpus, store, new Timestamp(1660000000000L))
-          store
-      }
+    val root = graft.operators.IndexMemo.tree(
+        graft.operators.IndexMemo.Key("leakfreeze", dir, Nil, session = false)) {
+      path => freeze(spark, corpus, new BucketedTableStore(spark, path, 16),
+        new Timestamp(1660000000000L)); ()
     }
+    new BucketedTableStore(spark, root, 16)
   }
 
   /** Index rows for the probe join. No touched-bucket pre-collect

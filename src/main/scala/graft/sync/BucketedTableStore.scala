@@ -898,7 +898,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
             val n = p.getFileName.toString
             if ((n.startsWith("v") || n.startsWith("d")) &&
                 n.drop(1).forall(_.isDigit) && n.drop(1).toInt > live) {
-              cleanupDir(p)
+              TableStore.deleteRecursively(p)
             }
           }
       }
@@ -1052,7 +1052,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         Some(b -> BucketState(next, Nil))
       } else None
     }
-    cleanupDir(staging)
+    TableStore.deleteRecursively(staging)
     Files.write(keyFile(name), key.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     // base-file schema = df + _bucket (what partitionBy left in the files);
@@ -1181,7 +1181,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         // already-existing dest is the same staleness signal (a racing
         // writer published v<next> between the check and this move).
         def stale(): Nothing = {
-          cleanupDir(staging)
+          TableStore.deleteRecursively(staging)
           throw new java.util.ConcurrentModificationException(
             s"$name: manifest moved past $base while merging; " +
               "re-read and re-merge (lost-update protection)")
@@ -1199,7 +1199,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
           b -> BucketState(next, Nil) // rewritten clean: chain discharged
         }.toMap
-        cleanupDir(staging)
+        TableStore.deleteRecursively(staging)
         newStats.foreach(writeStats(name, next, _))
         newBloom.foreach(writeBloom(name, next, _))
         commitManifest(name, m ++ updated, base)
@@ -1304,7 +1304,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           if (needSummary) counts.keySet
           else (0 until nBuckets).filter(b =>
             Files.exists(staging.resolve(s"_bp=$b"))).toSet
-        if (touched.isEmpty) { cleanupDir(staging); return }
+        if (touched.isEmpty) { TableStore.deleteRecursively(staging); return }
         // stamp + rewrite only when the sidecar content actually changes
         // (first write, or a schema change after a writeAll) — an
         // unchanged schema stays valid for every older manifest it
@@ -1324,7 +1324,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         val newStats = prevStats.map(prev => widenStats(specs, prev, addStats))
         val newBloom = prevBloom.map(prev => orBloom(prev, addBloom))
         def stale(): Nothing = {
-          cleanupDir(staging)
+          TableStore.deleteRecursively(staging)
           throw new java.util.ConcurrentModificationException(
             s"$name: manifest moved past $base while delta-merging; " +
               "re-read and re-merge (lost-update protection)")
@@ -1341,7 +1341,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           val prev = m.getOrElse(b, BucketState(-1, Nil))
           b -> prev.copy(deltas = prev.deltas :+ next)
         }.toMap
-        cleanupDir(staging)
+        TableStore.deleteRecursively(staging)
         newStats.foreach(writeStats(name, next, _))
         newBloom.foreach(writeBloom(name, next, _))
         val wm = for (p <- prevWm; u <- upsertMax() if u >= p) yield u
@@ -1414,7 +1414,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       val newStats = prevStats.map(prev => (prev -- targets.keys) ++ addStats)
       val newBloom = prevBloom.map(prev => (prev -- targets.keys) ++ addBloom)
       def stale(): Nothing = {
-        cleanupDir(staging)
+        TableStore.deleteRecursively(staging)
         throw new java.util.ConcurrentModificationException(
           s"$name: manifest moved past $base while compacting; re-run")
       }
@@ -1429,7 +1429,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
         b -> BucketState(next, Nil)
       }.toMap
-      cleanupDir(staging)
+      TableStore.deleteRecursively(staging)
       newStats.foreach(writeStats(name, next, _))
       newBloom.foreach(writeBloom(name, next, _))
       // same live rows, so the base's watermark line still holds
@@ -1519,7 +1519,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
               }
               .foreach { p =>
                 if (!live.contains((b, p.getFileName.toString))) {
-                  cleanupDir(p); dirs += 1
+                  TableStore.deleteRecursively(p); dirs += 1
                 }
               }
           }
@@ -1528,7 +1528,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           .filter(_.getFileName.toString.matches("_[dc]?staging.*"))
           // the live manifest's staging dir may still be mid-move only if a
           // merge is running; single-writer protocol says none is
-          .foreach { p => cleanupDir(p); dirs += 1 }
+          .foreach { p => TableStore.deleteRecursively(p); dirs += 1 }
         (dropped.size, dirs)
     }
   }
@@ -1550,11 +1550,6 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   /** [[SyncStore]] retention verb → [[vacuum]]. */
   def retain(name: String, keep: Int): Unit = vacuum(name, keep)
-
-  private def cleanupDir(dir: Path): Unit =
-    if (Files.exists(dir))
-      scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq)
-        .reverse.foreach(Files.deleteIfExists(_))
 }
 
 object BucketedTableStore {

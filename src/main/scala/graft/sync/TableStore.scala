@@ -201,32 +201,6 @@ object TableStore {
     }
   }
 
-  /** Register a memoized master store's temp directory for deletion at
-    * JVM exit: the memo layer (AnnIndexCache) evicts ENTRIES on dataset-
-    * version turnover but cannot see that a value is a directory path,
-    * so an evicted/replaced master — and every master at session exit —
-    * would otherwise orphan its bytes on a long-lived host (r18 advice).
-    * Per-RUN working copies don't need this (their callers delete them
-    * in `finally`); this covers the per-SESSION masters. Idempotent per
-    * path; deletion order doesn't matter (dirs are independent). */
-  private val exitCleanup = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  @volatile private var hookInstalled = false
-  private[graft] def deleteOnExit(path: String): Unit = {
-    if (!hookInstalled) synchronized {
-      if (!hookInstalled) {
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          import scala.jdk.CollectionConverters._
-          exitCleanup.asScala.foreach { p =>
-            try deleteRecursively(Paths.get(p)) catch { case _: Throwable => () }
-          }
-        }))
-        hookInstalled = true
-      }
-    }
-    exitCleanup.add(path)
-    ()
-  }
-
   /** Recursive file-tree copy (driver-side) — the working-copy leg of
     * the amortized-seed protocol (a frozen MASTER store is built once,
     * each run mutates a private copy; see IngestDoor.seededWorkingCopy). */

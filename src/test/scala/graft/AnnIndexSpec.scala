@@ -80,7 +80,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("select is registry-aware: persisted version-matched IVF routes; stale falls back") {
-    import graft.operators.{AnnIndexCache, AnnIndexStore, VectorOps}
+    import graft.operators.{AnnIndexStore, IndexMemo, VectorOps}
     val dataDir = tmpDir("annregdata")
     def writeCorpus(n: Int): Unit = {
       val rnd = new scala.util.Random(11)
@@ -93,8 +93,8 @@ class AnnIndexSpec extends SparkSpec {
     def emb = graft.tables.Tables.embeddings(spark, dataDir)
     val storeRoot = tmpDir("annregroot")
     val prev = AnnIndexStore.rootOverride
-    def dropMemos(): Unit = Seq("annstats", "ivf", "ivfpost")
-      .foreach(p => AnnIndexCache.invalidate(s"$p:$dataDir:"))
+    def dropMemos(): Unit = IndexMemo.invalidate(k =>
+      k.dir == dataDir && Set("annstats", "ivf", "ivfpost")(k.family))
     AnnIndexStore.rootOverride = Some(storeRoot)
     try {
       dropMemos()
@@ -123,7 +123,7 @@ class AnnIndexSpec extends SparkSpec {
       // stale and must NOT be served; stats policy resumes
       writeCorpus(65)
       assert(AnnIndex.select(spark, dataDir).tier == "brute",
-        "a stale registry entry (old v= marker) must fall back to stats")
+        "a stale registry entry (old dataset version) must fall back to stats")
     } finally {
       AnnIndexStore.rootOverride = prev
       dropMemos()

@@ -43,4 +43,23 @@ class BenchLedgerSpec extends AnyFunSuite {
     assert(lines.map(entry.findAllIn(_).size).sum == timings.size)
     assert(lines.last.contains("\"q238\":34.00"), "the last chunk holds the most expensive query")
   }
+
+  test("ann_build compact keys: family alone or family:params, exact dataset, no version or session") {
+    import graft.operators.IndexMemo.{Build, Key}
+    val sf = "/data/sf0.1"
+    val builds = Seq(
+      Build(Key("bm25", sf, Nil, session = true), "1a-11-70", 1.0),
+      Build(Key("ivf", sf, Seq("full", "nlist=16", "seed=42"), session = false), "1a-11-70", 2.0),
+      Build(Key("ivf", sf, Seq("train=base", "nlist=16", "seed=42"), session = false), "1a-11-70", 3.0),
+      Build(Key("knng", sf, Seq("k=3", "b=16"), session = true), "1a-11-70", 4.0),
+      Build(Key("ivf", sf + "x", Seq("full", "nlist=16", "seed=42"), session = false), "2b-11-70", 5.0),
+      Build(Key("pq", sf + "x", Seq("m=16"), session = false), "2b-11-70", 6.0))
+    assert(Bench.annBuild(builds, sf) == Seq(
+      "bm25" -> 1.0,
+      "ivf:full:nlist=16:seed=42" -> 2.0,
+      "ivf:train=base:nlist=16:seed=42" -> 3.0,
+      "knng" -> 4.0))
+    assert(Bench.annBuild(builds, sf + "x") == Seq("ivf" -> 5.0, "pq" -> 6.0))
+    assert(Bench.annBuild(builds, "/data/sf0") == Seq.empty)
+  }
 }

@@ -372,11 +372,11 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("ANN index cache retrains after an in-place dataset rewrite") {
-    // The memo key carries datasetVersion(dir) — mtime/count/bytes — so a
-    // long session that rewrites a corpus dir in place gets a fresh index
-    // without anyone calling invalidate() (round-8 advice: staleness must
-    // fail closed, not depend on caller discipline).
-    import graft.operators.AnnIndexCache
+    // The memo stamps each entry with the dataset's version — mtime/count/
+    // bytes — so a long session that rewrites a corpus dir in place gets a
+    // fresh index without anyone calling invalidate(): staleness must
+    // fail closed, not depend on caller discipline.
+    import graft.operators.IndexMemo
     val dir = tmpDir("annstale")
     def writeCorpus(shift: Float): Unit =
       (0L until 40L).map(i =>
@@ -384,19 +384,18 @@ class OperatorSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
         .write.mode("overwrite").parquet(dir + "/embeddings.parquet")
     def corpus = spark.read.parquet(dir + "/embeddings.parquet")
-    def builds = AnnIndexCache.buildSeconds.keys
-      .count(k => k.split(':').lift(1).contains(dir))
+    def builds = IndexMemo.builds.count(_.key.dir == dir)
 
     writeCorpus(0f)
     def probe(): Unit = VectorOps.ivfTopK(spark, corpus.filter($"vec_id" < 2),
       corpus, k = 3, nlist = 4, nprobe = 4, indexKey = Some(dir)).count()
-    def keysFor = AnnIndexCache.buildSeconds.keys
-      .filter(k => k.split(':').lift(1).contains(dir)).toSet
+    def keysFor = IndexMemo.builds.filter(_.key.dir == dir)
+      .map(_.ledgerKey).toSet
     probe()
     val k1 = keysFor
     // round 15: a probe records TWO index builds — the coarse-quantizer
     // model ("ivf:") and the memoized postings ("ivfpost:"), each its
-    // own eviction family
+    // own entry
     assert(builds == 2, s"first probe trains model + postings: $k1")
     probe()
     assert(keysFor == k1, "unchanged dataset: memo hit, no retrain")
@@ -405,7 +404,7 @@ class OperatorSpec extends SparkSpec {
     writeCorpus(100f)
     probe()
     val k2 = keysFor
-    assert(k2 != k1, "in-place rewrite changes datasetVersion → retrain")
+    assert(k2 != k1, "in-place rewrite changes the dataset version → retrain")
     assert(builds == 2,
       "the superseded entries are EVICTED, not leaked: one live build " +
         "key per dataset per family (no duplicate ann_build ledger rows)")
@@ -416,7 +415,7 @@ class OperatorSpec extends SparkSpec {
     // tier on, wipe the in-memory memo (≈ a new session), probe again —
     // both the coarse quantizer (ML writer) and the residual codebooks
     // (java-ser) must load from disk and give identical results
-    import graft.operators.{AnnIndexCache, AnnIndexStore}
+    import graft.operators.{AnnIndexStore, IndexMemo}
     val dataDir = tmpDir("annstoredata")
     (0L until 40L).map(i =>
         (i, Array.tabulate(8)(j => ((i % 4) * 3 + j).toFloat)))
@@ -428,17 +427,17 @@ class OperatorSpec extends SparkSpec {
       indexKey = Some(dataDir))
       .collect().map(_.toString).sorted.toSeq
     val storeRoot = tmpDir("annstoreroot")
+    def dropMemos(): Unit = IndexMemo.invalidate(k =>
+      k.dir == dataDir && Set("ivf", "ivfpq")(k.family))
     AnnIndexStore.rootOverride = Some(storeRoot)
     try {
-      AnnIndexCache.invalidate(s"ivf:$dataDir:")
-      AnnIndexCache.invalidate(s"ivfpq:$dataDir:")
+      dropMemos()
       val r1 = probe()
       val loads0 = AnnIndexStore.diskLoads
       assert(new java.io.File(storeRoot).listFiles().nonEmpty,
         "build must persist index entries")
       // "new JVM": drop the in-memory memo; disk must serve both legs
-      AnnIndexCache.invalidate(s"ivf:$dataDir:")
-      AnnIndexCache.invalidate(s"ivfpq:$dataDir:")
+      dropMemos()
       val r2 = probe()
       assert(AnnIndexStore.diskLoads >= loads0 + 2,
         "both the kmeans and codebook legs must load from disk")
@@ -447,19 +446,17 @@ class OperatorSpec extends SparkSpec {
       val entries = new java.io.File(storeRoot).listFiles()
       entries.foreach(e => java.nio.file.Files.write(
         java.nio.file.Paths.get(e.getPath, "KEY"), "garbage".getBytes))
-      AnnIndexCache.invalidate(s"ivf:$dataDir:")
-      AnnIndexCache.invalidate(s"ivfpq:$dataDir:")
+      dropMemos()
       val r3 = probe()
       assert(r1 == r3, "mismatched KEY marker must rebuild, not serve")
     } finally {
       AnnIndexStore.rootOverride = None
-      AnnIndexCache.invalidate(s"ivf:$dataDir:")
-      AnnIndexCache.invalidate(s"ivfpq:$dataDir:")
+      dropMemos()
     }
   }
 
   test("AnnIndexStore parquet/long/tree legs: postings persist, scalars and trees roundtrip") {
-    import graft.operators.{AnnIndexCache, AnnIndexStore}
+    import graft.operators.{AnnIndexStore, IndexMemo}
     val dataDir = tmpDir("annpostdata")
     (0L until 40L).map(i =>
         (i, Array.tabulate(8)(j => ((i % 4) * 3 + j).toFloat)))
@@ -472,8 +469,8 @@ class OperatorSpec extends SparkSpec {
     val storeRoot = tmpDir("annpostroot")
     val prev = AnnIndexStore.rootOverride
     AnnIndexStore.rootOverride = Some(storeRoot)
-    def dropMemos(): Unit = Seq("ivf", "ivfpost")
-      .foreach(p => AnnIndexCache.invalidate(s"$p:$dataDir:"))
+    def dropMemos(): Unit = IndexMemo.invalidate(k =>
+      k.dir == dataDir && Set("ivf", "ivfpost")(k.family))
     try {
       dropMemos()
       val r1 = probe()
@@ -486,12 +483,14 @@ class OperatorSpec extends SparkSpec {
       assert(r1 == r2, "disk-loaded postings must reproduce results exactly")
       // scalar leg
       var builds = 0
-      def count() = AnnIndexStore.orBuildLong("stats:test:v=1")({ builds += 1; 42L })
+      def count() = AnnIndexStore.orBuildLong(
+        IndexMemo.Key("stats", "test", Nil, session = false))({ builds += 1; 42L })
       assert(count() == 42L && count() == 42L)
       assert(builds == 1, "second orBuildLong call must load, not rebuild")
       // tree leg: build writes a file tree; a second call reuses it
       var treeBuilds = 0
-      def tree() = AnnIndexStore.orBuildTree("tree:test:v=1") { path =>
+      def tree() = AnnIndexStore.orBuildTree(
+          IndexMemo.Key("tree", "test", Nil, session = false)) { path =>
         treeBuilds += 1
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
         java.nio.file.Files.write(
