@@ -157,14 +157,44 @@ private[sync] object StatKind {
   * [[mergeDelta]] and auto-compacts chains at `autoCompactAfter` — the
   * write-fast/read-amortized loop Hudi-style MOR tables run in production.
   *
-  * Readers resolve `_CURRENT` → manifest → per-bucket dirs, so an
-  * in-flight merge/compaction is invisible until its single pointer move,
-  * exactly the [[TableStore]] protocol one directory deeper. Crash
-  * mid-merge leaves orphan v/d-dirs, never a torn snapshot; every write
-  * path sweeps such orphans (dirs versioned ABOVE the live manifest —
-  * unreachable by any reader, and under the single-writer protocol
-  * nobody else's in-flight work) before staging, so a crashed merge's
-  * debris never wedges its own retry on the existing-dest check.
+  * '''Publish protocol.''' Readers resolve `_CURRENT` → manifest →
+  * per-bucket dirs, so a write is invisible until its one pointer move,
+  * exactly the [[TableStore]] protocol one directory deeper. All four
+  * write verbs ([[writeAll]], [[merge]], [[mergeDelta]], [[compact]]) end
+  * in the same step, `publish`; each supplies only its frame, the
+  * buckets that must advance, and its `wm` rule. Each step, and what a
+  * crash during it leaves behind:
+  *
+  *   1. sweep: delete v/d-dirs versioned above the live manifest (a
+  *      crashed predecessor's moved-but-uncommitted dirs).
+  *   1. stage: write the `_bucket`-partitioned rows under
+  *      `_staging<next>`, plus an empty-but-schemaed dir for each bucket
+  *      that must advance with no rows. A crash leaves the staging dir;
+  *      the retry overwrites it and [[vacuum]] removes it.
+  *   1. check: the live manifest must still be the writer's base, and no
+  *      destination dir may exist yet; otherwise the writer deletes its
+  *      staging dir and throws `ConcurrentModificationException` before
+  *      anything of the table has changed.
+  *   1. move: each staged bucket dir becomes `b<b>/v<next>` (a rewrite)
+  *      or `b<b>/d<next>` (a delta). A crash leaves dirs above the live
+  *      manifest: no reader sees them, and the next publish sweeps them.
+  *   1. sidecars and table files: `_STATS.<next>` and `_BLOOM.<next>`,
+  *      then a [[writeAll]]'s `_STATSCOLS`, `_BLOOMCOLS`, `_BUCKETER` and
+  *      `_KEY`, then the schema sidecar, stamp first. A crash leaves
+  *      sidecars of a version no manifest names (the retry overwrites
+  *      them) and at worst a schema stamp newer than the live manifest,
+  *      which degrades reads to inference. The table files are not
+  *      versioned: a crashed [[writeAll]] that changed the key, the
+  *      routing or the sidecar columns leaves the old version described
+  *      by the new files until the writeAll is retried.
+  *   1. commit ([[commitManifest]]): write `_MANIFEST.<next>`, then flip
+  *      `_CURRENT` through a temp file and an atomic move — the commit
+  *      point. A crash before the flip leaves a manifest no pointer names;
+  *      the retry overwrites it.
+  *
+  * Apart from that table-file caveat, a reader sees the old version or
+  * the new one, never a mix, and retrying the interrupted call lands what
+  * an uninterrupted one would.
   *
   * Bucket count is fixed at table creation (like any hash-bucketed
   * layout); pick it so bucket size ≈ a few parquet row groups at target
@@ -175,7 +205,7 @@ private[sync] object StatKind {
 final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     deltaMerges: Boolean = false, autoCompactAfter: Int = 8)
     extends SyncStore with org.apache.spark.internal.Logging {
-  import BucketedTableStore.{WmCol, WmPrefix, WmWait}
+  import BucketedTableStore.{StagingPrefix, WmCol, WmPrefix, WmWait}
 
   require(nBuckets > 0)
   require(autoCompactAfter >= 1)
@@ -226,16 +256,6 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     org.apache.spark.sql.types.StructType(
       s.fields.map(_.copy(nullable = true))).json
 
-  // temp-file + atomic move: a torn sidecar write must never be read as
-  // a (wrong) schema — readers see the old content or the new, whole
-  private def writeSchemaFile(f: Path, s: org.apache.spark.sql.types.StructType): Unit = {
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    Files.write(tmp, schemaJson(s).getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private def readSchemaFile(f: Path): Option[org.apache.spark.sql.types.StructType] =
     if (!Files.exists(f)) None
     else scala.util.Try(
@@ -243,9 +263,21 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
 
-  private def writeVersionStamp(f: Path, v: Int): Unit =
-    Files.write(f, v.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+  /** Write schema sidecar `f` with its stamp `vf` = manifest `v`, only
+    * when the content changes (or the stamp is missing): an unchanged
+    * schema stays valid for every older manifest it already covered. The
+    * sidecar is replaced atomically, so a torn write is never read as a
+    * (wrong) schema. STAMP FIRST: a crash between the two writes leaves a
+    * too-new stamp over the old sidecar, and every read below it degrades
+    * to inference (safe) instead of binding old files to a new schema
+    * (the silent-null bug this versioning exists to close). */
+  private def publishSchema(f: Path, vf: Path,
+      s: org.apache.spark.sql.types.StructType, v: Int): Unit =
+    if (!readSchemaFile(f).map(schemaJson).contains(schemaJson(s)) || !Files.exists(vf)) {
+      Files.write(vf, v.toString.getBytes,
+        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      TableStore.replaceFile(f, schemaJson(s).getBytes)
+    }
 
   /** The schema sidecar at `f`, but only when valid for a read AS OF
     * manifest `asOf` (None = live read, always valid). Historical reads
@@ -329,52 +361,25 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     }.toSeq
   }
 
-  /** ONE columnar read-back of the staged parquet computes EVERY sidecar:
-    * zone-map min/max for the stats columns and packed bloom bitsets for
-    * the bloom columns, in a single groupBy over only the touched
-    * buckets' new bytes (projection pruned to the sidecar columns).
-    * Through round 8 these were separate jobs — stats, then one job PER
-    * bloom column (the explode-based packer could not share a pass) —
-    * so a commit on a stats+bloom table paid 2+ staging scans; q150's
-    * 8-commit protocol and q151/q154's lifecycles paid it per commit.
+  /** ONE aggregation pass over a publish's staged frame computes EVERY
+    * sidecar contribution — zone-map min/max for the stats columns and
+    * packed bloom bitsets for the bloom columns — plus per-bucket row
+    * counts, in a single groupBy. Through round 8 these were separate
+    * jobs (stats, then one per bloom column); q150's 8-commit protocol
+    * and q151/q154's lifecycles paid them per commit.
     * [[graft.functions.BloomPackValueAgg]] computes the k probe positions
-    * inside the aggregator (same [[graft.functions.HashKernels]] kernel
-    * the read-side probes use), so the bloom aggregation adds no row
-    * multiplication and coexists with min/max in one agg.
+    * inside the aggregator (the same [[graft.functions.HashKernels]]
+    * kernel the read-side probes use), so the bloom aggregation adds no
+    * row multiplication and coexists with min/max in one agg. The frame
+    * is the PERSISTED one the staged write then reads, so the summary
+    * never re-reads the staging dir from disk.
     *
-    * A bucket whose bloom column is entirely NULL now gets an all-zero
-    * bitset instead of no entry — a strictly tighter, still-correct
-    * sidecar ("no non-null values here"), vs the old absent entry's
-    * "no proof of exclusion".
-    *
-    * `preStaged`: when the caller still holds the PERSISTED frame whose
-    * write produced `staging` (mergeDelta does — its staged frame is
-    * cached for the commit's scope), the sidecars aggregate that frame
-    * directly and skip the disk read-back entirely: same rows, one
-    * fewer scan per commit — the door protocols pay this per batch.
-    * Callers whose staged frame is NOT persisted (writeAll, the
-    * copy-on-write merge) keep the read-back: re-deriving an unpersisted
-    * lineage would rescan the whole input instead of the small staging. */
-  private def sidecarsFromStaging(staging: Path,
-      statSpecs: Seq[(String, String)], bloomSpecs: Seq[(String, Int, Int)],
-      excludeDel: Boolean, preStaged: Option[DataFrame] = None):
-      (Map[Int, Map[String, (String, String)]], Map[Int, Map[String, BloomSide]]) = {
-    if (statSpecs.isEmpty && bloomSpecs.isEmpty) return (Map.empty, Map.empty)
-    val raw = preStaged.getOrElse(spark.read.parquet(staging.toString))
-    val (stats, blooms, _) = stagedSummary(raw, statSpecs, bloomSpecs, excludeDel)
-    (stats, blooms)
-  }
-
-  /** ONE aggregation pass over a staged frame: per-bucket live row
-    * counts PLUS the sidecar contributions (zone-map min/max, packed
-    * blooms). `excludeDel` applies per-expression (`when(!_del, …)` —
-    * min/max and [[graft.functions.BloomPackValueAgg]] all skip nulls,
-    * so the guarded aggregates equal the old filtered ones exactly),
-    * while the counts stay UNFILTERED so an all-tombstone bucket still
-    * registers as touched. [[mergeDelta]] fuses its former
-    * touched-distinct and sidecar passes through this — the ingest
-    * doors pay that per batch, so one saved action per commit is the
-    * door-overhead lever, not a micro-optimization. */
+    * `excludeDel` applies per-expression (`when(!_del, …)` — min/max and
+    * the bloom packer skip nulls, so the guarded aggregates equal
+    * filtered ones), while the counts stay UNFILTERED so an all-tombstone
+    * bucket still registers as touched. A bucket whose bloom column is
+    * entirely NULL gets an all-zero bitset — a tighter, still-correct
+    * sidecar ("no non-null values here") than no entry. */
   private def stagedSummary(raw: DataFrame,
       statSpecs: Seq[(String, String)], bloomSpecs: Seq[(String, Int, Int)],
       excludeDel: Boolean):
@@ -875,7 +880,23 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     }
   }
 
-  /** Crash-debris sweep, run at the start of every write path: delete
+  /** Every bucket's versioned dirs, `b<bucket>/v<N>` and `b<bucket>/d<N>`,
+    * as (bucket, dir, N): the one listing the orphan sweep and [[vacuum]]
+    * share. A bucket path that is not a directory lists nothing. */
+  private def versionDirs(name: String): Seq[(Int, Path, Int)] =
+    (0 until nBuckets).flatMap { b =>
+      val bDir = tableDir(name).resolve(s"b$b")
+      if (!Files.isDirectory(bDir)) Nil
+      else scala.util.Using.resource(Files.list(bDir))(_.iterator().asScala.toSeq)
+        .flatMap { p =>
+          val n = p.getFileName.toString
+          if ((n.startsWith("v") || n.startsWith("d")) && n.length > 1 &&
+              n.drop(1).forall(_.isDigit)) Some((b, p, n.drop(1).toInt))
+          else None
+        }
+    }
+
+  /** Crash-debris sweep, the first step of every publish: delete
     * per-bucket v/d-dirs versioned ABOVE the live manifest. No manifest
     * references them (manifests only cite versions ≤ their own number),
     * so they are exactly the moved-but-never-committed leftovers of a
@@ -890,18 +911,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * commit CAS still refuse the lost update in that window, as before. */
   private def sweepOrphans(name: String): Unit = {
     val live = currentManifestVersion(name).getOrElse(-1)
-    (0 until nBuckets).foreach { b =>
-      val bDir = tableDir(name).resolve(s"b$b")
-      if (Files.exists(bDir)) {
-        scala.util.Using.resource(Files.list(bDir))(_.iterator().asScala.toSeq)
-          .foreach { p =>
-            val n = p.getFileName.toString
-            if ((n.startsWith("v") || n.startsWith("d")) &&
-                n.drop(1).forall(_.isDigit) && n.drop(1).toInt > live) {
-              TableStore.deleteRecursively(p)
-            }
-          }
-      }
+    versionDirs(name).foreach { case (_, p, v) =>
+      if (v > live) TableStore.deleteRecursively(p)
     }
   }
 
@@ -929,15 +940,154 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     Files.createDirectories(tableDir(name))
     Files.write(manifestFile(name, next), body.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    val tmp = tableDir(name).resolve(s"_CURRENT.tmp$next")
-    Files.write(tmp, next.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, currentFile(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    TableStore.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
   }
 
+  /** What a [[writeAll]] fixes for the table's life: the entity key, the
+    * zone-map columns with their [[StatKind]], the bloom columns with their
+    * (m bits, k hashes), and the range-routing boundaries (None = hash). */
+  private case class Layout(key: String, stats: Seq[(String, String)],
+      blooms: Seq[(String, Int, Int)], boundaries: Option[(String, Array[String])])
+
+  /** The one publish step every write verb ends in; the class doc gives
+    * the protocol and what a crash at each step leaves behind. `frame`
+    * carries `_bucket`; it is clustered by bucket (sorted within by
+    * `sortBy`) and staged, and its buckets become `v<next>` dirs, or
+    * `d<next>` dirs layered on `states` for a `delta` commit. `seed`
+    * buckets are published even when they stage no row. A `layout` (a
+    * [[writeAll]]) replaces `states`, writes the table files, and
+    * publishes an empty bucket 0 when nothing staged, so the table keeps
+    * its schema on disk. `observeWm` observes the staged rows' max
+    * `approximateUpdateTimestamp` on the write; `wmLine` turns that value
+    * (None when not observed) into the version's `wm` line. Returns the
+    * number of buckets published. */
+  private def publish(name: String, base: Option[Int],
+      states: Map[Int, BucketState], frame: DataFrame, sortBy: Option[String],
+      delta: Boolean, seed: Set[Int] = Set.empty, layout: Option[Layout] = None,
+      observeWm: Boolean = false,
+      wmLine: Option[Long] => Option[Long] = _ => None): Int = {
+    sweepOrphans(name)
+    val next = base.getOrElse(-1) + 1
+    val staging = tableDir(name).resolve(s"$StagingPrefix$next")
+    def stagedDir(b: Int): Path = staging.resolve(s"_bp=$b")
+    // A new table starts each configured sidecar kind empty. A commit over
+    // a base carries the base's sidecars, and a missing one PROPAGATES
+    // (see carriedStats): that kind is then neither computed nor written.
+    // A table without sidecars runs no summary: its one action per commit
+    // is the staged write.
+    val specs = layout.fold(statsSpecs(name))(_.stats)
+    val bSpecs = layout.fold(bloomSpecs(name))(_.blooms)
+    val prevStats =
+      if (specs.isEmpty) None
+      else if (layout.isDefined) Some(Map.empty[Int, Map[String, (String, String)]])
+      else carriedStats(name, base.get)
+    val prevBloom =
+      if (bSpecs.isEmpty) None
+      else if (layout.isDefined) Some(Map.empty[Int, Map[String, BloomSide]])
+      else carriedBloom(name, base.get)
+    val summarize = prevStats.isDefined || prevBloom.isDefined
+    // repartition on the bucket: without it every write task emits a file
+    // into every bucket dir (tasks × buckets tiny files); with it each
+    // bucket is written by exactly one task as one file. When the summary
+    // reads the frame too, it is persisted AFTER this exchange: a cached
+    // frame keeps its partitioning, so the summary's groupBy(_bucket) and
+    // the write share one exchange. Unpinned width: the dynamic-partition
+    // write emits one file per bucket dir regardless of task count.
+    val clustered = frame.repartition(col("_bucket"))
+    val sorted = sortBy.fold(clustered)(c =>
+      clustered.sortWithinPartitions(col("_bucket"), col(c)))
+    val staged =
+      if (summarize) sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else sorted
+    try {
+      val (addStats, addBloom, counts) =
+        if (summarize) stagedSummary(staged,
+          if (prevStats.isDefined) specs else Nil,
+          if (prevBloom.isDefined) bSpecs else Nil, excludeDel = delta)
+        else (Map.empty[Int, Map[String, (String, String)]],
+          Map.empty[Int, Map[String, BloomSide]], Map.empty[Int, Long])
+      if (summarize && counts.isEmpty && seed.isEmpty && layout.isEmpty) return 0
+      val (written, observed) = observeWatermark(staged, observeWm, tombstones = delta)
+      // `_bucket` stays a DATA column (reads recover it without path
+      // parsing); `_bp` is its copy that partitionBy consumes
+      written.withColumn("_bp", col("_bucket"))
+        .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
+      // the write emits a dir per bucket that received rows (a driver-side
+      // listing, zero jobs). A seeded bucket with none — every row
+      // removed, a chain that resolved to nothing — gets an
+      // empty-but-schemaed dir IN STAGING: nothing may write directly to a
+      // v-dir, which could be a concurrent winner's published data
+      val rowBuckets = (0 until nBuckets).filter(b => Files.exists(stagedDir(b)))
+      val empties =
+        if (layout.isDefined && rowBuckets.isEmpty) Seq(0)
+        else (seed -- rowBuckets).toSeq
+      empties.foreach { b =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          staged.schema).write.mode("overwrite").parquet(stagedDir(b).toString)
+      }
+      val touched = (rowBuckets ++ empties).sorted
+      if (touched.isEmpty) { TableStore.deleteRecursively(staging); return 0 }
+      // a rewritten bucket gets EXACT sidecars from its staged rows; a
+      // delta commit can only WIDEN zone maps and OR its blooms (tombstoned
+      // values stay admitted until a compaction rebuilds them exactly)
+      val newStats = prevStats.map(p =>
+        if (delta) widenStats(specs, p, addStats) else (p -- touched) ++ addStats)
+      val newBloom = prevBloom.map(p =>
+        if (delta) orBloom(p, addBloom) else (p -- touched) ++ addBloom)
+      // Re-check the base before anything of the table changes: a stale
+      // writer abandons its staging dir, never clobbers the winner's
+      // bucket versions or sidecars. An already-existing dest is the same
+      // staleness signal (a racing writer published in the check-then-move
+      // window) — checked explicitly: Linux rename() would silently
+      // REPLACE an empty dest dir rather than throw.
+      def stale(): Nothing = {
+        TableStore.deleteRecursively(staging)
+        throw new java.util.ConcurrentModificationException(
+          s"$name: manifest moved past $base while this writer staged; " +
+            "re-read and retry (lost-update protection)")
+      }
+      if (currentManifestVersion(name) != base) stale()
+      val moved = touched.map { b =>
+        val dest = if (delta) deltaPath(name, b, next) else bucketPath(name, b, next)
+        Files.createDirectories(dest.getParent)
+        if (Files.exists(dest)) stale()
+        try Files.move(stagedDir(b), dest, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
+        val prev = states.getOrElse(b, BucketState(-1, Nil))
+        b -> (if (delta) prev.copy(deltas = prev.deltas :+ next) else BucketState(next, Nil))
+      }
+      TableStore.deleteRecursively(staging)
+      newStats.foreach(writeStats(name, next, _))
+      newBloom.foreach(writeBloom(name, next, _))
+      layout.foreach { l =>
+        def lines(f: Path, ls: Seq[String]): Unit = Files.write(f, ls.mkString("\n").getBytes,
+          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        if (l.stats.nonEmpty)
+          lines(statsColsFile(name), l.stats.map { case (c, k) => s"${StatKind.enc(c)}\t$k" })
+        if (l.blooms.nonEmpty)
+          lines(bloomColsFile(name), l.blooms.map { case (c, m, k) => s"${StatKind.enc(c)}\t$m\t$k" })
+        l.boundaries match {
+          case Some((kind, bs)) => lines(bucketerFile(name), s"range $kind" +: bs.toSeq.map(StatKind.enc))
+          case None => Files.deleteIfExists(bucketerFile(name))
+        }
+        lines(keyFile(name), Seq(l.key))
+        // base-file schema = the frame + _bucket (what partitionBy left in
+        // the files); readers hand it to spark.read and skip inference
+        publishSchema(schemaFile(name), schemaVersionFile(name), staged.schema, next)
+      }
+      if (delta)
+        publishSchema(deltaSchemaFile(name), deltaSchemaVersionFile(name), staged.schema, next)
+      commitManifest(name, states ++ moved, base, wmLine(observed()))
+      touched.size
+    } finally if (summarize) staged.unpersist(blocking = false)
+  }
+
+  private def liveStates(name: String, base: Option[Int]): Map[Int, BucketState] =
+    base.map(parseStates(name, _)).getOrElse(
+      throw new IllegalStateException(s"$name not initialized — writeAll first"))
+
   /** Initial full write: every row routed to its bucket, one snapshot dir
-    * per bucket, manifest v0. One distributed write job — the bucket
+    * per bucket, the next manifest. One distributed write job — the bucket
     * routing is a partitionBy on the derived `_bucket` column.
     *
     * `statsCols` turns on zone maps: per-bucket min/max for each listed
@@ -955,29 +1105,29 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // size m for the expected distinct values per bucket per column
     // (~m/10 at 1% false-positive with k=7; the 128 Ki-bit default covers
     // ~13k distinct values per bucket)
-    writeAllImpl(name, df, key, sortBy, statsCols, rangeBucket,
-      bloomCols.map(c => (c, bloomBits, bloomHashes)), recordWm = false)
+    writeAllAtBase(name, df, key, currentManifestVersion(name), sortBy, statsCols,
+      rangeBucket, bloomCols.map(c => (c, bloomBits, bloomHashes)))
 
-  /** [[writeAll]]; `recordWm` (the [[init]] path) commits the max
-    * `approximateUpdateTimestamp` of the loaded rows as the `wm` line. */
-  private def writeAllImpl(name: String, df: DataFrame, key: String,
-      sortBy: Option[String], statsCols: Seq[String], rangeBucket: Boolean,
-      bSpecs: Seq[(String, Int, Int)], recordWm: Boolean): Unit = {
-    sweepOrphans(name)
-    val base = currentManifestVersion(name)
-    val next = base.getOrElse(-1) + 1
-    val staging = tableDir(name).resolve(s"_staging$next")
+  /** [[writeAll]] with the base manifest made explicit — the seam the
+    * stale-writer tests drive, like [[mergeAtBase]]. `recordWm` (the
+    * [[init]] path) commits the max `approximateUpdateTimestamp` of the
+    * loaded rows as the `wm` line. */
+  private[graft] def writeAllAtBase(name: String, df: DataFrame, key: String,
+      base: Option[Int], sortBy: Option[String] = None, statsCols: Seq[String] = Nil,
+      rangeBucket: Boolean = false, blooms: Seq[(String, Int, Int)] = Nil,
+      recordWm: Boolean = false): Unit = {
+    val keyType = df.schema(key).dataType
     val boundaries: Option[(String, Array[String])] =
       if (!rangeBucket) None
       else {
-        val kind = StatKind.of(df.schema(key).dataType)
+        val kind = StatKind.of(keyType)
         require(kind != "string",
           "range bucketing needs a numeric/date/timestamp key")
         // approximate quantiles are fine for LAYOUT: boundary error only
         // skews bucket sizes a little, never correctness (routing is the
         // same pure function on both the write and every later merge)
         val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-        val q = df.select(StatKind.expr(key, df.schema(key).dataType).as("_k"))
+        val q = df.select(StatKind.expr(key, keyType).as("_k"))
           .stat.approxQuantile("_k", probs, 0.001)
         val rendered =
           if (kind == "long") q.map(d => math.floor(d).toLong.toString)
@@ -985,87 +1135,12 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         Some((kind, rendered.distinct))
       }
     val route = boundaries.fold(bucketCol(key)) { case (kind, bs) =>
-      rangeRouting(kind, bs, StatKind.expr(key, df.schema(key).dataType))
+      rangeRouting(kind, bs, StatKind.expr(key, keyType))
     }
-    // `_bucket` stays a DATA column (reads must recover it without path
-    // parsing); `_bp` is its copy used only for the write-time routing —
-    // partitionBy consumes the routing column, the data column survives.
-    // repartition on the bucket: without it every write task emits a file
-    // into every bucket dir (tasks × buckets tiny files); with it each
-    // bucket is written by exactly one task as one file
-    val withBucket = df.withColumn("_bucket", route)
-      .repartition(col("_bucket"))
-    // persisted for this call's scope: the write below materializes it,
-    // then the sidecar pass aggregates the CACHED rows instead of
-    // re-reading the staging dir it just wrote (one scan per table
-    // creation saved — the ingest doors pay this at every seed)
-    val sorted = sortBy.fold(withBucket)(c =>
-        withBucket.sortWithinPartitions(col("_bucket"), col(c)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (written, wm) = observeWatermark(sorted, recordWm, tombstones = false)
-    written.withColumn("_bp", col("_bucket"))
-      .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
-    // An EMPTY frame stages no _bp dirs at all (dynamic-partition writes
-    // emit nothing for zero rows), which would commit a table with no
-    // schema on disk — the staging read-back below and every later read
-    // or merge would then fail schema inference. Seed bucket 0 with an
-    // empty-but-schemaed parquet dir instead (the merge path's trick for
-    // all-removed buckets): empty-seeded tables — the ingest doors'
-    // documented empty-corpus start — read back with their full schema.
-    if (!(0 until nBuckets).exists(b => Files.exists(staging.resolve(s"_bp=$b"))))
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sorted.schema)
-        .write.mode("overwrite").parquet(staging.resolve("_bp=0").toString)
-    Files.createDirectories(tableDir(name))
-    val specs = statsCols.map(c => (c, StatKind.of(df.schema(c).dataType)))
-    val (newStats, newBloom) =
-      try sidecarsFromStaging(staging, specs, bSpecs, excludeDel = false,
-        preStaged = Some(sorted))
-      finally sorted.unpersist(blocking = false)
-    if (specs.nonEmpty) {
-      Files.write(statsColsFile(name),
-        specs.map { case (c, k) => s"${StatKind.enc(c)}\t$k" }
-          .mkString("\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      writeStats(name, next, newStats)
-    }
-    if (bSpecs.nonEmpty) {
-      Files.write(bloomColsFile(name),
-        bSpecs.map { case (c, m2, k2) => s"${StatKind.enc(c)}\t$m2\t$k2" }
-          .mkString("\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      writeBloom(name, next, newBloom)
-    }
-    boundaries match {
-      case Some((kind, bs)) =>
-        Files.write(bucketerFile(name),
-          (s"range $kind" +: bs.map(StatKind.enc)).mkString("\n").getBytes,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      case None => Files.deleteIfExists(bucketerFile(name))
-    }
-    val entries = (0 until nBuckets).flatMap { b =>
-      val src = staging.resolve(s"_bp=$b")
-      if (Files.exists(src)) {
-        val dest = bucketPath(name, b, next)
-        Files.createDirectories(dest.getParent)
-        Files.move(src, dest, StandardCopyOption.ATOMIC_MOVE)
-        Some(b -> BucketState(next, Nil))
-      } else None
-    }
-    TableStore.deleteRecursively(staging)
-    Files.write(keyFile(name), key.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    // base-file schema = df + _bucket (what partitionBy left in the files);
-    // readers hand it to spark.read and skip footer inference. Stamped
-    // with the manifest this write publishes so reads OLDER than this
-    // write fall back to inference (schemaAsOf contract). STAMP FIRST:
-    // a crash between the two writes then leaves a too-NEW stamp over
-    // the old sidecar — every read at a live/historical version below
-    // it degrades to inference (safe) instead of binding old files to a
-    // new schema (the silent-null bug this versioning exists to close).
-    writeVersionStamp(schemaVersionFile(name), base.getOrElse(-1) + 1)
-    writeSchemaFile(schemaFile(name), sorted.schema)
-    commitManifest(name, entries.toMap, base, wm())
+    publish(name, base, Map.empty, df.withColumn("_bucket", route), sortBy,
+      delta = false, layout = Some(Layout(key,
+        statsCols.map(c => (c, StatKind.of(df.schema(c).dataType))), blooms, boundaries)),
+      observeWm = recordWm, wmLine = identity)
   }
 
   /** `df` with the max `approximateUpdateTimestamp` (epoch micros) of its
@@ -1118,9 +1193,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   private[graft] def mergeAtBase(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, base: Option[Int],
       sortBy: Option[String] = None): Unit = {
-    sweepOrphans(name)
-    val m = base.map(parseStates(name, _)).getOrElse(
-      throw new IllegalStateException(s"$name not initialized — writeAll first"))
+    val m = liveStates(name, base)
     val staged = stage.withColumn("_bucket", routingCol(name, key, stage))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1136,73 +1209,14 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           else if (m.nonEmpty) readBuckets(name, Some(Set(m.keys.head))).get.limit(0)
           else throw new IllegalStateException(
             s"$name has an empty manifest — writeAll must seed at least one bucket")
-        val stageKeys = staged.select(col(key))
-        val kept = target.join(stageKeys, Seq(key), "left_anti")
+        val kept = target.join(staged.select(col(key)), Seq(key), "left_anti")
         val inserts = staged.filter(col("eventName") =!= "REMOVE")
           .drop("eventName")
           .withColumn("syncTimestamp", lit(syncTime))
           .select(target.columns.map(col).toIndexedSeq: _*)
-        val next = base.get + 1
-        val staging = tableDir(name).resolve(s"_staging$next")
-        val merged = kept.unionByName(inserts)
-          .repartition(col("_bucket")) // one file per bucket, see writeAll
-        sortBy.fold(merged)(c =>
-            merged.sortWithinPartitions(col("_bucket"), col(c)))
-          .withColumn("_bp", col("_bucket"))
-          .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
-        // a touched bucket may end up empty (all rows removed) — it still
-        // advances, pointing at an empty-but-valid parquet dir. Materialize
-        // the empties INTO STAGING too: nothing below may write directly to
-        // a v-dir, which could be a concurrent winner's published data.
-        touched.foreach { b =>
-          val src = staging.resolve(s"_bp=$b")
-          if (!Files.exists(src))
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              target.schema).write.mode("overwrite").parquet(src.toString)
-        }
-        // rewritten buckets get EXACT zone maps and blooms from the staged
-        // bytes — one fused read-back for both sidecar kinds (touched-and-
-        // now-empty buckets simply lose their stats entry). Sidecar
-        // absence still propagates per kind: a missing carried sidecar
-        // drops that kind from the fused computation entirely.
-        val specs = statsSpecs(name)
-        val bSpecs = bloomSpecs(name)
-        val prevStats =
-          if (specs.isEmpty) None else carriedStats(name, base.get)
-        val prevBloom =
-          if (bSpecs.isEmpty) None else carriedBloom(name, base.get)
-        val (addStats, addBloom) = sidecarsFromStaging(staging,
-          if (prevStats.isDefined) specs else Nil,
-          if (prevBloom.isDefined) bSpecs else Nil, excludeDel = false)
-        val newStats = prevStats.map(prev => (prev -- touched) ++ addStats)
-        val newBloom = prevBloom.map(prev => (prev -- touched) ++ addBloom)
-        // Re-check the base before any move: a stale writer must abandon
-        // its staging dir, not clobber the winner's bucket versions. An
-        // already-existing dest is the same staleness signal (a racing
-        // writer published v<next> between the check and this move).
-        def stale(): Nothing = {
-          TableStore.deleteRecursively(staging)
-          throw new java.util.ConcurrentModificationException(
-            s"$name: manifest moved past $base while merging; " +
-              "re-read and re-merge (lost-update protection)")
-        }
-        if (currentManifestVersion(name) != base) stale()
-        val updated = touched.map { b =>
-          val dest = bucketPath(name, b, next)
-          Files.createDirectories(dest.getParent)
-          // an existing dest means a racing writer published v<next> in the
-          // check-then-move window — detect it explicitly: Linux rename()
-          // would silently REPLACE an empty dest dir rather than throw
-          if (Files.exists(dest)) stale()
-          try Files.move(staging.resolve(s"_bp=$b"), dest,
-            StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
-          b -> BucketState(next, Nil) // rewritten clean: chain discharged
-        }.toMap
-        TableStore.deleteRecursively(staging)
-        newStats.foreach(writeStats(name, next, _))
-        newBloom.foreach(writeBloom(name, next, _))
-        commitManifest(name, m ++ updated, base)
+        // every touched bucket advances, an all-removed one to an empty dir
+        publish(name, base, m, kept.unionByName(inserts), sortBy,
+          delta = false, seed = touched)
       }
     } finally staged.unpersist()
   }
@@ -1232,122 +1246,20 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   private def mergeDeltaImpl(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, sortBy: Option[String],
       recordWm: Boolean): Unit = {
-    sweepOrphans(name)
     val base = currentManifestVersion(name)
-    val m = base.map(parseStates(name, _)).getOrElse(
-      throw new IllegalStateException(s"$name not initialized — writeAll first"))
+    val m = liveStates(name, base)
     val sk = storedKey(name)
     require(sk == key, s"$name is keyed by '$sk', not '$key'")
-    val next = base.get + 1
-    // sidecar work only when the table HAS sidecars: a sidecar-less table
-    // (the ingest doors' fingerprint indexes) pays exactly ONE action per
-    // delta commit — the staged write — and recovers the touched-bucket
-    // set from the staged _bp= directories (a driver-side listing, zero
-    // jobs); the former always-on summary pass was a second shuffle-agg
-    // action per commit that such tables paid for nothing
-    val specs = statsSpecs(name)
-    val bSpecs = bloomSpecs(name)
-    val prevStats =
-      if (specs.isEmpty) None else carriedStats(name, base.get)
-    val prevBloom =
-      if (bSpecs.isEmpty) None else carriedBloom(name, base.get)
-    val needSummary = prevStats.isDefined || prevBloom.isDefined
     val prevWm = if (recordWm) manifestWatermark(name, base.get) else None
-    val staged0 = stage
+    val rows = stage
       .withColumn("_bucket", routingCol(name, key, stage))
       .withColumn("_del", col("eventName") === "REMOVE")
       .drop("eventName")
       .withColumn("syncTimestamp", lit(syncTime))
-      .withColumn("_seq", lit(next.toLong))
-      // routed BEFORE the persist. On the persisted branch below (a
-      // table with sidecars) the summary's groupBy(_bucket) and the
-      // staged write both need _bucket clustering, and a cached frame
-      // keeps its partitioning — one shared exchange instead of a shuffle
-      // per consumer (every door's delta commit pays this per batch). On
-      // the unpersisted branch the write is the only consumer, and this
-      // is its one exchange. Unpinned width: a session that lets AQE
-      // re-size cached plan output may size it to the batch's bytes, and
-      // the dynamic-partition write still emits one file per bucket dir
-      // regardless of task count.
-      .repartition(col("_bucket"))
-    // persisted only when two actions will consume it (summary + write)
-    val staged = if (needSummary)
-      staged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else staged0
-    try {
-      // ONE pass over the cached staged frame yields the touched-bucket
-      // set (unfiltered counts) AND the sidecar widenings (del-guarded)
-      // — the former touched-distinct and sidecar actions fused; a
-      // delta commit can only WIDEN a bucket's zone map (tombstoned
-      // values stay inside the bounds until compaction retightens them)
-      // and OR-widen its blooms (base ∪ delta membership, tombstones
-      // keep their bits — false positives only — until compaction
-      // rebuilds exactly)
-      val (addStats, addBloom, counts) =
-        if (needSummary) stagedSummary(staged,
-          if (prevStats.isDefined) specs else Nil,
-          if (prevBloom.isDefined) bSpecs else Nil, excludeDel = true)
-        else (Map.empty[Int, Map[String, (String, String)]],
-          Map.empty[Int, Map[String, BloomSide]], Map.empty[Int, Long])
-      if (!needSummary || counts.nonEmpty) {
-        val staging = tableDir(name).resolve(s"_dstaging$next")
-        // staged is already routed by _bucket (shared with the summary's
-        // grouping — see the repartition at staging time above)
-        val (written, upsertMax) = observeWatermark(
-          sortBy.fold(staged)(c => staged.sortWithinPartitions(col("_bucket"), col(c))),
-          record = prevWm.isDefined, tombstones = true)
-        written.withColumn("_bp", col("_bucket"))
-          .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
-        // no-summary path: the write above just materialized the routing,
-        // so the staged directories ARE the touched set
-        val touched =
-          if (needSummary) counts.keySet
-          else (0 until nBuckets).filter(b =>
-            Files.exists(staging.resolve(s"_bp=$b"))).toSet
-        if (touched.isEmpty) { TableStore.deleteRecursively(staging); return }
-        // stamp + rewrite only when the sidecar content actually changes
-        // (first write, or a schema change after a writeAll) — an
-        // unchanged schema stays valid for every older manifest it
-        // already covered. STAMP FIRST (same crash-ordering argument as
-        // writeAll): a too-new stamp degrades reads to inference; the
-        // reverse order could validate a NEW sidecar with an OLD stamp.
-        val dsf = deltaSchemaFile(name)
-        val newDs = schemaJson(staged.schema)
-        val prevDs = if (Files.exists(dsf))
-          Some(new String(Files.readAllBytes(dsf),
-            java.nio.charset.StandardCharsets.UTF_8)) else None
-        if (!prevDs.contains(newDs) ||
-            !Files.exists(deltaSchemaVersionFile(name))) {
-          writeVersionStamp(deltaSchemaVersionFile(name), base.getOrElse(-1) + 1)
-          writeSchemaFile(dsf, staged.schema)
-        }
-        val newStats = prevStats.map(prev => widenStats(specs, prev, addStats))
-        val newBloom = prevBloom.map(prev => orBloom(prev, addBloom))
-        def stale(): Nothing = {
-          TableStore.deleteRecursively(staging)
-          throw new java.util.ConcurrentModificationException(
-            s"$name: manifest moved past $base while delta-merging; " +
-              "re-read and re-merge (lost-update protection)")
-        }
-        if (currentManifestVersion(name) != base) stale()
-        val updated = touched.map { b =>
-          val dest = deltaPath(name, b, next)
-          Files.createDirectories(dest.getParent)
-          // see mergeAtBase: an existing dest is a racing writer's publish
-          if (Files.exists(dest)) stale()
-          try Files.move(staging.resolve(s"_bp=$b"), dest,
-            StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
-          val prev = m.getOrElse(b, BucketState(-1, Nil))
-          b -> prev.copy(deltas = prev.deltas :+ next)
-        }.toMap
-        TableStore.deleteRecursively(staging)
-        newStats.foreach(writeStats(name, next, _))
-        newBloom.foreach(writeBloom(name, next, _))
-        val wm = for (p <- prevWm; u <- upsertMax() if u >= p) yield u
-        commitManifest(name, m ++ updated, base, wm)
-      }
-    } finally staged.unpersist()
+      .withColumn("_seq", lit(base.get + 1L))
+    publish(name, base, m, rows, sortBy, delta = true,
+      observeWm = prevWm.isDefined,
+      wmLine = u => for (p <- prevWm; x <- u if x >= p) yield x)
   }
 
   /** Small-file consolidation: rewrite every bucket whose delta chain
@@ -1356,86 +1268,23 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * crash/stale-writer safety as the merges. Only the dirty buckets'
     * bytes are read (chains resolved once, newest-wins) and rewritten;
     * clean buckets are untouched, so a steady-state table pays
-    * O(dirty fraction), not O(table), per compaction sweep. History
-    * stays time-travelable: old manifests keep referencing the
+    * O(dirty fraction), not O(table), per compaction sweep. The staged
+    * rows are the exact resolved state of every compacted bucket, so this
+    * is where widened zone maps retighten and blooms shed tombstoned bits.
+    * History stays time-travelable: old manifests keep referencing the
     * pre-compaction chains until [[vacuum]] retires them. Returns the
     * number of buckets compacted. */
   def compact(name: String, minDeltas: Int = 1,
       sortBy: Option[String] = None): Int = {
     require(minDeltas >= 1, "compacting clean buckets is a no-op")
-    sweepOrphans(name)
     val base = currentManifestVersion(name)
-    val m = base.map(parseStates(name, _)).getOrElse(
-      throw new IllegalStateException(s"$name not initialized — writeAll first"))
+    val m = liveStates(name, base)
     val targets = m.filter(_._2.deltas.size >= minDeltas)
     if (targets.isEmpty) 0
-    else {
-      val next = base.get + 1
-      val staging = tableDir(name).resolve(s"_cstaging$next")
-      // persisted for this call's scope (writeAll's pattern, r19): the
-      // staging write materializes it, then the sidecar pass aggregates
-      // the CACHED rows instead of re-reading (and re-inferring the
-      // schema of) the staging dir it just wrote — one fewer
-      // resolve+scan per compaction, which q151/q154 and every
-      // auto-compacting door commit pay per sweep
-      val resolved0 = resolve(name, targets).repartition(col("_bucket"))
-      val resolved = sortBy.fold(resolved0)(c =>
-          resolved0.sortWithinPartitions(col("_bucket"), col(c)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (addStats, addBloom, specs, bSpecs, prevStats, prevBloom) =
-        try {
-          resolved.withColumn("_bp", col("_bucket"))
-            .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
-          // a chain may resolve to nothing (every row deleted) — the bucket
-          // still compacts to an empty-but-valid base snapshot. The schema
-          // comes off the already-built plan, not a fresh resolve.
-          targets.keys.foreach { b =>
-            val src = staging.resolve(s"_bp=$b")
-            if (!Files.exists(src))
-              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                resolved.schema).write.mode("overwrite").parquet(src.toString)
-          }
-          // compaction is where widened zone maps retighten and
-          // delta-widened blooms shed their tombstoned bits: the staged
-          // rows are the exact resolved state of every compacted bucket —
-          // one fused pass over the persisted frame for both sidecar kinds
-          val specs0 = statsSpecs(name)
-          val bSpecs0 = bloomSpecs(name)
-          val prevStats0 =
-            if (specs0.isEmpty) None else carriedStats(name, base.get)
-          val prevBloom0 =
-            if (bSpecs0.isEmpty) None else carriedBloom(name, base.get)
-          val (s, b) = sidecarsFromStaging(staging,
-            if (prevStats0.isDefined) specs0 else Nil,
-            if (prevBloom0.isDefined) bSpecs0 else Nil, excludeDel = false,
-            preStaged = Some(resolved))
-          (s, b, specs0, bSpecs0, prevStats0, prevBloom0)
-        } finally resolved.unpersist(blocking = false)
-      val newStats = prevStats.map(prev => (prev -- targets.keys) ++ addStats)
-      val newBloom = prevBloom.map(prev => (prev -- targets.keys) ++ addBloom)
-      def stale(): Nothing = {
-        TableStore.deleteRecursively(staging)
-        throw new java.util.ConcurrentModificationException(
-          s"$name: manifest moved past $base while compacting; re-run")
-      }
-      if (currentManifestVersion(name) != base) stale()
-      val updated = targets.keys.map { b =>
-        val dest = bucketPath(name, b, next)
-        Files.createDirectories(dest.getParent)
-        // see mergeAtBase: an existing dest is a racing writer's publish
-        if (Files.exists(dest)) stale()
-        try Files.move(staging.resolve(s"_bp=$b"), dest,
-          StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
-        b -> BucketState(next, Nil)
-      }.toMap
-      TableStore.deleteRecursively(staging)
-      newStats.foreach(writeStats(name, next, _))
-      newBloom.foreach(writeBloom(name, next, _))
-      // same live rows, so the base's watermark line still holds
-      commitManifest(name, m ++ updated, base, manifestWatermark(name, base.get))
-      updated.size
-    }
+    // a chain that resolves to nothing still compacts, to an empty base;
+    // the live rows are the same, so the base's watermark line still holds
+    else publish(name, base, m, resolve(name, targets), sortBy, delta = false,
+      seed = targets.keySet, wmLine = _ => manifestWatermark(name, base.get))
   }
 
   /** Point lookup: read only the buckets that can contain `values` of the
@@ -1508,28 +1357,15 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
               st.deltas.map(d => b -> s"d$d")
           }
         }.toSet
-        var dirs = 0
-        (0 until nBuckets).foreach { b =>
-          val bDir = tableDir(name).resolve(s"b$b")
-          if (Files.exists(bDir)) {
-            scala.util.Using.resource(Files.list(bDir))(_.iterator().asScala.toSeq)
-              .filter { p =>
-                val n = p.getFileName.toString
-                n.startsWith("v") || n.startsWith("d")
-              }
-              .foreach { p =>
-                if (!live.contains((b, p.getFileName.toString))) {
-                  TableStore.deleteRecursively(p); dirs += 1
-                }
-              }
-          }
-        }
-        scala.util.Using.resource(Files.list(tableDir(name)))(_.iterator().asScala.toSeq)
-          .filter(_.getFileName.toString.matches("_[dc]?staging.*"))
-          // the live manifest's staging dir may still be mid-move only if a
-          // merge is running; single-writer protocol says none is
-          .foreach { p => TableStore.deleteRecursively(p); dirs += 1 }
-        (dropped.size, dirs)
+        val orphans = versionDirs(name).filterNot { case (b, p, _) =>
+          live.contains((b, p.getFileName.toString)) }
+        orphans.foreach(o => TableStore.deleteRecursively(o._2))
+        // the live manifest's staging dir may still be mid-move only if a
+        // merge is running; single-writer protocol says none is
+        val staging = scala.util.Using.resource(Files.list(tableDir(name)))(
+          _.iterator().asScala.filter(_.getFileName.toString.startsWith(StagingPrefix)).toSeq)
+        staging.foreach(TableStore.deleteRecursively)
+        (dropped.size, orphans.size + staging.size)
     }
   }
 
@@ -1538,7 +1374,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * [[graft.pipeline.Pipeline]] swaps this store in via config. */
   def init(name: String, df: DataFrame, key: String,
       sortBy: Option[String] = None): Unit =
-    writeAllImpl(name, df, key, sortBy, Nil, rangeBucket = false, Nil,
+    writeAllAtBase(name, df, key, currentManifestVersion(name), sortBy,
       recordWm = true)
 
   def applyMerge(name: String, stage: DataFrame, key: String,
@@ -1553,6 +1389,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 }
 
 object BucketedTableStore {
+  /** Every publish stages under `<table>/_staging<next>`. */
+  private val StagingPrefix = "_staging"
   private val WmPrefix = "wm "
   private val WmCol = "approximateUpdateTimestamp"
   /** Bound on the wait for an observed watermark: the write has finished

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Storage contract the CDC sync drives (SURVEY.md §2.1 S5-S7): the merge
   * logic ([[Merge]]) is pure DataFrame algebra; how the result becomes the
-  * new live table is the store's choice. Two implementations:
+  * new live table is the store's choice. Three implementations:
   *
   *   - [[TableStore]]        — whole-table snapshot + pointer swap. O(table)
   *                             per batch; right when batches touch most rows
@@ -14,8 +14,11 @@ import org.apache.spark.sql.DataFrame
   *   - [[BucketedTableStore]] — hash-bucketed partition-level snapshots.
   *                             O(touched buckets) per batch; the 100 TB form
   *                             (BENCHMARKS.md measures the crossover).
+  *   - [[JdbcTableStore]]    — a JDBC warehouse table, upserted by the
+  *                             reference's DELETE + INSERT in one
+  *                             transaction; keeps no history.
   *
-  * Both expose the same verbs so [[graft.pipeline.Pipeline]] and
+  * All expose the same verbs so [[graft.pipeline.Pipeline]] and
   * [[graft.streaming.CdcStream]] are storage-agnostic.
   *
   * Watermark: the sync needs MAX(approximateUpdateTimestamp) of each

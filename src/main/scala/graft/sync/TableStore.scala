@@ -48,12 +48,7 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
       s: org.apache.spark.sql.types.StructType): Unit = {
     val json = org.apache.spark.sql.types.StructType(
       s.fields.map(_.copy(nullable = true))).json
-    val f = schemaFile(name, v)
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    Files.write(tmp, json.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    TableStore.replaceFile(schemaFile(name, v), json.getBytes)
   }
   private def readSchemaFile(name: String, v: Int):
       Option[org.apache.spark.sql.types.StructType] = {
@@ -133,11 +128,7 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
     // reverse order could publish a version whose reads pay inference
     // until the next write — safe either way, this order never degrades
     writeSchemaFile(name, next, toWrite.schema)
-    val tmp = tableDir(name).resolve(s"_CURRENT.tmp$next")
-    Files.write(tmp, next.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, currentFile(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    TableStore.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
     // Old versions are kept for time-travel/debug until retain/vacuum.
   }
 
@@ -199,6 +190,18 @@ object TableStore {
         s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       }
     }
+  }
+
+  /** Replace file `f` with `bytes` through a temp sibling (`f` +
+    * `tmpSuffix`) and an atomic move: a reader sees the old content or
+    * the new, whole. */
+  private[graft] def replaceFile(f: Path, bytes: Array[Byte],
+      tmpSuffix: String = ".tmp"): Unit = {
+    val tmp = f.resolveSibling(f.getFileName.toString + tmpSuffix)
+    Files.write(tmp, bytes,
+      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Recursive file-tree copy (driver-side) — the working-copy leg of

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sync.BucketedTableStore
@@ -353,6 +355,39 @@ class BucketedStoreSpec extends SparkSpec {
         .select($"memberId", $"memberName").as[(String, String)].collect().toSet
       == winnerRows,
       "stale merge must not clobber the winner's published bucket versions")
+  }
+
+  test("stale writeAll refuses before it touches the winner's files") {
+    val root = tmpDir("bstore-occ3")
+    val store = new BucketedTableStore(spark, root, nBuckets = 4)
+    def rows(n: Int, prefix: String) = (1L to n).map(i => (i, s"$prefix$i", t0))
+      .toDF("id", "memberName", "approximateUpdateTimestamp")
+      .withColumn("syncTimestamp", lit(t0))
+    def write(df: org.apache.spark.sql.DataFrame, base: Option[Int],
+        rangeBucket: Boolean = true): Unit =
+      store.writeAllAtBase("member", df, "id", base, statsCols = Seq("id"),
+        rangeBucket = rangeBucket, blooms = Seq(("memberName", 1024, 3)))
+    write(rows(40, "a"), None)                                  // manifest 0
+    write(rows(30, "w"), Some(0))                               // the winner: manifest 1
+    val dir = java.nio.file.Paths.get(root, "member")
+    def entries() = scala.util.Using.resource(java.nio.file.Files.list(dir))(
+      _.iterator().asScala.toSeq)
+    def files() = entries().filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toMap
+    def rowSet() = store.read("member").get
+      .select($"id", $"memberName").as[(Long, String)].collect().toSet
+    val (winnerRows, winnerZones, winnerFiles) = (rowSet(), store.zoneMaps("member"), files())
+    assert(winnerFiles.contains("_BUCKETER") && winnerFiles.contains("_BLOOM.1"))
+    // a writer that read base 0 before the winner committed, routing by
+    // hash: it must refuse before it moves a dir or rewrites a sidecar
+    intercept[java.util.ConcurrentModificationException] {
+      write(rows(20, "s"), Some(0), rangeBucket = false)
+    }
+    assert(rowSet() == winnerRows, "stale writeAll must not clobber the winner's rows")
+    assert(store.zoneMaps("member") == winnerZones, "nor its zone maps")
+    assert(files() == winnerFiles, "nor its sidecars, routing or manifest")
+    assert(!entries().exists(_.getFileName.toString.startsWith("_staging")),
+      "the refused stage is removed")
   }
 
   // --- merge-on-read (mergeDelta / compact) ---------------------------
