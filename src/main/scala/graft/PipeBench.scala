@@ -103,7 +103,7 @@ object PipeBench {
     println(s"""{"metric":"bucketed_merge","target_rows":$bigN,"n_buckets":256,"batches":$bres}""")
 
     // Merge-on-read on the same 10M-row bucketed target: a delta commit
-    // appends one small file per touched bucket and never reads the
+    // appends one small table-level delta dir and never reads the
     // target, so its cost is O(batch) — flat in table size where the
     // copy-on-write merge above pays touched-bucket bytes. compact()
     // afterwards pays the rewrite ONCE for the accumulated chains (the

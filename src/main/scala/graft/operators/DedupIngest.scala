@@ -36,8 +36,9 @@ import graft.sync.BucketedTableStore
   *     intra-batch dedup is a separate concern
   *     ([[TextOps.exactDupGroups]]) with its own keep-first rule.
   *   - UPDATE: admitted docs' fingerprints delta-merge into the table
-  *     ([[BucketedTableStore.mergeDelta]]) — one small file per touched
-  *     bucket, no index bytes read or rewritten; `autoCompactAfter`
+  *     ([[BucketedTableStore.mergeDelta]]) — one small delta dir per
+  *     batch, its rows tagged and sorted by bucket, no index bytes read
+  *     or rewritten; `autoCompactAfter`
   *     bounds the read-side chain length. Rejected docs leave NO trace:
   *     only admitted content guards future batches.
   *

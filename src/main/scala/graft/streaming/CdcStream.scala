@@ -24,9 +24,10 @@ import graft.sync.{Concurrently, Merge, SyncStore}
   * Each micro-batch runs the extraction projection (≈ one MV refresh) and
   * the three entity merges (≈ the three CALLs) inside `foreachBatch`.
   *
-  * The staged batch is persisted before the merges: it is reused by the
-  * dedup window, the anti-join delete, and the insert, and a streaming
-  * source batch cannot be recomputed arbitrarily (SURVEY.md §4, mandatory).
+  * The source batch is persisted once, in `foreachBatch`, before the
+  * merges: every entity's stage reads the extraction projection over it,
+  * and a streaming source batch cannot be recomputed arbitrarily
+  * (SURVEY.md §4, mandatory).
   *
   * Watermark semantics: each batch merges against the target's
   * `MAX(approximateUpdateTimestamp)`, exactly like the reference — so
@@ -45,6 +46,11 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
     * returns how many ran (0 = no initialized non-empty target yet, and
     * nothing ran an action over `extracted`).
     *
+    * `extracted` is read once per merge and is not persisted here: the
+    * caller passes a projection over a frame it has persisted (the
+    * `foreachBatch` batch below, `Pipeline.replayQuarantine`'s parsed
+    * lines), so a second cache would only add a cache job per merge.
+    *
     * The merges touch disjoint targets, so [[Concurrently]] submits them
     * from one new thread each and Spark's scheduler interleaves their job
     * DAGs; in the reference the three CALLs are sequential
@@ -53,20 +59,17 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
     * stream's merges carry the stream's job group.
     */
   def syncAll(extracted: DataFrame): Int = {
-    val cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val syncTime = now()
-      val wms = watermarks()
-      val merged = Merge.entities.filter(c => wms.contains(c.name))
-      Concurrently.foreach(merged) { conf =>
-        val stage = Merge.stageChanges(cached, conf, wms(conf.name))
-        // SORTKEY mapping: snapshots are written time-sorted within
-        // files so lag/time-range queries prune parquet row groups
-        store.applyMerge(conf.name, stage, conf.keyCol, syncTime,
-          sortBy = Some("approximateUpdateTimestamp"))
-      }
-      merged.size
-    } finally cached.unpersist()
+    val syncTime = now()
+    val wms = watermarks()
+    val merged = Merge.entities.filter(c => wms.contains(c.name))
+    Concurrently.foreach(merged) { conf =>
+      val stage = Merge.stageChanges(extracted, conf, wms(conf.name))
+      // SORTKEY mapping: snapshots are written time-sorted within
+      // files so lag/time-range queries prune parquet row groups
+      store.applyMerge(conf.name, stage, conf.keyCol, syncTime,
+        sortBy = Some("approximateUpdateTimestamp"))
+    }
+    merged.size
   }
 
   /** Each entity's target watermark; an entity missing here does not
@@ -165,12 +168,14 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
         // one materialization feeds both the quarantine split and the
         // merges (a corrupt-column-only projection against the raw file
         // scan is also disallowed — the persisted frame sidesteps that).
+        // This is the sync's only persisted input: syncAll's merges read
+        // the extraction projection over it and cache nothing themselves.
         // NOTE (r19): riding the corrupt-row count on the merges' first
-        // action via Dataset.observe was tried and reverted — the batch
-        // AND the extracted projection are both persisted, so the
-        // CollectMetrics node lands inside a cached child plan, which no
-        // top-level executed plan carries: the metric is never surfaced
-        // and Observation.get blocks forever. The explicit isEmpty probe
+        // action via Dataset.observe was tried and reverted — syncAll then
+        // persisted the extracted projection too, so the CollectMetrics
+        // node landed inside a cached child plan, which no top-level
+        // executed plan carries: the metric was never surfaced and
+        // Observation.get blocked forever. The explicit isEmpty probe
         // doubles as the cache materializer, so it is not a wasted pass.
         val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try {

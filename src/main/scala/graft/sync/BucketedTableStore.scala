@@ -120,7 +120,8 @@ private[sync] object StatKind {
   * would rewrite 100 TB. This store hash-buckets rows by entity key:
   *
   *   root/<table>/b<bucket>/v<N>/   — per-bucket parquet BASE snapshots
-  *   root/<table>/b<bucket>/d<N>/   — per-bucket DELTA commits (see below)
+  *   root/<table>/d<N>/             — one DELTA commit for the whole table,
+  *                                    rows of many buckets (see below)
   *   root/<table>/_MANIFEST.<N>     — "bucket base[+delta...]" lines, plus
   *                                    an optional "wm <epoch micros>" line
   *   root/<table>/_CURRENT          — live manifest number (atomic move)
@@ -142,13 +143,20 @@ private[sync] object StatKind {
   *
   *   - '''copy-on-write''' ([[merge]]): delete-then-insert rewrite of ONLY
   *     the buckets containing staged keys — cost O(touched bucket bytes).
-  *   - '''merge-on-read''' ([[mergeDelta]]): append ONE small delta file
-  *     per touched bucket (upsert rows + REMOVE tombstones, stamped with
-  *     the commit sequence) — cost O(batch), the shape a high-frequency
-  *     CDC stream needs at 100 TB. Reads resolve a dirty bucket by
-  *     latest-per-key over base ∪ deltas; clean buckets are returned
-  *     as-is with zero resolution cost, so read amplification is bounded
-  *     by the un-compacted fraction of the table.
+  *   - '''merge-on-read''' ([[mergeDelta]]): append ONE small delta dir
+  *     `d<N>` per commit, for the whole table (upsert rows + REMOVE
+  *     tombstones, stamped with the commit sequence and carrying their
+  *     `_bucket`, sorted by it) — cost O(batch), and files per commit
+  *     bounded by the batch's partitions, not by the bucket count: the
+  *     shape a high-frequency CDC stream needs at 100 TB. The manifest
+  *     lists `N` in the chain of each bucket that received rows. Reads
+  *     resolve a dirty bucket by latest-per-key over base ∪ the rows of
+  *     its chain's deltas that carry its `_bucket`; clean buckets are
+  *     returned as-is with zero resolution cost, so read amplification is
+  *     bounded by the un-compacted fraction of the table. Earlier versions
+  *     wrote a delta per bucket, `b<bucket>/d<N>`; nothing reads that
+  *     layout, because the only trees that outlive a run (the memoized
+  *     seed masters) are written by [[writeAll]] alone and hold no chain.
   *
   * [[compact]] is the counterweight to [[mergeDelta]]: it rewrites every
   * bucket whose delta chain reached a threshold back to a single-file base
@@ -167,17 +175,19 @@ private[sync] object StatKind {
   *
   *   1. sweep: delete v/d-dirs versioned above the live manifest (a
   *      crashed predecessor's moved-but-uncommitted dirs).
-  *   1. stage: write the `_bucket`-partitioned rows under
-  *      `_staging<next>`, plus an empty-but-schemaed dir for each bucket
-  *      that must advance with no rows. A crash leaves the staging dir;
-  *      the retry overwrites it and [[vacuum]] removes it.
+  *   1. stage: write the rows under `_staging<next>`: a rewrite
+  *      partitioned by `_bucket`, plus an empty-but-schemaed dir for each
+  *      bucket that must advance with no rows; a delta as one flat dir. A
+  *      crash leaves the staging dir; the retry overwrites it and
+  *      [[vacuum]] removes it.
   *   1. check: the live manifest must still be the writer's base, and no
   *      destination dir may exist yet; otherwise the writer deletes its
   *      staging dir and throws `ConcurrentModificationException` before
   *      anything of the table has changed.
-  *   1. move: each staged bucket dir becomes `b<b>/v<next>` (a rewrite)
-  *      or `b<b>/d<next>` (a delta). A crash leaves dirs above the live
-  *      manifest: no reader sees them, and the next publish sweeps them.
+  *   1. move: each staged bucket dir becomes `b<b>/v<next>` (a rewrite),
+  *      or the staging dir becomes `d<next>` in one move (a delta). A
+  *      crash leaves dirs above the live manifest: no reader sees them,
+  *      and the next publish sweeps them.
   *   1. sidecars and table files: `_STATS.<next>` and `_BLOOM.<next>`,
   *      then a [[writeAll]]'s `_STATSCOLS`, `_BLOOMCOLS`, `_BUCKETER` and
   *      `_KEY`, then the schema sidecar, stamp first. A crash leaves
@@ -784,8 +794,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   private def bucketPath(name: String, bucket: Int, v: Int): Path =
     tableDir(name).resolve(s"b$bucket").resolve(s"v$v")
-  private def deltaPath(name: String, bucket: Int, v: Int): Path =
-    tableDir(name).resolve(s"b$bucket").resolve(s"d$v")
+  private def deltaPath(name: String, v: Int): Path = tableDir(name).resolve(s"d$v")
 
   def read(name: String): Option[DataFrame] = readBuckets(name, None)
 
@@ -856,11 +865,23 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       val basePaths = dirty.collect {
         case (b, s) if s.base >= 0 => bucketPath(name, b, s.base).toString
       }.toSeq
-      val deltaPaths = dirty.flatMap { case (b, s) =>
-        s.deltas.map(d => deltaPath(name, b, d).toString)
-      }.toSeq
-      val deltas = pread(deltaPaths,
+      // delta n → the wanted buckets whose chain lists n. Each delta dir is
+      // read once, and a row is admitted only where its bucket's chain
+      // lists its delta: a rewrite of a bucket (merge, compact) folds n
+      // into that bucket's base and drops n from its chain, and n's rows
+      // there must not come back. When every delta is admitted in every
+      // bucket no filter is needed, and a full read plans no literal sets
+      // (which would be new generated code on each read).
+      val admits = dirty.toSeq.flatMap { case (b, s) => s.deltas.map(_ -> b.toLong) }
+        .groupMap(_._1)(_._2)
+      val stored = pread(admits.keys.toSeq.sorted.map(deltaPath(name, _).toString),
         schemaAsOf(deltaSchemaFile(name), deltaSchemaVersionFile(name), asOf))
+      val deltas =
+        if (admits.values.forall(_.size == nBuckets)) stored
+        else stored.filter(admits.groupMap(_._2.toSet)(_._1).map { case (bs, ds) =>
+          val inSeq = col("_seq").isin(ds.toSeq.map(_.toLong): _*)
+          if (bs.size == nBuckets) inSeq else inSeq && col("_bucket").isin(bs.toSeq: _*)
+        }.reduce(_ || _))
       val layered =
         if (basePaths.isEmpty) deltas
         else deltas.unionByName(pread(basePaths, baseSchema)
@@ -880,24 +901,27 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     }
   }
 
-  /** Every bucket's versioned dirs, `b<bucket>/v<N>` and `b<bucket>/d<N>`,
-    * as (bucket, dir, N): the one listing the orphan sweep and [[vacuum]]
-    * share. A bucket path that is not a directory lists nothing. */
-  private def versionDirs(name: String): Seq[(Int, Path, Int)] =
-    (0 until nBuckets).flatMap { b =>
-      val bDir = tableDir(name).resolve(s"b$b")
-      if (!Files.isDirectory(bDir)) Nil
-      else scala.util.Using.resource(Files.list(bDir))(_.iterator().asScala.toSeq)
+  /** Every versioned dir of the table, the table-level deltas `d<N>` and
+    * each bucket's bases `b<bucket>/v<N>`, as (dir, N): the one listing
+    * the orphan sweep and [[vacuum]] share. A bucket path that is not a
+    * directory lists nothing. */
+  private def versionDirs(name: String): Seq[(Path, Int)] = {
+    def numbered(dir: Path, prefix: Char): Seq[(Path, Int)] =
+      if (!Files.isDirectory(dir)) Nil
+      else scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toSeq)
         .flatMap { p =>
           val n = p.getFileName.toString
-          if ((n.startsWith("v") || n.startsWith("d")) && n.length > 1 &&
-              n.drop(1).forall(_.isDigit)) Some((b, p, n.drop(1).toInt))
+          if (n.length > 1 && n.head == prefix && n.tail.forall(_.isDigit))
+            Some((p, n.tail.toInt))
           else None
         }
-    }
+    numbered(tableDir(name), 'd') ++
+      (0 until nBuckets).flatMap(b => numbered(tableDir(name).resolve(s"b$b"), 'v'))
+  }
 
   /** Crash-debris sweep, the first step of every publish: delete
-    * per-bucket v/d-dirs versioned ABOVE the live manifest. No manifest
+    * bucket v-dirs and table-level d-dirs versioned ABOVE the live
+    * manifest. No manifest
     * references them (manifests only cite versions ≤ their own number),
     * so they are exactly the moved-but-never-committed leftovers of a
     * predecessor that died between its dir moves and its CAS — which
@@ -911,7 +935,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * commit CAS still refuse the lost update in that window, as before. */
   private def sweepOrphans(name: String): Unit = {
     val live = currentManifestVersion(name).getOrElse(-1)
-    versionDirs(name).foreach { case (_, p, v) =>
+    versionDirs(name).foreach { case (p, v) =>
       if (v > live) TableStore.deleteRecursively(p)
     }
   }
@@ -951,10 +975,12 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   /** The one publish step every write verb ends in; the class doc gives
     * the protocol and what a crash at each step leaves behind. `frame`
-    * carries `_bucket`; it is clustered by bucket (sorted within by
-    * `sortBy`) and staged, and its buckets become `v<next>` dirs, or
-    * `d<next>` dirs layered on `states` for a `delta` commit. `seed`
-    * buckets are published even when they stage no row. A `layout` (a
+    * carries `_bucket`. A rewrite clusters it by bucket (sorted within by
+    * `sortBy`), and its buckets become `v<next>` dirs. A `delta` commit
+    * stages it, sorted by (`_bucket`, `sortBy`), as the one table-level
+    * dir `d<next>`, which the chain of each bucket that received rows
+    * lists on top of `states`. `seed` buckets are published even when
+    * they stage no row. A `layout` (a
     * [[writeAll]]) replaces `states`, writes the table files, and
     * publishes an empty bucket 0 when nothing staged, so the table keeps
     * its schema on disk. `observeWm` observes the staged rows' max
@@ -993,9 +1019,15 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // frame keeps its partitioning, so the summary's groupBy(_bucket) and
     // the write share one exchange. Unpinned width: the dynamic-partition
     // write emits one file per bucket dir regardless of task count.
-    val clustered = frame.repartition(col("_bucket"))
-    val sorted = sortBy.fold(clustered)(c =>
-      clustered.sortWithinPartitions(col("_bucket"), col(c)))
+    // A delta is one dir and needs no exchange: it is written as it
+    // arrives, one file per input partition, its rows sorted by bucket so
+    // row-group stats can prune by bucket.
+    val sorted =
+      if (delta) frame.sortWithinPartitions((col("_bucket") +: sortBy.map(col).toSeq): _*)
+      else {
+        val clustered = frame.repartition(col("_bucket"))
+        sortBy.fold(clustered)(c => clustered.sortWithinPartitions(col("_bucket"), col(c)))
+      }
     val staged =
       if (summarize) sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sorted
@@ -1007,25 +1039,35 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         else (Map.empty[Int, Map[String, (String, String)]],
           Map.empty[Int, Map[String, BloomSide]], Map.empty[Int, Long])
       if (summarize && counts.isEmpty && seed.isEmpty && layout.isEmpty) return 0
-      val (written, observed) = observeWatermark(staged, observeWm, tombstones = delta)
-      // `_bucket` stays a DATA column (reads recover it without path
-      // parsing); `_bp` is its copy that partitionBy consumes
-      written.withColumn("_bp", col("_bucket"))
-        .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
-      // the write emits a dir per bucket that received rows (a driver-side
-      // listing, zero jobs). A seeded bucket with none — every row
-      // removed, a chain that resolved to nothing — gets an
-      // empty-but-schemaed dir IN STAGING: nothing may write directly to a
-      // v-dir, which could be a concurrent winner's published data
-      val rowBuckets = (0 until nBuckets).filter(b => Files.exists(stagedDir(b)))
-      val empties =
-        if (layout.isDefined && rowBuckets.isEmpty) Seq(0)
-        else (seed -- rowBuckets).toSeq
-      empties.foreach { b =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          staged.schema).write.mode("overwrite").parquet(stagedDir(b).toString)
-      }
-      val touched = (rowBuckets ++ empties).sorted
+      // without a summary, a delta learns its buckets from its own write
+      val (written, observed) = observeWrite(staged, wm = observeWm,
+        buckets = delta && !summarize, tombstones = delta)
+      lazy val (observedWm, observedBuckets) = observed()
+      val touched =
+        if (delta) {
+          written.write.mode("overwrite").parquet(staging.toString)
+          if (summarize) counts.keys.toSeq.sorted
+          else observedBuckets.fold(0 until nBuckets: Seq[Int])(_.toSeq.sorted)
+        } else {
+          // `_bucket` stays a DATA column (reads recover it without path
+          // parsing); `_bp` is its copy that partitionBy consumes
+          written.withColumn("_bp", col("_bucket"))
+            .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
+          // the write emits a dir per bucket that received rows (a
+          // driver-side listing, zero jobs). A seeded bucket with none —
+          // every row removed, a chain that resolved to nothing — gets an
+          // empty-but-schemaed dir IN STAGING: nothing may write directly
+          // to a v-dir, which could be a concurrent winner's published data
+          val rowBuckets = (0 until nBuckets).filter(b => Files.exists(stagedDir(b)))
+          val empties =
+            if (layout.isDefined && rowBuckets.isEmpty) Seq(0)
+            else (seed -- rowBuckets).toSeq
+          empties.foreach { b =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              staged.schema).write.mode("overwrite").parquet(stagedDir(b).toString)
+          }
+          (rowBuckets ++ empties).sorted
+        }
       if (touched.isEmpty) { TableStore.deleteRecursively(staging); return 0 }
       // a rewritten bucket gets EXACT sidecars from its staged rows; a
       // delta commit can only WIDEN zone maps and OR its blooms (tombstoned
@@ -1047,16 +1089,21 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
             "re-read and retry (lost-update protection)")
       }
       if (currentManifestVersion(name) != base) stale()
-      val moved = touched.map { b =>
-        val dest = if (delta) deltaPath(name, b, next) else bucketPath(name, b, next)
+      def move(from: Path, dest: Path): Unit = {
         Files.createDirectories(dest.getParent)
         if (Files.exists(dest)) stale()
-        try Files.move(stagedDir(b), dest, StandardCopyOption.ATOMIC_MOVE)
+        try Files.move(from, dest, StandardCopyOption.ATOMIC_MOVE)
         catch { case _: java.nio.file.FileAlreadyExistsException => stale() }
+      }
+      if (delta) move(staging, deltaPath(name, next))
+      else {
+        touched.foreach(b => move(stagedDir(b), bucketPath(name, b, next)))
+        TableStore.deleteRecursively(staging)
+      }
+      val moved = touched.map { b =>
         val prev = states.getOrElse(b, BucketState(-1, Nil))
         b -> (if (delta) prev.copy(deltas = prev.deltas :+ next) else BucketState(next, Nil))
       }
-      TableStore.deleteRecursively(staging)
       newStats.foreach(writeStats(name, next, _))
       newBloom.foreach(writeBloom(name, next, _))
       layout.foreach { l =>
@@ -1077,7 +1124,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       }
       if (delta)
         publishSchema(deltaSchemaFile(name), deltaSchemaVersionFile(name), staged.schema, next)
-      commitManifest(name, states ++ moved, base, wmLine(observed()))
+      commitManifest(name, states ++ moved, base, wmLine(observedWm))
       touched.size
     } finally if (summarize) staged.unpersist(blocking = false)
   }
@@ -1143,32 +1190,40 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       observeWm = recordWm, wmLine = identity)
   }
 
-  /** `df` with the max `approximateUpdateTimestamp` (epoch micros) of its
-    * rows — live rows only when `tombstones` — observed on the job that
-    * writes it, plus the read of that value. No extra action: the value
-    * rides the write. The observe node sits ABOVE the persisted frame it
+  /** `df` observed on the job that writes it, plus the read of what was
+    * observed: with `wm`, the max `approximateUpdateTimestamp` (epoch
+    * micros) of its rows, live rows only when `tombstones`; with
+    * `buckets`, the set of its `_bucket`s. No extra action: the values
+    * ride the write. The observe node sits ABOVE the persisted frame it
     * wraps: beneath a cached child it never fires. The read waits at most
-    * [[BucketedTableStore.WmWait]] for the listener that delivers it;
-    * without `record`, without the column, or on a timeout it is None —
-    * no `wm` line, so the next sync scans. */
-  private def observeWatermark(df: DataFrame, record: Boolean,
-      tombstones: Boolean): (DataFrame, () => Option[Long]) = {
-    val hasCol = df.schema.exists(f =>
-      f.name == WmCol && f.dataType == org.apache.spark.sql.types.TimestampType)
-    if (!record || !hasCol) (df, () => None)
+    * [[BucketedTableStore.WmWait]] for the listener that delivers it. A
+    * value not asked for, a `wm` without its column, or a timeout reads
+    * None: no `wm` line, so the next sync scans, and a delta listed under
+    * every bucket, which is correct and only slower to read. */
+  private def observeWrite(df: DataFrame, wm: Boolean, buckets: Boolean,
+      tombstones: Boolean): (DataFrame, () => (Option[Long], Option[Set[Int]])) = {
+    val wmAgg =
+      if (!wm || !df.schema.exists(f => f.name == WmCol &&
+          f.dataType == org.apache.spark.sql.types.TimestampType)) None
+      else {
+        val ts = unix_micros(col(WmCol))
+        Some(max(if (tombstones) when(!col("_del"), ts) else ts).as("wm"))
+      }
+    val aggs = wmAgg.toSeq ++
+      (if (buckets) Seq(collect_set(col("_bucket")).as("buckets")) else Nil)
+    if (aggs.isEmpty) (df, () => (None, None))
     else {
       val obs = org.apache.spark.sql.Observation()
-      val ts = unix_micros(col(WmCol))
-      val observed = df.observe(obs,
-        max(if (tombstones) when(!col("_del"), ts) else ts).as("wm"))
-      (observed, () =>
+      (df.observe(obs, aggs.head, aggs.tail: _*), () =>
         scala.util.Try(scala.concurrent.Await.result(obs.future, WmWait)) match {
           case scala.util.Success(r) =>
-            if (r.isNullAt(0)) None else Some(r.getLong(0))
+            (wmAgg.flatMap(_ => Option(r.getAs[java.lang.Long]("wm")).map(_.longValue)),
+              if (buckets) Some(r.getAs[Seq[Long]]("buckets").map(_.toInt).toSet) else None)
           case scala.util.Failure(e) =>
-            logWarning(s"watermark observation unavailable ($e); " +
-              "committing without a wm line, the next sync scans")
-            None
+            logWarning(s"write observation unavailable ($e); committing without a " +
+              "wm line (the next sync scans)" +
+              (if (buckets) " and listing the delta under every bucket" else ""))
+            (None, None)
         })
     }
   }
@@ -1221,12 +1276,15 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     } finally staged.unpersist()
   }
 
-  /** Merge-on-read commit: append ONE delta file per touched bucket and
+  /** Merge-on-read commit: append ONE delta dir for the whole table and
     * move the manifest pointer — the target's existing bytes are never
     * read, shuffled, or rewritten, so a commit costs O(batch) regardless
-    * of table size. The delta rows are the staged upserts (REMOVEs kept
-    * as `_del` tombstones) stamped with the commit sequence `_seq`;
-    * [[resolve]] replays chains newest-wins at read time. Same `stage`
+    * of table size, and the batch is written without an exchange, one
+    * file per input partition. The delta rows are the staged upserts
+    * (REMOVEs kept as `_del` tombstones) stamped with the commit sequence
+    * `_seq` and their `_bucket`; the manifest lists the delta under each
+    * bucket that received rows, and [[resolve]] replays each bucket's
+    * chain newest-wins at read time. Same `stage`
     * contract as [[merge]]: target schema + `eventName`, at most one row
     * per key per batch. The flip side is read amplification on dirty
     * buckets — [[compact]] (or `deltaMerges = true` auto-compaction)
@@ -1324,8 +1382,9 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   }
 
   /** Retention sweep: keep the `keepManifests` most recent manifests
-    * (always including the live one) and every bucket version — base OR
-    * delta — any of them references; delete older manifests, unreferenced
+    * (always including the live one) and every bucket base and
+    * table-level delta any of them references (a delta lives while any
+    * retained chain lists it); delete older manifests, unreferenced
     * v/d-dirs, and orphaned staging dirs from crashed merges. Without
     * this, every merge leaks its superseded bucket versions forever — at
     * 100 TB the leak, not the live data, dominates storage. Deletion
@@ -1348,18 +1407,17 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           Files.deleteIfExists(statsFile(name, v)) // zone maps age out with their manifest
           Files.deleteIfExists(bloomFile(name, v)) // bloom sidecars likewise
         }
-        // union of still-referenced per-bucket dirs ("v3" / "d5" names)
-        // across the retained manifests
-        val live: Set[(Int, String)] = (math.max(0, floor) to cur).flatMap { v =>
+        // union of the dirs the retained manifests still reference: bucket
+        // bases and table-level deltas a chain lists
+        val live: Set[Path] = (math.max(0, floor) to cur).flatMap { v =>
           if (!Files.exists(manifestFile(name, v))) Nil
           else parseStates(name, v).toSeq.flatMap { case (b, st) =>
-            (if (st.base >= 0) Seq(b -> s"v${st.base}") else Nil) ++
-              st.deltas.map(d => b -> s"d$d")
+            (if (st.base >= 0) Seq(bucketPath(name, b, st.base)) else Nil) ++
+              st.deltas.map(deltaPath(name, _))
           }
         }.toSet
-        val orphans = versionDirs(name).filterNot { case (b, p, _) =>
-          live.contains((b, p.getFileName.toString)) }
-        orphans.foreach(o => TableStore.deleteRecursively(o._2))
+        val orphans = versionDirs(name).map(_._1).filterNot(live.contains)
+        orphans.foreach(TableStore.deleteRecursively)
         // the live manifest's staging dir may still be mid-move only if a
         // merge is running; single-writer protocol says none is
         val staging = scala.util.Using.resource(Files.list(tableDir(name)))(

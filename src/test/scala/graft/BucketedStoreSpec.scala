@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sync.BucketedTableStore
+import graft.sync.{BucketState, BucketedTableStore}
 
 /** Partition-level snapshot store: merge touches only the buckets holding
   * staged keys, untouched buckets keep their bytes and version, and the
@@ -438,15 +438,17 @@ class BucketedStoreSpec extends SparkSpec {
     val store = new BucketedTableStore(spark, rootStr, nBuckets = 4)
     store.writeAll("member", target(), "memberId") // manifest 0
     // simulate a writer that died between its dir moves and its commit:
-    // moved-but-uncommitted v1/d1 debris in every bucket dir
+    // moved-but-uncommitted v1 debris in every bucket dir, and the
+    // table-level d1 a delta commit moves its staging dir to
     val root = java.nio.file.Paths.get(rootStr)
     (0 until 4).foreach { b =>
       val junkV = root.resolve("member").resolve(s"b$b").resolve("v1")
-      val junkD = root.resolve("member").resolve(s"b$b").resolve("d1")
       java.nio.file.Files.createDirectories(junkV)
-      java.nio.file.Files.createDirectories(junkD)
       java.nio.file.Files.write(junkV.resolve("part-junk"), "junk".getBytes)
     }
+    val junkD = root.resolve("member").resolve("d1")
+    java.nio.file.Files.createDirectories(junkD)
+    java.nio.file.Files.write(junkD.resolve("part-junk"), "junk".getBytes)
     // the retry of the same logical merge must sweep the debris and land,
     // not throw ConcurrentModificationException forever
     store.mergeDelta("member", stageBatch1, "memberId", t1)   // manifest 1
@@ -535,7 +537,7 @@ class BucketedStoreSpec extends SparkSpec {
     val b2 = Seq("m2").toDF("memberId").select(store.bucketCol("memberId"))
       .head().getLong(0).toInt
 
-    val d1 = java.nio.file.Paths.get(root, "member", s"b$b2", "d1")
+    val d1 = java.nio.file.Paths.get(root, "member", "d1")
     java.nio.file.Files.createDirectories(d1)
     java.nio.file.Files.write(d1.resolve("part-junk"), "junk".getBytes)
     store.mergeDelta("member",
@@ -555,6 +557,98 @@ class BucketedStoreSpec extends SparkSpec {
     assert(store.bucketStates("member").get.values.forall(_.isClean) &&
       snapshot(store) == afterDelta,
       "compaction over swept debris must publish the clean result")
+  }
+
+  private def bucketOf(store: BucketedTableStore, key: String): Int =
+    Seq(key).toDF("memberId").select(store.bucketCol("memberId")).head().getLong(0).toInt
+
+  private def changes(t: Timestamp, rows: (String, String, String)*) =
+    rows.map { case (k, n, e) => (k, n, t, e) }
+      .toDF("memberId", "memberName", "approximateUpdateTimestamp", "eventName")
+
+  test("a delta row is read only where its bucket's chain lists that delta") {
+    val t2 = new Timestamp(t1.getTime + 60000)
+    val t3 = new Timestamp(t2.getTime + 60000)
+    val store = new BucketedTableStore(spark, tmpDir("mor-admit"), nBuckets = 4)
+    val ref = new BucketedTableStore(spark, tmpDir("mor-admit-ref"), nBuckets = 4)
+    Seq(store, ref).foreach(_.writeAll("member", target(), "memberId")) // manifest 0
+    // two fresh keys in each of two buckets A and B
+    val fresh = (1 to 64).map(i => s"n$i")
+    val a = bucketOf(store, fresh.head)
+    val Seq(kA, kA2) = fresh.filter(bucketOf(store, _) == a).take(2)
+    val b = bucketOf(store, fresh.find(bucketOf(store, _) != a).get)
+    val Seq(kB, kB2) = fresh.filter(bucketOf(store, _) == b).take(2)
+    val batches = Seq(
+      changes(t1, (kA, "x", "INSERT"), (kB, "y", "INSERT")),   // manifest 1: A and B
+      changes(t2, (kA, "x", "REMOVE")),                         // manifest 2: rewrites A
+      changes(t3, (kA2, "z", "INSERT"), (kB2, "w", "INSERT")))  // manifest 3: A and B
+    store.mergeDelta("member", batches(0), "memberId", t1)
+    store.merge("member", batches(1), "memberId", t2)
+    store.mergeDelta("member", batches(2), "memberId", t3)
+    ref.merge("member", batches(0), "memberId", t1)
+    ref.merge("member", batches(1), "memberId", t2)
+    ref.merge("member", batches(2), "memberId", t3)
+    val st = store.bucketStates("member").get
+    assert(st(a) == new BucketState(2, List(3)) && st(b) == new BucketState(0, List(1, 3)),
+      s"fixture chains: $st")
+    // delta 1 still holds kA's row, but A's chain no longer lists it
+    assert(!snapshot(store).exists(_._1 == kA), "the rewrite of A removed kA for good")
+    assert(snapshot(store) == snapshot(ref), "chains must resolve to the copy-on-write result")
+    val onlyA = store.readBuckets("member", Some(Set(a))).get
+      .select($"memberId").as[String].collect().toSet
+    assert(onlyA == snapshot(ref).map(_._1).filter(bucketOf(store, _) == a),
+      "a read of A alone admits no row of another bucket from a shared delta")
+  }
+
+  test("a table-level delta dir lives while a retained manifest lists it") {
+    val root = tmpDir("mor-vacuum")
+    val store = new BucketedTableStore(spark, root, nBuckets = 4)
+    store.writeAll("member", target(), "memberId")          // manifest 0
+    store.mergeDelta("member", stageBatch1, "memberId", t1) // manifest 1
+    val afterDelta = snapshot(store)
+    val d1 = java.nio.file.Paths.get(root, "member", "d1")
+    assert(java.nio.file.Files.isDirectory(d1), "a delta commit lands as one table-level dir")
+    assert(store.compact("member") > 0)                     // manifest 2: no chain lists d1
+    store.vacuum("member", keepManifests = 2)               // keeps manifests 1, 2
+    assert(java.nio.file.Files.isDirectory(d1), "retained manifest 1 still lists d1")
+    val at1 = store.readAtManifest("member", 1).get
+    assert(at1.inputFiles.exists(_.contains("/d1/")), "manifest 1 reads its delta")
+    assert(at1.select($"memberId", $"memberName", $"syncTimestamp")
+      .as[(String, String, Timestamp)].collect().toSet == afterDelta)
+    store.vacuum("member", keepManifests = 1)
+    assert(!java.nio.file.Files.exists(d1), "no retained manifest lists d1")
+    assert(snapshot(store) == afterDelta, "live read intact after the sweep")
+  }
+
+  test("a delta listed under every bucket reads the same rows") {
+    val n = 8
+    val store = new BucketedTableStore(spark, tmpDir("mor-every"), nBuckets = n)
+    store.writeAll("member", target(), "memberId")          // manifest 0
+    val m0 = store.bucketStates("member").get
+    store.mergeDelta("member", stageBatch1, "memberId", t1) // manifest 1
+    val observed = snapshot(store)
+    val listed = store.bucketStates("member").get.count(_._2.deltas == List(1))
+    assert(listed < n, "the fixture's delta must miss some bucket")
+    // what a delta commit publishes when its bucket observation is missing:
+    // delta 1 under every bucket, including buckets with no base
+    store.commitManifest("member", (0 until n).map(b =>
+      b -> m0.getOrElse(b, new BucketState(-1, Nil)).copy(deltas = List(1))).toMap, Some(1))
+    assert(store.bucketStates("member").get.values.forall(_.deltas == List(1)))
+    assert(snapshot(store) == observed)
+    assert(store.lookup("member", "memberId", Seq("m2", "m3", "m7")).get
+      .select($"memberId", $"memberName").as[(String, String)].collect().toSet ==
+      Set(("m2", "bob2"), ("m7", "grace")))
+  }
+
+  test("an empty delta commit publishes nothing") {
+    val root = tmpDir("mor-empty")
+    val store = new BucketedTableStore(spark, root, nBuckets = 4, deltaMerges = true)
+    store.init("member", target(), "memberId")              // manifest 0, with a wm line
+    store.applyMerge("member", stageBatch1.filter($"memberId" === "none"), "memberId", t1)
+    assert(store.bucketStates("member").get.values.forall(_.isClean),
+      "no bucket lists a delta of no rows")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "member", "d1")))
+    assert(store.recordedWatermark("member").contains(t0))
   }
 
   test("merge is idempotent: reapplying the same stage is a no-op") {

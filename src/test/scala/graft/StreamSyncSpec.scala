@@ -15,6 +15,7 @@ import graft.ingest.Extraction
 import graft.model.CdcSchemas
 import graft.pipeline.Pipeline
 import graft.streaming.CdcStream
+import graft.sync.BucketedTableStore
 
 /** What a sync costs beyond its own jobs: the merges' jobs carry the
   * caller's job properties, and a stream-driven sync reuses the code the
@@ -98,5 +99,44 @@ class StreamSyncSpec extends SparkSpec {
     assert(pipeline.member.count() == 8)
     assert(compiles(2) <= 16,
       s"the third sync recompiled its plans (${compiles(2)} compiles; per sync: $compiles)")
+  }
+  test("a delta commit on a 16-bucket table writes at most 2 parquet files") {
+    val gen = new CdcGen.Gen(53)
+    var clock = t0
+    val pipeline = loaded(gen, "onefile", ticks = 4, () => new Timestamp(clock),
+      nBuckets = Some(16), deltaMerges = true)
+    val store = pipeline.store.asInstanceOf[BucketedTableStore]
+    val cdcDir = tmpDir("onefile-cdc")
+    writeLines(cdcDir, "batch.json", (1 to 64).flatMap { i =>
+      val (m, q, mq) = gen.tick()
+      Seq(m, q, mq).map(gen.envelope("INSERT", _, t0 + i * 1000))
+    })
+    clock = t0 + 3600000
+    pipeline.syncAvailable(cdcDir, tmpDir("onefile-ckpt"))
+    Seq("member", "quest", "member_quest").foreach { name =>
+      val states = store.bucketStates(name).get
+      val n = states.values.flatMap(_.deltas).max
+      assert(states.count(_._2.deltas.contains(n)) > 2, s"$name: the batch must span buckets")
+      val files = pipeline.table(name).inputFiles.filter(_.contains(s"/d$n/"))
+      assert(files.nonEmpty && files.length <= 2, s"$name: delta $n wrote ${files.toSeq}")
+    }
+    assert(pipeline.member.count() == 68)
+  }
+
+  test("an entity with no changes in a stream batch publishes nothing") {
+    val gen = new CdcGen.Gen(59)
+    var clock = t0
+    val pipeline = loaded(gen, "quiet", ticks = 4, () => new Timestamp(clock),
+      nBuckets = Some(4), deltaMerges = true)
+    val store = pipeline.store.asInstanceOf[BucketedTableStore]
+    val before = store.bucketStates("quest")
+    val cdcDir = tmpDir("quiet-cdc")
+    val (m, _, _) = gen.tick()
+    writeLines(cdcDir, "batch.json", Seq(gen.envelope("INSERT", m, t0 + 1000)))
+    clock = t0 + 60000
+    pipeline.syncAvailable(cdcDir, tmpDir("quiet-ckpt"))
+    assert(store.bucketStates("quest") == before, "quest had no change to commit")
+    assert(store.bucketStates("member").get.values.exists(_.deltas.nonEmpty))
+    assert(pipeline.member.count() == 5)
   }
 }
