@@ -29,7 +29,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Failure posture: loads and saves are best-effort — a torn write, a
   * version-incompatible model dir, or a full disk degrade to an in-JVM
-  * rebuild, never an error on the query path.
+  * rebuild, never an error on the query path. One exception: a `tree/`
+  * is a [[graft.sync.BucketedTableStore]] table, served as it is, and
+  * the store refuses a table whose manifests name no key (the layout
+  * before manifests described their version). Clear a disk tier written
+  * before that change.
   */
 object AnnIndexStore {
   /** Test seam; production reads SPARK_GRAFT_ANN_DIR. */

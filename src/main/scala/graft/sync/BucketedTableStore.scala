@@ -1,20 +1,18 @@
 package graft.sync
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
 /** Per-bucket live state: the base snapshot version plus the ordered chain
   * of delta commits layered on top (empty chain = clean bucket). `base`
   * is -1 for a bucket that has only ever received delta commits. */
-/** One bucket/column bloom sidecar: the bitset and the (m, k) geometry it
-  * was built with — see the versioning note at the sidecar build site. */
-private[sync] final case class BloomSide(m: Int, k: Int, bits: Array[Long])
-
 final case class BucketState(base: Int, deltas: List[Int]) {
   def isClean: Boolean = deltas.isEmpty
   private[sync] def render: String = (base :: deltas).mkString("+")
@@ -122,11 +120,35 @@ private[sync] object StatKind {
   *   root/<table>/b<bucket>/v<N>/   — per-bucket parquet BASE snapshots
   *   root/<table>/d<N>/             — one DELTA commit for the whole table,
   *                                    rows of many buckets (see below)
-  *   root/<table>/_MANIFEST.<N>     — "bucket base[+delta...]" lines, plus
-  *                                    an optional "wm <epoch micros>" line
+  *   root/<table>/_MANIFEST.<N>     — the one description of version N
+  *   root/<table>/_STATS.<N>        — version N's zone maps, if any
+  *   root/<table>/_BLOOM.<N>        — version N's bloom sidecars, if any
   *   root/<table>/_CURRENT          — live manifest number (atomic move)
-  *   root/<table>/_KEY              — the entity key column (read-side
-  *                                    delta resolution needs it)
+  *
+  * '''Manifest grammar.''' One line per fact, a tag and its fields;
+  * column names and range boundaries are URL-encoded, so no field holds a
+  * space:
+  *
+  *   key <column>                     — the entity key
+  *   route hash                       — or: route range <kind> <boundary>...
+  *   stat <column> <kind>             — a zone-map column, its [[StatKind]]
+  *   bloom <column> <m> <k>           — a bloom column, its bits and hashes
+  *   schema <json>                    — the base files' schema, asNullable
+  *   dschema <json>                   — the delta files' schema, asNullable
+  *   wm <epoch micros>                — the CDC watermark (below)
+  *   <bucket> <base>[+<delta>...]     — one line per bucket
+  *
+  * A [[writeAll]] sets the description: key, routing, sidecar columns and
+  * base schema. Every other commit carries its base manifest's, and a
+  * delta commit sets `dschema` too. Each verb and each read reads
+  * `_CURRENT` once and parses that one manifest, so the routing, the
+  * sidecar geometry and the schemas it uses are those of the version it
+  * reads or extends, time-travel reads included. A recorded schema spares
+  * each `spark.read.parquet` its footer-inference job (at door scale, up
+  * to three per batch); a missing or unparsable schema line degrades to
+  * inference, never to an error. A manifest with bucket lines and no
+  * `key` line is refused: nothing reads the older layout that kept the
+  * description in unversioned files.
   *
   * The `wm` line is the CDC target watermark, MAX(approximateUpdateTimestamp)
   * over the live rows of the version that manifest publishes, committed
@@ -137,7 +159,7 @@ private[sync] object StatKind {
   * at `mergeDeltaImpl`), and [[compact]] carries its base's line
   * unchanged (same live rows). Every other commit — copy-on-write
   * [[merge]], direct [[writeAll]]/[[mergeDelta]] calls, [[rebucket]] —
-  * drops it, so the next sync scans. Bucket-state readers skip the line.
+  * drops it, so the next sync scans.
   *
   * Two merge disciplines, selectable per store:
   *
@@ -153,10 +175,7 @@ private[sync] object StatKind {
   *     resolve a dirty bucket by latest-per-key over base ∪ the rows of
   *     its chain's deltas that carry its `_bucket`; clean buckets are
   *     returned as-is with zero resolution cost, so read amplification is
-  *     bounded by the un-compacted fraction of the table. Earlier versions
-  *     wrote a delta per bucket, `b<bucket>/d<N>`; nothing reads that
-  *     layout, because the only trees that outlive a run (the memoized
-  *     seed masters) are written by [[writeAll]] alone and hold no chain.
+  *     bounded by the un-compacted fraction of the table.
   *
   * [[compact]] is the counterweight to [[mergeDelta]]: it rewrites every
   * bucket whose delta chain reached a threshold back to a single-file base
@@ -169,9 +188,9 @@ private[sync] object StatKind {
   * per-bucket dirs, so a write is invisible until its one pointer move,
   * exactly the [[TableStore]] protocol one directory deeper. All four
   * write verbs ([[writeAll]], [[merge]], [[mergeDelta]], [[compact]]) end
-  * in the same step, `publish`; each supplies only its frame, the
-  * buckets that must advance, and its `wm` rule. Each step, and what a
-  * crash during it leaves behind:
+  * in the same step, `publish`; each supplies only its frame, its
+  * manifest, the buckets that must advance, and its `wm` rule. Each step,
+  * and what a crash during it leaves behind:
   *
   *   1. sweep: delete v/d-dirs versioned above the live manifest (a
   *      crashed predecessor's moved-but-uncommitted dirs).
@@ -188,23 +207,16 @@ private[sync] object StatKind {
   *      or the staging dir becomes `d<next>` in one move (a delta). A
   *      crash leaves dirs above the live manifest: no reader sees them,
   *      and the next publish sweeps them.
-  *   1. sidecars and table files: `_STATS.<next>` and `_BLOOM.<next>`,
-  *      then a [[writeAll]]'s `_STATSCOLS`, `_BLOOMCOLS`, `_BUCKETER` and
-  *      `_KEY`, then the schema sidecar, stamp first. A crash leaves
-  *      sidecars of a version no manifest names (the retry overwrites
-  *      them) and at worst a schema stamp newer than the live manifest,
-  *      which degrades reads to inference. The table files are not
-  *      versioned: a crashed [[writeAll]] that changed the key, the
-  *      routing or the sidecar columns leaves the old version described
-  *      by the new files until the writeAll is retried.
+  *   1. sidecars: `_STATS.<next>` and `_BLOOM.<next>`. A crash leaves
+  *      sidecars of a version no manifest names; the retry overwrites
+  *      them.
   *   1. commit ([[commitManifest]]): write `_MANIFEST.<next>`, then flip
   *      `_CURRENT` through a temp file and an atomic move — the commit
   *      point. A crash before the flip leaves a manifest no pointer names;
   *      the retry overwrites it.
   *
-  * Apart from that table-file caveat, a reader sees the old version or
-  * the new one, never a mix, and retrying the interrupted call lands what
-  * an uninterrupted one would.
+  * A reader sees the old version or the new one, never a mix, and
+  * retrying the interrupted call lands what an uninterrupted one would.
   *
   * Bucket count is fixed at table creation (like any hash-bucketed
   * layout); pick it so bucket size ≈ a few parquet row groups at target
@@ -215,7 +227,7 @@ private[sync] object StatKind {
 final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     deltaMerges: Boolean = false, autoCompactAfter: Int = 8)
     extends SyncStore with org.apache.spark.internal.Logging {
-  import BucketedTableStore.{StagingPrefix, WmCol, WmPrefix, WmWait}
+  import BucketedTableStore.{Manifest, StagingPrefix, WmCol, WmWait}
 
   require(nBuckets > 0)
   require(autoCompactAfter >= 1)
@@ -224,121 +236,32 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   private def tableDir(name: String): Path = Paths.get(root, name)
   private def currentFile(name: String): Path = tableDir(name).resolve("_CURRENT")
-  private def keyFile(name: String): Path = tableDir(name).resolve("_KEY")
-  private def bucketerFile(name: String): Path = tableDir(name).resolve("_BUCKETER")
-  private def statsColsFile(name: String): Path = tableDir(name).resolve("_STATSCOLS")
   private def statsFile(name: String, v: Int): Path =
     tableDir(name).resolve(s"_STATS.$v")
-  private def bloomColsFile(name: String): Path = tableDir(name).resolve("_BLOOMCOLS")
   private def bloomFile(name: String, v: Int): Path =
     tableDir(name).resolve(s"_BLOOM.$v")
   private def manifestFile(name: String, v: Int): Path =
     tableDir(name).resolve(s"_MANIFEST.$v")
-  private def schemaFile(name: String): Path = tableDir(name).resolve("_SCHEMA")
-  private def deltaSchemaFile(name: String): Path =
-    tableDir(name).resolve("_DSCHEMA")
-  // manifest version each schema sidecar was written AT — a time-travel
-  // read older than the stamp must not trust the sidecar (a later
-  // writeAll may have changed the table schema; binding old files to the
-  // new schema silently nulls renamed/missing columns)
-  private def schemaVersionFile(name: String): Path =
-    tableDir(name).resolve("_SCHEMA_V")
-  private def deltaSchemaVersionFile(name: String): Path =
-    tableDir(name).resolve("_DSCHEMA_V")
-
-  // ---- persisted file schemas -----------------------------------------
-  //
-  // A table's parquet schema is FIXED at writeAll (merges stage the same
-  // target schema; deltas add only the bookkeeping columns), yet every
-  // spark.read.parquet without an explicit schema pays a footer-sampling
-  // inference JOB first. At door scale (the q150/q160/q229 ingest family:
-  // tiny batches, many commits) those inference jobs are a real fraction
-  // of the per-batch fixed cost — each decide re-reads the index, so each
-  // batch pays up to three of them (clean base + dirty base + deltas).
-  // Persisting the schema once per layout (base at writeAll, delta at the
-  // first mergeDelta) and handing it to the reader removes them all.
-  // Stored asNullable: parquet readers bind by name, and a lit()-derived
-  // non-null field must not make the read schema stricter than the files.
-  // A missing file (pre-upgrade table, crash before write) degrades to
-  // inference, never to an error.
-
-  private def schemaJson(s: org.apache.spark.sql.types.StructType): String =
-    org.apache.spark.sql.types.StructType(
-      s.fields.map(_.copy(nullable = true))).json
-
-  private def readSchemaFile(f: Path): Option[org.apache.spark.sql.types.StructType] =
-    if (!Files.exists(f)) None
-    else scala.util.Try(
-      org.apache.spark.sql.types.DataType.fromJson(
-        new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
-
-  /** Write schema sidecar `f` with its stamp `vf` = manifest `v`, only
-    * when the content changes (or the stamp is missing): an unchanged
-    * schema stays valid for every older manifest it already covered. The
-    * sidecar is replaced atomically, so a torn write is never read as a
-    * (wrong) schema. STAMP FIRST: a crash between the two writes leaves a
-    * too-new stamp over the old sidecar, and every read below it degrades
-    * to inference (safe) instead of binding old files to a new schema
-    * (the silent-null bug this versioning exists to close). */
-  private def publishSchema(f: Path, vf: Path,
-      s: org.apache.spark.sql.types.StructType, v: Int): Unit =
-    if (!readSchemaFile(f).map(schemaJson).contains(schemaJson(s)) || !Files.exists(vf)) {
-      Files.write(vf, v.toString.getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      TableStore.replaceFile(f, schemaJson(s).getBytes)
-    }
-
-  /** The schema sidecar at `f`, but only when valid for a read AS OF
-    * manifest `asOf` (None = live read, always valid). Historical reads
-    * trust the sidecar only when the stamp proves it was written at or
-    * before that manifest — older manifests fall back to footer
-    * inference, which returns the historical files' TRUE schema. A
-    * missing stamp (pre-upgrade table) keeps the sidecar for live reads
-    * and degrades historical ones to inference — conservative, never
-    * wrong. */
-  private def schemaAsOf(f: Path, vf: Path, asOf: Option[Int])
-      : Option[org.apache.spark.sql.types.StructType] =
-    asOf match {
-      case None => readSchemaFile(f)
-      case Some(v) =>
-        val stamp =
-          if (Files.exists(vf))
-            scala.util.Try(new String(Files.readAllBytes(vf)).trim.toInt).toOption
-          else None
-        if (stamp.exists(_ <= v)) readSchemaFile(f) else None
-    }
 
   // ---- bucket routing ------------------------------------------------
   //
   // Hash routing (the default) gives uniform buckets and O(1) key→bucket
   // for merges, but scatters every non-key attribute across all buckets —
   // a zone map over a hash layout never prunes. A RANGE-clustered table
-  // instead routes by the key's position among persisted quantile
-  // boundaries: merge routing stays a pure function of the key (REMOVE
-  // events route correctly), and any column correlated with the key
-  // (auto-increment ids vs creation time is the canonical 100 TB case)
-  // gets genuinely disjoint per-bucket min/max — the layout Redshift sort
-  // keys / Delta OPTIMIZE buy. Boundaries are fixed at writeAll (like the
-  // bucket count); rebucket is the escape hatch when the key distribution
-  // drifts.
-
-  private def loadBoundaries(name: String): Option[(String, Array[String])] = {
-    val f = bucketerFile(name)
-    if (!Files.exists(f)) None
-    else {
-      val lines = Files.readAllLines(f).asScala.filter(_.nonEmpty).toSeq
-      if (lines.head == "hash") None
-      else Some((lines.head.stripPrefix("range "),
-        lines.tail.map(StatKind.dec).toArray))
-    }
-  }
+  // instead routes by the key's position among quantile boundaries that
+  // its manifest records: merge routing stays a pure function of the key
+  // (REMOVE events route correctly), and any column correlated with the
+  // key (auto-increment ids vs creation time is the canonical 100 TB
+  // case) gets genuinely disjoint per-bucket min/max — the layout
+  // Redshift sort keys / Delta OPTIMIZE buy. Boundaries are fixed at
+  // writeAll (like the bucket count); rebucket is the escape hatch when
+  // the key distribution drifts.
 
   /** bucket = |{boundaries < key}| — a chain of codegen'd `when`s (the
     * bucket count is small by construction), no shuffle, no lookup table.
     * `norm` is the key already normalized to the boundary kind's domain
     * ([[StatKind.expr]]), so routing and pruning agree on the ordering. */
-  private def rangeRouting(kind: String, bs: Array[String], norm: Column): Column =
+  private def rangeRouting(kind: String, bs: Seq[String], norm: Column): Column =
     bs.foldLeft(lit(0L)) { (acc, b) =>
       val lim = kind match {
         case "long" => lit(b.toLong)
@@ -348,28 +271,16 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       acc + when(norm > lim, 1L).otherwise(0L)
     }
 
-  /** The routing expression live tables were written with: hash unless a
-    * `_BUCKETER` sidecar records range boundaries. LongType either way.
-    * `frame` supplies the key's type (a date key normalizes to epoch day
-    * on writes and merges alike). */
-  private def routingCol(name: String, key: String, frame: DataFrame): Column =
-    loadBoundaries(name) match {
-      case None => bucketCol(key)
-      case Some((kind, bs)) =>
-        rangeRouting(kind, bs, StatKind.expr(key, frame.schema(key).dataType))
-    }
+  /** The routing expression of manifest `m`, LongType either way. `frame`
+    * supplies the key's type (a date key normalizes to epoch day on
+    * writes and merges alike). */
+  private def routing(m: Manifest, frame: DataFrame): Column = m.route match {
+    case None => bucketCol(m.key)
+    case Some((kind, bs)) =>
+      rangeRouting(kind, bs, StatKind.expr(m.key, frame.schema(m.key).dataType))
+  }
 
   // ---- zone-map stats ------------------------------------------------
-
-  /** stats columns → kind, as fixed at writeAll ([[StatKind]]). */
-  private def statsSpecs(name: String): Seq[(String, String)] = {
-    val f = statsColsFile(name)
-    if (!Files.exists(f)) Nil
-    else Files.readAllLines(f).asScala.filter(_.nonEmpty).map { line =>
-      val Array(c, k) = line.split('\t')
-      (StatKind.dec(c), k)
-    }.toSeq
-  }
 
   /** ONE aggregation pass over a publish's staged frame computes EVERY
     * sidecar contribution — zone-map min/max for the stats columns and
@@ -394,7 +305,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       statSpecs: Seq[(String, String)], bloomSpecs: Seq[(String, Int, Int)],
       excludeDel: Boolean):
       (Map[Int, Map[String, (String, String)]],
-        Map[Int, Map[String, BloomSide]], Map[Int, Long]) = {
+        Map[Int, Map[String, Array[Long]]], Map[Int, Long]) = {
     val schema = raw.schema
     def guard(e: org.apache.spark.sql.Column) =
       if (excludeDel) when(!col("_del"), e) else e
@@ -420,12 +331,12 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       }.toMap
     val bOff = 1 + 2 * statSpecs.size
     val blooms =
-      if (bloomSpecs.isEmpty) Map.empty[Int, Map[String, BloomSide]]
+      if (bloomSpecs.isEmpty) Map.empty[Int, Map[String, Array[Long]]]
       else collected.map { r =>
         val b = r.getLong(0).toInt
-        b -> bloomSpecs.zipWithIndex.map { case ((c, m, k), i) =>
-          c -> BloomSide(m, k, graft.functions.HashKernels.packedBytesToLongs(
-            r.getAs[Array[Byte]](bOff + i)))
+        b -> bloomSpecs.zipWithIndex.map { case ((c, _, _), i) =>
+          c -> graft.functions.HashKernels.packedBytesToLongs(
+            r.getAs[Array[Byte]](bOff + i))
         }.toMap
       }.toMap
     val counts = collected.map { r =>
@@ -493,23 +404,24 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   /** Live zone maps: bucket → stats column → (min, max), rendered in the
     * column's [[StatKind]] domain. Empty when the table keeps no stats. */
   def zoneMaps(name: String): Map[Int, Map[String, (String, String)]] =
-    currentManifestVersion(name).map(readStats(name, _)).getOrElse(Map.empty)
+    currentVersion(name).map(readStats(name, _)).getOrElse(Map.empty)
 
-  /** The buckets that MAY hold rows with `colName` in [lo, hi] — a bucket
-    * survives unless its zone map PROVES exclusion, so missing stats (no
-    * sidecar, all-null bucket, never-configured column) degrade to a full
-    * read, never a wrong skip. Chains prune as a unit: if no file of a
-    * bucket's base∪deltas holds an in-range row, the resolved bucket
-    * cannot either (resolution only drops rows), so skipping a whole
-    * bucket can never resurrect or lose a version. */
-  private def zoneAdmitted(name: String, v: Int, buckets: Set[Int],
-      colName: String, lo: Any, hi: Any): Set[Int] =
-    statsSpecs(name).find(_._1 == colName) match {
-      case None => buckets
+  /** The buckets of version (`v`, `m`) that MAY hold rows with `colName`
+    * in [lo, hi] — a bucket survives unless its zone map PROVES
+    * exclusion, so missing stats (no sidecar, all-null bucket,
+    * never-configured column) degrade to a full read, never a wrong
+    * skip. Chains prune as a unit: if no file of a bucket's base∪deltas
+    * holds an in-range row, the resolved bucket cannot either (resolution
+    * only drops rows), so skipping a whole bucket can never resurrect or
+    * lose a version. */
+  private def zoneAdmitted(name: String, colName: String, lo: Any, hi: Any)(
+      v: Int, m: Manifest): Set[Int] =
+    m.stats.find(_._1 == colName) match {
+      case None => m.states.keySet
       case Some((_, kind)) =>
         val stats = readStats(name, v)
         val loB = StatKind.bound(kind, lo); val hiB = StatKind.bound(kind, hi)
-        buckets.filter { b =>
+        m.states.keySet.filter { b =>
           stats.get(b).flatMap(_.get(colName)) match {
             case None => true // no proof of exclusion
             case Some((mn, mx)) =>
@@ -521,10 +433,10 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   def prunedBuckets(name: String, colName: String, lo: Any, hi: Any):
       Option[Set[Int]] =
-    for {
-      m <- bucketStates(name)
-      v <- currentManifestVersion(name)
-    } yield zoneAdmitted(name, v, m.keySet, colName, lo, hi)
+    live(name).map { case (v, m) => zoneAdmitted(name, colName, lo, hi)(v, m) }
+
+  private def inRange(colName: String, lo: Any, hi: Any): Column =
+    col(colName) >= lit(lo) && col(colName) <= lit(hi)
 
   /** Zone-map-pruned range scan: read only the buckets whose stats admit
     * `colName` ∈ [lo, hi], then apply the residual filter (stats are
@@ -534,11 +446,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * window, not the table. */
   def readRange(name: String, colName: String, lo: Any, hi: Any):
       Option[DataFrame] =
-    prunedBuckets(name, colName, lo, hi).flatMap { bs =>
-      if (bs.isEmpty)
-        read(name).map(_.limit(0))
-      else readBuckets(name, Some(bs))
-    }.map(_.filter(col(colName) >= lit(lo) && col(colName) <= lit(hi)))
+    prunedRead(name, live(name), zoneAdmitted(name, colName, lo, hi),
+      inRange(colName, lo, hi))
 
   /** [[readRange]] against a historical manifest: sidecars are versioned
     * with their manifest, so a time-travel read prunes with the stats AS
@@ -546,19 +455,22 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * described, and a missing historical sidecar (vacuumed, crashed)
     * degrades to a full read of that snapshot, never a wrong skip. */
   def readRangeAt(name: String, manifestVersion: Int, colName: String,
-      lo: Any, hi: Any): Option[DataFrame] = {
-    if (!Files.exists(manifestFile(name, manifestVersion))) None
-    else {
-      val states = parseStates(name, manifestVersion)
-      val admitted = zoneAdmitted(name, manifestVersion, states.keySet,
-        colName, lo, hi)
-      val base =
-        if (admitted.isEmpty) resolve(name, states, Some(manifestVersion)).limit(0)
-        else resolve(name, states.view.filterKeys(admitted).toMap,
-          Some(manifestVersion))
-      Some(base.filter(col(colName) >= lit(lo) && col(colName) <= lit(hi)))
+      lo: Any, hi: Any): Option[DataFrame] =
+    prunedRead(name, versionAt(name, manifestVersion),
+      zoneAdmitted(name, colName, lo, hi), inRange(colName, lo, hi))
+
+  /** Version (`v`, `m`) read through its sidecars: only the buckets
+    * `admit` keeps, then the exact `residual` filter — the one body of
+    * the live and time-travel pruned reads. */
+  private def prunedRead(name: String, version: Option[(Int, Manifest)],
+      admit: (Int, Manifest) => Set[Int], residual: Column): Option[DataFrame] =
+    version.map { case (v, m) =>
+      val admitted = admit(v, m)
+      val rows =
+        if (admitted.isEmpty) resolve(name, m, m.states).limit(0)
+        else resolve(name, m, m.states.view.filterKeys(admitted).toMap)
+      rows.filter(residual)
     }
-  }
 
   // ---- bloom sidecars ------------------------------------------------
   //
@@ -573,30 +485,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   // at delta commits (tombstoned values keep their bits — false
   // positives only, never false negatives), retightened by compact,
   // absence propagates so a lost sidecar degrades to full reads, and
-  // vacuum ages sidecars out with their manifests. Sidecar size is
-  // nBuckets × m bits per column — 1024 buckets × 128 Ki bits = 16 MiB,
-  // the price of skipping whole buckets on point probes over 100 TB.
-
-  /** bloom columns → (m bits, k hashes), fixed at writeAll. */
-  private def bloomSpecs(name: String): Seq[(String, Int, Int)] = {
-    val f = bloomColsFile(name)
-    if (!Files.exists(f)) Nil
-    else Files.readAllLines(f).asScala.filter(_.nonEmpty).map { line =>
-      val Array(c, m, k) = line.split('\t')
-      (StatKind.dec(c), m.toInt, k.toInt)
-    }.toSeq
-  }
-
-  /** One bucket/column bloom sidecar: the bitset AND the (m, k) geometry
-    * it was built with. Geometry is versioned WITH the bitset — probing a
-    * historical sidecar with the live `_BLOOMCOLS` geometry after a
-    * re-`writeAll` changed m or k would compute positions mod the new m
-    * against old bits: a wrong skip (false negative) or an index
-    * overflow. Carrying (m, k) per entry makes every probe self-
-    * describing regardless of what the live config says. */
-  private type BloomSide = graft.sync.BloomSide
-  private def BloomSide(m: Int, k: Int, bits: Array[Long]) =
-    graft.sync.BloomSide(m, k, bits)
+  // vacuum ages sidecars out with their manifests. The (m, k) geometry
+  // is the manifest's: every commit but a writeAll carries its base's,
+  // so a sidecar and the geometry that probes it are always of one
+  // version, and a historical probe uses the bits it was built with.
+  // Sidecar size is nBuckets × m bits per column — 1024 buckets × 128 Ki
+  // bits = 16 MiB, the price of skipping whole buckets on point probes
+  // over 100 TB.
 
   private def renderBits(bits: Array[Long]): String = {
     val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
@@ -609,27 +504,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     Array.fill(bytes.length / 8)(bb.getLong)
   }
 
-  private def readBloom(name: String, v: Int): Map[Int, Map[String, BloomSide]] = {
+  private def readBloom(name: String, v: Int): Map[Int, Map[String, Array[Long]]] = {
     val f = bloomFile(name, v)
     if (!Files.exists(f)) Map.empty
     else Files.readAllLines(f).asScala.filter(_.nonEmpty)
-      .flatMap { line =>
-        line.split('\t') match {
-          case Array(b, c, m, k, bits) => // current format: geometry per line
-            Some((b.toInt, StatKind.dec(c), BloomSide(m.toInt, k.toInt,
-              parseBitsB64(bits))))
-          case Array(b, c, bits) =>
-            // legacy geometry-less line: only trustworthy while the live
-            // _BLOOMCOLS still describes the geometry it was built with;
-            // a column no longer listed there has no recoverable geometry
-            // and the entry must DROP (absence admits the bucket — a full
-            // read, never a wrong skip)
-            val col = StatKind.dec(c)
-            bloomSpecs(name).find(_._1 == col).map { case (_, m, k) =>
-              (b.toInt, col, BloomSide(m, k, parseBitsB64(bits)))
-            }
-          case _ => None
-        }
+      .map { line =>
+        val Array(b, c, bits) = line.split('\t')
+        (b.toInt, StatKind.dec(c), parseBitsB64(bits))
       }.groupBy(_._1).view
       .mapValues(_.map(t => t._2 -> t._3).toMap).toMap
   }
@@ -637,89 +518,64 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   /** Like [[carriedStats]]: a missing base sidecar PROPAGATES (claiming
     * membership knowledge we don't have would wrongly skip buckets). */
   private def carriedBloom(name: String, base: Int):
-      Option[Map[Int, Map[String, BloomSide]]] =
+      Option[Map[Int, Map[String, Array[Long]]]] =
     if (Files.exists(bloomFile(name, base))) Some(readBloom(name, base)) else None
 
-  /** OR-union of two bloom maps — the delta-commit widening (a superset
-    * of base ∪ delta membership: no false negatives by construction).
-    * Bitsets built under DIFFERENT geometries cannot be unioned
-    * meaningfully — position p means different values under different m —
-    * so a geometry mismatch drops the entry: absence admits the bucket
-    * (full read), never a wrong skip. */
-  private def orBloom(prev: Map[Int, Map[String, BloomSide]],
-      add: Map[Int, Map[String, BloomSide]]):
-      Map[Int, Map[String, BloomSide]] =
+  /** OR-union of two bloom maps of one geometry — the delta-commit
+    * widening (a superset of base ∪ delta membership: no false negatives
+    * by construction). */
+  private def orBloom(prev: Map[Int, Map[String, Array[Long]]],
+      add: Map[Int, Map[String, Array[Long]]]): Map[Int, Map[String, Array[Long]]] =
     (prev.keySet ++ add.keySet).map { b =>
-      val p = prev.getOrElse(b, Map.empty[String, BloomSide])
-      val a = add.getOrElse(b, Map.empty[String, BloomSide])
-      b -> (p.keySet ++ a.keySet).flatMap { c =>
-        ((p.get(c), a.get(c)) match {
-          case (Some(x), Some(y)) if x.m == y.m && x.k == y.k =>
-            val out = new Array[Long](math.max(x.bits.length, y.bits.length))
-            var i = 0
-            while (i < out.length) {
-              out(i) = (if (i < x.bits.length) x.bits(i) else 0L) |
-                (if (i < y.bits.length) y.bits(i) else 0L)
-              i += 1
-            }
-            Some(BloomSide(x.m, x.k, out))
-          case (Some(_), Some(_)) => None // geometry changed mid-chain
-          case (Some(x), None) => Some(x)
-          case (None, Some(y)) => Some(y)
-          case (None, None) => throw new IllegalStateException("unreachable")
-        }).map(c -> _)
+      val p = prev.getOrElse(b, Map.empty[String, Array[Long]])
+      val a = add.getOrElse(b, Map.empty[String, Array[Long]])
+      b -> (p.keySet ++ a.keySet).map { c =>
+        c -> ((p.get(c), a.get(c)) match {
+          case (Some(x), Some(y)) => Array.tabulate(x.length)(i => x(i) | y(i))
+          case (x, y) => x.orElse(y).get
+        })
       }.toMap
     }.toMap
 
   private def writeBloom(name: String, v: Int,
-      m: Map[Int, Map[String, BloomSide]]): Unit = {
+      m: Map[Int, Map[String, Array[Long]]]): Unit = {
     val body = m.toSeq.sortBy(_._1).flatMap { case (b, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, side) =>
-        s"$b\t${StatKind.enc(c)}\t${side.m}\t${side.k}\t${renderBits(side.bits)}"
+      cols.toSeq.sortBy(_._1).map { case (c, bits) =>
+        s"$b\t${StatKind.enc(c)}\t${renderBits(bits)}"
       }
     }.mkString("\n")
     Files.write(bloomFile(name, v), body.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 
-  /** The buckets that MAY hold rows whose `colName` (string-rendered)
-    * equals any of `values` — a bucket survives unless its bloom PROVES
-    * exclusion of every probe value, so a missing sidecar, untracked
-    * column, or bloom-less bucket degrades to a full read, never a wrong
-    * skip. REMOVEd values may keep admitting their bucket until a
-    * compaction rebuilds it exactly — false positives cost IO, not
-    * correctness. */
-  private def bloomAdmitted(name: String, v: Int, buckets: Set[Int],
-      colName: String, values: Seq[String]): Set[Int] =
-    if (!Files.exists(bloomFile(name, v))) buckets
-    else {
-      val blooms = readBloom(name, v)
-      // probe positions depend on the sidecar's OWN (m, k) — computed per
-      // geometry actually present (one per column in the steady state;
-      // more only across a geometry-changing rewrite's history), so a
-      // historical manifest probes with the bits it was built with, not
-      // whatever the live _BLOOMCOLS says today
-      val hashes = values.map(s => graft.functions.HashKernels.fnv1a64(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s)))
-      val probeCache = collection.mutable.Map.empty[(Int, Int), Seq[Array[Int]]]
-      def probes(m: Int, k: Int): Seq[Array[Int]] =
-        probeCache.getOrElseUpdate((m, k),
-          hashes.map(graft.functions.HashKernels.bloomPositions(_, m, k)))
-      buckets.filter { b =>
-        blooms.get(b).flatMap(_.get(colName)) match {
-          case None => true // no proof of exclusion
-          case Some(side) => probes(side.m, side.k).exists(_.forall(p =>
-            (side.bits(p >>> 6) & (1L << (p & 63))) != 0L))
+  /** The buckets of version (`v`, `m`) that MAY hold rows whose `colName`
+    * (string-rendered) equals any of `values` — a bucket survives unless
+    * its bloom PROVES exclusion of every probe value, so a missing
+    * sidecar, untracked column, or bloom-less bucket degrades to a full
+    * read, never a wrong skip. REMOVEd values may keep admitting their
+    * bucket until a compaction rebuilds it exactly — false positives cost
+    * IO, not correctness. */
+  private def bloomAdmitted(name: String, colName: String, values: Seq[String])(
+      v: Int, m: Manifest): Set[Int] =
+    m.blooms.find(_._1 == colName) match {
+      case None => m.states.keySet
+      case Some((_, bits, k)) =>
+        val blooms = readBloom(name, v)
+        val probes = values.map(s => graft.functions.HashKernels.bloomPositions(
+          graft.functions.HashKernels.fnv1a64(
+            org.apache.spark.unsafe.types.UTF8String.fromString(s)), bits, k))
+        m.states.keySet.filter { b =>
+          blooms.get(b).flatMap(_.get(colName)) match {
+            case None => true // no proof of exclusion
+            case Some(side) => probes.exists(_.forall(p =>
+              (side(p >>> 6) & (1L << (p & 63))) != 0L))
+          }
         }
-      }
     }
 
   def bloomAdmittedBuckets(name: String, colName: String,
       values: Seq[String]): Option[Set[Int]] =
-    for {
-      m <- bucketStates(name)
-      v <- currentManifestVersion(name)
-    } yield bloomAdmitted(name, v, m.keySet, colName, values)
+    live(name).map { case (v, m) => bloomAdmitted(name, colName, values)(v, m) }
 
   /** Bloom-pruned point-membership scan: read only the buckets whose
     * blooms admit at least one probe value, then apply the exact residual
@@ -730,67 +586,53 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * 16 KiB sidecar admits it instead of the table. */
   def readWhereIn(name: String, colName: String, values: Seq[String]):
       Option[DataFrame] =
-    bloomAdmittedBuckets(name, colName, values).flatMap { bs =>
-      if (bs.isEmpty) read(name).map(_.limit(0))
-      else readBuckets(name, Some(bs))
-    }.map(_.filter(col(colName).cast("string").isin(values: _*)))
+    prunedRead(name, live(name), bloomAdmitted(name, colName, values),
+      col(colName).cast("string").isin(values: _*))
 
   /** [[readWhereIn]] against a historical manifest — see [[readRangeAt]]
     * for the sidecar-versioning contract. */
   def readWhereInAt(name: String, manifestVersion: Int, colName: String,
-      values: Seq[String]): Option[DataFrame] = {
-    if (!Files.exists(manifestFile(name, manifestVersion))) None
-    else {
-      val states = parseStates(name, manifestVersion)
-      val admitted = bloomAdmitted(name, manifestVersion, states.keySet,
-        colName, values)
-      val base =
-        if (admitted.isEmpty) resolve(name, states, Some(manifestVersion)).limit(0)
-        else resolve(name, states.view.filterKeys(admitted).toMap,
-          Some(manifestVersion))
-      Some(base.filter(col(colName).cast("string").isin(values: _*)))
-    }
-  }
+      values: Seq[String]): Option[DataFrame] =
+    prunedRead(name, versionAt(name, manifestVersion),
+      bloomAdmitted(name, colName, values), col(colName).cast("string").isin(values: _*))
 
-  private def currentManifestVersion(name: String): Option[Int] = {
+  // ---- manifests -----------------------------------------------------
+
+  private def currentVersion(name: String): Option[Int] = {
     val f = currentFile(name)
     if (Files.exists(f)) Some(new String(Files.readAllBytes(f)).trim.toInt) else None
   }
 
-  private def manifestLines(name: String, v: Int): Seq[String] =
-    Files.readAllLines(manifestFile(name, v)).asScala.map(_.trim).filter(_.nonEmpty).toSeq
+  private def parseManifest(name: String, v: Int): Manifest =
+    Manifest.parse(name, Files.readAllLines(manifestFile(name, v)).asScala.toSeq)
 
-  private def parseStates(name: String, v: Int): Map[Int, BucketState] =
-    manifestLines(name, v).filterNot(_.startsWith(WmPrefix)).map { line =>
-      val Array(b, st) = line.split(' ')
-      b.toInt -> BucketState.parse(st)
-    }.toMap
+  /** Version `v` and its manifest, if that manifest is retained. */
+  private def versionAt(name: String, v: Int): Option[(Int, Manifest)] =
+    if (Files.exists(manifestFile(name, v))) Some(v -> parseManifest(name, v)) else None
 
-  /** Manifest `v`'s `wm` line in epoch micros (see the layout doc). */
-  private def manifestWatermark(name: String, v: Int): Option[Long] =
-    manifestLines(name, v).collectFirst {
-      case l if l.startsWith(WmPrefix) => l.stripPrefix(WmPrefix).toLong
-    }
+  /** The live version and its manifest: `_CURRENT` read once, that one
+    * manifest parsed once. */
+  private def live(name: String): Option[(Int, Manifest)] =
+    currentVersion(name).map(v => v -> parseManifest(name, v))
+
+  /** Manifest `base` of an initialized table: the one parse a verb takes
+    * its description from. */
+  private def baseManifest(name: String, base: Option[Int]): Manifest =
+    base.map(parseManifest(name, _)).getOrElse(
+      throw new IllegalStateException(s"$name not initialized — writeAll first"))
 
   override def recordedWatermark(name: String): Option[java.sql.Timestamp] =
-    currentManifestVersion(name).flatMap(manifestWatermark(name, _))
+    live(name).flatMap(_._2.wm)
       .map(org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp)
 
   /** bucket → live state (base version + delta chain). */
   def bucketStates(name: String): Option[Map[Int, BucketState]] =
-    currentManifestVersion(name).map(parseStates(name, _))
+    live(name).map(_._2.states)
 
   /** bucket → live BASE version (delta chains not shown — the clean-bucket
     * view older callers and the version-advance specs use). */
   def manifest(name: String): Option[Map[Int, Int]] =
     bucketStates(name).map(_.view.mapValues(_.base).toMap)
-
-  private def storedKey(name: String): String = {
-    val f = keyFile(name)
-    if (!Files.exists(f)) throw new IllegalStateException(
-      s"$name has no _KEY file — writeAll must initialize the table")
-    new String(Files.readAllBytes(f)).trim
-  }
 
   private def bucketPath(name: String, bucket: Int, v: Int): Path =
     tableDir(name).resolve(s"b$bucket").resolve(s"v$v")
@@ -801,7 +643,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   /** Time travel: read the snapshot a historical manifest described.
     * Manifests are immutable once written, so any retained manifest
     * number reconstructs that exact table state — including the delta
-    * chains as of that commit.
+    * chains and the file schemas as of that commit.
     *
     * Vacuum-race contract: requesting a version already dropped by
     * [[vacuum]] is refused up front (None — retention is the authority on
@@ -810,35 +652,25 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * can never silently return a partial snapshot. Callers that must hold
     * a historical view across retention sweeps should materialize it
     * (collect/persist/write) while the manifest is retained. */
-  def readAtManifest(name: String, manifestVersion: Int): Option[DataFrame] = {
-    val f = manifestFile(name, manifestVersion)
-    if (!Files.exists(f)) None
-    else Some(resolve(name, parseStates(name, manifestVersion),
-      asOf = Some(manifestVersion)))
-  }
+  def readAtManifest(name: String, manifestVersion: Int): Option[DataFrame] =
+    versionAt(name, manifestVersion).map { case (_, m) => resolve(name, m, m.states) }
 
   /** Read the live snapshot, optionally restricted to a bucket subset —
-    * the merge's way of scanning only what it will rewrite. Live reads
-    * carry the live manifest version into the schema check too: a crash
-    * between a writeAll's sidecar write and its manifest commit leaves a
-    * NEWER-stamped sidecar next to the still-live OLD table, which must
-    * read via inference, not the not-yet-published schema. */
+    * the merge's way of scanning only what it will rewrite. */
   def readBuckets(name: String, buckets: Option[Set[Int]]): Option[DataFrame] =
-    currentManifestVersion(name).map { v =>
-      val m = parseStates(name, v)
-      resolve(name, buckets.fold(m)(bs => m.view.filterKeys(bs).toMap),
-        asOf = Some(v))
+    live(name).map { case (_, m) =>
+      resolve(name, m, buckets.fold(m.states)(bs => m.states.view.filterKeys(bs).toMap))
     }
 
-  /** Materialize the table state a bucket-state map describes. Clean
+  /** Materialize the `wanted` bucket states of manifest `m`. Clean
     * buckets stream straight off their base files (no shuffle, no window);
     * dirty buckets pay one bounded latest-per-key resolution: base rows at
     * sequence -1 ∪ delta rows at their commit sequence, newest row per key
     * wins, tombstones drop. The shuffle is sized by the DIRTY buckets
     * only — with compaction keeping chains short, resolution cost stays a
     * small fraction of the table no matter how large the table is. */
-  private def resolve(name: String, wanted: Map[Int, BucketState],
-      asOf: Option[Int] = None): DataFrame = {
+  private def resolve(name: String, m: Manifest,
+      wanted: Map[Int, BucketState]): DataFrame = {
     val cleanPaths = wanted.collect {
       case (b, s) if s.isClean && s.base >= 0 => bucketPath(name, b, s.base).toString
     }.toSeq
@@ -852,16 +684,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // single-writer protocol serializes merges), so pinning it here too
     // costs nothing. Same freeze-or-fail contract DedupIngest gives its
     // in-flight probe decisions.
-    def pread(paths: Seq[String],
-        schema: Option[org.apache.spark.sql.types.StructType]) = {
+    def pread(paths: Seq[String], schema: Option[StructType]) = {
       val r = spark.read.option("ignoreMissingFiles", "false")
       schema.fold(r)(r.schema).parquet(paths: _*)
     }
-    val baseSchema = schemaAsOf(schemaFile(name), schemaVersionFile(name), asOf)
     val clean =
-      if (cleanPaths.nonEmpty) Some(pread(cleanPaths, baseSchema)) else None
+      if (cleanPaths.nonEmpty) Some(pread(cleanPaths, m.schema)) else None
     val resolved = if (dirty.nonEmpty) {
-      val key = storedKey(name)
       val basePaths = dirty.collect {
         case (b, s) if s.base >= 0 => bucketPath(name, b, s.base).toString
       }.toSeq
@@ -875,7 +704,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       val admits = dirty.toSeq.flatMap { case (b, s) => s.deltas.map(_ -> b.toLong) }
         .groupMap(_._1)(_._2)
       val stored = pread(admits.keys.toSeq.sorted.map(deltaPath(name, _).toString),
-        schemaAsOf(deltaSchemaFile(name), deltaSchemaVersionFile(name), asOf))
+        m.deltaSchema)
       val deltas =
         if (admits.values.forall(_.size == nBuckets)) stored
         else stored.filter(admits.groupMap(_._2.toSet)(_._1).map { case (bs, ds) =>
@@ -884,11 +713,11 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         }.reduce(_ || _))
       val layered =
         if (basePaths.isEmpty) deltas
-        else deltas.unionByName(pread(basePaths, baseSchema)
+        else deltas.unionByName(pread(basePaths, m.schema)
           .withColumn("_seq", lit(-1L)).withColumn("_del", lit(false)))
       // key → bucket is functional, so partitioning by key never mixes
       // buckets; ties are impossible (one row per key per commit)
-      val w = Window.partitionBy(col(key)).orderBy(col("_seq").desc)
+      val w = Window.partitionBy(col(m.key)).orderBy(col("_seq").desc)
       Some(layered.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1 && !col("_del"))
         .drop("_rn", "_seq", "_del"))
@@ -934,13 +763,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * indistinguishable from debris — the post-stage dest check and the
     * commit CAS still refuse the lost update in that window, as before. */
   private def sweepOrphans(name: String): Unit = {
-    val live = currentManifestVersion(name).getOrElse(-1)
+    val live = currentVersion(name).getOrElse(-1)
     versionDirs(name).foreach { case (p, v) =>
       if (v > live) TableStore.deleteRecursively(p)
     }
   }
 
-  /** Publish manifest `m` as the next state, REQUIRING that the live
+  /** Publish manifest `m` as the next version, REQUIRING that the live
     * manifest is still `expectedBase` — optimistic concurrency for the
     * single-writer protocol. A merge builds its manifest as
     * base-snapshot ++ its-buckets; if another writer committed after
@@ -949,29 +778,20 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * The stale commit throws instead; the caller re-reads and re-merges.
     * The check-then-move window is epsilon vs the merge runtime — the
     * same compare-and-swap discipline transactional table formats use,
-    * minus a distributed lock this environment doesn't need. `wm` is the
-    * watermark line the published version carries, if any. */
-  private[graft] def commitManifest(name: String, m: Map[Int, BucketState],
-      expectedBase: Option[Int], wm: Option[Long] = None): Unit = {
-    val live = currentManifestVersion(name)
+    * minus a distributed lock this environment doesn't need. */
+  private[graft] def commitManifest(name: String, m: Manifest,
+      expectedBase: Option[Int]): Unit = {
+    val live = currentVersion(name)
     if (live != expectedBase)
       throw new java.util.ConcurrentModificationException(
         s"$name: manifest moved $expectedBase -> $live since this writer " +
           "read its base; re-read and re-merge (lost-update protection)")
     val next = live.getOrElse(-1) + 1
-    val body = (m.toSeq.sortBy(_._1).map { case (b, st) => s"$b ${st.render}" } ++
-      wm.map(w => s"$WmPrefix$w")).mkString("\n")
     Files.createDirectories(tableDir(name))
-    Files.write(manifestFile(name, next), body.getBytes,
+    Files.write(manifestFile(name, next), m.render.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     TableStore.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
   }
-
-  /** What a [[writeAll]] fixes for the table's life: the entity key, the
-    * zone-map columns with their [[StatKind]], the bloom columns with their
-    * (m bits, k hashes), and the range-routing boundaries (None = hash). */
-  private case class Layout(key: String, stats: Seq[(String, String)],
-      blooms: Seq[(String, Int, Int)], boundaries: Option[(String, Array[String])])
 
   /** The one publish step every write verb ends in; the class doc gives
     * the protocol and what a crash at each step leaves behind. `frame`
@@ -979,18 +799,20 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * `sortBy`), and its buckets become `v<next>` dirs. A `delta` commit
     * stages it, sorted by (`_bucket`, `sortBy`), as the one table-level
     * dir `d<next>`, which the chain of each bucket that received rows
-    * lists on top of `states`. `seed` buckets are published even when
-    * they stage no row. A `layout` (a
-    * [[writeAll]]) replaces `states`, writes the table files, and
-    * publishes an empty bucket 0 when nothing staged, so the table keeps
-    * its schema on disk. `observeWm` observes the staged rows' max
+    * lists on top of `m`'s states, and records the staged schema as the
+    * delta schema. `m` is the base manifest: the new version carries its
+    * description and starts from its states. `seed` buckets are published
+    * even when they stage no row. A `fresh` publish (a [[writeAll]]) is
+    * handed the new description with no states: it starts each sidecar
+    * empty, records the staged schema as the base schema, and publishes
+    * an empty bucket 0 when nothing staged, so the table keeps its schema
+    * on disk. `observeWm` observes the staged rows' max
     * `approximateUpdateTimestamp` on the write; `wmLine` turns that value
     * (None when not observed) into the version's `wm` line. Returns the
     * number of buckets published. */
-  private def publish(name: String, base: Option[Int],
-      states: Map[Int, BucketState], frame: DataFrame, sortBy: Option[String],
-      delta: Boolean, seed: Set[Int] = Set.empty, layout: Option[Layout] = None,
-      observeWm: Boolean = false,
+  private def publish(name: String, base: Option[Int], m: Manifest,
+      frame: DataFrame, sortBy: Option[String], delta: Boolean,
+      seed: Set[Int] = Set.empty, fresh: Boolean = false, observeWm: Boolean = false,
       wmLine: Option[Long] => Option[Long] = _ => None): Int = {
     sweepOrphans(name)
     val next = base.getOrElse(-1) + 1
@@ -1001,15 +823,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // (see carriedStats): that kind is then neither computed nor written.
     // A table without sidecars runs no summary: its one action per commit
     // is the staged write.
-    val specs = layout.fold(statsSpecs(name))(_.stats)
-    val bSpecs = layout.fold(bloomSpecs(name))(_.blooms)
     val prevStats =
-      if (specs.isEmpty) None
-      else if (layout.isDefined) Some(Map.empty[Int, Map[String, (String, String)]])
+      if (m.stats.isEmpty) None
+      else if (fresh) Some(Map.empty[Int, Map[String, (String, String)]])
       else carriedStats(name, base.get)
     val prevBloom =
-      if (bSpecs.isEmpty) None
-      else if (layout.isDefined) Some(Map.empty[Int, Map[String, BloomSide]])
+      if (m.blooms.isEmpty) None
+      else if (fresh) Some(Map.empty[Int, Map[String, Array[Long]]])
       else carriedBloom(name, base.get)
     val summarize = prevStats.isDefined || prevBloom.isDefined
     // repartition on the bucket: without it every write task emits a file
@@ -1034,11 +854,11 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     try {
       val (addStats, addBloom, counts) =
         if (summarize) stagedSummary(staged,
-          if (prevStats.isDefined) specs else Nil,
-          if (prevBloom.isDefined) bSpecs else Nil, excludeDel = delta)
+          if (prevStats.isDefined) m.stats else Nil,
+          if (prevBloom.isDefined) m.blooms else Nil, excludeDel = delta)
         else (Map.empty[Int, Map[String, (String, String)]],
-          Map.empty[Int, Map[String, BloomSide]], Map.empty[Int, Long])
-      if (summarize && counts.isEmpty && seed.isEmpty && layout.isEmpty) return 0
+          Map.empty[Int, Map[String, Array[Long]]], Map.empty[Int, Long])
+      if (summarize && counts.isEmpty && seed.isEmpty && !fresh) return 0
       // without a summary, a delta learns its buckets from its own write
       val (written, observed) = observeWrite(staged, wm = observeWm,
         buckets = delta && !summarize, tombstones = delta)
@@ -1060,7 +880,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           // to a v-dir, which could be a concurrent winner's published data
           val rowBuckets = (0 until nBuckets).filter(b => Files.exists(stagedDir(b)))
           val empties =
-            if (layout.isDefined && rowBuckets.isEmpty) Seq(0)
+            if (fresh && rowBuckets.isEmpty) Seq(0)
             else (seed -- rowBuckets).toSeq
           empties.foreach { b =>
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1073,7 +893,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       // delta commit can only WIDEN zone maps and OR its blooms (tombstoned
       // values stay admitted until a compaction rebuilds them exactly)
       val newStats = prevStats.map(p =>
-        if (delta) widenStats(specs, p, addStats) else (p -- touched) ++ addStats)
+        if (delta) widenStats(m.stats, p, addStats) else (p -- touched) ++ addStats)
       val newBloom = prevBloom.map(p =>
         if (delta) orBloom(p, addBloom) else (p -- touched) ++ addBloom)
       // Re-check the base before anything of the table changes: a stale
@@ -1088,7 +908,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           s"$name: manifest moved past $base while this writer staged; " +
             "re-read and retry (lost-update protection)")
       }
-      if (currentManifestVersion(name) != base) stale()
+      if (currentVersion(name) != base) stale()
       def move(from: Path, dest: Path): Unit = {
         Files.createDirectories(dest.getParent)
         if (Files.exists(dest)) stale()
@@ -1101,37 +921,19 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         TableStore.deleteRecursively(staging)
       }
       val moved = touched.map { b =>
-        val prev = states.getOrElse(b, BucketState(-1, Nil))
+        val prev = m.states.getOrElse(b, BucketState(-1, Nil))
         b -> (if (delta) prev.copy(deltas = prev.deltas :+ next) else BucketState(next, Nil))
       }
       newStats.foreach(writeStats(name, next, _))
       newBloom.foreach(writeBloom(name, next, _))
-      layout.foreach { l =>
-        def lines(f: Path, ls: Seq[String]): Unit = Files.write(f, ls.mkString("\n").getBytes,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        if (l.stats.nonEmpty)
-          lines(statsColsFile(name), l.stats.map { case (c, k) => s"${StatKind.enc(c)}\t$k" })
-        if (l.blooms.nonEmpty)
-          lines(bloomColsFile(name), l.blooms.map { case (c, m, k) => s"${StatKind.enc(c)}\t$m\t$k" })
-        l.boundaries match {
-          case Some((kind, bs)) => lines(bucketerFile(name), s"range $kind" +: bs.toSeq.map(StatKind.enc))
-          case None => Files.deleteIfExists(bucketerFile(name))
-        }
-        lines(keyFile(name), Seq(l.key))
-        // base-file schema = the frame + _bucket (what partitionBy left in
-        // the files); readers hand it to spark.read and skip inference
-        publishSchema(schemaFile(name), schemaVersionFile(name), staged.schema, next)
-      }
-      if (delta)
-        publishSchema(deltaSchemaFile(name), deltaSchemaVersionFile(name), staged.schema, next)
-      commitManifest(name, states ++ moved, base, wmLine(observedWm))
+      // base-file schema = the frame + _bucket (what partitionBy left in
+      // the files); readers hand it to spark.read and skip inference
+      commitManifest(name, m.copy(states = m.states ++ moved, wm = wmLine(observedWm),
+        schema = if (fresh) Some(staged.schema) else m.schema,
+        deltaSchema = if (delta) Some(staged.schema) else m.deltaSchema), base)
       touched.size
     } finally if (summarize) staged.unpersist(blocking = false)
   }
-
-  private def liveStates(name: String, base: Option[Int]): Map[Int, BucketState] =
-    base.map(parseStates(name, _)).getOrElse(
-      throw new IllegalStateException(s"$name not initialized — writeAll first"))
 
   /** Initial full write: every row routed to its bucket, one snapshot dir
     * per bucket, the next manifest. One distributed write job — the bucket
@@ -1140,7 +942,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * `statsCols` turns on zone maps: per-bucket min/max for each listed
     * column, versioned with every manifest from here on ([[readRange]]
     * prunes with them). `rangeBucket` replaces hash routing with key-range
-    * clustering (quantile boundaries persisted to `_BUCKETER`; numeric,
+    * clustering (quantile boundaries recorded in the manifest; numeric,
     * date, or timestamp keys) — the layout under which those zone maps
     * are disjoint instead of all-overlapping. Both are fixed at table
     * creation, like the bucket count. */
@@ -1152,7 +954,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // size m for the expected distinct values per bucket per column
     // (~m/10 at 1% false-positive with k=7; the 128 Ki-bit default covers
     // ~13k distinct values per bucket)
-    writeAllAtBase(name, df, key, currentManifestVersion(name), sortBy, statsCols,
+    writeAllAtBase(name, df, key, currentVersion(name), sortBy, statsCols,
       rangeBucket, bloomCols.map(c => (c, bloomBits, bloomHashes)))
 
   /** [[writeAll]] with the base manifest made explicit — the seam the
@@ -1164,7 +966,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       rangeBucket: Boolean = false, blooms: Seq[(String, Int, Int)] = Nil,
       recordWm: Boolean = false): Unit = {
     val keyType = df.schema(key).dataType
-    val boundaries: Option[(String, Array[String])] =
+    val boundaries: Option[(String, Seq[String])] =
       if (!rangeBucket) None
       else {
         val kind = StatKind.of(keyType)
@@ -1179,15 +981,12 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         val rendered =
           if (kind == "long") q.map(d => math.floor(d).toLong.toString)
           else q.map(_.toString)
-        Some((kind, rendered.distinct))
+        Some((kind, rendered.distinct.toSeq))
       }
-    val route = boundaries.fold(bucketCol(key)) { case (kind, bs) =>
-      rangeRouting(kind, bs, StatKind.expr(key, keyType))
-    }
-    publish(name, base, Map.empty, df.withColumn("_bucket", route), sortBy,
-      delta = false, layout = Some(Layout(key,
-        statsCols.map(c => (c, StatKind.of(df.schema(c).dataType))), blooms, boundaries)),
-      observeWm = recordWm, wmLine = identity)
+    val m = Manifest(Map.empty, key, boundaries,
+      statsCols.map(c => (c, StatKind.of(df.schema(c).dataType))), blooms)
+    publish(name, base, m, df.withColumn("_bucket", routing(m, df)), sortBy,
+      delta = false, fresh = true, observeWm = recordWm, wmLine = identity)
   }
 
   /** `df` observed on the job that writes it, plus the read of what was
@@ -1232,15 +1031,16 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * buckets containing staged keys. `stage` must carry the target schema
     * plus `eventName` (REMOVEs are applied as deletes, like
     * [[Merge.applyStage]]) and at most one row per key (the
-    * [[Merge.stageChanges]] contract). Untouched buckets keep their live
-    * version — their bytes are never read, shuffled, or rewritten. A
-    * touched bucket with a delta chain is resolved on read and rewritten
-    * clean: copy-on-write merge doubles as targeted compaction. */
+    * [[Merge.stageChanges]] contract); `key` must be the table's key.
+    * Untouched buckets keep their live version — their bytes are never
+    * read, shuffled, or rewritten. A touched bucket with a delta chain is
+    * resolved on read and rewritten clean: copy-on-write merge doubles as
+    * targeted compaction. */
   def merge(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, sortBy: Option[String] = None): Unit =
     // base is captured once: the commit at the end is conditional on the
     // live manifest still being this one (lost-update protection)
-    mergeAtBase(name, stage, key, syncTime, currentManifestVersion(name), sortBy)
+    mergeAtBase(name, stage, key, syncTime, currentVersion(name), sortBy)
 
   /** [[merge]] with the base manifest made explicit — the seam the
     * stale-writer tests drive: a base captured before a concurrent winner
@@ -1248,8 +1048,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   private[graft] def mergeAtBase(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, base: Option[Int],
       sortBy: Option[String] = None): Unit = {
-    val m = liveStates(name, base)
-    val staged = stage.withColumn("_bucket", routingCol(name, key, stage))
+    val m = baseManifest(name, base).keyed(name, key)
+    val staged = stage.withColumn("_bucket", routing(m, stage))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val touched = staged.select(col("_bucket")).distinct()
@@ -1258,10 +1058,10 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         // a touched bucket may have NO manifest entry yet (writeAll only
         // records buckets that received rows): read the existing subset,
         // or an empty-but-schemaed frame when every touched bucket is new
-        val existing = touched.intersect(m.keySet)
+        val existing = m.states.view.filterKeys(touched).toMap
         val target =
-          if (existing.nonEmpty) readBuckets(name, Some(existing)).get
-          else if (m.nonEmpty) readBuckets(name, Some(Set(m.keys.head))).get.limit(0)
+          if (existing.nonEmpty) resolve(name, m, existing)
+          else if (m.states.nonEmpty) resolve(name, m, Map(m.states.head)).limit(0)
           else throw new IllegalStateException(
             s"$name has an empty manifest — writeAll must seed at least one bucket")
         val kept = target.join(staged.select(col(key)), Seq(key), "left_anti")
@@ -1304,13 +1104,11 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   private def mergeDeltaImpl(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, sortBy: Option[String],
       recordWm: Boolean): Unit = {
-    val base = currentManifestVersion(name)
-    val m = liveStates(name, base)
-    val sk = storedKey(name)
-    require(sk == key, s"$name is keyed by '$sk', not '$key'")
-    val prevWm = if (recordWm) manifestWatermark(name, base.get) else None
+    val base = currentVersion(name)
+    val m = baseManifest(name, base).keyed(name, key)
+    val prevWm = if (recordWm) m.wm else None
     val rows = stage
-      .withColumn("_bucket", routingCol(name, key, stage))
+      .withColumn("_bucket", routing(m, stage))
       .withColumn("_del", col("eventName") === "REMOVE")
       .drop("eventName")
       .withColumn("syncTimestamp", lit(syncTime))
@@ -1335,14 +1133,14 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   def compact(name: String, minDeltas: Int = 1,
       sortBy: Option[String] = None): Int = {
     require(minDeltas >= 1, "compacting clean buckets is a no-op")
-    val base = currentManifestVersion(name)
-    val m = liveStates(name, base)
-    val targets = m.filter(_._2.deltas.size >= minDeltas)
+    val base = currentVersion(name)
+    val m = baseManifest(name, base)
+    val targets = m.states.filter(_._2.deltas.size >= minDeltas)
     if (targets.isEmpty) 0
     // a chain that resolves to nothing still compacts, to an empty base;
     // the live rows are the same, so the base's watermark line still holds
-    else publish(name, base, m, resolve(name, targets), sortBy, delta = false,
-      seed = targets.keySet, wmLine = _ => manifestWatermark(name, base.get))
+    else publish(name, base, m, resolve(name, m, targets), sortBy, delta = false,
+      seed = targets.keySet, wmLine = _ => m.wm)
   }
 
   /** Point lookup: read only the buckets that can contain `values` of the
@@ -1350,34 +1148,41 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * A k-key probe against an N-bucket table opens ≤ k bucket dirs, not
     * the table; at 100 TB with 128 MB buckets that is MBs of IO per probe.
     * The residual filter keeps correctness for hash collisions. */
-  def lookup(name: String, key: String, values: Seq[String]): Option[DataFrame] = {
-    import spark.implicits._
-    val vdf = values.toDF(key)
-    // probe with the same routing the table was written under; on a
-    // range-clustered table the probe strings are cast into the boundary
-    // domain (numeric keys — the only kind range bucketing accepts)
-    val probe = loadBoundaries(name) match {
-      case None => vdf.select(bucketCol(key))
-      case Some((kind, bs)) =>
-        val norm =
-          if (kind == "double") col(key).cast("double") else col(key).cast("long")
-        vdf.select(rangeRouting(kind, bs, norm))
+  def lookup(name: String, key: String, values: Seq[String]): Option[DataFrame] =
+    live(name).map { case (_, table) =>
+      import spark.implicits._
+      val m = table.keyed(name, key)
+      val vdf = values.toDF(key)
+      // probe with the same routing the table was written under; on a
+      // range-clustered table the probe strings are cast into the boundary
+      // domain (numeric keys — the only kind range bucketing accepts)
+      val probe = m.route match {
+        case None => vdf.select(bucketCol(key))
+        case Some((kind, bs)) =>
+          val norm =
+            if (kind == "double") col(key).cast("double") else col(key).cast("long")
+          vdf.select(rangeRouting(kind, bs, norm))
+      }
+      val buckets = probe.collect().map(_.getLong(0).toInt).toSet
+      resolve(name, m, m.states.view.filterKeys(buckets).toMap)
+        .filter(col(key).isin(values: _*))
     }
-    val buckets = probe.collect().map(_.getLong(0).toInt).toSet
-    readBuckets(name, Some(buckets)).map(_.filter(col(key).isin(values: _*)))
-  }
 
   /** Bucket-count evolution: rewrite the live snapshot into `newN` buckets
     * (the fixed-at-creation count's escape hatch once buckets outgrow a
     * few row groups). One distributed read+route+write of the LIVE data
-    * only — history stays under the old bucket count and remains
+    * only, under the live manifest's layout: its zone-map and bloom
+    * columns, and range routing with boundaries recomputed for `newN`.
+    * History stays under the old bucket count and remains
     * time-travelable until vacuumed. Returns the new store handle. */
   def rebucket(name: String, key: String, newN: Int,
       newRoot: String, sortBy: Option[String] = None): BucketedTableStore = {
-    val live = read(name).getOrElse(
+    val m = live(name).map(_._2.keyed(name, key)).getOrElse(
       throw new IllegalStateException(s"$name not initialized — writeAll first"))
     val next = new BucketedTableStore(spark, newRoot, newN)
-    next.writeAll(name, live.drop("_bucket"), key, sortBy)
+    next.writeAllAtBase(name, resolve(name, m, m.states).drop("_bucket"),
+      key, next.currentVersion(name), sortBy, statsCols = m.stats.map(_._1),
+      rangeBucket = m.route.isDefined, blooms = m.blooms)
     next
   }
 
@@ -1397,7 +1202,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * Returns (manifests deleted, dirs deleted). */
   def vacuum(name: String, keepManifests: Int): (Int, Int) = {
     require(keepManifests >= 1, "must keep at least the live manifest")
-    currentManifestVersion(name) match {
+    currentVersion(name) match {
       case None => (0, 0)
       case Some(cur) =>
         val floor = cur - keepManifests + 1
@@ -1410,8 +1215,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         // union of the dirs the retained manifests still reference: bucket
         // bases and table-level deltas a chain lists
         val live: Set[Path] = (math.max(0, floor) to cur).flatMap { v =>
-          if (!Files.exists(manifestFile(name, v))) Nil
-          else parseStates(name, v).toSeq.flatMap { case (b, st) =>
+          versionAt(name, v).toSeq.flatMap(_._2.states).flatMap { case (b, st) =>
             (if (st.base >= 0) Seq(bucketPath(name, b, st.base)) else Nil) ++
               st.deltas.map(deltaPath(name, _))
           }
@@ -1432,7 +1236,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * [[graft.pipeline.Pipeline]] swaps this store in via config. */
   def init(name: String, df: DataFrame, key: String,
       sortBy: Option[String] = None): Unit =
-    writeAllAtBase(name, df, key, currentManifestVersion(name), sortBy,
+    writeAllAtBase(name, df, key, currentVersion(name), sortBy,
       recordWm = true)
 
   def applyMerge(name: String, stage: DataFrame, key: String,
@@ -1449,9 +1253,66 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 object BucketedTableStore {
   /** Every publish stages under `<table>/_staging<next>`. */
   private val StagingPrefix = "_staging"
-  private val WmPrefix = "wm "
   private val WmCol = "approximateUpdateTimestamp"
   /** Bound on the wait for an observed watermark: the write has finished
     * by then, only the listener delivering its metric can lag. */
   private val WmWait = scala.concurrent.duration.Duration(10, "seconds")
+
+  /** One parsed `_MANIFEST.<n>` (the class doc gives its grammar): the
+    * bucket states, the entity key, the routing (None = hash, else the
+    * boundary kind and boundaries), the zone-map columns with their
+    * [[StatKind]], the bloom columns with their (m bits, k hashes), the
+    * base- and delta-file schemas, and the `wm` line. */
+  private[graft] final case class Manifest(states: Map[Int, BucketState], key: String,
+      route: Option[(String, Seq[String])] = None, stats: Seq[(String, String)] = Nil,
+      blooms: Seq[(String, Int, Int)] = Nil, schema: Option[StructType] = None,
+      deltaSchema: Option[StructType] = None, wm: Option[Long] = None) {
+
+    /** This manifest, once `key` is checked to be its entity key: a verb
+      * that routed or matched by another column would misroute rows. */
+    def keyed(table: String, key: String): Manifest = {
+      require(key == this.key, s"$table is keyed by '${this.key}', not '$key'")
+      this
+    }
+
+    def render: String = {
+      import StatKind.enc
+      (Seq(s"key ${enc(key)}", route.fold("route hash") { case (kind, bs) =>
+        (Seq("route", "range", kind) ++ bs.map(enc)).mkString(" ")
+      }) ++
+        stats.map { case (c, kind) => s"stat ${enc(c)} $kind" } ++
+        blooms.map { case (c, m, k) => s"bloom ${enc(c)} $m $k" } ++
+        schema.map(s => s"schema ${TableStore.renderSchema(s)}") ++
+        deltaSchema.map(s => s"dschema ${TableStore.renderSchema(s)}") ++
+        wm.map(w => s"wm $w") ++
+        states.toSeq.sortBy(_._1).map { case (b, st) => s"$b ${st.render}" })
+        .mkString("\n")
+    }
+  }
+
+  private[graft] object Manifest {
+    def parse(table: String, lines: Seq[String]): Manifest = {
+      val (buckets, tagged) = lines.map(_.trim).filter(_.nonEmpty)
+        .map { l => val (tag, rest) = l.span(_ != ' '); (tag, rest.drop(1)) }
+        .partition(_._1.forall(_.isDigit))
+      val tags = tagged.groupMap(_._1)(_._2)
+      def fields(tag: String) = tags.getOrElse(tag, Nil).map(_.split(' ').toSeq)
+      val states = buckets.map { case (b, st) => b.toInt -> BucketState.parse(st) }.toMap
+      val key = tags.get("key").map(ks => StatKind.dec(ks.head)).getOrElse {
+        if (states.isEmpty) ""
+        else throw new IllegalStateException(s"$table: its manifest lists buckets " +
+          "but no key line; a table written before manifests described their " +
+          "version must be rewritten")
+      }
+      Manifest(states, key,
+        fields("route").headOption.collect {
+          case "range" +: kind +: bs => (kind, bs.map(StatKind.dec))
+        },
+        fields("stat").map { case Seq(c, kind) => (StatKind.dec(c), kind) },
+        fields("bloom").map { case Seq(c, m, k) => (StatKind.dec(c), m.toInt, k.toInt) },
+        tags.get("schema").flatMap(s => TableStore.parseSchema(s.head)),
+        tags.get("dschema").flatMap(s => TableStore.parseSchema(s.head)),
+        tags.get("wm").map(_.head.toLong))
+    }
+  }
 }

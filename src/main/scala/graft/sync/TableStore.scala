@@ -1,8 +1,12 @@
 package graft.sync
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Mutable-table semantics on immutable storage (SURVEY.md §7.4 risk 1).
   *
@@ -15,10 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                           rewritten via atomic move
   *
   * Readers resolve `_CURRENT` at read time; a crash mid-write leaves the
-  * pointer on the old version (the half-written v<N+1> dir is garbage, never
-  * referenced). This is the same pointer-swap idea transactional formats
-  * use, minus concurrent writers — the reference's sync is single-writer
-  * too (stored procedures called sequentially).
+  * pointer on the old version (the half-written v<N+1> dir is garbage,
+  * never referenced, and the next write sweeps it). This is the same
+  * pointer-swap idea transactional formats use, minus concurrent writers —
+  * the reference's sync is single-writer too (stored procedures called
+  * sequentially).
   *
   * Scale note: a version is written with the caller-chosen partitioning; a
   * 100 TB target table would write `partitionBy(bucket-ish key)` snapshots
@@ -30,34 +35,18 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
 
   private def tableDir(name: String): Path = Paths.get(root, name)
   private def currentFile(name: String): Path = tableDir(name).resolve("_CURRENT")
-  // Per-VERSION schema sidecar (same rationale as BucketedTableStore's
-  // _SCHEMA: a snapshot's parquet schema is fixed when it is written, yet
-  // every schema-less spark.read.parquet pays a footer-inference job
-  // first — the CDC pipeline reads each target at least twice per
-  // micro-batch, so at q23's 2-batch × 3-entity protocol those jobs are a
-  // real slice of the per-batch fixed cost). One sidecar per version —
-  // snapshots may legitimately change schema across versions (evolving
-  // merges), so a shared sidecar would bind old files to a new schema.
-  // Missing sidecar (pre-upgrade table) degrades to inference, never an
-  // error. Stored asNullable like the bucketed store's: parquet readers
-  // bind by name and a lit()-derived non-null field must not make the
-  // read stricter than the files.
+  // Per-VERSION schema sidecar: a snapshot's parquet schema is fixed when
+  // it is written, yet every schema-less spark.read.parquet pays a
+  // footer-inference job first, and the CDC pipeline reads each target at
+  // least twice per micro-batch. Snapshots may change schema across
+  // versions (evolving merges), so each version records its own. A
+  // missing or unparsable sidecar degrades to inference, never an error.
   private def schemaFile(name: String, v: Int): Path =
     tableDir(name).resolve(s"_SCHEMA.$v")
-  private def writeSchemaFile(name: String, v: Int,
-      s: org.apache.spark.sql.types.StructType): Unit = {
-    val json = org.apache.spark.sql.types.StructType(
-      s.fields.map(_.copy(nullable = true))).json
-    TableStore.replaceFile(schemaFile(name, v), json.getBytes)
-  }
-  private def readSchemaFile(name: String, v: Int):
-      Option[org.apache.spark.sql.types.StructType] = {
+  private def readSchemaFile(name: String, v: Int): Option[StructType] = {
     val f = schemaFile(name, v)
     if (!Files.exists(f)) None
-    else scala.util.Try(
-      org.apache.spark.sql.types.DataType.fromJson(
-        new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
+    else TableStore.parseSchema(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
   }
   private def readVersion(name: String, v: Int): DataFrame = {
     val r = spark.read
@@ -100,6 +89,7 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
     * that landed in between. */
   private[graft] def writeIfBase(name: String, df: DataFrame,
       expectedBase: Option[Int], sortBy: Option[String] = None): Unit = {
+    sweepOrphans(name)
     val next = expectedBase.getOrElse(-1) + 1
     val dest = tableDir(name).resolve(s"v$next")
     // Materialize into a writer-private staging dir FIRST: v<next> may
@@ -124,12 +114,32 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       stale(currentVersion(name)) }
     // sidecar BEFORE the pointer move: a crash in between leaves an
-    // unreferenced v-dir plus its sidecar (garbage, never read); the
-    // reverse order could publish a version whose reads pay inference
-    // until the next write — safe either way, this order never degrades
-    writeSchemaFile(name, next, toWrite.schema)
+    // unreferenced v-dir plus its sidecar (never read; the retry sweeps
+    // them); the reverse order could publish a version whose reads pay
+    // inference until the next write
+    TableStore.replaceFile(schemaFile(name, next),
+      TableStore.renderSchema(toWrite.schema).getBytes(StandardCharsets.UTF_8))
     TableStore.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
     // Old versions are kept for time-travel/debug until retain/vacuum.
+  }
+
+  /** Crash-debris sweep before each write stages: delete the `v<N>` dirs
+    * and `_SCHEMA.<N>` sidecars above the live version. No pointer names
+    * them, so they are the leftovers of a writer that died between its
+    * move and its `_CURRENT` flip, which would otherwise fail every retry
+    * on the existing `v<next>`. Same single-writer contract as the
+    * bucketed store's sweep: a committed winner's version is ≤ live, and
+    * the pre-move check still refuses a stale writer. */
+  private def sweepOrphans(name: String): Unit = {
+    val live = currentVersion(name).getOrElse(-1)
+    val dir = tableDir(name)
+    if (Files.isDirectory(dir))
+      scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toSeq).foreach { p =>
+        p.getFileName.toString match {
+          case TableStore.Versioned(v) if v.toInt > live => deleteRecursively(p)
+          case _ =>
+        }
+      }
   }
 
   /** Retention sweep: delete snapshot versions older than the
@@ -180,17 +190,29 @@ final class TableStore(spark: SparkSession, root: String) extends SyncStore {
 }
 
 object TableStore {
+  /** A version's snapshot dir or schema sidecar, capturing its number. */
+  private val Versioned = """(?:v|_SCHEMA\.)(\d+)""".r
+
   /** Recursive delete (children before parents); shared by the store's
     * own vacuum/staging cleanup and by queries that materialize into a
     * temp store and must remove it afterwards. */
   private[graft] def deleteRecursively(dir: Path): Unit = {
-    import scala.jdk.CollectionConverters._
     if (Files.exists(dir)) {
       scala.util.Using.resource(Files.walk(dir)) { s =>
         s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       }
     }
   }
+
+  /** The one schema codec both stores persist with: rendered asNullable
+    * (parquet readers bind by name, and a lit()-derived non-null field
+    * must not make a read stricter than the files), parsed tolerantly (an
+    * unparsable text reads as None, so the read infers). */
+  private[sync] def renderSchema(s: StructType): String =
+    StructType(s.fields.map(_.copy(nullable = true))).json
+
+  private[sync] def parseSchema(json: String): Option[StructType] =
+    scala.util.Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
 
   /** Replace file `f` with `bytes` through a temp sibling (`f` +
     * `tmpSuffix`) and an atomic move: a reader sees the old content or
@@ -208,7 +230,6 @@ object TableStore {
     * the amortized-seed protocol (a frozen MASTER store is built once,
     * each run mutates a private copy; see IngestDoor.seededWorkingCopy). */
   private[graft] def copyRecursively(src: Path, dst: Path): Unit = {
-    import scala.jdk.CollectionConverters._
     if (Files.isDirectory(src)) {
       Files.createDirectories(dst)
       scala.util.Using.resource(Files.list(src))(s =>

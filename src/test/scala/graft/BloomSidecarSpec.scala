@@ -173,10 +173,10 @@ class BloomSidecarSpec extends SparkSpec {
     // manifest 0 under the default 128Ki-bit / 7-hash geometry
     store.writeAll("t", rows(100), "id", bloomCols = Seq("fp"))
     // manifest 1: same table re-written under a much smaller geometry —
-    // _BLOOMCOLS now describes (2^12, 3), but the _BLOOM.0 sidecar was
-    // built at (2^17, 7). Probing manifest 0 with the live geometry
-    // would compute positions mod the new m against the old bits: a
-    // wrong skip, or an index overflow when the new m exceeded the old.
+    // its manifest records (2^12, 3), but the _BLOOM.0 sidecar was built
+    // at (2^17, 7). Probing manifest 0 with the live geometry would
+    // compute positions mod the new m against the old bits: a wrong
+    // skip, or an index overflow when the new m exceeded the old.
     store.writeAll("t", rows(100).filter($"id" <= 50), "id",
       bloomCols = Seq("fp"), bloomBits = 1 << 12, bloomHashes = 3)
 

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.sync.{BucketState, BucketedTableStore}
+import graft.sync.BucketedTableStore.Manifest
 
 /** Partition-level snapshot store: merge touches only the buckets holding
   * staged keys, untouched buckets keep their bytes and version, and the
@@ -46,6 +47,7 @@ class BucketedStoreSpec extends SparkSpec {
       ("m2", "bob2", t1), ("m7", "grace", t1))) // upserted stamped t1
   }
 
+  // the schema "sidecars" are the manifest's schema lines now
   test("schema sidecars: reads serve the persisted schema, and a missing " +
     "or corrupt one degrades to inference, never to an error") {
     val root = tmpDir("bstore-schema")
@@ -60,16 +62,54 @@ class BucketedStoreSpec extends SparkSpec {
       .collect().toSet
     val expected = state()
     assert(expected.contains(("m2", "bob2")))
-    // both sidecars exist after a writeAll + delta commit
-    val sf = java.nio.file.Paths.get(root, "member", "_SCHEMA")
-    val df = java.nio.file.Paths.get(root, "member", "_DSCHEMA")
-    assert(java.nio.file.Files.exists(sf) && java.nio.file.Files.exists(df))
+    // both schema lines are recorded after a writeAll + delta commit, and
+    // a read planned over them runs no inference job
+    val mf = java.nio.file.Paths.get(root, "member", "_MANIFEST.1")
+    val lines = java.nio.file.Files.readAllLines(mf).asScala.toSeq
+    assert(lines.exists(_.startsWith("schema ")) && lines.exists(_.startsWith("dschema ")))
+    assert(jobsDuring(store.read("member")) == 0, "the recorded schemas serve the read")
     // corrupt one, delete the other: reads must still produce the same
-    // table (inference fallback), not fail on the sidecar
-    java.nio.file.Files.write(sf, "{not json".getBytes)
-    java.nio.file.Files.delete(df)
+    // table (inference fallback), not fail on the manifest
+    java.nio.file.Files.write(mf, lines.flatMap {
+      case l if l.startsWith("schema ") => Some("schema {not json")
+      case l if l.startsWith("dschema ") => None
+      case l => Some(l)
+    }.mkString("\n").getBytes)
+    assert(jobsDuring(store.read("member")) > 0, "the read infers the lost schemas")
     assert(state() == expected,
-      "reads must degrade to schema inference when sidecars are lost")
+      "reads must degrade to schema inference when schema lines are lost")
+  }
+
+  test("time travel reads its own version's recorded schema, with no inference job") {
+    val store = new BucketedTableStore(spark, tmpDir("bstore-schema-hist"), nBuckets = 4)
+    store.writeAll("member", target(), "memberId")                            // manifest 0
+    store.writeAll("member", target().withColumnRenamed("memberName", "displayName"),
+      "memberId")                                                             // manifest 1
+    var historical: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { historical = store.readAtManifest("member", 0).get } == 0,
+      "manifest 0 records its own schema: planning its read infers nothing")
+    assert(historical.columns.contains("memberName") &&
+      !historical.columns.contains("displayName"))
+    assert(historical.select($"memberName").as[String].collect().toSet ==
+      Set("alice", "bob", "carol", "dave", "eve", "frank"))
+  }
+
+  test("merge under a column that is not the table's key raises and changes nothing") {
+    val root = tmpDir("bstore-key")
+    val store = new BucketedTableStore(spark, root, nBuckets = 4)
+    store.writeAll("member", target(), "memberId")
+    def rows() = store.read("member").get
+      .select($"memberId", $"memberName").as[(String, String)].collect().toSet
+    val (rowsBefore, statesBefore) = (rows(), store.bucketStates("member"))
+    val stage = Seq(("m2", "bob2", t1, "MODIFY"))
+      .toDF("memberId", "memberName", "approximateUpdateTimestamp", "eventName")
+    val e = intercept[IllegalArgumentException](
+      store.merge("member", stage, "memberName", t1))
+    assert(e.getMessage.contains("keyed by 'memberId'"))
+    assert(rows() == rowsBefore && store.bucketStates("member") == statesBefore)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "member", "_MANIFEST.1")),
+      "no version is published")
+    intercept[IllegalArgumentException](store.lookup("member", "memberName", Seq("bob")))
   }
 
   test("merge leaves untouched buckets at their old version") {
@@ -125,11 +165,10 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("time travel after a schema-changing writeAll returns the files' true schema") {
-    // The schema sidecar reflects the LIVE layout; a historical read
-    // older than the sidecar's stamp must fall back to inference, or
-    // renamed/dropped columns come back as silent nulls bound to the new
-    // schema. Scenario: v0 has memberName; a later writeAll renames it
-    // to displayName; readAtManifest(0) must still surface memberName
+    // Each manifest records its own version's schema; binding old files
+    // to the live schema would bring renamed/dropped columns back as
+    // silent nulls. Scenario: v0 has memberName; a later writeAll renames
+    // it to displayName; readAtManifest(0) must still surface memberName
     // with its real values.
     val root = tmpDir("bstore-schemav")
     val store = new BucketedTableStore(spark, root, nBuckets = 4)
@@ -302,13 +341,14 @@ class BucketedStoreSpec extends SparkSpec {
 
     // A's publish against its stale base must refuse, not clobber B
     intercept[java.util.ConcurrentModificationException] {
-      store.commitManifest("member", Map(0 -> new graft.sync.BucketState(99, Nil)), Some(0))
+      store.commitManifest("member", Manifest(Map(0 -> new BucketState(99, Nil)), "memberId"),
+        Some(0))
     }
     assert(store.bucketStates("member").get == liveBefore,
       "refused commit must leave the live manifest untouched")
 
     // the retry path — re-read the base, commit against it — succeeds
-    store.commitManifest("member", liveBefore, Some(1))
+    store.commitManifest("member", Manifest(liveBefore, "memberId"), Some(1))
     assert(store.readAtManifest("member", 2).isDefined)
   }
 
@@ -377,7 +417,8 @@ class BucketedStoreSpec extends SparkSpec {
     def rowSet() = store.read("member").get
       .select($"id", $"memberName").as[(Long, String)].collect().toSet
     val (winnerRows, winnerZones, winnerFiles) = (rowSet(), store.zoneMaps("member"), files())
-    assert(winnerFiles.contains("_BUCKETER") && winnerFiles.contains("_BLOOM.1"))
+    assert(winnerFiles("_MANIFEST.1").linesIterator.exists(_.startsWith("route range ")) &&
+      winnerFiles.contains("_BLOOM.1"))
     // a writer that read base 0 before the winner committed, routing by
     // hash: it must refuse before it moves a dir or rewrites a sidecar
     intercept[java.util.ConcurrentModificationException] {
@@ -631,8 +672,9 @@ class BucketedStoreSpec extends SparkSpec {
     assert(listed < n, "the fixture's delta must miss some bucket")
     // what a delta commit publishes when its bucket observation is missing:
     // delta 1 under every bucket, including buckets with no base
-    store.commitManifest("member", (0 until n).map(b =>
-      b -> m0.getOrElse(b, new BucketState(-1, Nil)).copy(deltas = List(1))).toMap, Some(1))
+    store.commitManifest("member", Manifest((0 until n).map(b =>
+      b -> m0.getOrElse(b, new BucketState(-1, Nil)).copy(deltas = List(1))).toMap,
+      "memberId"), Some(1))
     assert(store.bucketStates("member").get.values.forall(_.deltas == List(1)))
     assert(snapshot(store) == observed)
     assert(store.lookup("member", "memberId", Seq("m2", "m3", "m7")).get

@@ -23,4 +23,27 @@ trait SparkSpec extends AnyFunSuite {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs that start while `body` runs. A marker job run after it
+    * closes the count: listener events arrive in order, so every job of
+    * `body` is seen before the marker, with no fixed drain window. */
+  def jobsDuring(body: => Unit): Int = {
+    val marker = "jobsDuring-marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      Iterator.continually(Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("the marker job never reached the listener")))
+        .takeWhile(_ != marker).size
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -15,7 +15,7 @@ import graft.sync.{BucketedTableStore, TableStore}
   * readers on the old version, while retrying the same call lands what an
   * unobstructed call would. A point is stopped by obstructing the path it
   * writes: a directory where its file goes, or a file where its bucket
-  * directory goes. */
+  * directory goes. [[TableStore]]'s write is held to the same rule. */
 class StoreKillSpec extends SparkSpec {
   import spark.implicits._
 
@@ -103,6 +103,7 @@ class StoreKillSpec extends SparkSpec {
         call(st)
         assert(state(st, root) == expected,
           s"$verb retried after the $point must equal an unobstructed run")
+        assert(StoreKillSpec.unversionedFiles(table(root)).isEmpty)
       }
     }
   }
@@ -127,6 +128,71 @@ class StoreKillSpec extends SparkSpec {
     Files.delete(at)
     seed(st)
     assert(state(st, root) == expected)
+    assert(StoreKillSpec.unversionedFiles(table(root)).isEmpty)
+  }
+
+  test("a re-writeAll that changes the routing and bloom geometry, stopped before " +
+    "its flip, leaves the old version answering; its retry lands the clean one") {
+    def rows(n: Int, prefix: String) = (1 to n).map(i => (i.toLong, s"$prefix$i", ts(i)))
+      .toDF("id", "name", "approximateUpdateTimestamp").withColumn("syncTimestamp", lit(ts(0)))
+    // range-routed with blooms and a `wm` line, re-written hash-routed
+    // under another bloom geometry
+    def start(root: String) = {
+      val st = new BucketedTableStore(spark, root, nBuckets = 4)
+      st.writeAllAtBase("t", rows(40, "a"), "id", base = None, rangeBucket = true,
+        blooms = Seq(("name", 1024, 3)), recordWm = true)
+      st
+    }
+    def call(st: BucketedTableStore): Unit = st.writeAll("t", rows(30, "w"), "id",
+      bloomCols = Seq("name"), bloomBits = 2048, bloomHashes = 2)
+    def answers(st: BucketedTableStore) = {
+      def rowSet(df: Option[org.apache.spark.sql.DataFrame]) =
+        df.map(_.select($"id", $"name").as[(Long, String)].collect().toSet)
+      (rowSet(st.read("t")), rowSet(st.lookup("t", "id", Seq("3", "17", "29", "39"))),
+        rowSet(st.readWhereIn("t", "name", Seq("a5", "a33", "w5"))), st.recordedWatermark("t"))
+    }
+    val clean = start(tmpDir("kill-rewrite-clean"))
+    call(clean)
+    val expected = answers(clean)
+    points.filter(_._1 != "sidecar").foreach { case (point, file) =>
+      val root = tmpDir("kill-rewrite")
+      val st = start(root)
+      val before = answers(st)
+      assert(before._2.exists(_.size == 4), "the old version holds every probed key")
+      val at = Paths.get(root, "t").resolve(file(1))
+      obstruct(at)
+      intercept[IOException](call(st))
+      assert(answers(st) == before, s"a re-writeAll stopped at the $point must leave the old answers")
+      TableStore.deleteRecursively(at)
+      call(st)
+      assert(answers(st) == expected, s"the retry after the $point must equal an unobstructed run")
+      assert(StoreKillSpec.unversionedFiles(Paths.get(root, "t")).isEmpty)
+    }
+  }
+
+  test("TableStore.write stopped at its schema sidecar or its pointer flip leaves the " +
+    "old version; its retry lands the clean one") {
+    def rowSet(st: TableStore) = st.read("member").map(_.collect().toSet)
+    val next = members(("m1", "a2", 20), ("m8", "h", 21))
+    val clean = new TableStore(spark, tmpDir("kill-tstore-clean"))
+    clean.write("member", seedRows)
+    clean.write("member", next)
+    val expected = rowSet(clean)
+    Seq("_SCHEMA.1.tmp", "_CURRENT.tmp1").foreach { file =>
+      val root = tmpDir("kill-tstore")
+      val st = new TableStore(spark, root)
+      st.write("member", seedRows)
+      val before = rowSet(st)
+      val at = table(root).resolve(file)
+      obstruct(at)
+      intercept[IOException](st.write("member", next))
+      assert(st.currentVersion("member").contains(0) && rowSet(st) == before,
+        s"a write stopped at $file must leave the old version")
+      TableStore.deleteRecursively(at)
+      st.write("member", next)
+      assert(st.currentVersion("member").contains(1) && rowSet(st) == expected,
+        s"the retry after $file must equal an unobstructed run")
+    }
   }
 
   test("src/main commits and moves bucket dirs only in BucketedTableStore's publish step") {
@@ -141,7 +207,7 @@ class StoreKillSpec extends SparkSpec {
     }
     val commits = outside("commitManifest(").filterNot(_.contains("def commitManifest("))
     assert(commits.isEmpty, s"commit through publish:\n${commits.mkString("\n")}")
-    // the `_CURRENT` flip and the schema sidecars go through TableStore.replaceFile
+    // the `_CURRENT` flip goes through TableStore.replaceFile
     val moves = outside("ATOMIC_MOVE")
     assert(moves.isEmpty, s"move bucket dirs through publish:\n${moves.mkString("\n")}")
     val elsewhere = Files.walk(Paths.get("src/main/scala")).iterator().asScala
@@ -151,4 +217,17 @@ class StoreKillSpec extends SparkSpec {
       }).toSeq
     assert(elsewhere.isEmpty, s"only BucketedTableStore commits:\n${elsewhere.mkString("\n")}")
   }
+}
+
+object StoreKillSpec {
+  /** The files a bucketed table may keep at its top level: the pointer and
+    * what is versioned with a manifest. */
+  private val TableFile = """_CURRENT|_MANIFEST\.\d+|_STATS\.\d+|_BLOOM\.\d+""".r
+
+  /** The regular files at `table`'s top level outside that set: a file
+    * there that no version names would describe every version at once. */
+  def unversionedFiles(table: Path): Seq[String] =
+    scala.util.Using.resource(Files.list(table))(_.iterator().asScala.toSeq)
+      .filter(Files.isRegularFile(_)).map(_.getFileName.toString)
+      .filterNot(TableFile.matches).sorted
 }

@@ -54,9 +54,10 @@ class StorePropertySpec extends SparkSpec {
         .toDF("id", "fp", "v")
         .withColumn("syncTimestamp", lit(new Timestamp(t0)))
 
-      val mor = new BucketedTableStore(spark, tmpDir(s"sp-mor$seed"),
+      val (morRoot, cowRoot) = (tmpDir(s"sp-mor$seed"), tmpDir(s"sp-cow$seed"))
+      val mor = new BucketedTableStore(spark, morRoot,
         nBuckets = 4, deltaMerges = true, autoCompactAfter = 2)
-      val cow = new BucketedTableStore(spark, tmpDir(s"sp-cow$seed"), nBuckets = 4)
+      val cow = new BucketedTableStore(spark, cowRoot, nBuckets = 4)
       mor.writeAll("t", init, "id", bloomCols = Seq("fp"), statsCols = Seq("v"))
       cow.writeAll("t", init, "id")
 
@@ -97,6 +98,10 @@ class StorePropertySpec extends SparkSpec {
         case (k, v) if v >= lo && v <= hi => (k.toLong, fp(k, v), v)
       }.toSet
       assert(gotR == wantR, s"seed=$seed zone-map-pruned range diverged")
+      Seq(morRoot, cowRoot).foreach { r =>
+        val files = StoreKillSpec.unversionedFiles(java.nio.file.Paths.get(r, "t"))
+        assert(files.isEmpty, s"seed=$seed unversioned table files: $files")
+      }
     }
   }
 }

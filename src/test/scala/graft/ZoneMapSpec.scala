@@ -155,11 +155,28 @@ class ZoneMapSpec extends SparkSpec {
     assert(got == Set(5L, 150L))
   }
 
+  test("rebucket keeps the table's zone maps, blooms and range routing") {
+    val store = new BucketedTableStore(spark, tmpDir("zm-rebucket"), nBuckets = 4)
+    store.writeAll("t", rows(200), "id", statsCols = Seq("day"), rangeBucket = true,
+      bloomCols = Seq("name"), bloomBits = 4096, bloomHashes = 3)
+    val wide = store.rebucket("t", "id", newN = 8, newRoot = tmpDir("zm-rebucket-wide"))
+    val all = wide.bucketStates("t").get.keySet
+    assert(all == (0 until 8).toSet, "boundaries are recomputed for the new count")
+    val pruned = wide.prunedBuckets("t", "day", 10L, 20L).get
+    assert(pruned.size == 1, s"range clustering survives the rebucket: admitted $pruned")
+    val admitted = wide.bloomAdmittedBuckets("t", "name", Seq("n150")).get
+    assert(admitted.size < all.size, s"the blooms survive the rebucket: admitted $admitted")
+    assert(sortedRows(wide.readRange("t", "day", 10L, 20L).get) ==
+      sortedRows(store.read("t").get.filter($"day" >= 10L && $"day" <= 20L)))
+    assert(sortedRows(wide.readWhereIn("t", "name", Seq("n150")).get).map(_._1) == Set(150L))
+  }
+
   test("a plain store writes no sidecars; vacuum ages stats out with manifests") {
     val root = tmpDir("zm-plain")
     val plain = new BucketedTableStore(spark, root, nBuckets = 4)
     plain.writeAll("t", rows(20), "id")
-    Seq("_BUCKETER", "_STATSCOLS", "_STATS.0").foreach { f =>
+    assert(StoreKillSpec.unversionedFiles(Paths.get(root, "t")).isEmpty)
+    Seq("_STATS.0", "_BLOOM.0").foreach { f =>
       assert(!Files.exists(Paths.get(root, "t", f)), s"$f must not exist")
     }
 
