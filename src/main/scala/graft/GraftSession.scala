@@ -32,8 +32,9 @@ import org.apache.spark.sql.SparkSession
   * clone gets its own executor classloader, and the codegen cache is keyed
   * by (classloader, code), so every sync missed the cache and recompiled
   * its whole plan set: 48-55 compiles per steady merge-on-read trickle
-  * sync (perfbench `cdc_trickle`). With one shared loader the same sync
-  * compiles 10 classes, the ones whose code inlines a changing literal.
+  * sync (perfbench `cdc_trickle`). With one shared loader, and the
+  * per-sync values bound rather than inlined as literals
+  * ([[graft.functions.BoundValue]]), a steady sync compiles no class.
   * No graft code adds session-scoped jars, files or classes
   * (`SessionFactorySpec` guards it), so no session can see another's.
   * The setting is read only when a session is created; clones copy it.

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -348,6 +349,27 @@ case class SignProject(child: Expression, signs: Array[Long], r: Int)
     copy(child = newChild)
 }
 
+/** A per-call constant (`value` in Catalyst's internal form) that rides
+  * the plan as a reference object, like [[SignProject]]'s matrix. A
+  * `Literal` is inlined into the generated Java, so a plan rebuilt with a
+  * new value (a sync's watermark or timestamp) is new source and compiles
+  * again; this leaf's code reads the value from the references array, so
+  * such plans share one compiled class. Not foldable, so the optimizer
+  * never turns it back into a literal. */
+case class BoundValue(value: Any, dataType: DataType) extends LeafExpression {
+  require(value != null, "a bound value is never null")
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", value, CodeGenerator.boxedType(dataType))
+    val javaType = CodeGenerator.javaType(dataType)
+    val read =
+      if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+    ev.copy(code = code"final $javaType ${ev.value} = $read;", isNull = FalseLiteral)
+  }
+}
+
 /** `frame_energies(binary) -> array<long>` — per-frame Σ byte² over
   * fixed-size frames (full frames only), codegen'd as a loop kernel.
   * The segmentation primitive behind VAD-style activity screens on
@@ -495,6 +517,11 @@ object GraftFunctions {
     ColumnBridge.column(FrameEnergies(ColumnBridge.expression(c), frame))
   def srp_bits(c: Column, planes: Int): Column =
     ColumnBridge.column(SrpSig(ColumnBridge.expression(c), planes))
+  /** `lit(v)`'s value and type, as a [[BoundValue]]. */
+  def bound(v: Any): Column = {
+    val l = Literal(v)
+    ColumnBridge.column(BoundValue(l.value, l.dataType))
+  }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

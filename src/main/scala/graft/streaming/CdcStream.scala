@@ -170,13 +170,12 @@ final class CdcStream(spark: SparkSession, store: SyncStore,
         // scan is also disallowed — the persisted frame sidesteps that).
         // This is the sync's only persisted input: syncAll's merges read
         // the extraction projection over it and cache nothing themselves.
-        // NOTE (r19): riding the corrupt-row count on the merges' first
-        // action via Dataset.observe was tried and reverted — syncAll then
-        // persisted the extracted projection too, so the CollectMetrics
-        // node landed inside a cached child plan, which no top-level
-        // executed plan carries: the metric was never surfaced and
-        // Observation.get blocked forever. The explicit isEmpty probe
-        // doubles as the cache materializer, so it is not a wasted pass.
+        // The isEmpty probe stays a job of its own, because it also builds
+        // the cache. Counting corrupt rows with a Dataset.observe on the
+        // merges instead was measured and dropped: under AQE each of the
+        // three concurrent merges that reads a cache not built yet runs its
+        // own table-cache query-stage job, so a plain sync ran 6 jobs, not
+        // 1 probe + 1 write per merge.
         val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           quarantineDir.foreach { dir =>

@@ -4,11 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
+
+import graft.functions.GraftFunctions.bound
 
 /** Per-bucket live state: the base snapshot version plus the ordered chain
   * of delta commits layered on top (empty chain = clean bucket). `base`
@@ -664,11 +665,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   /** Materialize the `wanted` bucket states of manifest `m`. Clean
     * buckets stream straight off their base files (no shuffle, no window);
-    * dirty buckets pay one bounded latest-per-key resolution: base rows at
-    * sequence -1 ∪ delta rows at their commit sequence, newest row per key
-    * wins, tombstones drop. The shuffle is sized by the DIRTY buckets
-    * only — with compaction keeping chains short, resolution cost stays a
-    * small fraction of the table no matter how large the table is. */
+    * dirty buckets pay one latest-per-key resolution
+    * ([[Merge.latestPerKey]]): base rows at sequence -1 ∪ delta rows at
+    * their commit sequence, newest row per key wins, tombstones drop. The
+    * resolution reads every dirty bucket's base, and a trickle commit
+    * touches every bucket, so between compactions a read resolves the
+    * whole table: in one partition with no exchange while it fits the
+    * gate, shuffled by key above it. */
   private def resolve(name: String, m: Manifest,
       wanted: Map[Int, BucketState]): DataFrame = {
     val cleanPaths = wanted.collect {
@@ -717,10 +720,9 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           .withColumn("_seq", lit(-1L)).withColumn("_del", lit(false)))
       // key → bucket is functional, so partitioning by key never mixes
       // buckets; ties are impossible (one row per key per commit)
-      val w = Window.partitionBy(col(m.key)).orderBy(col("_seq").desc)
-      Some(layered.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1 && !col("_del"))
-        .drop("_rn", "_seq", "_del"))
+      Some(Merge.latestPerKey(layered, m.key, col("_seq").desc)
+        .filter(!col("_del"))
+        .drop("_seq", "_del"))
     } else None
     (clean, resolved) match {
       case (Some(c), Some(d)) => c.unionByName(d)
@@ -1067,7 +1069,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         val kept = target.join(staged.select(col(key)), Seq(key), "left_anti")
         val inserts = staged.filter(col("eventName") =!= "REMOVE")
           .drop("eventName")
-          .withColumn("syncTimestamp", lit(syncTime))
+          .withColumn("syncTimestamp", bound(syncTime))
           .select(target.columns.map(col).toIndexedSeq: _*)
         // every touched bucket advances, an all-removed one to an empty dir
         publish(name, base, m, kept.unionByName(inserts), sortBy,
@@ -1111,8 +1113,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       .withColumn("_bucket", routing(m, stage))
       .withColumn("_del", col("eventName") === "REMOVE")
       .drop("eventName")
-      .withColumn("syncTimestamp", lit(syncTime))
-      .withColumn("_seq", lit(base.get + 1L))
+      .withColumn("syncTimestamp", bound(syncTime))
+      .withColumn("_seq", bound(base.get + 1L))
     publish(name, base, m, rows, sortBy, delta = true,
       observeWm = prevWm.isDefined,
       wmLine = u => for (p <- prevWm; x <- u if x >= p) yield x)
@@ -1152,20 +1154,14 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     live(name).map { case (_, table) =>
       import spark.implicits._
       val m = table.keyed(name, key)
-      val vdf = values.toDF(key)
-      // probe with the same routing the table was written under; on a
-      // range-clustered table the probe strings are cast into the boundary
-      // domain (numeric keys — the only kind range bucketing accepts)
-      val probe = m.route match {
-        case None => vdf.select(bucketCol(key))
-        case Some((kind, bs)) =>
-          val norm =
-            if (kind == "double") col(key).cast("double") else col(key).cast("long")
-          vdf.select(rangeRouting(kind, bs, norm))
-      }
-      val buckets = probe.collect().map(_.getLong(0).toInt).toSet
-      resolve(name, m, m.states.view.filterKeys(buckets).toMap)
-        .filter(col(key).isin(values: _*))
+      // the probes take the key's type and route as the table's rows did:
+      // hashed, or normalized into the range boundaries' domain (a date
+      // key as its epoch day)
+      val keyType = m.schema.getOrElse(resolve(name, m, m.states).schema)(key).dataType
+      val vdf = values.toDF(key).select(col(key).cast(keyType).as(key))
+      val probes = vdf.select(col(key), routing(m, vdf)).collect()
+      resolve(name, m, m.states.view.filterKeys(probes.map(_.getLong(1).toInt).toSet).toMap)
+        .filter(col(key).isin(probes.map(_.get(0)).toIndexedSeq: _*))
     }
 
   /** Bucket-count evolution: rewrite the live snapshot into `newN` buckets

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.bound
 import graft.ingest.Extraction
 
 /** Watermarked incremental merge — the Spark re-expression of the
@@ -26,9 +27,13 @@ import graft.ingest.Extraction
   *   5. drop staged REMOVEs (:48);
   *   6. insert remainder stamped with `syncTimestamp` (:52).
   *
-  * All steps are declarative DataFrame ops: at scale the anti-join shuffles
-  * both sides by the entity key once, the dedup window shares that
-  * partitioning, and Catalyst/AQE pick broadcast when a batch is small.
+  * All steps are declarative DataFrame ops. The dedup window
+  * ([[latestPerKey]]) runs a small batch in one partition with no
+  * exchange and shuffles a large one by the entity key; Catalyst/AQE plan
+  * the anti-join, broadcasting the stage's keys when the batch is small.
+  * Per-sync values (the watermark, the sync timestamp) enter the plan
+  * bound ([[graft.functions.BoundValue]]), not as literals, so a steady
+  * sync reuses the code the previous one compiled.
   */
 object Merge {
 
@@ -114,7 +119,7 @@ object Merge {
       // LIKE with '^' escape, verbatim from the reference
       // (ref sql/incremental_sync_members.sql:31 `pk LIKE 'M^_%' escape '^'`).
       .filter(expr(s"pk LIKE '${conf.pkPattern}' ESCAPE '^'"))
-      .filter(Extraction.eventTime > lit(wm))
+      .filter(Extraction.eventTime > bound(wm))
     val projected = routed.select(
       conf.projectCols ++ Seq(col("eventName"), col("sequencenumber").as("_seq")): _*)
     // Sequence numbers are decimal strings of VARIABLE length (Kinesis
@@ -122,13 +127,28 @@ object Merge {
     // (length, value) gives numeric order without overflowing any numeric
     // type — plain string order would rank "99" above "100" and keep a
     // stale change as latest.
-    val w = Window.partitionBy(col(conf.keyCol))
-      .orderBy(col("approximateUpdateTimestamp").desc,
-        length(col("_seq")).desc, col("_seq").desc)
-    projected
-      .withColumn("_rn", row_number().over(w))
+    latestPerKey(projected, conf.keyCol, col("approximateUpdateTimestamp").desc,
+      length(col("_seq")).desc, col("_seq").desc).drop("_seq")
+  }
+
+  /** The newest row of each `key` under `newestFirst`, by a `row_number`
+    * window: the stage's dedup and the bucketed store's merge-on-read
+    * resolution. A frame whose estimated size fits
+    * `spark.sql.files.openCostInBytes` is gathered into one partition
+    * first: Spark's file scan gives no task less input than that, so the
+    * frame is one task's worth of work, and `SinglePartition` satisfies
+    * the window's distribution, so no exchange and no shuffle-map job is
+    * planned. A larger frame, or one with no size estimate, is shuffled
+    * by key. */
+  private[sync] def latestPerKey(df: DataFrame, key: String,
+      newestFirst: Column*): DataFrame = {
+    val gate = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+    val gathered =
+      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= gate) df.coalesce(1) else df
+    gathered
+      .withColumn("_rn", row_number().over(Window.partitionBy(col(key)).orderBy(newestFirst: _*)))
       .filter(col("_rn") === 1)
-      .drop("_rn", "_seq")
+      .drop("_rn")
   }
 
   /** Steps 4-6: delete-then-insert upsert with REMOVE application
@@ -144,7 +164,7 @@ object Merge {
     val inserts = stage
       .filter(col("eventName") =!= "REMOVE")
       .drop("eventName")
-      .withColumn("syncTimestamp", lit(syncTime))
+      .withColumn("syncTimestamp", bound(syncTime))
       .select(target.columns.map(col).toIndexedSeq: _*)
     kept.unionByName(inserts)
   }
@@ -167,7 +187,7 @@ object Merge {
     val inserts = stage
       .filter(col("eventName") =!= "REMOVE")
       .drop("eventName")
-      .withColumn("syncTimestamp", lit(syncTime))
+      .withColumn("syncTimestamp", bound(syncTime))
     kept.unionByName(inserts, allowMissingColumns = true)
   }
 

@@ -641,6 +641,29 @@ class BucketedStoreSpec extends SparkSpec {
       "a read of A alone admits no row of another bucket from a shared delta")
   }
 
+  test("a read after a delta that touches every bucket plans no exchange below the gate") {
+    val store = new BucketedTableStore(spark, tmpDir("mor-gate"), nBuckets = 4)
+    store.writeAll("member", target(), "memberId")          // manifest 0
+    val perBucket = (1 to 64).map(i => s"n$i").groupBy(bucketOf(store, _)).map(_._2.head)
+    store.mergeDelta("member", changes(t1, perBucket.map(k => (k, k, "INSERT")).toSeq: _*),
+      "memberId", t1)                                       // manifest 1
+    assert(store.bucketStates("member").get.values.forall(_.deltas == List(1)),
+      "the delta must reach every bucket")
+    def planOfRead() = {
+      val df = store.read("member").get
+      (df.queryExecution.executedPlan.toString, df.select($"memberId").as[String].collect().toSet)
+    }
+    val exchange = "Exchange hashpartitioning(memberId"
+    val (gathered, rows) = planOfRead()
+    assert(rows == (1 to 6).map(i => s"m$i").toSet ++ perBucket)
+    assert(!gathered.contains(exchange), s"a small resolution plans no exchange:\n$gathered")
+    GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> "1") {
+      val (shuffled, sameRows) = planOfRead()
+      assert(shuffled.contains(exchange), s"above the gate the window shuffles:\n$shuffled")
+      assert(sameRows == rows)
+    }
+  }
+
   test("a table-level delta dir lives while a retained manifest lists it") {
     val root = tmpDir("mor-vacuum")
     val store = new BucketedTableStore(spark, root, nBuckets = 4)

@@ -54,6 +54,30 @@ class OperatorSpec extends SparkSpec {
     assert(viaSql == viaCol)
   }
 
+  test("a bound value evaluates like its literal, interpreted and under codegen, " +
+      "and a new value compiles no new class") {
+    val t0 = 1660000000L
+    val events = spark.range(0, 40).select($"id", timestamp_seconds($"id" * 60 + t0).as("t"))
+    def stamp(i: Long) = new java.sql.Timestamp((t0 + 7200 + i) * 1000)
+    // rows after minute i, stamped and offset by values of sync i
+    def q(v: Any => org.apache.spark.sql.Column, i: Long) =
+      events.filter($"t" > v(new java.sql.Timestamp((t0 + i * 60) * 1000)))
+        .select($"id", v(stamp(i)).as("stamp"), (v(i) + $"id").as("seq"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, java.sql.Timestamp, Long)].collect().toSet
+    val want = (10L to 39L).map(id => (id, stamp(9), 9 + id)).toSet
+    assert(rows(q(lit, 9)) == want)
+    assert(rows(q(GraftFunctions.bound, 9)) == want)
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false") {
+      GraftSession.withConf(spark, "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        assert(rows(q(GraftFunctions.bound, 9)) == want, "interpreted")
+      }
+    }
+    assert(compilesDuring(rows(q(GraftFunctions.bound, 11))) == 0,
+      "a second value reuses the compiled class")
+    assert(compilesDuring(rows(q(lit, 11))) > 0, "a new literal is new code")
+  }
+
   test("minhash LSH surfaces a planted near-duplicate pair") {
     val rnd = new scala.util.Random(7)
     def randDoc() = (1 to 50).map(_ => s"w${rnd.nextInt(5000)}").mkString(" ")

@@ -46,4 +46,13 @@ trait SparkSpec extends AnyFunSuite {
         .takeWhile(_ != marker).size
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Classes that `body` compiles: the misses of Spark's codegen cache,
+    * which its compilation-time histogram counts one by one. */
+  def compilesDuring(body: => Unit): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
 }

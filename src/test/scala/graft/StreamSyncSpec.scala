@@ -7,7 +7,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerDrain
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.gen.CdcGen
@@ -78,28 +77,47 @@ class StreamSyncSpec extends SparkSpec {
     assert(pipeline.member.count() == 4)
   }
 
-  test("stream-driven syncs reuse generated code: a steady sync compiles at most 16 classes") {
+  test("a steady stream-driven sync reuses generated code: at most 2 compiles") {
     val gen = new CdcGen.Gen(43)
     var clock = t0
     val pipeline = loaded(gen, "codegen", ticks = 5, () => new Timestamp(clock),
       nBuckets = Some(4), deltaMerges = true) // 8 syncs per compaction: none here
     val cdcDir = tmpDir("codegen-cdc")
     val ckptDir = tmpDir("codegen-ckpt")
-    // same-shaped batches; each sync runs in a new StreamingQuery
+    // same-shaped batches; each sync runs in a new StreamingQuery with a
+    // new watermark, sync timestamp and delta sequence
     val compiles = (1 to 3).map { i =>
       val (m, q, mq) = gen.tick()
       writeLines(cdcDir, s"batch$i.json",
         Seq(m, q, mq).map(gen.envelope("INSERT", _, t0 + i * 10000)))
       clock = t0 + i * 60000
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      pipeline.syncAvailable(cdcDir, ckptDir)
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      compilesDuring(pipeline.syncAvailable(cdcDir, ckptDir))
     }
     info(s"codegen compiles per sync: ${compiles.mkString(", ")}")
     assert(pipeline.member.count() == 8)
-    assert(compiles(2) <= 16,
+    assert(compiles(2) <= 2,
       s"the third sync recompiled its plans (${compiles(2)} compiles; per sync: $compiles)")
   }
+
+  test("a plain stream sync runs 1 + 3 jobs: the quarantine probe and one write per entity") {
+    val gen = new CdcGen.Gen(61)
+    var clock = t0
+    val pipeline = loaded(gen, "jobs", ticks = 20, () => new Timestamp(clock),
+      nBuckets = Some(16), deltaMerges = true) // 8 syncs per compaction: none here
+    val cdcDir = tmpDir("jobs-cdc")
+    val ckptDir = tmpDir("jobs-ckpt")
+    val jobs = (1 to 2).map { i =>
+      writeLines(cdcDir, s"batch$i.json", (1 to 30).flatMap { j =>
+        val (m, q, mq) = gen.tick()
+        Seq(m, q, mq).map(gen.envelope("INSERT", _, t0 + i * 100000 + j * 1000))
+      })
+      clock = t0 + i * 600000
+      jobsDuring(pipeline.syncAvailable(cdcDir, ckptDir))
+    }
+    assert(pipeline.member.count() == 80)
+    assert(jobs == Seq(4, 4), s"jobs per sync: $jobs")
+  }
+
   test("a delta commit on a 16-bucket table writes at most 2 parquet files") {
     val gen = new CdcGen.Gen(53)
     var clock = t0

@@ -155,6 +155,16 @@ class ZoneMapSpec extends SparkSpec {
     assert(got == Set(5L, 150L))
   }
 
+  test("lookup on a table range-routed by a date key returns the probed rows") {
+    val store = new BucketedTableStore(spark, tmpDir("zm-lookup-date"), nBuckets = 8)
+    store.writeAll("t", rows(200), "d", rangeBucket = true)
+    // day 5 and day 180 are present; 2021-01-01 (day 366) is not
+    val df = store.lookup("t", "d", Seq("2020-01-06", "2020-06-29", "2021-01-01")).get
+    assert(df.select($"id").as[Long].collect().toSet == Set(5L, 180L))
+    val opened = df.inputFiles.flatMap(_.split('/').find(_.matches("b\\d+"))).toSet
+    assert(opened.size <= 3, s"a probe opens only its keys' buckets, opened $opened")
+  }
+
   test("rebucket keeps the table's zone maps, blooms and range routing") {
     val store = new BucketedTableStore(spark, tmpDir("zm-rebucket"), nBuckets = 4)
     store.writeAll("t", rows(200), "id", statsCols = Seq("day"), rangeBucket = true,
