@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Diagnostic main: per-LEG wall time and Spark-job counts for the
   * sequential ingest doors (the q150/q160/q165/q227/q229 family), the
   * instrumentation behind the door-overhead work — at toy SFs the doors
@@ -14,13 +16,19 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "runMain graft.DoorProfile /root/testdata/sf0.1 q160"
   *
-  * Legs reported per batch: DERIVE (probe-frame persist + bucket
-  * collect), DECIDE (index read + candidate join + verdict
-  * materialization), APPLY (delta commit incl. sidecars + any
-  * auto-compaction). A Spark listener counts jobs per leg; wall time is
-  * driver-side around each call, which is exactly what the bench pays.
+  * The legs are the job tags [[graft.operators.IngestDoor.step]] sets:
+  * DERIVE (probe-frame persist), DECIDE (index read + candidate join +
+  * verdict materialization), APPLY (delta commit incl. sidecars + any
+  * auto-compaction). A Spark listener reads each job's tags, so every
+  * caller of the step — `ingestAll` here, or any door query in generic
+  * mode — is priced per leg without a copy of the loop. Each measured
+  * call prints its wall time and jobs, then one line per run of
+  * consecutive jobs in the same leg (`other` = outside any step, e.g.
+  * the seed) with its jobs and summed job time.
   */
 object DoorProfile {
+  private val Legs = Seq("door.derive", "door.decide", "door.apply")
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val which = args.drop(1).headOption.getOrElse("q160")
@@ -32,25 +40,48 @@ object DoorProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    @volatile var jobs = 0
+    // per job, in start order: its id and door leg; its start time and,
+    // once it ends, its duration (ms)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val startMs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val durMs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     @volatile var taskSum = 0
     val verbose = sys.env.get("DOOR_PROFILE_VERBOSE").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = {
-        jobs += 1; taskSum += s.stageInfos.map(_.numTasks).sum
-        if (verbose) println(s"[door-profile]   job ${s.jobId} " +
+        val props = Option(s.properties)
+        val leg = props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(",")).find(Legs.contains)
+          .fold("other")(_.stripPrefix("door."))
+        startMs.put(s.jobId, s.time)
+        started.add(s.jobId -> leg)
+        taskSum += s.stageInfos.map(_.numTasks).sum
+        if (verbose) println(s"[door-profile]   job ${s.jobId} $leg " +
           s"tasks=${s.stageInfos.map(_.numTasks).sum} " +
-          s"${Option(s.properties).map(_.getProperty("callSite.short")).getOrElse("")}")
+          s"${props.map(_.getProperty("callSite.short")).getOrElse("")}")
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        durMs.put(e.jobId, e.time - startMs.getOrDefault(e.jobId, e.time))
     })
     def leg[T](name: String)(body: => T): T = {
-      val j0 = jobs; val t0 = System.nanoTime()
+      val j0 = started.size; val t0 = System.nanoTime()
       val r = body
+      val wall = (System.nanoTime() - t0) / 1e9
       // listener events are async; give the queue a beat so job counts
-      // attribute to the right leg (diagnostic precision, not protocol)
+      // attribute to the right call (diagnostic precision, not protocol)
       Thread.sleep(50)
-      println(f"[door-profile] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s  jobs=${jobs - j0}")
+      val jobs = started.asScala.drop(j0).toSeq
+      println(f"[door-profile] $name%-28s $wall%6.2f s  jobs=${jobs.size}")
+      // consecutive jobs of one leg form one run: seed, then decide and
+      // apply per batch
+      val runs = jobs.foldLeft(List.empty[(String, Seq[Int])]) {
+        case ((l, ids) :: rest, (id, jl)) if l == jl => (l, ids :+ id) :: rest
+        case (acc, (id, jl)) => (jl, Seq(id)) :: acc
+      }.reverse
+      if (runs.exists(_._1 != "other")) runs.foreach { case (l, ids) =>
+        val s = ids.map(durMs.getOrDefault(_, 0L)).sum / 1e3
+        println(f"[door-profile]   $l%-8s jobs=${ids.size}%3d  job time $s%6.2f s")
+      }
       r
     }
 
@@ -75,23 +106,8 @@ object DoorProfile {
           val batches = Seq(2, 3).map(r =>
             src.filter(pmod(col(idc), lit(4)) === r))
           val root = Files.createTempDirectory("graft-doorprof").toString
-          val store = new graft.sync.BucketedTableStore(spark, root, 16,
-            deltaMerges = true, autoCompactAfter = 4)
-          try {
-            leg(s"r$round seed")(door.seedIndex(spark, store, corpus,
-              new java.sql.Timestamp(1660000000000L)))
-            batches.zipWithIndex.foreach { case (b, i) =>
-              val probe = leg(s"r$round b${i + 1} derive")(
-                door.probeFrame(spark, b)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-              val dec = leg(s"r$round b${i + 1} decide")(
-                door.decide(spark, store, b, probe, i + 1L))
-              leg(s"r$round b${i + 1} apply")(door.applyAdmissions(store,
-                probe, dec,
-                new java.sql.Timestamp(1660000000000L + (i + 1) * 60000L)))
-              probe.unpersist()
-            }
-          } finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
+          try leg(s"r$round $which")(door.ingestAll(spark, root, corpus, batches, 16))
+          finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
         }
       case "q225" =>
         // leakage-gate legs: freeze (index build, amortized in prod) vs
@@ -125,7 +141,7 @@ object DoorProfile {
           }
         }
     }
-    println(f"[door-profile] TOTAL jobs=$jobs tasks=$taskSum")
+    println(f"[door-profile] TOTAL jobs=${started.size} tasks=$taskSum")
     spark.stop()
   }
 }

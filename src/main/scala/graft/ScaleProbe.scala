@@ -216,8 +216,8 @@ object ScaleProbe {
       val batches = Seq(2, 3).map(r =>
         emb.filter(pmod(col("vec_id"), lit(4)) === r))
       val root = java.nio.file.Files.createTempDirectory("graft-sp160d").toString
-      try graft.operators.SemanticDedupIngest.run(spark, root, corpus,
-        batches, nBuckets = 16, bands = bands, dimsPerBand = dims)
+      try graft.operators.SemanticDedupIngest.door(bands, dims)
+        .ingestAll(spark, root, corpus, batches, nBuckets = 16)
       finally graft.sync.TableStore.deleteRecursively(
         java.nio.file.Paths.get(root))
     }
@@ -339,8 +339,8 @@ object ScaleProbe {
       val batches = Seq(2, 3).map(r =>
         emb.filter(pmod(col("vec_id"), lit(4)) === r))
       val root = java.nio.file.Files.createTempDirectory("graft-sp160").toString
-      try graft.operators.SemanticDedupIngest.run(spark, root, corpus,
-        batches, nBuckets = 16, bands = 10, dimsPerBand = 6)
+      try graft.operators.SemanticDedupIngest.door(bands = 10, dimsPerBand = 6)
+        .ingestAll(spark, root, corpus, batches, nBuckets = 16)
       finally graft.sync.TableStore.deleteRecursively(
         java.nio.file.Paths.get(root))
     }

@@ -2,32 +2,12 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Data model of the CDC pipeline (SURVEY.md §1, FIXTURES.md).
-  *
-  * Target-table row types mirror the reference's typed tables
-  * (ref sql/create_target_tables.sql:5-37); Redshift VARCHAR→String,
-  * FLOAT→Double, TIMESTAMP→java.sql.Timestamp (session TZ pinned UTC).
+/** Data model of the CDC pipeline (SURVEY.md §1, FIXTURES.md): the
+  * schemas the stream parses and the target tables carry, which mirror
+  * the reference's typed tables (ref sql/create_target_tables.sql:5-37;
+  * Redshift VARCHAR→String, FLOAT→Double, TIMESTAMP→Timestamp with the
+  * session TZ pinned UTC).
   */
-final case class Member(
-    memberId: String,
-    memberName: String,
-    approximateUpdateTimestamp: java.sql.Timestamp,
-    syncTimestamp: java.sql.Timestamp)
-
-final case class Quest(
-    questId: String,
-    questName: String,
-    approximateUpdateTimestamp: java.sql.Timestamp,
-    syncTimestamp: java.sql.Timestamp)
-
-final case class MemberQuest(
-    memberQuestId: String,
-    memberId: String,
-    questId: String,
-    dollarsEarned: Double,
-    approximateUpdateTimestamp: java.sql.Timestamp,
-    syncTimestamp: java.sql.Timestamp)
-
 object CdcSchemas {
 
   /** DynamoDB AttributeValue — every scalar is `{"S": ...}` or `{"N": "..."}`

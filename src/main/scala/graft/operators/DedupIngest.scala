@@ -170,7 +170,11 @@ object DedupIngest {
       StructField("exact_dup", IntegerType),
       StructField("near_dup", IntegerType),
       StructField("admitted", IntegerType)))
-    override def defaultBuckets = 32
+    val arrivalSchema = new StructType()
+      .add("doc_id", LongType).add("text", StringType)
+    val arrivalFormat = "json"
+    val requiredCols = Seq("doc_id", "text")
+    val queryName = "dedup-ingest"
     def probeFrame(spark: SparkSession, batch: DataFrame) =
       fingerprints(batch, shingleN, numHashes, rowsPerBand)
     def seedIndex(spark: SparkSession, store: BucketedTableStore,
@@ -183,27 +187,4 @@ object DedupIngest {
         decisions: DataFrame, ts: Timestamp) =
       DedupIngest.applyAdmissions(store, probe, decisions, ts)
   }
-
-  /** Seed the index from `corpus`, then ingest `batches` in order.
-    * Returns one decision row per batch doc:
-    * (doc_id, batch_id, exact_dup, near_dup, admitted), unordered.
-    *
-    * `t0` stamps the index commits (deterministic clock — batch i commits
-    * at t0 + i·60 s); it never influences the decisions. */
-  def run(spark: SparkSession, root: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 32, shingleN: Int = 3,
-      numHashes: Int = 8, rowsPerBand: Int = 2,
-      t0: Long = 1660000000000L): DataFrame =
-    door(shingleN, numHashes, rowsPerBand)
-      .ingestAll(spark, root, corpus, batches, nBuckets, t0)
-
-  /** [[run]] with the seed amortized as standing index state (see
-    * [[IngestDoor.seededWorkingCopy]]); `dirKey` is the dataset dir the
-    * seed corpus derives from. Decisions identical to [[run]]. */
-  def runAmortized(spark: SparkSession, dirKey: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 32, shingleN: Int = 3,
-      numHashes: Int = 8, rowsPerBand: Int = 2,
-      t0: Long = 1660000000000L): DataFrame =
-    door(shingleN, numHashes, rowsPerBand)
-      .ingestAllAmortized(spark, dirKey, corpus, batches, nBuckets, t0)
 }

@@ -19,20 +19,24 @@ import graft.sync.BucketedTableStore
   *   - SEED: the persisted index table exists before the first probe
   *     (possibly from an EMPTY corpus — the store stages an
   *     empty-but-schemaed bucket so cold starts read back fine);
-  *   - per batch, in order: derive the probe frame ONCE (persisted —
-  *     it feeds both the decision and the index update), DECIDE against
-  *     the index as of the batch start (pure read, decisions
-  *     materialized and lineage-free, snapshot semantics within the
-  *     batch), APPLY the admissions as an O(batch) delta commit;
-  *     rejected rows leave no trace;
+  *   - per batch, in order, ONE [[step]]: derive the probe frame ONCE
+  *     (persisted — it feeds both the decision and the index update),
+  *     DECIDE against the index as of the batch start (pure read,
+  *     decisions materialized and lineage-free, snapshot semantics
+  *     within the batch), APPLY the admissions as an O(batch) delta
+  *     commit; rejected rows leave no trace;
   *   - batch k's decisions therefore see every admission from batches
   *     1..k-1, and the standing corpus is never rescanned.
   *
-  * [[graft.streaming.IngestDoorStream]] wraps any door in the
-  * foreachBatch + write-ahead-decision-log machinery; the
+  * Every caller of a door runs [[step]]: [[ingestAll]], the amortized
+  * [[ingestAllAmortized]], q229's retention run, `DoorProfile`, and
+  * [[graft.streaming.IngestDoorStream]], which passes the step its
+  * write-ahead decision log as the `log` hook. A door also describes
+  * its own arrivals (schema, reader format, required columns, query
+  * name), so the stream needs nothing else to read them. The
   * IngestDoorProtocolSpec suite runs every door through the shared
   * contract cases (sequential growth, rejected-no-trace, snapshot
-  * semantics, empty seed).
+  * semantics, empty seed, batch ≡ stream).
   */
 trait IngestDoor {
 
@@ -48,9 +52,24 @@ trait IngestDoor {
   /** Full decision schema: (idCol, batch_id, …flags…, admitted). */
   def decisionSchema: StructType
 
+  /** Schema of an arriving row, as the door's stream reads it. */
+  def arrivalSchema: StructType
+
+  /** Reader format of the door's stream source: "json" or "parquet". */
+  def arrivalFormat: String
+
+  /** Columns an arriving row must carry to be screened: its id and its
+    * payload. The stream drops a row missing one before the step — a
+    * null id would emit a meaningless decision row and a null payload
+    * an unprobeable index entry. */
+  def requiredCols: Seq[String]
+
+  /** Query name of the door's stream. */
+  def queryName: String
+
   /** The derived frame a batch probes with AND (filtered to admissions)
     * merges into the index — computed once per batch and persisted
-    * across both uses by [[ingestAll]] / the stream wrapper. */
+    * across both uses by [[step]]. */
   def probeFrame(spark: SparkSession, batch: DataFrame): DataFrame
 
   /** Create the index table from the initial corpus (may be empty). */
@@ -68,9 +87,6 @@ trait IngestDoor {
     * crash-replay leans on this). */
   def applyAdmissions(store: BucketedTableStore, probe: DataFrame,
       decisions: DataFrame, ts: Timestamp): Unit
-
-  /** Store bucket count a standalone run uses by default. */
-  def defaultBuckets: Int = 16
 
   /** Dedup-horizon maintenance: drop every index entry committed before
     * `cutoff`, so content older than the retention window stops guarding
@@ -115,6 +131,39 @@ trait IngestDoor {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], decisionSchema)
 
+  /** The one per-batch step every door loop runs: derive the probe
+    * once (persisted for the batch's scope), decide, apply, and return
+    * the decisions. `log` receives the decide leg NOT YET EVALUATED and
+    * returns the decisions apply uses — the identity by default; the
+    * stream passes its write-ahead decision log, which skips decide for
+    * a batch it already logged. Each leg's jobs carry the job tag
+    * `door.derive`, `door.decide` or `door.apply`, which is how
+    * `DoorProfile` prices the legs. */
+  final def step(spark: SparkSession, store: BucketedTableStore,
+      batch: DataFrame, batchId: Long, ts: Timestamp,
+      log: (=> DataFrame) => DataFrame = d => d): DataFrame = {
+    def leg[T](tag: String)(body: => T): T = {
+      spark.sparkContext.addJobTag(tag)
+      try body finally spark.sparkContext.removeJobTag(tag)
+    }
+    // the cache is hash-partitioned on idCol, the key apply's admissions
+    // semi-join uses. Measured (DoorProfile generic mode, sf0.1,
+    // BENCHMARKS.md "One door step"): without it the embedding and media
+    // doors run one job more per apply (q160 3 → 4, q227 6 → 7) and q227
+    // one more per decide; the text doors' job counts do not change
+    val probe = leg("door.derive")(probeFrame(spark, batch)
+      .repartition(org.apache.spark.sql.functions.col(idCol))
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      // decide() freezes its decisions at call time, so the index merge
+      // below (and any compaction/vacuum it triggers) cannot perturb or
+      // invalidate them
+      val dec = leg("door.decide")(log(decide(spark, store, batch, probe, batchId)))
+      leg("door.apply")(applyAdmissions(store, probe, dec, ts))
+      dec
+    } finally probe.unpersist()
+  }
+
   /** The shared sequential loop: seed the index from `corpus`, then
     * ingest `batches` in order; one decision row per batch id,
     * unordered. `t0` stamps the index commits (deterministic clock — a
@@ -123,42 +172,19 @@ trait IngestDoor {
   final def ingestAll(spark: SparkSession, root: String, corpus: DataFrame,
       batches: Seq[DataFrame], nBuckets: Int,
       t0: Long = 1660000000000L): DataFrame = {
-    val store = new BucketedTableStore(spark, root, nBuckets,
-      deltaMerges = true, autoCompactAfter = 4)
+    val store = IngestDoor.store(spark, root, nBuckets)
     seedIndex(spark, store, corpus, new Timestamp(t0))
     runBatches(spark, store, batches, t0)
   }
 
-  /** The per-batch half of [[ingestAll]] — the steady-state work a live
-    * door pays after its index exists. */
-  final def runBatches(spark: SparkSession, store: BucketedTableStore,
-      batches: Seq[DataFrame], t0: Long): DataFrame = {
-    val decisions = batches.zipWithIndex.map { case (batch, i) =>
-      // probe frame feeds decide AND the admissions merge — persisted
-      // for the batch's scope only. The extra UNPINNED keyed repartition
-      // (hash on idCol, no explicit width) sits BETWEEN the probe's
-      // compute (which spreads itself at engine parallelism — a pinned
-      // width AQE can't collapse) and the cache: because its width is
-      // not user-specified, a session that lets AQE re-size cached plan
-      // output (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning,
-      // which GraftSession leaves off) sizes the CACHED partitions by the
-      // probe's bytes, so the dozen downstream jobs over the cache stop
-      // scheduling full-width near-empty tasks at small batches.
-      val probe = probeFrame(spark, batch)
-        .repartition(org.apache.spark.sql.functions.col(idCol))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // decide() freezes its decisions at call time, so the index merge
-      // below (and any compaction/vacuum it triggers) cannot perturb or
-      // invalidate them
-      val dec = decide(spark, store, batch, probe, batchId = i + 1L)
-      applyAdmissions(store, probe, dec, new Timestamp(t0 + (i + 1) * 60000L))
-      probe.unpersist()
-      dec
-    }
-    // seeding an index with no batches yet is legal and returns an
-    // empty (schema-correct) decisions frame, not a crash
-    decisions.reduceOption(_.unionByName(_)).getOrElse(emptyDecisions(spark))
-  }
+  /** The per-batch half of [[ingestAll]]: batch i (from 1) is [[step]]
+    * `i`, stamped `t0 + i`·60 s. Seeding with no batches yet is legal
+    * and returns an empty (schema-correct) decisions frame. */
+  private def runBatches(spark: SparkSession, store: BucketedTableStore,
+      batches: Seq[DataFrame], t0: Long): DataFrame =
+    batches.zipWithIndex.map { case (batch, i) =>
+      step(spark, store, batch, i + 1L, new Timestamp(t0 + (i + 1) * 60000L))
+    }.reduceOption(_.unionByName(_)).getOrElse(emptyDecisions(spark))
 
   /** A fresh, private working store whose state IS the seeded index —
     * the seed leg amortized as standing index state (r17 verdict ask #6;
@@ -185,8 +211,8 @@ trait IngestDoor {
     val params = s"n=$nBuckets" +: (if (seedTag.isEmpty) Nil else Seq(s"tag=$seedTag"))
     val master = IndexMemo.tree(
         IndexMemo.Key(s"doorseed-$indexTable", dirKey, params, session = false)) {
-      path => seedIndex(spark, new BucketedTableStore(spark, path, nBuckets,
-        deltaMerges = true, autoCompactAfter = 4), corpus, new Timestamp(t0))
+      path => seedIndex(spark, IngestDoor.store(spark, path, nBuckets), corpus,
+        new Timestamp(t0))
     }
     val work = Files.createTempDirectory("graft-door")
     graft.sync.TableStore.copyRecursively(Paths.get(master), work)
@@ -199,10 +225,19 @@ trait IngestDoor {
       corpus: DataFrame, batches: Seq[DataFrame], nBuckets: Int,
       t0: Long = 1660000000000L, seedTag: String = ""): DataFrame = {
     val work = seededWorkingCopy(spark, dirKey, corpus, nBuckets, t0, seedTag)
-    val store = new BucketedTableStore(spark, work, nBuckets,
-      deltaMerges = true, autoCompactAfter = 4)
-    try runBatches(spark, store, batches, t0)
+    try runBatches(spark, IngestDoor.store(spark, work, nBuckets), batches, t0)
     finally graft.sync.TableStore.deleteRecursively(
       java.nio.file.Paths.get(work))
   }
+}
+
+object IngestDoor {
+
+  /** A door's index store: merge-on-read deltas, compacted after 4 —
+    * the one cadence every door caller (batch, amortized, stream,
+    * profile) runs. */
+  private[graft] def store(spark: SparkSession, root: String,
+      nBuckets: Int): BucketedTableStore =
+    new BucketedTableStore(spark, root, nBuckets, deltaMerges = true,
+      autoCompactAfter = 4)
 }

@@ -177,6 +177,14 @@ object MediaDedupIngest {
       StructField("batch_id", IntegerType),
       StructField("near_dup", IntegerType),
       StructField("admitted", IntegerType)))
+    // parquet carries binary payloads natively, where newline-JSON would
+    // need a base64 detour; sub-64-byte payloads flow through and are
+    // always admitted (the q174 floor — no hash, no candidates)
+    val arrivalSchema = new StructType().add("doc_id", LongType)
+      .add("kind", StringType).add("media", BinaryType)
+    val arrivalFormat = "parquet"
+    val requiredCols = Seq("doc_id", "media")
+    val queryName = "media-dedup-ingest"
     def probeFrame(spark: SparkSession, batch: DataFrame) =
       bandRows(spark, batch)
     def seedIndex(spark: SparkSession, store: BucketedTableStore,
@@ -189,21 +197,4 @@ object MediaDedupIngest {
         decisions: DataFrame, ts: Timestamp) =
       MediaDedupIngest.applyAdmissions(store, probe, decisions, ts)
   }
-
-  /** Seed the index from `corpus`, then ingest `batches` in order.
-    * Returns one decision row per batch doc:
-    * (doc_id, batch_id, near_dup, admitted), unordered. `t0` stamps the
-    * index commits (deterministic clock); it never influences decisions. */
-  def run(spark: SparkSession, root: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 16, maxHamming: Int = 10,
-      t0: Long = 1660000000000L): DataFrame =
-    door(maxHamming).ingestAll(spark, root, corpus, batches, nBuckets, t0)
-
-  /** [[run]] with the seed amortized as standing index state (see
-    * [[IngestDoor.seededWorkingCopy]]). Decisions identical to [[run]]. */
-  def runAmortized(spark: SparkSession, dirKey: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 16, maxHamming: Int = 10,
-      t0: Long = 1660000000000L): DataFrame =
-    door(maxHamming)
-      .ingestAllAmortized(spark, dirKey, corpus, batches, nBuckets, t0)
 }

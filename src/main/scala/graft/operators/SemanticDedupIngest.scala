@@ -245,6 +245,12 @@ object SemanticDedupIngest {
       StructField("batch_id", IntegerType),
       StructField("near_dup", IntegerType),
       StructField("admitted", IntegerType)))
+    // parquet: embedding arrays round-trip natively
+    val arrivalSchema = new StructType()
+      .add("vec_id", LongType).add("embedding", ArrayType(FloatType))
+    val arrivalFormat = "parquet"
+    val requiredCols = Seq("vec_id", "embedding")
+    val queryName = "semantic-dedup-ingest"
     def probeFrame(spark: SparkSession, batch: DataFrame) =
       bandRows(batch, bands, dimsPerBand)
     def seedIndex(spark: SparkSession, store: BucketedTableStore,
@@ -258,22 +264,4 @@ object SemanticDedupIngest {
         decisions: DataFrame, ts: Timestamp) =
       SemanticDedupIngest.applyAdmissions(store, probe, decisions, ts)
   }
-
-  /** Seed from `corpus`, then ingest `batches` in order; one decision row
-    * per batch vector. `t0` stamps commits (never influences decisions). */
-  def run(spark: SparkSession, root: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 16, bands: Int = 16,
-      dimsPerBand: Int = 4, tau: Double = 0.45,
-      t0: Long = 1660000000000L): DataFrame =
-    door(bands, dimsPerBand, tau)
-      .ingestAll(spark, root, corpus, batches, nBuckets, t0)
-
-  /** [[run]] with the seed amortized as standing index state (see
-    * [[IngestDoor.seededWorkingCopy]]). Decisions identical to [[run]]. */
-  def runAmortized(spark: SparkSession, dirKey: String, corpus: DataFrame,
-      batches: Seq[DataFrame], nBuckets: Int = 16, bands: Int = 16,
-      dimsPerBand: Int = 4, tau: Double = 0.45,
-      t0: Long = 1660000000000L): DataFrame =
-    door(bands, dimsPerBand, tau)
-      .ingestAllAmortized(spark, dirKey, corpus, batches, nBuckets, t0)
 }

@@ -134,6 +134,11 @@ object SpanIngest {
       StructField("n_spans", LongType), StructField("dup_tokens", LongType),
       StructField("total_tokens", LongType),
       StructField("admitted", IntegerType)))
+    val arrivalSchema = new StructType()
+      .add("doc_id", LongType).add("text", StringType)
+    val arrivalFormat = "json"
+    val requiredCols = Seq("doc_id", "text")
+    val queryName = "span-ingest"
     def probeFrame(spark: SparkSession, batch: DataFrame) =
       occurrences(batch, n)
     def seedIndex(spark: SparkSession, store: BucketedTableStore,
@@ -146,19 +151,4 @@ object SpanIngest {
         decisions: DataFrame, ts: Timestamp) =
       SpanIngest.applyAdmissions(store, probe, decisions, ts)
   }
-
-  /** Seed the index from `corpus`, then ingest `batches` in order.
-    * Returns one decision row per batch doc, unordered. `t0` stamps the
-    * index commits (deterministic clock); it never influences decisions. */
-  def run(spark: SparkSession, root: String, corpus: DataFrame,
-      batches: Seq[DataFrame], n: Int, nBuckets: Int = 16,
-      t0: Long = 1660000000000L): DataFrame =
-    door(n).ingestAll(spark, root, corpus, batches, nBuckets, t0)
-
-  /** [[run]] with the seed amortized as standing index state (see
-    * [[IngestDoor.seededWorkingCopy]]). Decisions identical to [[run]]. */
-  def runAmortized(spark: SparkSession, dirKey: String, corpus: DataFrame,
-      batches: Seq[DataFrame], n: Int, nBuckets: Int = 16,
-      t0: Long = 1660000000000L): DataFrame =
-    door(n).ingestAllAmortized(spark, dirKey, corpus, batches, nBuckets, t0)
 }

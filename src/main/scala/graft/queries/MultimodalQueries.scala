@@ -458,8 +458,8 @@ object MultimodalQueries {
       media.filter(pmod(col("doc_id"), lit(4)) === r))
     // seed leg amortized as standing index state (r17 verdict ask #6;
     // IngestDoor.seededWorkingCopy)
-    graft.operators.MediaDedupIngest
-      .runAmortized(spark, dir, corpus, batches)
+    graft.operators.MediaDedupIngest.door()
+      .ingestAllAmortized(spark, dir, corpus, batches, nBuckets = 16)
       .orderBy(col("doc_id").asc)
   }
   val q227Oracle: String = """

@@ -765,7 +765,7 @@ object TextQueries {
     // seed leg amortized as standing index state (r17 verdict ask #6;
     // IngestDoor.seededWorkingCopy) — the bench prices the steady-state
     // screening run, seed cost lands in ann_build
-    DedupIngest.runAmortized(spark, dir, corpus, batches, nBuckets = 16)
+    DedupIngest.door().ingestAllAmortized(spark, dir, corpus, batches, nBuckets = 16)
       .orderBy(col("doc_id").asc)
   }
   val q150Oracle: String = {
@@ -957,7 +957,6 @@ object TextQueries {
 
   def q229DedupRetention(spark: SparkSession, dir: String): DataFrame = {
     import java.sql.Timestamp
-    import org.apache.spark.storage.StorageLevel
     val docs = Tables.documents(spark, dir).repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
     val corpus = docs.filter(pmod(col("doc_id"), lit(4)) <= 1)
     val b1 = docs.filter(pmod(col("doc_id"), lit(4)) === 2)
@@ -969,18 +968,11 @@ object TextQueries {
     // run's store only; the q150-shared seed master stays frozen
     val root = door.seededWorkingCopy(spark, dir, corpus, nBuckets = 16, t0)
     try {
-      val store = new graft.sync.BucketedTableStore(spark, root, 16,
-        deltaMerges = true, autoCompactAfter = 4)
-      val p1 = door.probeFrame(spark, b1).persist(StorageLevel.MEMORY_AND_DISK)
-      val d1 = door.decide(spark, store, b1, p1, 1L)
-      door.applyAdmissions(store, p1, d1, new Timestamp(t0 + 60000))
-      p1.unpersist()
+      val store = graft.operators.IngestDoor.store(spark, root, 16)
+      val d1 = door.step(spark, store, b1, 1L, new Timestamp(t0 + 60000))
       val retired = door.retireBefore(store, new Timestamp(t0 + 30000),
         new Timestamp(t0 + 90000))
-      val p2 = door.probeFrame(spark, b2).persist(StorageLevel.MEMORY_AND_DISK)
-      val d2 = door.decide(spark, store, b2, p2, 2L)
-      door.applyAdmissions(store, p2, d2, new Timestamp(t0 + 120000))
-      p2.unpersist()
+      val d2 = door.step(spark, store, b2, 2L, new Timestamp(t0 + 120000))
       d1.unionByName(d2)
         .withColumn("n_retired", lit(retired))
         .orderBy(col("doc_id").asc)
@@ -1299,8 +1291,8 @@ object TextQueries {
       docs.filter(pmod(col("doc_id"), lit(4)) === r))
     // seed leg amortized as standing index state (r17 verdict ask #6;
     // IngestDoor.seededWorkingCopy)
-    graft.operators.SpanIngest.runAmortized(spark, dir, corpus, batches,
-        n = dupSpanN, nBuckets = 16)
+    graft.operators.SpanIngest.door(dupSpanN)
+      .ingestAllAmortized(spark, dir, corpus, batches, nBuckets = 16)
       .orderBy(col("doc_id").asc)
   }
   private def q165Chain(sfx: String, rem: Int, dupSrc: String): String = {

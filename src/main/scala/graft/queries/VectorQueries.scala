@@ -914,8 +914,8 @@ object VectorQueries {
       emb.filter(pmod(col("vec_id"), lit(4)) === r))
     // seed leg amortized as standing index state (r17 verdict ask #6;
     // IngestDoor.seededWorkingCopy)
-    graft.operators.SemanticDedupIngest
-      .runAmortized(spark, dir, corpus, batches, nBuckets = 16)
+    graft.operators.SemanticDedupIngest.door()
+      .ingestAllAmortized(spark, dir, corpus, batches, nBuckets = 16)
       .orderBy(col("vec_id").asc)
   }
   val q160Oracle: String = s"""

@@ -9,21 +9,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{CorpusSink, IngestDoor}
-import graft.sync.BucketedTableStore
 
-/** Any [[IngestDoor]] under Structured Streaming: each micro-batch is
-  * admit/reject-screened against the door's persisted index inside
-  * `foreachBatch`, and the admissions delta-merge forward before the
-  * next batch. One implementation of the replay-safety machinery for
-  * ALL doors (text, spans, embeddings, media) — the per-door streaming
-  * classes are façades over this, so the WAL contract cannot drift
-  * between them the way the door bodies once did:
+/** Any [[IngestDoor]] under Structured Streaming: each micro-batch runs
+  * the door's [[IngestDoor.step]] inside `foreachBatch` against the
+  * door's persisted index, so the admissions delta-merge forward before
+  * the next batch. One implementation of the replay-safety machinery for
+  * ALL doors (text, spans, embeddings, media); the door itself supplies
+  * its arrival schema, reader format, required columns and query name.
+  * The stream's part is the step's `log` hook, a write-ahead decision
+  * log:
   *
   *   - decisions land durably under `decisionsDir/batch_id=<k>` BEFORE
-  *     the index mutates (write-ahead log); a re-delivered batch whose
-  *     decisions exist SKIPS the decide step — recomputing against the
-  *     already-mutated index would flip its own admissions into
-  *     rejections;
+  *     the index mutates; a re-delivered batch whose decisions exist
+  *     SKIPS the decide leg — recomputing against the already-mutated
+  *     index would flip its own admissions into rejections;
   *   - the index merge re-applies FROM the logged decisions, and every
   *     door's `applyAdmissions` is idempotent, so once or twice is
   *     indistinguishable;
@@ -35,21 +34,19 @@ import graft.sync.BucketedTableStore
   *
   * With `corpusDir` set, each batch's ADMITTED rows additionally land in
   * a [[CorpusSink]] corpus (batchId-guarded appends — a re-delivered
-  * epoch is inert there too). Rows missing any of `cleanCols` are
-  * dropped up front — a null id would emit a meaningless decision row
-  * and a null payload an unprobeable index entry; an upstream needing
-  * dead-letter visibility pre-splits them (the [[DedupIngestStream]]
-  * contract caveat, now shared).
+  * epoch is inert there too). Rows missing any of the door's
+  * `requiredCols` are dropped up front (a malformed JSON line reads as
+  * all nulls). CONTRACT CAVEAT: a well-formed row whose id or payload is
+  * explicitly null is dropped the same way — no decision row, no index
+  * entry; an upstream that needs dead-letter visibility pre-splits such
+  * rows into a quarantine table the way [[CdcStream.start]] does.
   */
 final class IngestDoorStream(spark: SparkSession, door: IngestDoor,
     root: String, decisionsDir: String, nBuckets: Int,
-    cleanCols: Seq[String],
     now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
-    corpusDir: Option[String] = None, corpusShards: Int = 8,
-    queryName: String = "ingest-door") {
+    corpusDir: Option[String] = None, corpusShards: Int = 8) {
 
-  private val store = new BucketedTableStore(spark, root, nBuckets,
-    deltaMerges = true, autoCompactAfter = 8)
+  private val store = IngestDoor.store(spark, root, nBuckets)
 
   /** Seed the door's index from an initial corpus (may be empty — the
     * keyed table must exist before the first probe); with `corpusDir`
@@ -68,6 +65,17 @@ final class IngestDoorStream(spark: SparkSession, door: IngestDoor,
   def decided(batchId: Long): Boolean =
     Files.exists(batchDir(batchId).resolve("_SUCCESS"))
 
+  /** The write-ahead decision log, as [[IngestDoor.step]]'s `log` hook:
+    * decide runs only for a batch not yet logged, and apply always reads
+    * the logged decisions. Overwrite mode clears a torn dir from a
+    * previous crash. */
+  private def logged(batchId: Long)(decide: => DataFrame): DataFrame = {
+    if (!decided(batchId))
+      decide.drop("batch_id") // encoded by the directory, like a partition
+        .write.mode("overwrite").parquet(batchDir(batchId).toString)
+    spark.read.parquet(batchDir(batchId).toString)
+  }
+
   /** Dedup-horizon maintenance between micro-batches
     * ([[IngestDoor.retireBefore]] on this stream's store): run it while
     * the query is idle (between triggers, or from a scheduled
@@ -84,20 +92,10 @@ final class IngestDoorStream(spark: SparkSession, door: IngestDoor,
     // derivation, decide's projection, AND the admitted-rows corpus
     // append — without the persist each consumer re-reads the source
     val clean = batch
-      .filter(cleanCols.map(col(_).isNotNull).reduce(_ && _))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val probe = door.probeFrame(spark, clean)
+      .filter(door.requiredCols.map(col(_).isNotNull).reduce(_ && _))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (!decided(batchId)) {
-        // WAL: decisions durable before any index mutation. Overwrite
-        // mode clears a torn dir from a previous crash.
-        door.decide(spark, store, clean, probe, batchId)
-          .drop("batch_id") // encoded by the directory, like a partition
-          .write.mode("overwrite").parquet(batchDir(batchId).toString)
-      }
-      val dec = spark.read.parquet(batchDir(batchId).toString)
-      door.applyAdmissions(store, probe, dec, now())
+      val dec = door.step(spark, store, clean, batchId, now(), logged(batchId))
       // corpus terminal last: if we crash before this, the replay skips
       // decide (WAL), re-applies the idempotent index merge, and lands
       // the append then — the batchId guard makes a DOUBLE append
@@ -108,13 +106,16 @@ final class IngestDoorStream(spark: SparkSession, door: IngestDoor,
           Seq(door.idCol), "left_semi")
         CorpusSink.appendShards(admitted, d, batchId = Some(batchId))
       }
-    } finally { probe.unpersist(); clean.unpersist() }
+    } finally clean.unpersist()
   }
 
-  /** Drive a streaming source frame through the door. The façades build
-    * the schema'd reader; this owns the guards and the foreachBatch. */
-  def start(source: DataFrame, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+  /** Stream a directory of the door's arrival files through the screen.
+    * `maxFilesPerTrigger` bounds backfill batches exactly like
+    * [[CdcStream.start]] — a replayed backlog must not arrive as one
+    * giant micro-batch. */
+  def start(inputDir: String, checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow(),
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     // the WAL is keyed by the checkpoint's batchIds — both mismatch
     // directions (fresh checkpoint + used WAL, used checkpoint + WAL
     // missing committed batches' decisions) corrupt decisions
@@ -129,8 +130,11 @@ final class IngestDoorStream(spark: SparkSession, door: IngestDoor,
           s"but checkpointDir $checkpointDir is fresh (batchIds restart " +
           "at 0) — rotate corpusDir together with the checkpoint")
     }
-    source.writeStream
-      .queryName(queryName)
+    val reader = spark.readStream.schema(door.arrivalSchema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .format(door.arrivalFormat).load(inputDir)
+      .writeStream
+      .queryName(door.queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((batch: DataFrame, batchId: Long) => ingest(batch, batchId))

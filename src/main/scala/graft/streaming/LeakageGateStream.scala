@@ -10,7 +10,7 @@ import graft.sync.BucketedTableStore
 
 /** Streaming cross-split leakage gate — q207's audit turned into an
   * ingest terminal (the round-11 verdict's "streaming twin" ask), and a
-  * fifth terminal shape next to DedupIngestStream / SpanIngestStream
+  * fifth terminal shape next to IngestDoorStream's text and span doors
   * (stateful index + WAL), QualityGateStream (frozen driver-side maps)
   * and VocabDriftStream (frozen plain table): here the frozen artifact is
   * a PERSISTED, BUCKETED shingle index of the holdout split (val∪test

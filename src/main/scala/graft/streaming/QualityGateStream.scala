@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextOps
 
 /** Train-once / gate-forever streaming quality screen — the third ingest
-  * terminal shape next to DedupIngestStream (stateful index, WAL) and
-  * SpanIngestStream (stateful gram index, WAL): a batch pass FREEZES a
+  * terminal shape next to the text and span doors under IngestDoorStream
+  * (stateful index, WAL): a batch pass FREEZES a
   * bounded model from the standing corpus (bigram-LM counts ≤ vocab²,
   * per-language perplexity cutoffs, Laplace constants), and every
   * arriving batch is gated against that frozen artifact with Gopher
@@ -190,7 +190,7 @@ object QualityGateStream {
     *     fill (null doc_id/text/lang) would be dropped by score()'s
     *     inner joins and vanish without a verdict; they are split out
     *     up front and emitted with keep=0 instead, matching the
-    *     explicit null contract of DedupIngestStream/SpanIngestStream.
+    *     explicit null contract of IngestDoorStream.
     *
     * Returns the started query; callers await termination. */
   def run(spark: SparkSession, g: FrozenGate, stream: DataFrame,

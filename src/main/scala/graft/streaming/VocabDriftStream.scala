@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextOps
 
 /** Streaming vocabulary-drift monitor — the ingest-side twin of q210 and
-  * the fourth terminal shape next to DedupIngestStream (stateful index +
-  * WAL), SpanIngestStream (stateful gram index + WAL) and
+  * the fourth terminal shape next to IngestDoorStream's text and span
+  * doors (stateful fingerprint and gram indexes + WAL) and
   * QualityGateStream (frozen driver-side artifact, stateless): here the
   * frozen artifact is a persisted TABLE (the vocabulary parquet), not a
   * collected map — the right shape when the artifact itself is

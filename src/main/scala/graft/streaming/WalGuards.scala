@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 /** Shared checkpoint/WAL pairing guards for the write-ahead-decision
-  * ingest streams ([[DedupIngestStream]], [[SpanIngestStream]]). The WAL
+  * ingest stream ([[IngestDoorStream]], over any door). The WAL
   * is keyed by the checkpoint's batchIds, so the two directories must
   * rotate TOGETHER; both mismatch directions corrupt decisions:
   *

@@ -23,7 +23,7 @@ class DedupIngestSpec extends SparkSpec {
   private val loop2 = "a b c a b c"
   private val loop3 = "a b c a b c a b c"
 
-  private def run(root: String) = DedupIngest.run(
+  private def run(root: String) = DedupIngest.door().ingestAll(
     spark, root,
     corpus = docs(0L -> corpusA, 1L -> corpusB),
     batches = Seq(

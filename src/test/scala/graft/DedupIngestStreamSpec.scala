@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.DedupIngestStream
+import graft.operators.DedupIngest
+import graft.streaming.IngestDoorStream
 import graft.sync.BucketedTableStore
 
 /** Streaming dedup-on-ingest: micro-batches screen sequentially against
@@ -31,7 +32,8 @@ class DedupIngestStreamSpec extends SparkSpec {
     val inDir = tmpDir("ingest-in")
     val ckpt = tmpDir("ingest-ckpt")
 
-    val stream = new DedupIngestStream(spark, root, decDir, nBuckets = 8)
+    val stream = new IngestDoorStream(spark, DedupIngest.door(), root, decDir,
+      nBuckets = 8)
     stream.seed(Seq(0L -> corpusA).toDF("doc_id", "text"))
 
     // two files, one per trigger (mtime orders them)
@@ -93,8 +95,8 @@ class DedupIngestStreamSpec extends SparkSpec {
     val ckpt = tmpDir("ingest2-ckpt")
     val corpus = tmpDir("ingest2-corpus")
 
-    val stream = new DedupIngestStream(spark, root, decDir, nBuckets = 8,
-      corpusDir = Some(corpus), corpusShards = 4)
+    val stream = new IngestDoorStream(spark, DedupIngest.door(), root, decDir,
+      nBuckets = 8, corpusDir = Some(corpus), corpusShards = 4)
     stream.seed(Seq(0L -> corpusA).toDF("doc_id", "text"))
 
     val t = System.currentTimeMillis()
@@ -123,7 +125,7 @@ class DedupIngestStreamSpec extends SparkSpec {
     // a FRESH checkpoint restarts batchIds at 0; even with a fresh WAL,
     // pairing it with this corpus would hit the manifest's replay guard
     // and silently skip appending every new batch — refused up front
-    val stream2 = new DedupIngestStream(spark, root,
+    val stream2 = new IngestDoorStream(spark, DedupIngest.door(), root,
       tmpDir("ingest2-dec-fresh"), nBuckets = 8, corpusDir = Some(corpus))
     intercept[IllegalArgumentException] {
       stream2.start(inDir, tmpDir("ingest2-ckpt-fresh"))

@@ -25,7 +25,7 @@ class IngestDoorProtocolSpec extends SparkSpec {
   import spark.implicits._
 
   private case class Fixture(name: String, door: IngestDoor, table: String,
-      cleanCols: Seq[String], intraBatchDetects: Boolean,
+      intraBatchDetects: Boolean,
       mk: Seq[(Long, Int)] => DataFrame)
 
   private def text(k: Int) = (0 until 12).map(t => s"k${k}t$t").mkString(" ")
@@ -37,20 +37,20 @@ class IngestDoorProtocolSpec extends SparkSpec {
     Array.tabulate(80)(i => (if (i % 2 == 0) 40 else 90).toByte)) // 0xAAAA
 
   private val fixtures = Seq(
-    Fixture("text", DedupIngest.door(), "fp", Seq("doc_id", "text"),
+    Fixture("text", DedupIngest.door(), "fp",
       intraBatchDetects = false,
       rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
-    Fixture("span", SpanIngest.door(8), "gfp", Seq("doc_id", "text"),
+    Fixture("span", SpanIngest.door(8), "gfp",
       // within-batch cross-doc gram duplication is flagged BY DESIGN
       // (SpanIngest.decide's batchDupFps) — the one door whose
       // intra-batch policy is detection, not snapshot admission
       intraBatchDetects = true,
       rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
     Fixture("semantic", SemanticDedupIngest.door(), "sv",
-      Seq("vec_id", "embedding"), intraBatchDetects = false,
+      intraBatchDetects = false,
       rows => rows.map { case (id, k) => (id, vec(k)) }
         .toDF("vec_id", "embedding")),
-    Fixture("media", MediaDedupIngest.door(), "pfp", Seq("doc_id", "media"),
+    Fixture("media", MediaDedupIngest.door(), "pfp",
       intraBatchDetects = false,
       rows => rows.map { case (id, k) => (id, "image", mediaPatterns(k)) }
         .toDF("doc_id", "kind", "media")))
@@ -58,6 +58,14 @@ class IngestDoorProtocolSpec extends SparkSpec {
   private def flags(df: DataFrame, idCol: String): Map[Long, Int] =
     df.collect().map(r =>
       r.getAs[Long](idCol) -> r.getAs[Int]("admitted")).toMap
+
+  /** Every row of `df` as text, columns in name order. */
+  private def rows(df: DataFrame): Set[String] =
+    df.select(df.columns.sorted.map(df.col): _*).collect()
+      .map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString(",")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSet
 
   for (f <- fixtures) {
     test(s"${f.name}: sequential growth — batch k sees earlier admissions") {
@@ -131,8 +139,7 @@ class IngestDoorProtocolSpec extends SparkSpec {
       val root = tmpDir(s"door-${f.name}-torn")
       val wal = tmpDir(s"door-${f.name}-torndir")
       val stream = new IngestDoorStream(spark, f.door, root, wal,
-        nBuckets = 4, cleanCols = f.cleanCols,
-        now = () => new Timestamp(1660000000000L))
+        nBuckets = 4, now = () => new Timestamp(1660000000000L))
       stream.seed(f.mk(Seq(0L -> 0)))
       // a predecessor crashed mid-parquet-job: data fragments, no marker
       val torn = java.nio.file.Paths.get(wal, "batch_id=1")
@@ -176,8 +183,7 @@ class IngestDoorProtocolSpec extends SparkSpec {
       val root = tmpDir(s"door-${f.name}-wal")
       val wal = tmpDir(s"door-${f.name}-waldir")
       val stream = new IngestDoorStream(spark, f.door, root, wal,
-        nBuckets = 4, cleanCols = f.cleanCols,
-        now = () => new Timestamp(1660000000000L))
+        nBuckets = 4, now = () => new Timestamp(1660000000000L))
       stream.seed(f.mk(Seq(0L -> 0)))
       val batch = f.mk(Seq(50L -> 0, 51L -> 1))
       stream.ingest(batch, 1L)
@@ -201,5 +207,55 @@ class IngestDoorProtocolSpec extends SparkSpec {
       assert(flags(spark.read.parquet(s"$wal/batch_id=1"), f.door.idCol)
         == dec1, s"${f.name}: post-retire replay must keep logged decisions")
     }
+
+    test(s"${f.name}: ingestAll and the stream's ingest give the same decisions and index") {
+      val corpus = f.mk(Seq(0L -> 0))
+      val batches = Seq(
+        f.mk(Seq(10L -> 0, 11L -> 1)),
+        f.mk(Seq(20L -> 1, 21L -> 2)))
+      val root = tmpDir(s"door-${f.name}-batch")
+      val viaAll = f.door.ingestAll(spark, root, corpus, batches, nBuckets = 4)
+      val sroot = tmpDir(s"door-${f.name}-stream")
+      val wal = tmpDir(s"door-${f.name}-streamwal")
+      val stream = new IngestDoorStream(spark, f.door, sroot, wal,
+        nBuckets = 4, now = () => new Timestamp(1660000000000L))
+      stream.seed(corpus)
+      batches.zipWithIndex.foreach { case (b, i) => stream.ingest(b, i + 1L) }
+      // the log's directory names give batch_id back on read
+      assert(rows(spark.read.parquet(wal)) == rows(viaAll),
+        s"${f.name}: stream decisions differ from ingestAll's")
+      // commit stamps differ by construction (a fixed clock vs t0 + i·60 s)
+      def index(r: String) = rows(IngestDoor.store(spark, r, 4)
+        .readBuckets(f.table, None).get.drop("syncTimestamp"))
+      assert(index(sroot) == index(root), s"${f.name}: live index rows differ")
+    }
+  }
+
+  test("one text-door step on a 4-bucket store runs at most 8 jobs") {
+    // 8 is what the same batch ran as a pass of the former per-batch loop
+    val door = DedupIngest.door()
+    val store = IngestDoor.store(spark, tmpDir("door-step-jobs"), 4)
+    door.seedIndex(spark, store, Seq(0L -> text(0)).toDF("doc_id", "text"),
+      new Timestamp(1660000000000L))
+    val batch = Seq(10L -> text(0), 11L -> text(1)).toDF("doc_id", "text")
+    val n = jobsDuring {
+      door.step(spark, store, batch, 1L, new Timestamp(1660000060000L))
+    }
+    assert(n <= 8, s"one door step ran $n jobs")
+  }
+
+  test("src/main derives a door's probe only inside IngestDoor.step") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.nonEmpty, "run from the repository root")
+    val calls = sources.filterNot(_.getFileName.toString == "IngestDoor.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".probeFrame(") => s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(calls.isEmpty,
+      s"drive a door through IngestDoor.step:\n${calls.mkString("\n")}")
   }
 }

@@ -42,7 +42,7 @@ class MediaDedupIngestSpec extends SparkSpec {
       media(200L -> dec,            // identical to ADMITTED 101 → rejected
         201L -> alt, 202L -> alt))  // identical pair, NEW: snapshot
                                     // semantics admit BOTH
-    val out = try MediaDedupIngest.run(spark, root, corpus, batches)
+    val out = try MediaDedupIngest.door().ingestAll(spark, root, corpus, batches, 16)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
           r.getAs[Int]("admitted")))).toMap
@@ -61,8 +61,8 @@ class MediaDedupIngestSpec extends SparkSpec {
     val decDir = tmpDir("mdistream-dec")
     val inDir = tmpDir("mdistream-in")
     val ckpt = tmpDir("mdistream-ckpt")
-    val stream = new graft.streaming.MediaDedupIngestStream(
-      spark, root, decDir, nBuckets = 4,
+    val stream = new graft.streaming.IngestDoorStream(
+      spark, MediaDedupIngest.door(), root, decDir, nBuckets = 4,
       now = () => new java.sql.Timestamp(1660000000000L))
     stream.seed(media(0L -> inc))
 
@@ -107,7 +107,7 @@ class MediaDedupIngestSpec extends SparkSpec {
       media(100L -> inc),             // cold index → no candidates → admit
       media(200L -> inc,              // dup of batch-1 ADMISSION → reject
         201L -> dec))                 // new → admit
-    val out = try MediaDedupIngest.run(spark, root, corpus, batches)
+    val out = try MediaDedupIngest.door().ingestAll(spark, root, corpus, batches, 16)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
           r.getAs[Int]("admitted")))).toMap

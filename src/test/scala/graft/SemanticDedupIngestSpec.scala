@@ -31,7 +31,7 @@ class SemanticDedupIngestSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
 
     val root = tmpDir("semingest")
-    val d = SemanticDedupIngest.run(spark, root, corpus,
+    val d = SemanticDedupIngest.door().ingestAll(spark, root, corpus,
       Seq(batch1, batch2), nBuckets = 4)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
@@ -57,8 +57,8 @@ class SemanticDedupIngestSpec extends SparkSpec {
     val decDir = tmpDir("semstream-dec")
     val inDir = tmpDir("semstream-in")
     val ckpt = tmpDir("semstream-ckpt")
-    val stream = new graft.streaming.SemanticDedupIngestStream(
-      spark, root, decDir, nBuckets = 4,
+    val stream = new graft.streaming.IngestDoorStream(
+      spark, SemanticDedupIngest.door(), root, decDir, nBuckets = 4,
       now = () => new java.sql.Timestamp(1660000000000L))
     stream.seed(Seq(vec(0L, axis = 0, eps = 0f)).toDF("vec_id", "embedding"))
 
@@ -102,7 +102,7 @@ class SemanticDedupIngestSpec extends SparkSpec {
       vec(21L, axis = 1, eps = 0f)     // new direction
     ).toDF("vec_id", "embedding")
     val root = tmpDir("semingest-empty")
-    val d = SemanticDedupIngest.run(spark, root, corpus,
+    val d = SemanticDedupIngest.door().ingestAll(spark, root, corpus,
       Seq(batch1, batch2), nBuckets = 4)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
@@ -140,8 +140,8 @@ class SemanticDedupIngestSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
 
     val root = tmpDir("semingest-hot")
-    val d = SemanticDedupIngest.run(spark, root, corpus, Seq(batch),
-      nBuckets = 4)
+    val d = SemanticDedupIngest.door().ingestAll(spark, root, corpus,
+      Seq(batch), nBuckets = 4)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         ((r.getAs[Int]("near_dup"), r.getAs[Int]("admitted")))).toMap
 

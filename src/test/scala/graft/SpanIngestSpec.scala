@@ -36,7 +36,8 @@ class SpanIngestSpec extends SparkSpec {
 
     val root = java.nio.file.Files.createTempDirectory("graft-spanspec").toString
     val out =
-      try SpanIngest.run(spark, root, corpus, Seq(batch1, batch2), n = 8)
+      try SpanIngest.door(8).ingestAll(spark, root, corpus,
+          Seq(batch1, batch2), nBuckets = 16)
         .collect()
         .map(r => r.getLong(0) ->
           (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getInt(5)))

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.SpanIngestStream
+import graft.operators.SpanIngest
+import graft.streaming.IngestDoorStream
 import graft.sync.BucketedTableStore
 
 /** Streaming ExactSubstr-on-ingest: micro-batches span-screen
@@ -36,7 +37,8 @@ class SpanIngestStreamSpec extends SparkSpec {
     val inDir = tmpDir("span-in")
     val ckpt = tmpDir("span-ckpt")
 
-    val stream = new SpanIngestStream(spark, root, decDir, n = 8, nBuckets = 8)
+    val stream = new IngestDoorStream(spark, SpanIngest.door(8), root, decDir,
+      nBuckets = 8)
     stream.seed(Seq(0L -> s"${toks("c", 30)} $boiler").toDF("doc_id", "text"))
 
     val b0d10 = s"$rejRun $boiler ${toks("x", 31)}" // 10/50 dup = 20% → rejected
@@ -98,8 +100,8 @@ class SpanIngestStreamSpec extends SparkSpec {
     val ckpt = tmpDir("span2-ckpt")
     val corpus = tmpDir("span2-corpus")
 
-    val stream = new SpanIngestStream(spark, root, decDir, n = 8, nBuckets = 8,
-      corpusDir = Some(corpus), corpusShards = 4)
+    val stream = new IngestDoorStream(spark, SpanIngest.door(8), root, decDir,
+      nBuckets = 8, corpusDir = Some(corpus), corpusShards = 4)
     stream.seed(Seq(0L -> s"${toks("c", 30)} $boiler").toDF("doc_id", "text"))
 
     val rejected = s"$boiler ${toks("x", 30)}"  // 10/40 = 25% dup → dropped
@@ -123,8 +125,8 @@ class SpanIngestStreamSpec extends SparkSpec {
 
     // fresh checkpoint + batchId-guarded corpus = silent append skips;
     // refused up front
-    val stream2 = new SpanIngestStream(spark, root, tmpDir("span2-dec-fresh"),
-      n = 8, nBuckets = 8, corpusDir = Some(corpus))
+    val stream2 = new IngestDoorStream(spark, SpanIngest.door(8), root,
+      tmpDir("span2-dec-fresh"), nBuckets = 8, corpusDir = Some(corpus))
     intercept[IllegalArgumentException] {
       stream2.start(inDir, tmpDir("span2-ckpt-fresh"))
     }
