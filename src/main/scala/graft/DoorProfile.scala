@@ -107,7 +107,7 @@ object DoorProfile {
             src.filter(pmod(col(idc), lit(4)) === r))
           val root = Files.createTempDirectory("graft-doorprof").toString
           try leg(s"r$round $which")(door.ingestAll(spark, root, corpus, batches, 16))
-          finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
+          finally graft.sync.LocalFs.deleteRecursively(Paths.get(root))
         }
       case "q225" =>
         // leakage-gate legs: freeze (index build, amortized in prod) vs
@@ -127,7 +127,7 @@ object DoorProfile {
               leg(s"r$round gate$r")(LeakageGateStream.gate(spark, store,
                 train.filter(pmod(col("doc_id"), lit(2)) === r)).count())
             }
-          } finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
+          } finally graft.sync.LocalFs.deleteRecursively(Paths.get(root))
         }
       case other =>
         // generic path: run each named query TWICE under the job counter

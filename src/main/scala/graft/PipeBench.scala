@@ -120,7 +120,7 @@ object PipeBench {
     val csec = (System.nanoTime() - cstart) / 1e9
     println(s"""{"metric":"delta_merge","target_rows":$bigN,"n_buckets":256,"batches":$dres,"compact_buckets":$compacted,"compact_sec":${f"$csec%.3f"}}""")
 
-    // Same 10M-row target, whole-table rewrite (TableStore protocol): the
+    // Same 10M-row target, whole-table rewrite (one bucket's protocol): the
     // baseline the bucketed store's touched-fraction cost compares against.
     syntheticTarget(spark, bigN, t0 - 1000)
       .write.mode("overwrite").parquet(s"$outRoot/target1m")

@@ -218,7 +218,7 @@ object ScaleProbe {
       val root = java.nio.file.Files.createTempDirectory("graft-sp160d").toString
       try graft.operators.SemanticDedupIngest.door(bands, dims)
         .ingestAll(spark, root, corpus, batches, nBuckets = 16)
-      finally graft.sync.TableStore.deleteRecursively(
+      finally graft.sync.LocalFs.deleteRecursively(
         java.nio.file.Paths.get(root))
     }
     val cells: Seq[(String, String, () => DataFrame)] = Seq(
@@ -341,7 +341,7 @@ object ScaleProbe {
       val root = java.nio.file.Files.createTempDirectory("graft-sp160").toString
       try graft.operators.SemanticDedupIngest.door(bands = 10, dimsPerBand = 6)
         .ingestAll(spark, root, corpus, batches, nBuckets = 16)
-      finally graft.sync.TableStore.deleteRecursively(
+      finally graft.sync.LocalFs.deleteRecursively(
         java.nio.file.Paths.get(root))
     }
 

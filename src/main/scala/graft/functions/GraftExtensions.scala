@@ -74,7 +74,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite())
     // physical planning for the TopKPerKey logical operator
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    // SQL time travel over TableStore snapshots: `t VERSION AS OF n`
+    // SQL time travel over BucketedTableStore versions: `t VERSION AS OF n`
     // (active only when spark.graft.store.root is set)
     ext.injectParser((session, delegate) =>
       new graft.plans.TimeTravelParser(session, delegate))

@@ -166,7 +166,7 @@ object AnnIndexStore {
         if (keyed(dir, key) && tree.isDirectory) { loads += 1; Some(tree.getPath) }
         else
           try {
-            graft.sync.TableStore.deleteRecursively(tree.toPath)
+            graft.sync.LocalFs.deleteRecursively(tree.toPath)
             dir.mkdirs()
             build(tree.getPath)
             writeKey(dir, key)

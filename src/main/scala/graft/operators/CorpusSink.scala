@@ -205,7 +205,7 @@ object CorpusSink {
         _.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
           .foreach(f => Files.move(f, dst.resolve(f.getFileName))))
     }
-    graft.sync.TableStore.deleteRecursively(staging)
+    graft.sync.LocalFs.deleteRecursively(staging)
     val prevMap = prev.map(s => s.shard -> s).toMap
     val merged = (prevMap.keySet ++ batch.map(_.shard)).toSeq.sorted.map { sh =>
       (prevMap.get(sh), batch.find(_.shard == sh)) match {

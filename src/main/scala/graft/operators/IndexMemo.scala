@@ -116,7 +116,7 @@ object IndexMemo {
     if (slots.remove(k, s)) s.owned.foreach(release)
 
   private def release(dir: Path): Unit =
-    try graft.sync.TableStore.deleteRecursively(dir)
+    try graft.sync.LocalFs.deleteRecursively(dir)
     catch { case scala.util.control.NonFatal(_) => () }
 
   /** Cheap version marker for a dataset dir: hex(max lastModified), file

@@ -215,7 +215,7 @@ trait IngestDoor {
         new Timestamp(t0))
     }
     val work = Files.createTempDirectory("graft-door")
-    graft.sync.TableStore.copyRecursively(Paths.get(master), work)
+    graft.sync.LocalFs.copyRecursively(Paths.get(master), work)
     work.toString
   }
 
@@ -226,7 +226,7 @@ trait IngestDoor {
       t0: Long = 1660000000000L, seedTag: String = ""): DataFrame = {
     val work = seededWorkingCopy(spark, dirKey, corpus, nBuckets, t0, seedTag)
     try runBatches(spark, IngestDoor.store(spark, work, nBuckets), batches, t0)
-    finally graft.sync.TableStore.deleteRecursively(
+    finally graft.sync.LocalFs.deleteRecursively(
       java.nio.file.Paths.get(work))
   }
 }

@@ -45,7 +45,7 @@ object JoinOps {
       val warehouse = java.net.URI.create(
         spark.conf.get("spark.sql.warehouse.dir")).getPath
       val loc = java.nio.file.Paths.get(warehouse, name)
-      graft.sync.TableStore.deleteRecursively(loc)
+      graft.sync.LocalFs.deleteRecursively(loc)
       df.write.mode("overwrite")
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet")

@@ -6,26 +6,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.load.InitialLoad
 import graft.streaming.CdcStream
-import graft.sync.{BucketedTableStore, Concurrently, Merge, SyncStore, TableStore}
+import graft.sync.{BucketedTableStore, Concurrently, LocalFs, Merge, SyncStore}
 
 /** End-to-end orchestration — the Spark equivalent of the reference's
   * script sequence setup → export → initial load → incremental sync → query
   * (ref scripts/setup_redshift.sh, initial_load_from_export.sh,
   * test_sync_time.sh; SURVEY.md §2.7 C5).
   *
-  * @param nBuckets None → [[TableStore]] (whole-table snapshot per merge;
-  *                 simple, right for small targets). Some(n) →
-  *                 [[BucketedTableStore]] with n hash buckets per table —
-  *                 merges rewrite only touched buckets, the configuration a
-  *                 100 TB deployment runs (BENCHMARKS.md has the measured
+  * @param nBuckets the [[BucketedTableStore]]'s hash buckets per table.
+  *                 None → one bucket: a whole-table snapshot per merge,
+  *                 simple and right for small targets. Some(n) → merges
+  *                 rewrite only touched buckets, the configuration a 100 TB
+  *                 deployment runs (BENCHMARKS.md has the measured
   *                 crossover). Same merge semantics either way, enforced by
-  *                 PipelineSpec running the full scenario on both.
+  *                 PipelineSpec running the full scenario on both. The count
+  *                 is recorded with each table: a restart with another
+  *                 count is refused at its first merge.
   * @param retainStates Some(k) → after each sync drain, sweep every
   *                 target's snapshot history down to the k most recent
   *                 states (store `vacuum`); None → keep all history.
   *                 A continuous deployment sets this, or the superseded
   *                 snapshots leak without bound.
-  * @param deltaMerges bucketed store only: true → merge-on-read commits
+  * @param deltaMerges true → merge-on-read commits
   *                 ([[BucketedTableStore.mergeDelta]], O(batch) per sync,
   *                 auto-compacted once a bucket's chain reaches
   *                 `autoCompactAfter`) instead of copy-on-write bucket
@@ -48,18 +50,8 @@ final class Pipeline(spark: SparkSession, storeRoot: String,
     // target); when set, nBuckets/deltaMerges are ignored
     storeImpl: Option[SyncStore] = None) {
 
-  // merge-on-read exists only on the bucketed store: silently dropping
-  // the flag would hand a high-frequency-CDC config O(table) whole-table
-  // rewrites per sync while the operator believes delta commits are on.
-  // With an explicit storeImpl the flags are documented as ignored, so
-  // the guard must not fire on them.
-  require(storeImpl.isDefined || !deltaMerges || nBuckets.nonEmpty,
-    "deltaMerges requires a bucketed store - pass nBuckets")
-  val store: SyncStore = storeImpl.getOrElse(nBuckets match {
-    case Some(n) =>
-      new BucketedTableStore(spark, storeRoot, n, deltaMerges, autoCompactAfter)
-    case None => new TableStore(spark, storeRoot)
-  })
+  val store: SyncStore = storeImpl.getOrElse(new BucketedTableStore(spark, storeRoot,
+    nBuckets.getOrElse(1), deltaMerges, autoCompactAfter))
 
   private val entityKeys: Map[String, String] =
     Merge.entities.map(e => e.name -> e.keyCol).toMap
@@ -164,9 +156,9 @@ final class Pipeline(spark: SparkSession, storeRoot: String,
       // every crash point leaves either the old table, the new one, or
       // a recoverable .replay, never a silent loss.
       val tmp = replayTmp
-      TableStore.deleteRecursively(tmp)
+      LocalFs.deleteRecursively(tmp)
       if (remaining > 0) stillBad.write.mode("overwrite").parquet(tmp.toString)
-      TableStore.deleteRecursively(Paths.get(quarantinePath))
+      LocalFs.deleteRecursively(Paths.get(quarantinePath))
       if (remaining > 0)
         Files.move(tmp, Paths.get(quarantinePath), StandardCopyOption.ATOMIC_MOVE)
       (replayed, remaining)
@@ -176,7 +168,7 @@ final class Pipeline(spark: SparkSession, storeRoot: String,
   def table(name: String): DataFrame =
     store.read(name).getOrElse(
       throw new IllegalStateException(s"table $name not initialized — run initialLoad first"))
-      .drop("_bucket") // store-internal routing column (bucketed store only)
+      .drop("_bucket") // the store's internal routing column
 
   def member: DataFrame = table("member")
   def quest: DataFrame = table("quest")

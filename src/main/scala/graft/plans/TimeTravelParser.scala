@@ -2,83 +2,89 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** SQL time travel over [[graft.sync.TableStore]] snapshots:
-  * `SELECT … FROM <table> VERSION AS OF <n>` resolves to the store's
-  * retained `v<n>` snapshot — the SQL face of `TableStore.readAt` (the
-  * reference has no equivalent; Redshift mutates in place and history is
-  * gone, which is exactly the audit gap the versioned store closes).
+import graft.sync.BucketedTableStore
+
+/** SQL time travel over [[graft.sync.BucketedTableStore]] versions:
+  * `SELECT … FROM <table> VERSION AS OF <n>` reads the table as its
+  * retained manifest `n` describes it — the SQL face of
+  * `BucketedTableStore.readAtManifest` (the reference has no equivalent;
+  * Redshift mutates in place and history is gone, which is exactly the
+  * audit gap the versioned store closes). The relation is that read's
+  * plan without the store's `_bucket` column, aliased as the table, so SQL
+  * sees delta chains, recorded schemas and retention exactly as the store
+  * API does. A version the store does not retain fails the parse with an
+  * error naming the table and the version.
   *
   * Installed through `SparkSessionExtensions.injectParser` (see
   * [[graft.functions.GraftExtensions]]), completing the extensions
   * portfolio alongside the optimizer rule (RangeJoinRewrite) and planner
   * strategy (TopKStrategy). The mechanism is a delegating
-  * [[ParserInterface]]: queries are textually rebased — `t VERSION AS OF n`
-  * becomes a direct-path relation ``parquet.`<root>/t/v<n>` `` — then handed
-  * to Spark's own parser, so every other statement parses byte-identically
-  * through the delegate.
+  * [[ParserInterface]]: Spark's own parser parses every statement, and
+  * each `VERSION AS OF <integer>` relation it yields over a store table
+  * (in the query, its subqueries and its CTEs) is replaced by the store's
+  * read; every other plan is the delegate's, untouched.
   *
   * Active only when `spark.graft.store.root` is set (checked per parse, so
   * one session can point at different stores over its lifetime); without
   * the conf every statement passes through untouched, including Spark's own
   * DSv2 `VERSION AS OF` grammar for catalog tables.
   *
-  * Which names rewrite: if `spark.graft.store.tables` is set (comma-
-  * separated list), exactly those names — the explicit registration a
-  * session that also uses DSv2 catalog time travel should prefer. Unset,
-  * the parser falls back to names that exist as directories under the
-  * store root. Two hazards of the fallback, documented rather than
-  * hidden: (1) an UNQUALIFIED DSv2 catalog table whose name collides
-  * with a store directory is captured by the rewrite (qualify it, or set
-  * the table list); (2) the same query text parses differently before vs
-  * after the store directory appears — parse-time filesystem state is
-  * part of the grammar. Known textual-rewrite limitation: the pattern is
-  * also rewritten inside string literals containing the exact
-  * `ident VERSION AS OF n` sequence for a registered/existing `ident`
-  * (non-store identifiers, including the trailing segment of qualified
-  * names, pass through untouched).
+  * Which names are store tables: if `spark.graft.store.tables` is set
+  * (comma-separated list), exactly those names — the explicit
+  * registration a session that also uses DSv2 catalog time travel should
+  * prefer. Unset, the parser falls back to names that exist as
+  * directories under the store root. Two hazards of the fallback,
+  * documented rather than hidden: (1) an UNQUALIFIED DSv2 catalog table
+  * whose name collides with a store directory is captured (qualify it, or
+  * set the table list); (2) the same query text parses differently before
+  * vs after the store directory appears — parse-time filesystem state is
+  * part of the grammar. Qualified names (`db.t VERSION AS OF 3`) are never
+  * store tables and pass through to Spark's catalog time travel.
   */
 class TimeTravelParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
-  // (?<![.\w]) — NOT preceded by a dot or word char: the trailing segment
-  // of a qualified name (`db.tbl VERSION AS OF 3`) must not rewrite, or
-  // Spark's native catalog time travel on qualified tables would silently
-  // break.
-  private val TimeTravel =
-    """(?i)(?<![.\w])([A-Za-z_][A-Za-z0-9_]*)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-
-  private def rewrite(sqlText: String): String =
+  private def travel(plan: LogicalPlan): LogicalPlan =
     session.conf.getOption("spark.graft.store.root") match {
-      case None => sqlText
+      case None => plan
       case Some(root) =>
         // Explicit registration beats filesystem probing (scaladoc hazard
-        // (1)/(2)): when the conf is set, ONLY the listed names rewrite.
+        // (1)/(2)): when the conf is set, ONLY the listed names are store
+        // tables.
         val registered = session.conf.getOption("spark.graft.store.tables")
           .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-        TimeTravel.replaceAllIn(sqlText, m => {
-          // Rewrite only registered/existing store tables; any other
-          // `ident VERSION AS OF n` (e.g. a DSv2 catalog table) passes
-          // through to the delegate grammar untouched.
-          val isStoreTable = registered match {
-            case Some(tables) => tables.contains(m.group(1))
-            case None =>
-              java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, m.group(1)))
-          }
-          scala.util.matching.Regex.quoteReplacement(
-            if (isStoreTable) s"parquet.`$root/${m.group(1)}/v${m.group(2)}`"
-            else m.matched)
-        })
+        def isStoreTable(t: String) = registered match {
+          case Some(tables) => tables.contains(t)
+          case None => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, t))
+        }
+        // reads take the bucket count from the manifest: the handle's
+        // count routes writes only, and this handle writes nothing
+        lazy val store = new BucketedTableStore(session, root, nBuckets = 1)
+        def read(t: String, v: Int): LogicalPlan =
+          SubqueryAlias(t, store.readAtManifest(t, v).getOrElse(
+            throw new IllegalArgumentException(
+              s"$t VERSION AS OF $v: the store at $root retains no version $v of $t"))
+            .drop("_bucket").queryExecution.analyzed)
+        def rewrite(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
+          case RelationTimeTravel(UnresolvedRelation(Seq(t), _, _), None, Some(v))
+              if v.toIntOption.exists(_ >= 0) && isStoreTable(t) => read(t, v.toInt)
+          case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+            case (n, cte, depth) => (n, rewrite(cte).asInstanceOf[SubqueryAlias], depth)
+          })
+        }
+        rewrite(plan)
     }
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    delegate.parsePlan(rewrite(sqlText))
+    travel(delegate.parsePlan(sqlText))
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(rewrite(sqlText))
+    travel(delegate.parseQuery(sqlText))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sync.TableStore
+import graft.sync.{BucketedTableStore, LocalFs}
 import graft.tables.Tables
 
 /** Dataset-governance operators: the auditability layer a production
@@ -26,7 +26,8 @@ import graft.tables.Tables
   *     the publish-outside-the-boundary protocol next to q220's
   *     k-anonymity.
   *
-  * Both run their mutation through [[TableStore]] versioned snapshots, so
+  * Both run their mutation through [[BucketedTableStore]] versions (one
+  * bucket, each table keyed by its natural key), so
   * the BEFORE state stays readable for the audit (and for regulators) —
   * the same reason transactional table formats retain snapshots. All
   * checksums/hashes are md5-derived (exact hex/int on both engines), so
@@ -61,10 +62,10 @@ object GovernanceQueries {
   def q233CorpusDiff(spark: SparkSession, dir: String): DataFrame = {
     val root = Files.createTempDirectory("graft-q233-store").toString
     try {
-      val store = new TableStore(spark, root)
-      store.write("corpus", corpusV0(spark, dir))
-      store.write("corpus", corpusV1(spark, dir))
-      val v0 = store.readAt("corpus", 0).get
+      val store = new BucketedTableStore(spark, root, nBuckets = 1)
+      store.writeAll("corpus", corpusV0(spark, dir), "doc_id")
+      store.writeAll("corpus", corpusV1(spark, dir), "doc_id")
+      val v0 = store.readAtManifest("corpus", 0).get
       val v1 = store.read("corpus").get
       val joined = v0.select(col("doc_id"), col("source").as("src0"),
           col("chash").as("h0"))
@@ -81,7 +82,7 @@ object GovernanceQueries {
         .orderBy(col("source").asc, col("status").asc)
       val rows = report.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
-    } finally TableStore.deleteRecursively(Paths.get(root))
+    } finally LocalFs.deleteRecursively(Paths.get(root))
   }
 
   private def corpusV0(spark: SparkSession, dir: String): DataFrame =
@@ -129,7 +130,13 @@ object GovernanceQueries {
   def q235ForgetPropagation(spark: SparkSession, dir: String): DataFrame = {
     val root = Files.createTempDirectory("graft-q235-store").toString
     try {
-      val store = new TableStore(spark, root)
+      val store = new BucketedTableStore(spark, root, nBuckets = 1)
+      // chunks are keyed by their document: a document's chunks share a bucket
+      val keys = Map("corpus" -> "doc_id", "chunks" -> "doc_id",
+        "dedup_index" -> "chash", "manifest" -> "shard")
+      def write(t: String, df: DataFrame): Unit = store.writeAll(t, df, keys(t))
+      def live(t: String): DataFrame = store.read(t).get.drop("_bucket")
+      def before(t: String): DataFrame = store.readAtManifest(t, 0).get.drop("_bucket")
       val base = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
         .withColumn("chash", chash(col("text")))
@@ -155,34 +162,32 @@ object GovernanceQueries {
           expr("bit_xor(hnum)").as("content_checksum"))
       val withH = (c: DataFrame) => c.join(
         base.select(col("doc_id"), col("hnum")), Seq("doc_id"))
-      store.write("corpus", corpus0)
-      store.write("chunks", chunks0)
-      store.write("dedup_index", index(corpus0))
-      store.write("manifest", manifest(withH(corpus0)))
+      write("corpus", corpus0)
+      write("chunks", chunks0)
+      write("dedup_index", index(corpus0))
+      write("manifest", manifest(withH(corpus0)))
 
       val forget = base.filter(pmod(col("doc_id"), lit(13)) === 0)
         .select(col("doc_id"))
-      val corpus1 = store.read("corpus").get
-        .join(forget, Seq("doc_id"), "left_anti")
-      val chunks1 = store.read("chunks").get
-        .join(forget, Seq("doc_id"), "left_anti")
-      store.write("corpus", corpus1)
-      store.write("chunks", chunks1)
-      store.write("dedup_index", index(store.read("corpus").get))
-      store.write("manifest", manifest(withH(store.read("corpus").get)))
+      val corpus1 = live("corpus").join(forget, Seq("doc_id"), "left_anti")
+      val chunks1 = live("chunks").join(forget, Seq("doc_id"), "left_anti")
+      write("corpus", corpus1)
+      write("chunks", chunks1)
+      write("dedup_index", index(live("corpus")))
+      write("manifest", manifest(withH(live("corpus"))))
 
-      val corpusTouched = store.readAt("corpus", 0).get
+      val corpusTouched = before("corpus")
         .join(forget, Seq("doc_id"), "left_semi")
-      val chunksTouched = store.readAt("chunks", 0).get
+      val chunksTouched = before("chunks")
         .join(forget, Seq("doc_id"), "left_semi")
-      val idx0 = store.readAt("dedup_index", 0).get
+      val idx0 = before("dedup_index")
         .select(col("chash"), col("owner").as("owner0"))
-      val idx1 = store.read("dedup_index").get
+      val idx1 = live("dedup_index")
         .select(col("chash"), col("owner").as("owner1"))
       val idxTouched = idx0.join(idx1, Seq("chash"), "left_outer")
         .filter(col("owner1").isNull || col("owner0") =!= col("owner1"))
-      val man0 = store.readAt("manifest", 0).get
-      val man1 = store.read("manifest").get
+      val man0 = before("manifest")
+      val man1 = live("manifest")
       val manTouched = man0.select(col("shard"), col("n_docs").as("n0"),
           col("id_checksum").as("i0"), col("content_checksum").as("c0"))
         .join(man1, Seq("shard"), "left_outer")
@@ -200,24 +205,24 @@ object GovernanceQueries {
       def tagged(artifact: String, metric: String, df: DataFrame) =
         df.select(lit(artifact).as("artifact"), lit(metric).as("metric"))
       val counted = Seq(
-          tagged("corpus", "rows_before", store.readAt("corpus", 0).get),
-          tagged("corpus", "rows_after", store.read("corpus").get),
+          tagged("corpus", "rows_before", before("corpus")),
+          tagged("corpus", "rows_after", live("corpus")),
           tagged("corpus", "n_touched", corpusTouched),
           tagged("corpus", "residual",
-            store.read("corpus").get.join(forgetIds, Seq("doc_id"), "left_semi")),
-          tagged("chunks", "rows_before", store.readAt("chunks", 0).get),
-          tagged("chunks", "rows_after", store.read("chunks").get),
+            live("corpus").join(forgetIds, Seq("doc_id"), "left_semi")),
+          tagged("chunks", "rows_before", before("chunks")),
+          tagged("chunks", "rows_after", live("chunks")),
           tagged("chunks", "n_touched", chunksTouched),
           tagged("chunks", "residual",
-            store.read("chunks").get.join(forgetIds, Seq("doc_id"), "left_semi")),
-          tagged("dedup_index", "rows_before", store.readAt("dedup_index", 0).get),
-          tagged("dedup_index", "rows_after", store.read("dedup_index").get),
+            live("chunks").join(forgetIds, Seq("doc_id"), "left_semi")),
+          tagged("dedup_index", "rows_before", before("dedup_index")),
+          tagged("dedup_index", "rows_after", live("dedup_index")),
           tagged("dedup_index", "n_touched", idxTouched),
           tagged("dedup_index", "residual",
-            store.read("dedup_index").get
+            live("dedup_index")
               .join(forgetIds, col("owner") === col("doc_id"), "left_semi")),
-          tagged("manifest", "rows_before", store.readAt("manifest", 0).get),
-          tagged("manifest", "rows_after", store.read("manifest").get),
+          tagged("manifest", "rows_before", before("manifest")),
+          tagged("manifest", "rows_after", live("manifest")),
           tagged("manifest", "n_touched", manTouched))
         .reduce(_.unionByName(_))
         .groupBy(col("artifact"), col("metric")).agg(count(lit(1)).as("v"))
@@ -240,7 +245,7 @@ object GovernanceQueries {
         .orderBy(col("artifact").asc)
       val rows = report.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
-    } finally TableStore.deleteRecursively(Paths.get(root))
+    } finally LocalFs.deleteRecursively(Paths.get(root))
   }
 
   val q235Oracle: String = """

@@ -9,13 +9,13 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
 import graft.operators.TextOps
-import graft.sync.TableStore
+import graft.sync.{BucketedTableStore, LocalFs}
 import graft.tables.Tables
 
 /** Data-quality, sequence-statistics, and storage-diff operators: fuzzy
   * edit-distance dedup, Markov transition matrices, a constraint-violation
   * report, per-group OLS regression, EWMA smoothing, a percentile kit, and
-  * a snapshot change feed off [[TableStore]] time travel.
+  * a snapshot change feed off [[BucketedTableStore]] time travel.
   *
   * Determinism notes: all float paths go through exact integer/decimal
   * arithmetic or sequentially-identical IEEE folds (EWMA's fold order is
@@ -309,7 +309,8 @@ object InsightQueries {
 
   // ---------------------------------------------------------------------
   // q110 — snapshot change feed: two deterministic versions of an orders
-  // table are written through [[TableStore]] (v0, v1), read back via time
+  // table are written through a one-bucket [[BucketedTableStore]] keyed by
+  // o_orderkey (v0, v1), read back via time
   // travel, and diffed into an insert/update/delete feed — the CDC-out
   // story (what a downstream consumer would ingest). The diff is one full
   // outer join on the key; at scale both snapshots hash-partition once on
@@ -317,17 +318,17 @@ object InsightQueries {
   def q110ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_cf").toString
-    val store = new TableStore(spark, root)
+    val store = new BucketedTableStore(spark, root, nBuckets = 1)
     val orders = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-    store.write("orders_cf", orders.filter($"o_orderkey" % 3 =!= 0))
-    store.write("orders_cf", orders.filter($"o_orderkey" % 5 =!= 0)
+    store.writeAll("orders_cf", orders.filter($"o_orderkey" % 3 =!= 0), "o_orderkey")
+    store.writeAll("orders_cf", orders.filter($"o_orderkey" % 5 =!= 0)
       .withColumn("o_totalprice",
         when($"o_orderkey" % 7 === 0, $"o_totalprice" * 2.0d)
-          .otherwise($"o_totalprice")))
-    val a = store.readAt("orders_cf", 0).get
+          .otherwise($"o_totalprice")), "o_orderkey")
+    val a = store.readAtManifest("orders_cf", 0).get
       .select($"o_orderkey".as("key_a"), $"o_totalprice".as("price_old"))
-    val b = store.readAt("orders_cf", 1).get
+    val b = store.readAtManifest("orders_cf", 1).get
       .select($"o_orderkey".as("key_b"), $"o_totalprice".as("price_new"))
     a.join(b, $"key_a" === $"key_b", "full_outer")
       .withColumn("op",
@@ -439,23 +440,24 @@ object InsightQueries {
 
   // ---------------------------------------------------------------------
   // q149 — SQL time travel: two snapshot versions of a customer projection
-  // go through [[TableStore]] (v0 pristine, v1 with doubled balances =
-  // live), then `SELECT … FROM customer_tt VERSION AS OF 0` goes through
-  // spark.sql, where the session's [[graft.plans.TimeTravelParser]]
-  // (installed by GraftSession) rewrites it, and must return exactly the
+  // go through a one-bucket [[BucketedTableStore]] keyed by c_custkey (v0
+  // pristine, v1 with doubled balances = live), then `SELECT … FROM
+  // customer_tt VERSION AS OF 0` goes through spark.sql, where the
+  // session's [[graft.plans.TimeTravelParser]] (installed by GraftSession)
+  // reads it as manifest 0, and must return exactly the
   // pristine data — so the oracle is simply the customer table.
   def q149TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_tt").toString
-    val store = new TableStore(spark, root)
+    val store = new BucketedTableStore(spark, root, nBuckets = 1)
     val cust = Tables.customer(spark, dir)
       .select($"c_custkey", $"c_name", $"c_acctbal")
-    store.write("customer_tt", cust) // v0
-    store.write("customer_tt",
-      cust.withColumn("c_acctbal", $"c_acctbal" * 2.0d)) // v1 = live
-    // Arm the textual VERSION AS OF rewrite only for this parse: the
-    // caller's store root comes back afterwards, so later SQL on a shared
-    // session never sees this temporary one.
+    store.writeAll("customer_tt", cust, "c_custkey") // v0
+    store.writeAll("customer_tt",
+      cust.withColumn("c_acctbal", $"c_acctbal" * 2.0d), "c_custkey") // v1 = live
+    // Arm VERSION AS OF over this store only for this parse: the caller's
+    // store root comes back afterwards, so later SQL on a shared session
+    // never sees this temporary one.
     val df = GraftSession.withConf(spark, "spark.graft.store.root" -> root) {
       spark.sql(
         "SELECT c_custkey, c_name, c_acctbal FROM customer_tt VERSION AS OF 0 " +
@@ -467,7 +469,7 @@ object InsightQueries {
     // the freeze-via-driver idiom is safe only because the result is
     // small; do NOT copy it onto an unbounded frame.
     val rows = df.collect()
-    TableStore.deleteRecursively(java.nio.file.Paths.get(root))
+    LocalFs.deleteRecursively(java.nio.file.Paths.get(root))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
   val q149Oracle: String = """
@@ -524,7 +526,7 @@ object InsightQueries {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       orders.unpersist(blocking = false)
-      TableStore.deleteRecursively(java.nio.file.Paths.get(root))
+      LocalFs.deleteRecursively(java.nio.file.Paths.get(root))
     }
   }
   val q151Oracle: String = """
@@ -593,7 +595,7 @@ object InsightQueries {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       docs.unpersist(blocking = false)
-      TableStore.deleteRecursively(java.nio.file.Paths.get(root))
+      LocalFs.deleteRecursively(java.nio.file.Paths.get(root))
     }
   }
   val q154Oracle: String = """

@@ -84,7 +84,7 @@ object PipelineQueries {
     val report = Analytics.rewardsByMember(pipeline.memberQuest, pipeline.member)
     val rows = report.collect()
     Seq(exportDir, cdcDir, ckptDir, storeRoot)
-      .foreach(d => graft.sync.TableStore.deleteRecursively(Paths.get(d)))
+      .foreach(d => graft.sync.LocalFs.deleteRecursively(Paths.get(d)))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
   }
 

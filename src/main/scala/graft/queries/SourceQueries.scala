@@ -174,7 +174,7 @@ object SourceQueries {
       val n = f.getName
       if (n.startsWith("graft-q95part") && n.endsWith(s"-$dirHash") &&
           f.getPath != out && f.isDirectory)
-        try graft.sync.TableStore.deleteRecursively(f.toPath)
+        try graft.sync.LocalFs.deleteRecursively(f.toPath)
         catch { case scala.util.control.NonFatal(_) => () }
     }
     val marker = Paths.get(out, "_SUCCESS")

@@ -871,7 +871,7 @@ object TextQueries {
           new Timestamp(t0))
     }
     val root = Files.createTempDirectory("graft-genret").toString
-    graft.sync.TableStore.copyRecursively(Paths.get(master), Paths.get(root))
+    graft.sync.LocalFs.copyRecursively(Paths.get(master), Paths.get(root))
     try {
       // window 60 s: seed (t0) and b1 (t0+60 s) land in DIFFERENT
       // generations; cutoff t0+70 s lies past the seed generation's end
@@ -902,7 +902,7 @@ object TextQueries {
       d1.unionByName(d2)
         .withColumn("n_gens_retired", lit(retired.size.toLong))
         .orderBy(col("doc_id").asc)
-    } finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
+    } finally graft.sync.LocalFs.deleteRecursively(Paths.get(root))
   }
   val q244Oracle: String = {
     val mins = (0 until 8).map(s => s"MIN(md5(shingle || '|$s')) AS mh$s").mkString(", ")
@@ -976,7 +976,7 @@ object TextQueries {
       d1.unionByName(d2)
         .withColumn("n_retired", lit(retired))
         .orderBy(col("doc_id").asc)
-    } finally graft.sync.TableStore.deleteRecursively(Paths.get(root))
+    } finally graft.sync.LocalFs.deleteRecursively(Paths.get(root))
   }
   val q229Oracle: String = {
     val mins = (0 until 8).map(s => s"MIN(md5(shingle || '|$s')) AS mh$s").mkString(", ")

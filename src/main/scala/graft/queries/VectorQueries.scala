@@ -140,7 +140,7 @@ object VectorQueries {
     } finally {
       AnnIndexStore.rootOverride = prevRoot
       dropNlist8()
-      try graft.sync.TableStore.deleteRecursively(tmp)
+      try graft.sync.LocalFs.deleteRecursively(tmp)
       catch { case scala.util.control.NonFatal(_) => () }
     }
   }

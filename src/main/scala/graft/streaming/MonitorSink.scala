@@ -65,7 +65,7 @@ private[streaming] object MonitorSink {
         val out = Paths.get(s"$sinkDir/batch=$batchId")
         if (!Files.exists(out)) {
           val staging = Paths.get(s"$sinkDir/.inprogress-$batchId")
-          graft.sync.TableStore.deleteRecursively(staging) // stale crash
+          graft.sync.LocalFs.deleteRecursively(staging) // stale crash
           frame(batch, batchId)
             .write.mode("overwrite").parquet(staging.toString)
           Files.move(staging, out, StandardCopyOption.ATOMIC_MOVE)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -112,11 +112,15 @@ private[sync] object StatKind {
   def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 }
 
-/** Partition-level snapshot store — the 100 TB form of [[TableStore]].
-  *
-  * [[TableStore]] rewrites the whole table per merge, which is correct and
-  * simple but O(table) per batch: a 100 TB target with a 10 MB CDC batch
-  * would rewrite 100 TB. This store hash-buckets rows by entity key:
+/** The versioned table store: mutable-table semantics on immutable
+  * storage (SURVEY.md §7.4 risk 1). No transactional table format ships
+  * in this environment, so a merge's delete-then-insert becomes
+  * write-new-version-then-swap-pointer, and every version stays readable
+  * until [[vacuum]] retires it (time travel). Rows are hash-bucketed by
+  * entity key, so a merge rewrites only the buckets it touches: O(touched
+  * buckets) per batch, where a whole-table snapshot is O(table), and a
+  * 100 TB target with a 10 MB CDC batch would rewrite 100 TB. One bucket
+  * is the whole-table snapshot store, the default `Pipeline`'s store:
   *
   *   root/<table>/b<bucket>/v<N>/   — per-bucket parquet BASE snapshots
   *   root/<table>/d<N>/             — one DELTA commit for the whole table,
@@ -131,6 +135,7 @@ private[sync] object StatKind {
   * space:
   *
   *   key <column>                     — the entity key
+  *   buckets <n>                      — the bucket count
   *   route hash                       — or: route range <kind> <boundary>...
   *   stat <column> <kind>             — a zone-map column, its [[StatKind]]
   *   bloom <column> <m> <k>           — a bloom column, its bits and hashes
@@ -139,28 +144,35 @@ private[sync] object StatKind {
   *   wm <epoch micros>                — the CDC watermark (below)
   *   <bucket> <base>[+<delta>...]     — one line per bucket
   *
-  * A [[writeAll]] sets the description: key, routing, sidecar columns and
-  * base schema. Every other commit carries its base manifest's, and a
-  * delta commit sets `dschema` too. Each verb and each read reads
-  * `_CURRENT` once and parses that one manifest, so the routing, the
-  * sidecar geometry and the schemas it uses are those of the version it
-  * reads or extends, time-travel reads included. A recorded schema spares
-  * each `spark.read.parquet` its footer-inference job (at door scale, up
-  * to three per batch); a missing or unparsable schema line degrades to
-  * inference, never to an error. A manifest with bucket lines and no
-  * `key` line is refused: nothing reads the older layout that kept the
-  * description in unversioned files.
+  * A [[writeAll]] sets the description: key, bucket count, routing,
+  * sidecar columns and base schema. Every other commit carries its base
+  * manifest's, and a delta commit sets `dschema` too. Each verb and each
+  * read reads `_CURRENT` once and parses that one manifest, so the
+  * routing, the bucket count, the sidecar geometry and the schemas it
+  * uses are those of the version it reads or extends, time-travel reads
+  * included. Reads take the bucket count from the manifest, so any handle
+  * reads any table, and a [[writeAll]] records its handle's count anew;
+  * every verb that extends a version refuses a handle whose count differs
+  * from the manifest's, as it refuses a key that is not the table's, since
+  * it would route rows to the wrong buckets. A manifest without a
+  * `buckets` line (written before the count was recorded) is trusted to
+  * match the handle, and its reads filter each delta by its buckets. A
+  * recorded schema spares each `spark.read.parquet` its footer-inference
+  * job (at door scale, up to three per batch); a missing or unparsable
+  * schema line degrades to inference, never to an error. A manifest with
+  * bucket lines and no `key` line is refused: nothing reads the older
+  * layout that kept the description in unversioned files.
   *
   * The `wm` line is the CDC target watermark, MAX(approximateUpdateTimestamp)
   * over the live rows of the version that manifest publishes, committed
   * with that version so [[recordedWatermark]] answers without a scan. Only
   * the [[SyncStore]] verbs write it: [[init]] records the max over the
-  * loaded rows, [[applyMerge]]'s delta commit records the max of its
-  * upserts when that provably stays the table max (the rule is
-  * at `mergeDeltaImpl`), and [[compact]] carries its base's line
-  * unchanged (same live rows). Every other commit — copy-on-write
-  * [[merge]], direct [[writeAll]]/[[mergeDelta]] calls, [[rebucket]] —
-  * drops it, so the next sync scans.
+  * loaded rows, [[applyMerge]] records the max of the rows it writes when
+  * that provably is the table max (the rules are at `mergeDeltaImpl` and
+  * `mergeAtBase`), and [[compact]] carries its base's line unchanged
+  * (same live rows). Every other commit — direct [[merge]],
+  * [[writeAll]] and [[mergeDelta]] calls, [[rebucket]] — drops it, so the
+  * next sync scans.
   *
   * Two merge disciplines, selectable per store:
   *
@@ -186,18 +198,18 @@ private[sync] object StatKind {
   * write-fast/read-amortized loop Hudi-style MOR tables run in production.
   *
   * '''Publish protocol.''' Readers resolve `_CURRENT` → manifest →
-  * per-bucket dirs, so a write is invisible until its one pointer move,
-  * exactly the [[TableStore]] protocol one directory deeper. All four
-  * write verbs ([[writeAll]], [[merge]], [[mergeDelta]], [[compact]]) end
-  * in the same step, `publish`; each supplies only its frame, its
-  * manifest, the buckets that must advance, and its `wm` rule. Each step,
-  * and what a crash during it leaves behind:
+  * per-bucket dirs, so a write is invisible until its one pointer move.
+  * All four write verbs ([[writeAll]], [[merge]], [[mergeDelta]],
+  * [[compact]]) end in the same step, `publish`; each supplies only its
+  * frame, its manifest, the buckets that must advance, and its `wm` rule.
+  * Each step, and what a crash during it leaves behind:
   *
   *   1. sweep: delete v/d-dirs versioned above the live manifest (a
   *      crashed predecessor's moved-but-uncommitted dirs).
   *   1. stage: write the rows under `_staging<next>`: a rewrite
-  *      partitioned by `_bucket`, plus an empty-but-schemaed dir for each
-  *      bucket that must advance with no rows; a delta as one flat dir. A
+  *      partitioned by `_bucket` (one bucket: written as it arrives, as
+  *      bucket 0's dir), plus an empty-but-schemaed dir for each bucket
+  *      that must advance with no rows; a delta as one flat dir. A
   *      crash leaves the staging dir; the retry overwrites it and
   *      [[vacuum]] removes it.
   *   1. check: the live manifest must still be the writer's base, and no
@@ -220,10 +232,10 @@ private[sync] object StatKind {
   * retrying the interrupted call lands what an uninterrupted one would.
   *
   * Bucket count is fixed at table creation (like any hash-bucketed
-  * layout); pick it so bucket size ≈ a few parquet row groups at target
-  * scale. The bucket id is a data column (`_bucket`) so reads recover it
-  * without path parsing and the merge's bucket routing is one codegen'd
-  * `pmod(xxhash64(key))`.
+  * layout) and recorded in the manifest; pick it so bucket size ≈ a few
+  * parquet row groups at target scale. The bucket id is a data column
+  * (`_bucket`) so reads recover it without path parsing and the merge's
+  * bucket routing is one codegen'd `pmod(xxhash64(key))`.
   */
 final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     deltaMerges: Boolean = false, autoCompactAfter: Int = 8)
@@ -599,7 +611,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   // ---- manifests -----------------------------------------------------
 
-  private def currentVersion(name: String): Option[Int] = {
+  /** The live manifest number, or None before the first write. */
+  private[graft] def currentVersion(name: String): Option[Int] = {
     val f = currentFile(name)
     if (Files.exists(f)) Some(new String(Files.readAllBytes(f)).trim.toInt) else None
   }
@@ -617,10 +630,16 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     currentVersion(name).map(v => v -> parseManifest(name, v))
 
   /** Manifest `base` of an initialized table: the one parse a verb takes
-    * its description from. */
+    * its description from, refused when this handle's bucket count is not
+    * the table's. */
   private def baseManifest(name: String, base: Option[Int]): Manifest =
     base.map(parseManifest(name, _)).getOrElse(
       throw new IllegalStateException(s"$name not initialized — writeAll first"))
+      .bucketed(name, nBuckets)
+
+  /** The live version and its manifest, for a verb: as [[baseManifest]]. */
+  private def liveBase(name: String): Option[(Int, Manifest)] =
+    live(name).map { case (v, m) => v -> m.bucketed(name, nBuckets) }
 
   override def recordedWatermark(name: String): Option[java.sql.Timestamp] =
     live(name).flatMap(_._2.wm)
@@ -709,10 +728,10 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       val stored = pread(admits.keys.toSeq.sorted.map(deltaPath(name, _).toString),
         m.deltaSchema)
       val deltas =
-        if (admits.values.forall(_.size == nBuckets)) stored
+        if (m.buckets.exists(n => admits.values.forall(_.size == n))) stored
         else stored.filter(admits.groupMap(_._2.toSet)(_._1).map { case (bs, ds) =>
           val inSeq = col("_seq").isin(ds.toSeq.map(_.toLong): _*)
-          if (bs.size == nBuckets) inSeq else inSeq && col("_bucket").isin(bs.toSeq: _*)
+          if (m.buckets.contains(bs.size)) inSeq else inSeq && col("_bucket").isin(bs.toSeq: _*)
         }.reduce(_ || _))
       val layered =
         if (basePaths.isEmpty) deltas
@@ -734,7 +753,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   /** Every versioned dir of the table, the table-level deltas `d<N>` and
     * each bucket's bases `b<bucket>/v<N>`, as (dir, N): the one listing
-    * the orphan sweep and [[vacuum]] share. A bucket path that is not a
+    * the orphan sweep and [[vacuum]] share. It lists every bucket dir on
+    * disk, whatever the handle's count; a bucket path that is not a
     * directory lists nothing. */
   private def versionDirs(name: String): Seq[(Path, Int)] = {
     def numbered(dir: Path, prefix: Char): Seq[(Path, Int)] =
@@ -747,7 +767,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           else None
         }
     numbered(tableDir(name), 'd') ++
-      (0 until nBuckets).flatMap(b => numbered(tableDir(name).resolve(s"b$b"), 'v'))
+      numbered(tableDir(name), 'b').flatMap { case (b, _) => numbered(b, 'v') }
   }
 
   /** Crash-debris sweep, the first step of every publish: delete
@@ -767,7 +787,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
   private def sweepOrphans(name: String): Unit = {
     val live = currentVersion(name).getOrElse(-1)
     versionDirs(name).foreach { case (p, v) =>
-      if (v > live) TableStore.deleteRecursively(p)
+      if (v > live) LocalFs.deleteRecursively(p)
     }
   }
 
@@ -792,7 +812,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     Files.createDirectories(tableDir(name))
     Files.write(manifestFile(name, next), m.render.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    TableStore.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
+    LocalFs.replaceFile(currentFile(name), next.toString.getBytes, s".tmp$next")
   }
 
   /** The one publish step every write verb ends in; the class doc gives
@@ -843,9 +863,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // write emits one file per bucket dir regardless of task count.
     // A delta is one dir and needs no exchange: it is written as it
     // arrives, one file per input partition, its rows sorted by bucket so
-    // row-group stats can prune by bucket.
+    // row-group stats can prune by bucket. So is a one-bucket rewrite:
+    // there is nothing to cluster, and the exchange would funnel the whole
+    // table through one write task.
+    val oneBucket = !delta && nBuckets == 1
     val sorted =
       if (delta) frame.sortWithinPartitions((col("_bucket") +: sortBy.map(col).toSeq): _*)
+      else if (oneBucket) sortBy.fold(frame)(c => frame.sortWithinPartitions(col(c)))
       else {
         val clustered = frame.repartition(col("_bucket"))
         sortBy.fold(clustered)(c => clustered.sortWithinPartitions(col("_bucket"), col(c)))
@@ -873,7 +897,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         } else {
           // `_bucket` stays a DATA column (reads recover it without path
           // parsing); `_bp` is its copy that partitionBy consumes
-          written.withColumn("_bp", col("_bucket"))
+          if (oneBucket) written.write.mode("overwrite").parquet(stagedDir(0).toString)
+          else written.withColumn("_bp", col("_bucket"))
             .write.mode("overwrite").partitionBy("_bp").parquet(staging.toString)
           // the write emits a dir per bucket that received rows (a
           // driver-side listing, zero jobs). A seeded bucket with none —
@@ -890,7 +915,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           }
           (rowBuckets ++ empties).sorted
         }
-      if (touched.isEmpty) { TableStore.deleteRecursively(staging); return 0 }
+      if (touched.isEmpty) { LocalFs.deleteRecursively(staging); return 0 }
       // a rewritten bucket gets EXACT sidecars from its staged rows; a
       // delta commit can only WIDEN zone maps and OR its blooms (tombstoned
       // values stay admitted until a compaction rebuilds them exactly)
@@ -905,7 +930,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       // window) — checked explicitly: Linux rename() would silently
       // REPLACE an empty dest dir rather than throw.
       def stale(): Nothing = {
-        TableStore.deleteRecursively(staging)
+        LocalFs.deleteRecursively(staging)
         throw new java.util.ConcurrentModificationException(
           s"$name: manifest moved past $base while this writer staged; " +
             "re-read and retry (lost-update protection)")
@@ -920,7 +945,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
       if (delta) move(staging, deltaPath(name, next))
       else {
         touched.foreach(b => move(stagedDir(b), bucketPath(name, b, next)))
-        TableStore.deleteRecursively(staging)
+        LocalFs.deleteRecursively(staging)
       }
       val moved = touched.map { b =>
         val prev = m.states.getOrElse(b, BucketState(-1, Nil))
@@ -986,7 +1011,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
         Some((kind, rendered.distinct.toSeq))
       }
     val m = Manifest(Map.empty, key, boundaries,
-      statsCols.map(c => (c, StatKind.of(df.schema(c).dataType))), blooms)
+      statsCols.map(c => (c, StatKind.of(df.schema(c).dataType))), blooms,
+      buckets = Some(nBuckets))
     publish(name, base, m, df.withColumn("_bucket", routing(m, df)), sortBy,
       delta = false, fresh = true, observeWm = recordWm, wmLine = identity)
   }
@@ -1046,16 +1072,32 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
 
   /** [[merge]] with the base manifest made explicit — the seam the
     * stale-writer tests drive: a base captured before a concurrent winner
-    * committed must refuse and leave the winner's buckets untouched. */
+    * committed must refuse and leave the winner's buckets untouched.
+    *
+    * `recordWm` (the [[applyMerge]] path) commits a `wm` line by the rule
+    * of `mergeDeltaImpl`: let `u` be the max `approximateUpdateTimestamp`
+    * of the rewritten rows and `p` the base manifest's line. Every row of
+    * an untouched bucket is ≤ p, so u ≥ p makes u the new max; and when
+    * every bucket is rewritten (always, at one bucket), the rewritten rows
+    * are the table and u is its max whatever p is. */
   private[graft] def mergeAtBase(name: String, stage: DataFrame, key: String,
       syncTime: java.sql.Timestamp, base: Option[Int],
-      sortBy: Option[String] = None): Unit = {
+      sortBy: Option[String] = None, recordWm: Boolean = false): Unit = {
     val m = baseManifest(name, base).keyed(name, key)
-    val staged = stage.withColumn("_bucket", routing(m, stage))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // At one bucket any staged row touches bucket 0, so a one-row probe
+    // replaces the bucket census (a cache, a shuffle and a collect: two
+    // more jobs per merge); the uncached stage is read for its keys and
+    // for its upserts.
+    val oneBucket = nBuckets == 1
+    val routed = stage.withColumn("_bucket", routing(m, stage))
+    val staged =
+      if (oneBucket) routed
+      else routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = staged.select(col("_bucket")).distinct()
-        .collect().map(_.getLong(0).toInt).toSet
+      val touched =
+        if (oneBucket) { if (staged.isEmpty) Set.empty[Int] else Set(0) }
+        else staged.select(col("_bucket")).distinct()
+          .collect().map(_.getLong(0).toInt).toSet
       if (touched.nonEmpty) {
         // a touched bucket may have NO manifest entry yet (writeAll only
         // records buckets that received rows): read the existing subset,
@@ -1071,11 +1113,14 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           .drop("eventName")
           .withColumn("syncTimestamp", bound(syncTime))
           .select(target.columns.map(col).toIndexedSeq: _*)
+        val whole = m.states.keySet.subsetOf(touched)
+        val prevWm = if (recordWm) m.wm else None
         // every touched bucket advances, an all-removed one to an empty dir
         publish(name, base, m, kept.unionByName(inserts), sortBy,
-          delta = false, seed = touched)
+          delta = false, seed = touched, observeWm = recordWm && (whole || prevWm.isDefined),
+          wmLine = _.filter(u => whole || prevWm.exists(u >= _)))
       }
-    } finally staged.unpersist()
+    } finally if (!oneBucket) staged.unpersist()
   }
 
   /** Merge-on-read commit: append ONE delta dir for the whole table and
@@ -1151,7 +1196,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * the table; at 100 TB with 128 MB buckets that is MBs of IO per probe.
     * The residual filter keeps correctness for hash collisions. */
   def lookup(name: String, key: String, values: Seq[String]): Option[DataFrame] =
-    live(name).map { case (_, table) =>
+    liveBase(name).map { case (_, table) =>
       import spark.implicits._
       val m = table.keyed(name, key)
       // the probes take the key's type and route as the table's rows did:
@@ -1173,7 +1218,7 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     * time-travelable until vacuumed. Returns the new store handle. */
   def rebucket(name: String, key: String, newN: Int,
       newRoot: String, sortBy: Option[String] = None): BucketedTableStore = {
-    val m = live(name).map(_._2.keyed(name, key)).getOrElse(
+    val m = liveBase(name).map(_._2.keyed(name, key)).getOrElse(
       throw new IllegalStateException(s"$name not initialized — writeAll first"))
     val next = new BucketedTableStore(spark, newRoot, newN)
     next.writeAllAtBase(name, resolve(name, m, m.states).drop("_bucket"),
@@ -1217,19 +1262,20 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
           }
         }.toSet
         val orphans = versionDirs(name).map(_._1).filterNot(live.contains)
-        orphans.foreach(TableStore.deleteRecursively)
+        orphans.foreach(LocalFs.deleteRecursively)
         // the live manifest's staging dir may still be mid-move only if a
         // merge is running; single-writer protocol says none is
         val staging = scala.util.Using.resource(Files.list(tableDir(name)))(
           _.iterator().asScala.filter(_.getFileName.toString.startsWith(StagingPrefix)).toSeq)
-        staging.foreach(TableStore.deleteRecursively)
+        staging.foreach(LocalFs.deleteRecursively)
         (dropped.size, orphans.size + staging.size)
     }
   }
 
   /** [[SyncStore]] verbs — [[writeAll]] / [[merge]] (or [[mergeDelta]] +
-    * auto-[[compact]] when `deltaMerges` is on) under the shared names, so
-    * [[graft.pipeline.Pipeline]] swaps this store in via config. */
+    * auto-[[compact]] when `deltaMerges` is on) under the shared names, the
+    * ones [[graft.pipeline.Pipeline]] and [[graft.streaming.CdcStream]]
+    * drive. */
   def init(name: String, df: DataFrame, key: String,
       sortBy: Option[String] = None): Unit =
     writeAllAtBase(name, df, key, currentVersion(name), sortBy,
@@ -1240,7 +1286,8 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     if (deltaMerges) {
       mergeDeltaImpl(name, stage, key, syncTime, sortBy, recordWm = true)
       compact(name, minDeltas = autoCompactAfter, sortBy = sortBy)
-    } else merge(name, stage, key, syncTime, sortBy)
+    } else mergeAtBase(name, stage, key, syncTime, currentVersion(name), sortBy,
+      recordWm = true)
 
   /** [[SyncStore]] retention verb → [[vacuum]]. */
   def retain(name: String, keep: Int): Unit = vacuum(name, keep)
@@ -1254,15 +1301,27 @@ object BucketedTableStore {
     * by then, only the listener delivering its metric can lag. */
   private val WmWait = scala.concurrent.duration.Duration(10, "seconds")
 
+  /** The one schema codec the manifests persist with: rendered asNullable
+    * (parquet readers bind by name, and a lit()-derived non-null field
+    * must not make a read stricter than the files), parsed tolerantly (an
+    * unparsable text reads as None, so the read infers). */
+  private def renderSchema(s: StructType): String =
+    StructType(s.fields.map(_.copy(nullable = true))).json
+
+  private def parseSchema(json: String): Option[StructType] =
+    scala.util.Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
+
   /** One parsed `_MANIFEST.<n>` (the class doc gives its grammar): the
     * bucket states, the entity key, the routing (None = hash, else the
     * boundary kind and boundaries), the zone-map columns with their
     * [[StatKind]], the bloom columns with their (m bits, k hashes), the
-    * base- and delta-file schemas, and the `wm` line. */
+    * base- and delta-file schemas, the `wm` line and the bucket count
+    * (None when the manifest has no `buckets` line). */
   private[graft] final case class Manifest(states: Map[Int, BucketState], key: String,
       route: Option[(String, Seq[String])] = None, stats: Seq[(String, String)] = Nil,
       blooms: Seq[(String, Int, Int)] = Nil, schema: Option[StructType] = None,
-      deltaSchema: Option[StructType] = None, wm: Option[Long] = None) {
+      deltaSchema: Option[StructType] = None, wm: Option[Long] = None,
+      buckets: Option[Int] = None) {
 
     /** This manifest, once `key` is checked to be its entity key: a verb
       * that routed or matched by another column would misroute rows. */
@@ -1271,15 +1330,24 @@ object BucketedTableStore {
       this
     }
 
+    /** This manifest, once a handle's bucket count `n` is checked to be
+      * the table's: a verb that routed by another count would send keys to
+      * the wrong buckets. */
+    def bucketed(table: String, n: Int): Manifest = {
+      require(buckets.forall(_ == n), s"$table has ${buckets.get} buckets, not $n")
+      this
+    }
+
     def render: String = {
       import StatKind.enc
-      (Seq(s"key ${enc(key)}", route.fold("route hash") { case (kind, bs) =>
-        (Seq("route", "range", kind) ++ bs.map(enc)).mkString(" ")
-      }) ++
+      (Seq(s"key ${enc(key)}") ++ buckets.map(n => s"buckets $n") ++
+        Seq(route.fold("route hash") { case (kind, bs) =>
+          (Seq("route", "range", kind) ++ bs.map(enc)).mkString(" ")
+        }) ++
         stats.map { case (c, kind) => s"stat ${enc(c)} $kind" } ++
         blooms.map { case (c, m, k) => s"bloom ${enc(c)} $m $k" } ++
-        schema.map(s => s"schema ${TableStore.renderSchema(s)}") ++
-        deltaSchema.map(s => s"dschema ${TableStore.renderSchema(s)}") ++
+        schema.map(s => s"schema ${renderSchema(s)}") ++
+        deltaSchema.map(s => s"dschema ${renderSchema(s)}") ++
         wm.map(w => s"wm $w") ++
         states.toSeq.sortBy(_._1).map { case (b, st) => s"$b ${st.render}" })
         .mkString("\n")
@@ -1306,9 +1374,10 @@ object BucketedTableStore {
         },
         fields("stat").map { case Seq(c, kind) => (StatKind.dec(c), kind) },
         fields("bloom").map { case Seq(c, m, k) => (StatKind.dec(c), m.toInt, k.toInt) },
-        tags.get("schema").flatMap(s => TableStore.parseSchema(s.head)),
-        tags.get("dschema").flatMap(s => TableStore.parseSchema(s.head)),
-        tags.get("wm").map(_.head.toLong))
+        tags.get("schema").flatMap(s => parseSchema(s.head)),
+        tags.get("dschema").flatMap(s => parseSchema(s.head)),
+        tags.get("wm").map(_.head.toLong),
+        tags.get("buckets").map(_.head.toInt))
     }
   }
 }

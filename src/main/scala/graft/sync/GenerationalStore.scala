@@ -111,7 +111,7 @@ final class GenerationalStore(spark: SparkSession, root: String,
   def retireBefore(cutoff: Timestamp): Seq[Long] = {
     val dropped = liveGenerations
       .filter(g => (g + 1) * windowMs <= cutoff.getTime)
-    dropped.foreach(g => TableStore.deleteRecursively(genDir(g)))
+    dropped.foreach(g => LocalFs.deleteRecursively(genDir(g)))
     dropped
   }
 }

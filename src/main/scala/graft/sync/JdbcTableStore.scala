@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Verb mapping, each the warehouse-native form of the parquet verb:
   *   - init       → load a writer-private staging table, then publish by
   *                  DROP + RENAME inside one transaction — the pointer
-  *                  swap of [[TableStore.write]], expressed as DDL.
+  *                  swap of [[BucketedTableStore]]'s `_CURRENT` flip,
+  *                  expressed as DDL.
   *   - applyMerge → upload the staged batch, then `DELETE WHERE key IN
   *                  (stage keys)` + `INSERT ... WHERE eventName <>
   *                  'REMOVE'` in ONE transaction (the reference procedure

@@ -194,7 +194,7 @@ object Merge {
   /** Full per-entity sync. Returns None when the guard aborts (no initial
     * load, ref :13-16) or nothing is staged. The staged frame must be
     * reused by delete/filter/insert, so callers materialize via the
-    * returned plan exactly once (TableStore.write). */
+    * returned plan exactly once (a store's write). */
   def syncEntity(target: DataFrame, extracted: DataFrame, conf: EntityConf,
       syncTime: Timestamp): Option[DataFrame] =
     watermark(target).map { wm =>

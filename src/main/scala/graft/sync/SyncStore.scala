@@ -6,19 +6,19 @@ import org.apache.spark.sql.DataFrame
 
 /** Storage contract the CDC sync drives (SURVEY.md §2.1 S5-S7): the merge
   * logic ([[Merge]]) is pure DataFrame algebra; how the result becomes the
-  * new live table is the store's choice. Three implementations:
+  * new live table is the store's choice. Two implementations:
   *
-  *   - [[TableStore]]        — whole-table snapshot + pointer swap. O(table)
-  *                             per batch; right when batches touch most rows
-  *                             or tables are small.
-  *   - [[BucketedTableStore]] — hash-bucketed partition-level snapshots.
-  *                             O(touched buckets) per batch; the 100 TB form
+  *   - [[BucketedTableStore]] — versioned hash-bucketed snapshots + pointer
+  *                             swap. O(touched buckets) per batch, or
+  *                             O(batch) with merge-on-read; one bucket is
+  *                             the whole-table snapshot store, right when
+  *                             batches touch most rows or tables are small
   *                             (BENCHMARKS.md measures the crossover).
   *   - [[JdbcTableStore]]    — a JDBC warehouse table, upserted by the
   *                             reference's DELETE + INSERT in one
   *                             transaction; keeps no history.
   *
-  * All expose the same verbs so [[graft.pipeline.Pipeline]] and
+  * Both expose the same verbs so [[graft.pipeline.Pipeline]] and
   * [[graft.streaming.CdcStream]] are storage-agnostic.
   *
   * Watermark: the sync needs MAX(approximateUpdateTimestamp) of each

@@ -280,16 +280,32 @@ class BucketedStoreSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
   }
 
-  test("TableStore vacuum: versions below the floor gone, live + retained readable") {
-    val root = tmpDir("tstore-vac")
-    val store = new graft.sync.TableStore(spark, root)
-    (0 to 2).foreach { i =>
-      store.write("member", target().withColumn("gen", lit(i)))
+  test("a handle with another bucket count reads the table but every write verb refuses it") {
+    val root = tmpDir("bstore-count")
+    val wide = new BucketedTableStore(spark, root, nBuckets = 16)
+    wide.writeAll("member", target(), "memberId")
+    val narrow = new BucketedTableStore(spark, root, nBuckets = 8, deltaMerges = true)
+    def rows(st: BucketedTableStore) = st.read("member").get
+      .select($"memberId", $"memberName").as[(String, String)].collect().toSet
+    val (before, states) = (rows(wide), wide.bucketStates("member"))
+    assert(rows(narrow) == before, "reads take the bucket count from the manifest")
+    val stage = Seq(("m2", "bob2", t1, "MODIFY"), ("m9", "ivan", t1, "INSERT"))
+      .toDF("memberId", "memberName", "approximateUpdateTimestamp", "eventName")
+    Seq[(String, BucketedTableStore => Any)](
+      "merge" -> (_.merge("member", stage, "memberId", t1)),
+      "applyMerge" -> (_.applyMerge("member", stage, "memberId", t1)),
+      "mergeDelta" -> (_.mergeDelta("member", stage, "memberId", t1)),
+      "compact" -> (_.compact("member")),
+      "lookup" -> (_.lookup("member", "memberId", Seq("m2"))),
+      "rebucket" -> (_.rebucket("member", "memberId", 4, tmpDir("bstore-count-re")))
+    ).foreach { case (verb, call) =>
+      val e = intercept[IllegalArgumentException](call(narrow))
+      assert(e.getMessage.contains("16 buckets, not 8"), s"$verb: ${e.getMessage}")
     }
-    assert(store.vacuum("member", keepVersions = 2) == Seq(0))
-    assert(store.readAt("member", 0).isEmpty)
-    assert(store.readAt("member", 1).isDefined, "retained history must survive")
-    assert(store.read("member").get.agg(max($"gen")).head().getInt(0) == 2)
+    assert(wide.bucketStates("member") == states && rows(wide) == before,
+      "a refused verb publishes nothing")
+    wide.merge("member", stage, "memberId", t1)
+    assert(rows(narrow) == before - ("m2" -> "bob") + ("m2" -> "bob2") + ("m9" -> "ivan"))
   }
 
   test("lookup reads only the probed keys' bucket files") {
@@ -350,25 +366,6 @@ class BucketedStoreSpec extends SparkSpec {
     // the retry path — re-read the base, commit against it — succeeds
     store.commitManifest("member", Manifest(liveBefore, "memberId"), Some(1))
     assert(store.readAtManifest("member", 2).isDefined)
-  }
-
-  test("TableStore stale write is rejected the same way") {
-    val root = tmpDir("tstore-occ")
-    val store = new graft.sync.TableStore(spark, root)
-    store.write("member", target())                  // v0
-    val winner = Seq(("mW", "winner", t1, "INSERT"))
-      .toDF("memberId", "memberName", "approximateUpdateTimestamp", "eventName")
-    store.write("member", winner)                    // v1 (another writer)
-    // the stale writer targets the SAME v1 path the winner already
-    // published: it must refuse without touching the winner's bytes
-    intercept[java.util.ConcurrentModificationException] {
-      store.writeIfBase("member", target(), expectedBase = Some(0))
-    }
-    assert(store.currentVersion("member").contains(1),
-      "refused write must not move the live pointer")
-    assert(store.read("member").get.select($"memberId").as[String]
-        .collect().toSeq == Seq("mW"),
-      "refused write must not corrupt the winner's published snapshot")
   }
 
   test("stale bucketed merge leaves the winner's bucket data intact") {

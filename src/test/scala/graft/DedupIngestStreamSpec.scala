@@ -81,7 +81,7 @@ class DedupIngestStreamSpec extends SparkSpec {
     // recompute against the mutated index and flip admissions
     import scala.jdk.CollectionConverters._
     Files.list(Paths.get(decDir)).iterator().asScala.toSeq.foreach { p =>
-      graft.sync.TableStore.deleteRecursively(p)
+      graft.sync.LocalFs.deleteRecursively(p)
     }
     val e = intercept[IllegalArgumentException] { stream.start(inDir, ckpt) }
     assert(e.getMessage.contains("write-ahead decisions are missing"))

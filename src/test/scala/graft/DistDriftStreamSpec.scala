@@ -29,7 +29,7 @@ class DistDriftStreamSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get.toPath
     Files.move(part, Paths.get(target),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    graft.sync.TableStore.deleteRecursively(Paths.get(tmp))
+    graft.sync.LocalFs.deleteRecursively(Paths.get(tmp))
   }
 
   test("hand-traced verdicts; empty-marker batches; replay inert") {

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.operators.{MediaDedupIngest, SemanticDedupIngest}
-import graft.sync.{BucketedTableStore, TableStore}
+import graft.sync.{BucketedTableStore, LocalFs}
 
 /** The cell-blocked doors' decide() has TWO physical plans behind one
   * semantics: the broadcast-nominee path (capped side ≤ cells × MaxCell
@@ -44,7 +44,7 @@ class DoorBranchEquivalenceSpec extends SparkSpec {
         "fixture must exercise at least one rejection to mean anything")
       assert(bcast == idsOnly,
         "the two physical decide plans must hand out identical verdicts")
-    } finally TableStore.deleteRecursively(Paths.get(root))
+    } finally LocalFs.deleteRecursively(Paths.get(root))
   }
 
   test("media door: broadcast and ids-only decide branches agree") {
@@ -73,6 +73,6 @@ class DoorBranchEquivalenceSpec extends SparkSpec {
       assert(bcast.nonEmpty)
       assert(bcast == idsOnly,
         "the two physical decide plans must hand out identical verdicts")
-    } finally TableStore.deleteRecursively(Paths.get(root))
+    } finally LocalFs.deleteRecursively(Paths.get(root))
   }
 }

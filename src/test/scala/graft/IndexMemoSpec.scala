@@ -30,7 +30,7 @@ class IndexMemoSpec extends SparkSpec {
         .write.mode("overwrite").parquet(dir + "/documents.parquet")
       val corpus = spark.read.parquet(dir + "/documents.parquet")
       val work = door.seededWorkingCopy(spark, dir, corpus, nBuckets = 4)
-      graft.sync.TableStore.deleteRecursively(Paths.get(work))
+      graft.sync.LocalFs.deleteRecursively(Paths.get(work))
     }
     val left = tmpEntries("graft-doorseed") -- before
     assert(left.size == 1, s"superseded masters must be deleted on eviction: $left")

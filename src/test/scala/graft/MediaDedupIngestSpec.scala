@@ -46,7 +46,7 @@ class MediaDedupIngestSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
           r.getAs[Int]("admitted")))).toMap
-    finally graft.sync.TableStore.deleteRecursively(
+    finally graft.sync.LocalFs.deleteRecursively(
       java.nio.file.Paths.get(root))
     assert(out == Map(
       100L -> ((1, 1, 0)), 101L -> ((1, 0, 1)), 102L -> ((1, 0, 1)),
@@ -111,7 +111,7 @@ class MediaDedupIngestSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Int]("batch_id"), r.getAs[Int]("near_dup"),
           r.getAs[Int]("admitted")))).toMap
-    finally graft.sync.TableStore.deleteRecursively(
+    finally graft.sync.LocalFs.deleteRecursively(
       java.nio.file.Paths.get(root))
     assert(out == Map(
       100L -> ((1, 0, 1)), 200L -> ((2, 1, 0)), 201L -> ((2, 0, 1))),
@@ -149,7 +149,7 @@ class MediaDedupIngestSpec extends SparkSpec {
         new java.sql.Timestamp(1660000180000L))
       val n3 = store.readBuckets("pfp", None).get.count()
       assert(n3 == 8L, s"re-applied admissions must resolve unchanged ($n3)")
-    } finally graft.sync.TableStore.deleteRecursively(
+    } finally graft.sync.LocalFs.deleteRecursively(
       java.nio.file.Paths.get(root))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Partitioned-write + partition-pruning evidence: the at-rest layout a
   * 100 TB events table needs. Writing partitioned by day means a day
   * filter prunes directories before any IO (PartitionFilters in the scan),
-  * the complement of the SORTKEY row-group story in TableStore.
+  * the complement of the SORTKEY row-group story in the store's sorted writes.
   */
 class PartitionedWriteSpec extends SparkSpec {
   import spark.implicits._

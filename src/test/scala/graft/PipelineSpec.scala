@@ -309,7 +309,7 @@ class PipelineSpec extends SparkSpec {
     clock = t0 + 60000
     pipeline.syncAvailable(cdcDir, ckptDir)
     assert(pipeline.member.count() == 2)
-    val store = new graft.sync.TableStore(spark, storeRoot)
+    val store = new graft.sync.BucketedTableStore(spark, storeRoot, nBuckets = 1)
     val versionAfterBatch1 = store.currentVersion("member")
 
     // restart 1: same checkpoint, NO new files — the recovered offsets say
@@ -502,13 +502,14 @@ class PipelineSpec extends SparkSpec {
       pipeline.syncAvailable(cdcDir, ckptDir)
     }
     // three states existed per table (load + two merges); only the live
-    // version may remain on disk after the per-sync sweep
-    val memberVdirs = scala.util.Using.resource(
-        Files.list(Paths.get(storeRoot, "member")))(
-        _.iterator().asScala.map(_.getFileName.toString).toSeq)
-      .filter(_.matches("v\\d+"))
-    assert(memberVdirs == Seq("v2"),
-      s"retention must keep only the live snapshot, found $memberVdirs")
+    // version may remain on disk after the per-sync sweep: its manifest
+    // and its one bucket's snapshot
+    def names(dir: java.nio.file.Path) = scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toSeq.sorted)
+    val member = Paths.get(storeRoot, "member")
+    val kept = names(member).filter(_.startsWith("_MANIFEST.")) ++ names(member.resolve("b0"))
+    assert(kept == Seq("_MANIFEST.2", "v2"),
+      s"retention must keep only the live snapshot, found $kept")
     assert(pipeline.member.count() == 3, "live table intact after sweeps")
   }
 

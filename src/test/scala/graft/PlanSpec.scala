@@ -627,7 +627,7 @@ class PlanSpec extends SparkSpec {
           || s.contains("BroadcastQueryStage"),
         "the batch shingles must broadcast onto the bucket-pruned index " +
           "scan — the index side never re-shuffles")
-    } finally graft.sync.TableStore.deleteRecursively(
+    } finally graft.sync.LocalFs.deleteRecursively(
       java.nio.file.Paths.get(root))
   }
 

@@ -42,7 +42,7 @@ class SpanIngestSpec extends SparkSpec {
         .map(r => r.getLong(0) ->
           (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getInt(5)))
         .toMap
-      finally graft.sync.TableStore.deleteRecursively(
+      finally graft.sync.LocalFs.deleteRecursively(
         java.nio.file.Paths.get(root))
 
     assert(out(10L) == ((1, 1L, 10L, 50L, 0)), s"boundary doc: ${out(10L)}")

@@ -86,7 +86,7 @@ class SpanIngestStreamSpec extends SparkSpec {
     // against the mutated index and flip admissions; refused at start
     import scala.jdk.CollectionConverters._
     Files.list(Paths.get(decDir)).iterator().asScala.toSeq.foreach { p =>
-      graft.sync.TableStore.deleteRecursively(p)
+      graft.sync.LocalFs.deleteRecursively(p)
     }
     val e = intercept[IllegalArgumentException] { stream.start(inDir, ckpt) }
     assert(e.getMessage.contains("write-ahead decisions are missing"))

@@ -8,14 +8,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sync.{BucketedTableStore, TableStore}
+import graft.sync.{BucketedTableStore, LocalFs}
 
 /** The bucketed store's write verbs are crash-safe: each one publishes
   * through the same step, and a verb stopped at any point of it leaves
   * readers on the old version, while retrying the same call lands what an
   * unobstructed call would. A point is stopped by obstructing the path it
   * writes: a directory where its file goes, or a file where its bucket
-  * directory goes. [[TableStore]]'s write is held to the same rule. */
+  * directory goes. The one-bucket store, which writes its one bucket
+  * without the bucket exchange, is held to the same rule. */
 class StoreKillSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,8 +36,8 @@ class StoreKillSpec extends SparkSpec {
   private def seedRows = members(
     ("m1", "a", 1), ("m2", "b", 2), ("m3", "c", 3), ("m4", "d", 4), ("m5", "e", 5), ("m6", "f", 6))
 
-  private def store(root: String) = new BucketedTableStore(spark, root, nBuckets = 4,
-    deltaMerges = true, autoCompactAfter = 100)
+  private def store(root: String, nBuckets: Int = 4) = new BucketedTableStore(spark, root,
+    nBuckets, deltaMerges = true, autoCompactAfter = 100)
 
   // zone maps, blooms and a recorded `wm` line: every publish writes each kind
   private def seed(st: BucketedTableStore): Unit =
@@ -45,6 +46,9 @@ class StoreKillSpec extends SparkSpec {
       recordWm = true)
 
   private def seeded(root: String): BucketedTableStore = { val st = store(root); seed(st); st }
+  private def seededOne(root: String): BucketedTableStore = {
+    val st = store(root, nBuckets = 1); seed(st); st
+  }
 
   private def table(root: String): Path = Paths.get(root, "member")
 
@@ -66,18 +70,23 @@ class StoreKillSpec extends SparkSpec {
   }
 
   /** verb → (its starting state, the call). */
-  private val verbs: Seq[(String, String => BucketedTableStore, BucketedTableStore => Unit)] = Seq(
-    ("writeAll", seeded, _.writeAll("member", members(("m1", "a2", 20), ("m8", "h", 21)),
-      "memberId", statsCols = Seq("approximateUpdateTimestamp"), bloomCols = Seq("memberName"),
-      bloomBits = 1024, bloomHashes = 3)),
-    ("merge", seeded, _.merge("member", batch, "memberId", ts(60))),
-    // through applyMerge, so the delta commit records its `wm` line
-    ("mergeDelta", seeded, _.applyMerge("member", batch, "memberId", ts(60))),
-    ("compact", root => {
-      val st = seeded(root)
-      st.applyMerge("member", batch, "memberId", ts(60))
-      st
-    }, st => assert(st.compact("member") > 0)))
+  private val verbs: Seq[(String, String => BucketedTableStore, BucketedTableStore => Unit)] = {
+    def rewrite(st: BucketedTableStore): Unit =
+      st.writeAll("member", members(("m1", "a2", 20), ("m8", "h", 21)),
+        "memberId", statsCols = Seq("approximateUpdateTimestamp"), bloomCols = Seq("memberName"),
+        bloomBits = 1024, bloomHashes = 3)
+    Seq(
+      ("writeAll", seeded, rewrite),
+      ("writeAll at one bucket", seededOne, rewrite),
+      ("merge", seeded, _.merge("member", batch, "memberId", ts(60))),
+      // through applyMerge, so the delta commit records its `wm` line
+      ("mergeDelta", seeded, _.applyMerge("member", batch, "memberId", ts(60))),
+      ("compact", root => {
+        val st = seeded(root)
+        st.applyMerge("member", batch, "memberId", ts(60))
+        st
+      }, st => assert(st.compact("member") > 0)))
+  }
 
   /** publish step → the file it writes for manifest `n`. */
   private val points: Seq[(String, Int => String)] = Seq(
@@ -87,19 +96,20 @@ class StoreKillSpec extends SparkSpec {
 
   verbs.foreach { case (verb, start, call) =>
     test(s"$verb stopped at each publish step leaves the old state; its retry lands the clean one") {
-      val cleanRoot = tmpDir(s"kill-$verb-clean")
+      val tag = verb.replace(' ', '-')
+      val cleanRoot = tmpDir(s"kill-$tag-clean")
       val clean = start(cleanRoot)
       call(clean)
       val expected = state(clean, cleanRoot)
       points.foreach { case (point, file) =>
-        val root = tmpDir(s"kill-$verb")
+        val root = tmpDir(s"kill-$tag")
         val st = start(root)
         val before = state(st, root)
         val at = table(root).resolve(file(live(root) + 1))
         obstruct(at)
         intercept[IOException](call(st))
         assert(state(st, root) == before, s"$verb stopped at the $point must leave the old state")
-        TableStore.deleteRecursively(at)
+        LocalFs.deleteRecursively(at)
         call(st)
         assert(state(st, root) == expected,
           s"$verb retried after the $point must equal an unobstructed run")
@@ -163,35 +173,10 @@ class StoreKillSpec extends SparkSpec {
       obstruct(at)
       intercept[IOException](call(st))
       assert(answers(st) == before, s"a re-writeAll stopped at the $point must leave the old answers")
-      TableStore.deleteRecursively(at)
+      LocalFs.deleteRecursively(at)
       call(st)
       assert(answers(st) == expected, s"the retry after the $point must equal an unobstructed run")
       assert(StoreKillSpec.unversionedFiles(Paths.get(root, "t")).isEmpty)
-    }
-  }
-
-  test("TableStore.write stopped at its schema sidecar or its pointer flip leaves the " +
-    "old version; its retry lands the clean one") {
-    def rowSet(st: TableStore) = st.read("member").map(_.collect().toSet)
-    val next = members(("m1", "a2", 20), ("m8", "h", 21))
-    val clean = new TableStore(spark, tmpDir("kill-tstore-clean"))
-    clean.write("member", seedRows)
-    clean.write("member", next)
-    val expected = rowSet(clean)
-    Seq("_SCHEMA.1.tmp", "_CURRENT.tmp1").foreach { file =>
-      val root = tmpDir("kill-tstore")
-      val st = new TableStore(spark, root)
-      st.write("member", seedRows)
-      val before = rowSet(st)
-      val at = table(root).resolve(file)
-      obstruct(at)
-      intercept[IOException](st.write("member", next))
-      assert(st.currentVersion("member").contains(0) && rowSet(st) == before,
-        s"a write stopped at $file must leave the old version")
-      TableStore.deleteRecursively(at)
-      st.write("member", next)
-      assert(st.currentVersion("member").contains(1) && rowSet(st) == expected,
-        s"the retry after $file must equal an unobstructed run")
     }
   }
 
@@ -207,7 +192,7 @@ class StoreKillSpec extends SparkSpec {
     }
     val commits = outside("commitManifest(").filterNot(_.contains("def commitManifest("))
     assert(commits.isEmpty, s"commit through publish:\n${commits.mkString("\n")}")
-    // the `_CURRENT` flip goes through TableStore.replaceFile
+    // the `_CURRENT` flip goes through LocalFs.replaceFile
     val moves = outside("ATOMIC_MOVE")
     assert(moves.isEmpty, s"move bucket dirs through publish:\n${moves.mkString("\n")}")
     val elsewhere = Files.walk(Paths.get("src/main/scala")).iterator().asScala

@@ -132,6 +132,31 @@ class WatermarkSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(scans)
   }
 
+  test("a copy-on-write sync records the table max as its watermark") {
+    Seq(None -> "default", Some(4) -> "cow4").foreach { case (nBuckets, tag) =>
+      val gen = new CdcGen.Gen(24)
+      val exportDir = tmpDir(s"wm-cow-export-$tag")
+      val cdcDir = tmpDir(s"wm-cow-cdc-$tag")
+      val m0 = gen.member(); val q0 = gen.quest()
+      writeLines(exportDir, "data.json", Seq(gen.exportLine(m0), gen.exportLine(q0)))
+      var clock = t0
+      val pipeline = new Pipeline(spark, tmpDir(s"wm-cow-store-$tag"),
+        () => new Timestamp(clock), nBuckets)
+      pipeline.initialLoad(exportDir)
+      val (m1, q1) = (gen.member(), gen.quest())
+      writeLines(cdcDir, "batch1.json", Seq(gen.envelope("INSERT", m1, t0 + 10000),
+        gen.envelope("MODIFY", m0, t0 + 20000), gen.envelope("INSERT", q1, t0 + 30000)))
+      clock = t0 + 60000
+      pipeline.syncAvailable(cdcDir, tmpDir(s"wm-cow-ckpt-$tag"))
+      Seq("member", "quest").foreach { t =>
+        val scanned = Merge.watermark(pipeline.store.read(t).get)
+        assert(scanned.isDefined)
+        assert(pipeline.store.recordedWatermark(t) == scanned,
+          s"$tag: $t's sync must record the table max")
+      }
+    }
+  }
+
   /** Reference semantics after a REMOVE deletes the newest row: the
     * watermark falls, so a later change stamped between the lowered
     * watermark and the old one is admitted — on every store alike. */
