@@ -4,7 +4,7 @@
 Protocol (BENCHMARKS.md, round-17 "Ledger refresh"): per query the
 MINIMUM across the post-change full reads (each itself best-of-2/3
 interleaved passes; artifacts carry /proc/loadavg stamps), overridden
-by explicit 5-run MiniBench medians for queries re-measured under the
+by explicit 5-run Profile medians for queries re-measured under the
 re-pin protocol. The previous ledger is kept alongside for history.
 
 Usage:
@@ -30,7 +30,7 @@ def main() -> None:
             i += 1
     out, *reads = rest
     datas = [json.load(open(p)) for p in reads]
-    # pins are authoritative (5-run MiniBench medians) — include their
+    # pins are authoritative (5-run Profile medians) — include their
     # names even when absent/-1 in every read, so a typo'd or
     # failed-in-reads pin cannot silently vanish from the ledger
     names = sorted({k for d in datas for k in d["queries"]} | set(pins))
@@ -57,7 +57,7 @@ def main() -> None:
         "queries": {k: round(v, 4) for k, v in sorted(merged.items())},
         "protocol": "r17 refresh: min across "
                     f"{len(reads)} same-HEAD full reads; "
-                    f"{len(pins)} queries pinned at 5-run MiniBench medians",
+                    f"{len(pins)} queries pinned at 5-run Profile medians",
         "loads": [d.get("load") for d in datas],
         "sf": datas[0].get("sf"),
     }

@@ -287,7 +287,7 @@ object ScaleProbe {
     if (args.headOption.contains("build")) {
       // build-only mode (r19): materialize the derived sf1 dataset (and,
       // with a second arg of 100, the sf10 one) and exit, so other
-      // harnesses (MiniBench at SPARK_GRAFT_SF_DIR=sf1, the c8/c32
+      // harnesses (Profile at SPARK_GRAFT_SF_DIR=sf1, the c8/c32
       // scaling table) can run against it without paying this main's
       // full query sweep. Idempotent like the sweep's own build.
       buildSf1(spark, src, sf1)

@@ -29,7 +29,7 @@ import graft.sync.BucketedTableStore
   *     1..k-1, and the standing corpus is never rescanned.
   *
   * Every caller of a door runs [[step]]: [[ingestAll]], the amortized
-  * [[ingestAllAmortized]], q229's retention run, `DoorProfile`, and
+  * [[ingestAllAmortized]], q229's retention run, and
   * [[graft.streaming.IngestDoorStream]], which passes the step its
   * write-ahead decision log as the `log` hook. A door also describes
   * its own arrivals (schema, reader format, required columns, query
@@ -138,7 +138,7 @@ trait IngestDoor {
     * stream passes its write-ahead decision log, which skips decide for
     * a batch it already logged. Each leg's jobs carry the job tag
     * `door.derive`, `door.decide` or `door.apply`, which is how
-    * `DoorProfile` prices the legs. */
+    * [[graft.Profile]] prices the legs. */
   final def step(spark: SparkSession, store: BucketedTableStore,
       batch: DataFrame, batchId: Long, ts: Timestamp,
       log: (=> DataFrame) => DataFrame = d => d): DataFrame = {
@@ -147,7 +147,7 @@ trait IngestDoor {
       try body finally spark.sparkContext.removeJobTag(tag)
     }
     // the cache is hash-partitioned on idCol, the key apply's admissions
-    // semi-join uses. Measured (DoorProfile generic mode, sf0.1,
+    // semi-join uses. Measured (per-leg job counts, sf0.1,
     // BENCHMARKS.md "One door step"): without it the embedding and media
     // doors run one job more per apply (q160 3 → 4, q227 6 → 7) and q227
     // one more per decide; the text doors' job counts do not change

@@ -1087,12 +1087,13 @@ final class BucketedTableStore(spark: SparkSession, root: String, nBuckets: Int,
     // At one bucket any staged row touches bucket 0, so a one-row probe
     // replaces the bucket census (a cache, a shuffle and a collect: two
     // more jobs per merge); the uncached stage is read for its keys and
-    // for its upserts.
+    // for its upserts. A small stage is cached in one partition, so the
+    // census plans no shuffle and runs one job.
     val oneBucket = nBuckets == 1
     val routed = stage.withColumn("_bucket", routing(m, stage))
     val staged =
       if (oneBucket) routed
-      else routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else Merge.gatherSmall(routed).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val touched =
         if (oneBucket) { if (staged.isEmpty) Set.empty[Int] else Set(0) }

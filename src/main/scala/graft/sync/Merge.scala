@@ -131,25 +131,27 @@ object Merge {
       length(col("_seq")).desc, col("_seq").desc).drop("_seq")
   }
 
+  /** `df` gathered into one partition when its estimated size fits
+    * `spark.sql.files.openCostInBytes`: Spark's file scan gives no task
+    * less input than that, so the frame is one task's worth of work, and
+    * `SinglePartition` satisfies any clustered distribution, so a window
+    * or aggregation over it plans no exchange and no shuffle-map job. A
+    * larger frame, or one with no size estimate, is returned as is. */
+  private[sync] def gatherSmall(df: DataFrame): DataFrame = {
+    val gate = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= gate) df.coalesce(1) else df
+  }
+
   /** The newest row of each `key` under `newestFirst`, by a `row_number`
     * window: the stage's dedup and the bucketed store's merge-on-read
-    * resolution. A frame whose estimated size fits
-    * `spark.sql.files.openCostInBytes` is gathered into one partition
-    * first: Spark's file scan gives no task less input than that, so the
-    * frame is one task's worth of work, and `SinglePartition` satisfies
-    * the window's distribution, so no exchange and no shuffle-map job is
-    * planned. A larger frame, or one with no size estimate, is shuffled
-    * by key. */
+    * resolution. A small frame is gathered first ([[gatherSmall]]); a
+    * larger one is shuffled by key. */
   private[sync] def latestPerKey(df: DataFrame, key: String,
-      newestFirst: Column*): DataFrame = {
-    val gate = df.sparkSession.sessionState.conf.filesOpenCostInBytes
-    val gathered =
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= gate) df.coalesce(1) else df
-    gathered
+      newestFirst: Column*): DataFrame =
+    gatherSmall(df)
       .withColumn("_rn", row_number().over(Window.partitionBy(col(key)).orderBy(newestFirst: _*)))
       .filter(col("_rn") === 1)
       .drop("_rn")
-  }
 
   /** Steps 4-6: delete-then-insert upsert with REMOVE application
     * (ref :44-52). Pure function: returns the new target content. */

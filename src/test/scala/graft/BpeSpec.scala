@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Census
 import graft.operators.BpeOps
 
 /** Pins BPE training on the classic Sennrich low/lower/newest/widest
@@ -65,36 +66,16 @@ class BpeSpec extends SparkSpec {
     // lazy per-round rewrites with a checkpoint every ckptEvery rounds,
     // so 5 merges must cost 5 argmax jobs + 1 checkpoint job — the old
     // eager-checkpoint loop scheduled 10.
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(counter)
-      try {
-        body
-        // listener bus is async: poll until the count stops moving
-        var prev = -1
-        var cur = jobs.get()
-        var spins = 0
-        while (cur != prev && spins < 40) {
-          Thread.sleep(50); prev = cur; cur = jobs.get(); spins += 1
-        }
-        cur
-      } finally spark.sparkContext.removeSparkListener(counter)
-    }
     // AQE splits each argmax into shuffle-stage + final jobs, so absolute
     // counts are config-dependent; the invariant is the CADENCE: eager
     // checkpointing pays one extra job per round, lazy pays 1/ckptEvery.
     var lazyMerges: Seq[(String, String)] = Nil
     var eagerMerges: Seq[(String, String)] = Nil
-    val lazyJobs = countJobs {
+    val lazyJobs = jobsDuring {
       lazyMerges = BpeOps.trainDistributed(spark, corpus,
         nMerges = 5, ckptEvery = 4).merges
     }
-    val eagerJobs = countJobs {
+    val eagerJobs = jobsDuring {
       eagerMerges = BpeOps.trainDistributed(spark, corpus,
         nMerges = 5, ckptEvery = 1).merges
     }
@@ -190,23 +171,13 @@ class BpeSpec extends SparkSpec {
       (s"${('a' + rnd.nextInt(26)).toChar}${('a' + rnd.nextInt(26)).toChar}" +
         s"${('a' + rnd.nextInt(26)).toChar}w$i", 1L + rnd.nextInt(50))
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    val model =
-      try {
-        val m = BpeOps.train(spark, vocab.toDF("word", "freq"), nMerges = 1024)
-        Thread.sleep(300) // listener bus drain
-        m
-      } finally spark.sparkContext.removeSparkListener(counter)
+    val (model, census) = Census.during(spark)(
+      BpeOps.train(spark, vocab.toDF("word", "freq"), nMerges = 1024))
+    val jobs = census.jobs.size
     assert(model.merges.nonEmpty)
-    info(s"1024-merge train scheduled ${jobs.get()} Spark jobs")
-    assert(jobs.get() <= 8,
-      s"localized training must cost O(1) jobs, saw ${jobs.get()}")
+    info(s"1024-merge train scheduled $jobs Spark jobs")
+    assert(jobs <= 8,
+      s"localized training must cost O(1) jobs, saw $jobs")
   }
 
   test("train stops early when no pairs remain") {

@@ -47,6 +47,25 @@ class BucketedStoreSpec extends SparkSpec {
       ("m2", "bob2", t1), ("m7", "grace", t1))) // upserted stamped t1
   }
 
+  test("a small copy-on-write merge takes its bucket census in one job, with unchanged contents") {
+    val store = new BucketedTableStore(spark, tmpDir("bstore-census"), nBuckets = 4)
+    val before = (1 to 200).map(i => (s"m$i", s"name$i", t0)).toDF(
+      "memberId", "memberName", "approximateUpdateTimestamp").withColumn("syncTimestamp", lit(t0))
+    store.writeAll("member", before, "memberId")
+    // 100 changes: 60 updates, 20 deletes, 20 new keys
+    val stage = (141 to 240).map { i =>
+      (s"m$i", s"new$i", t1, if (i > 200) "INSERT" else if (i <= 160) "REMOVE" else "MODIFY")
+    }.toDF("memberId", "memberName", "approximateUpdateTimestamp", "eventName")
+    val jobs = jobsDuring(store.merge("member", stage, "memberId", t1))
+    info(s"4-bucket copy-on-write merge of 100 changes: $jobs jobs")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"memberId", $"memberName", $"approximateUpdateTimestamp", $"syncTimestamp")
+        .as[(String, String, Timestamp, Timestamp)].collect().toSet
+    assert(rows(store.read("member").get) ==
+      rows(graft.sync.Merge.applyStage(before, stage, "memberId", t1)))
+    assert(jobs <= 5, s"the bucket census of a small stage must not shuffle ($jobs jobs)")
+  }
+
   // the schema "sidecars" are the manifest's schema lines now
   test("schema sidecars: reads serve the persisted schema, and a missing " +
     "or corrupt one degrades to inference, never to an error") {

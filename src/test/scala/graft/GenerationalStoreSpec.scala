@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.obs.Census
 import graft.sync.GenerationalStore
 
 /** Generational index layout (q244's store): appends land in their
@@ -60,23 +61,11 @@ class GenerationalStoreSpec extends SparkSpec {
     val g = new GenerationalStore(spark, root, windowMs = 60000L)
     g.append("fp", fps("a"), "fp", ts(0))
     g.append("fp", fps("b"), "fp", ts(60000))
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val dropped = g.retireBefore(ts(70000))
-      // listener events are async — give the bus a beat before reading
-      // (the bus API is private; a fixed drain window is enough for a
-      // zero-vs-nonzero assertion)
-      Thread.sleep(500)
-      assert(dropped.nonEmpty, "the case must actually retire something")
-      assert(jobs == 0,
-        s"retirement must be directory metadata, never a Spark job ($jobs ran)")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (dropped, census) = Census.during(spark)(g.retireBefore(ts(70000)))
+    val jobs = census.jobs.size
+    assert(dropped.nonEmpty, "the case must actually retire something")
+    assert(jobs == 0,
+      s"retirement must be directory metadata, never a Spark job ($jobs ran)")
     // contrast is the point: the single-table verb's sweep would scan
     // the index and commit tombstone deltas — several jobs — for the
     // same horizon move (IngestDoor.retireBefore, q229's path)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.bench.ShuffleMetrics
+import graft.obs.Census
 import graft.operators.JoinOps
 import graft.tables.Tables
 
@@ -14,6 +14,7 @@ import graft.tables.Tables
   * recorded in SCALE.md §7.
   */
 class ShuffleAuditSpec extends SparkSpec {
+  import ShuffleAuditSpec.Shuffle
 
   private val dir = sys.env.getOrElse("GRAFT_AUDIT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -29,10 +30,18 @@ class ShuffleAuditSpec extends SparkSpec {
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
+  /** Shuffle bytes and rows written while `df` is built and run end to end
+    * through the `noop` sink: the full plan with production-shaped output
+    * and no rows collected to the driver. */
+  private def shuffleOf(df: => DataFrame): Shuffle = {
+    val (_, c) = Census.during(spark)(df.write.mode("overwrite").format("noop").save())
+    Shuffle(c.shuffleWriteBytes, c.shuffleWriteRecords)
+  }
+
   private def audit(label: String, optimized: DataFrame, naive: DataFrame)
-      : (ShuffleMetrics.Shuffle, ShuffleMetrics.Shuffle) = {
-    val opt = ShuffleMetrics.measure(spark)(ShuffleMetrics.run(optimized))
-    val base = ShuffleMetrics.measure(spark)(ShuffleMetrics.run(naive))
+      : (Shuffle, Shuffle) = {
+    val opt = shuffleOf(optimized)
+    val base = shuffleOf(naive)
     info(f"$label%-22s optimized ${opt.pretty}%-28s naive ${base.pretty}")
     (opt, base)
   }
@@ -245,10 +254,9 @@ class ShuffleAuditSpec extends SparkSpec {
     val naive = withoutAutoBroadcast {
       // hint-free twin with auto-broadcast off → Catalyst must hash-
       // exchange the feature frame for the weight join
-      ShuffleMetrics.measure(spark)(ShuffleMetrics.run(
-        CurationQueries.dsirSelect(spark, dir, hintBroadcast = false)))
+      shuffleOf(CurationQueries.dsirSelect(spark, dir, hintBroadcast = false))
     }
-    val opt = ShuffleMetrics.measure(spark)(ShuffleMetrics.run(optimized))
+    val opt = shuffleOf(optimized)
     info(f"dsir select            optimized ${opt.pretty}%-28s naive ${naive.pretty}")
     assert(opt.records < naive.records,
       s"broadcast weights must keep corpus features out of the shuffle " +
@@ -267,11 +275,11 @@ class ShuffleAuditSpec extends SparkSpec {
     // build eagerly inside the measured block (the span set localCheckpoints
     // at construction), which is why the frames are constructed here and
     // not passed through audit().
-    val opt = ShuffleMetrics.measure(spark) { ShuffleMetrics.run(
-      TextOps.incrementalDuplicatedSpanStats(corpus, batch, n = 8)) }
-    val naive = ShuffleMetrics.measure(spark) { ShuffleMetrics.run(
+    val opt = shuffleOf(
+      TextOps.incrementalDuplicatedSpanStats(corpus, batch, n = 8))
+    val naive = shuffleOf(
       TextOps.incrementalDuplicatedSpanStats(
-        corpus.repartition(col("doc_id")), batch, n = 8)) }
+        corpus.repartition(col("doc_id")), batch, n = 8))
     info(f"span screen            optimized ${opt.pretty}%-28s naive ${naive.pretty}")
     assert(opt.bytes < naive.bytes,
       s"corpus text must not ride a spreading shuffle (${opt.bytes} vs ${naive.bytes})")
@@ -345,12 +353,12 @@ class ShuffleAuditSpec extends SparkSpec {
       .select(col("source"), col("rank"), col("doc_id"), col("w"))
     val confKey = "spark.sql.optimizer.windowGroupLimitThreshold"
     val saved = spark.conf.get(confKey)
-    val opt = ShuffleMetrics.measure(spark)(ShuffleMetrics.run(sample))
+    val opt = shuffleOf(sample)
     val optRows = sample.collect().map(_.mkString("|")).sorted
     val (naive, naiveRows) =
       try {
         spark.conf.set(confKey, "-1")
-        (ShuffleMetrics.measure(spark)(ShuffleMetrics.run(sample)),
+        (shuffleOf(sample),
           sample.collect().map(_.mkString("|")).sorted)
       } finally spark.conf.set(confKey, saved)
     info(f"ES weighted sample     optimized ${opt.pretty}%-28s naive ${naive.pretty}")
@@ -402,5 +410,11 @@ class ShuffleAuditSpec extends SparkSpec {
       assert(opt.records < base.records,
         s"broadcast join must not shuffle the fact table (${opt.records} vs ${base.records})")
     }
+  }
+}
+
+object ShuffleAuditSpec {
+  final case class Shuffle(bytes: Long, records: Long) {
+    def pretty: String = f"${bytes / 1024.0 / 1024.0}%.2f MiB / $records%d rows"
   }
 }

@@ -2,16 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.gen.CdcGen
 import graft.ingest.Extraction
 import graft.model.CdcSchemas
+import graft.obs.Census
 import graft.pipeline.Pipeline
 import graft.streaming.CdcStream
 import graft.sync.BucketedTableStore
@@ -54,21 +49,12 @@ class StreamSyncSpec extends SparkSpec {
       val (m, q, mq) = gen.tick()
       val extracted = Extraction.extract(spark.read.schema(CdcSchemas.envelope)
         .json(Seq(m, q, mq).map(gen.envelope("INSERT", _, t0 + i * 10000)).toDS))
-      val groups = new ConcurrentLinkedQueue[String]
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          groups.add(String.valueOf(
-            Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-      }
-      sc.addSparkListener(listener)
       sc.setJobGroup(group, s"sync $i")
-      try assert(new CdcStream(spark, pipeline.store, clock).syncAll(extracted) == 3)
-      finally {
-        sc.clearJobGroup()
-        ListenerDrain(sc)
-        sc.removeSparkListener(listener)
-      }
-      groups.asScala.toSeq
+      val (synced, census) =
+        try Census.during(spark)(new CdcStream(spark, pipeline.store, clock).syncAll(extracted))
+        finally sc.clearJobGroup()
+      assert(synced == 3)
+      census.jobs.map(_.group.orNull)
     }
     syncUnder("a", 1) // a shared pool's threads would keep "a" from here on
     val jobs = syncUnder("g", 2)

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.obs.Census
 import graft.operators.ZOrderOps
 
 /** Measured evidence for the z-order layout claim: with small row groups,
@@ -16,24 +14,8 @@ import graft.operators.ZOrderOps
   */
 class ZOrderSpec extends SparkSpec {
 
-  private def recordsRead(body: => Unit): Long = {
-    val n = new LongAdder
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) n.add(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var stable = 0
-      var prev = -1L
-      while (stable < 3) {
-        Thread.sleep(100)
-        if (n.sum == prev) stable += 1 else { stable = 0; prev = n.sum }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    n.sum
-  }
+  private def recordsRead(body: => Unit): Long =
+    Census.during(spark)(body)._2.recordsRead
 
   private def drain(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
